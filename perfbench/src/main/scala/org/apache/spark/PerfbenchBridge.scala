@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** The one Spark-internal call the harness needs: listener events are
+  * delivered asynchronously, so counters are read only after the bus has
+  * drained everything posted so far.
+  */
+object PerfbenchBridge {
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
