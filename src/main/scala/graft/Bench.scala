@@ -29,178 +29,15 @@ object Bench {
   private[graft] def jmap(vs: Seq[(String, Double)]): String =
     vs.map { case (k, v) => "\"" + k + "\":" + fmtQ(v) }.mkString("{", ",", "}")
 
-  /** Benchmark tier of a registered query, by name family. The suite keeps
-    * growing (93+ queries), and a flat total reads as regression whenever
-    * queries are ADDED — per-tier subtotals let a reader compare like with
-    * like across rounds: `serving` is the interactive dashboard/search
-    * surface (the reference's ~1 s-class interaction bar), `pipeline` the
-    * corpus-scale training-data ops, `etl` the harmonize/profile build
-    * paths.
+  /** Benchmark tier of a registered query: the tier its registry family
+    * declares (graft/registry/). The suite keeps growing, and a flat total
+    * reads as regression whenever queries are ADDED — per-tier subtotals
+    * let a reader compare like with like across rounds: `serving` is the
+    * interactive dashboard/search surface (the reference's ~1 s-class
+    * interaction bar), `pipeline` the corpus-scale training-data ops, `etl`
+    * the harmonize/profile build paths.
     */
-  private[graft] def tier(name: String): String = {
-    val serving = Seq("q", "g", "w_", "dashboard_", "search_")
-    // checked BEFORE serving: quality_* is corpus-scale model training,
-    // not an interactive surface — the bare "q" prefix would claim it
-    // (as it silently did for quality_classifier_* through r11, inflating
-    // the serving subtotal by those pipeline queries' cost)
-    val pipeline = Seq("ann_", "dedup_", "decontaminate_", "sample_", "pack_",
-      "text_", "vocab_", "join_", "mm_", "pipeline_", "layout_", "quality_",
-      "drift_", "feat_")
-    if (pipeline.exists(name.startsWith)) "pipeline"
-    else if (serving.exists(name.startsWith)) "serving"
-    else "etl"
-  }
-
-  /** The ONE machine-read line of this program. Kept deliberately small —
-    * per-query minimums plus scalar totals — so it survives a
-    * tail-truncated output capture whole (BenchLineSpec pins the length
-    * against the real registry). Compact field glossary:
-    * `sf` = scale-factor dir basename; `load` = [start, end] 1-min load
-    * averages (see [[loadAvg]]); `queries` = per-query min-of-N seconds;
-    * `tiers` = per-[[tier]] `[min_sum, median_sum, n]`; `median` = sum of
-    * per-query medians; `value` = sum of per-query minimums. Per-query
-    * medians travel on a separate, prefixed, deliberately-not-JSON line
-    * that may truncate harmlessly.
-    */
-  /** Correctness twins whose timing is their base query's plus a constant —
-    * pruned from the per-query dict to hold the capture-window budget
-    * (BenchLineSpec), still timed and counted in tier/total sums. This is
-    * the registry-growth relief valve the spec comment points at: prune
-    * here, never nudge the budget.
-    */
-  private[graft] val headlinePruned: Set[String] =
-    Set("dashboard_preagg_incremental", "dedup_exact_incremental_bloom",
-      "ann_ivfpq_rerank", "quality_classifier_holdout",
-      // correctness/certification twins of queries that stay visible:
-      // cube shares rollup's one-Expand plan, the filter composes the
-      // profile, the portable twins certify the seeded-hash scale twins
-      // (the scale twins themselves stay as the families' visible numbers)
-      "g_cube_terms", "text_boilerplate_filter",
-      "dedup_minhash_portable", "dedup_simhash_portable",
-      "dedup_cluster_keep_portable",
-      // containment pairs → CC keep: both legs visible separately as
-      // dedup_containment and dedup_cluster_keep
-      "dedup_containment_keep",
-      // dedup_embedding_lsh (pairs) stays visible; the CC-keep composition
-      // rides it. g6_geohash_auto is grid at a zoom-chosen precision.
-      // search_bm25_indexed is bm25 over the at-rest index (the base form
-      // stays visible).
-      "dedup_embedding_cluster_keep", "g6_geohash_auto",
-      "search_bm25_indexed", "search_bm25_incremental", "search_bm25_phrase",
-      // rollup-served twins (the rollup serving story's visible numbers are
-      // dashboard_refresh_preagg and g6_geohash_preagg/g7_typeahead_preagg)
-      "g_significant_terms_preagg",
-      // warm/federated twins whose tracked form stays visible
-      // (q8_dict_fetch_federated IS the page-load number verdicts track)
-      "q8_dict_fetch_warm", "g7_typeahead_warm", "g7_typeahead_federated",
-      "w_json_widget_query", "dashboard_map_drilldown",
-      // refinement/variant twins of visible bases (full numbers live in
-      // BENCH_DETAIL.json — the capture-window budget prunes only the
-      // headline, never the committed data)
-      "ann_ivf_nlist256", "ann_ivfpq_nlist256", "ann_ivf_sampled",
-      // at-rest-index maintenance twin of the visible ann_ivf (same
-      // serving plan over the published index), and the compacted
-      // lifecycle twins of the maintenance pair (in-query compaction
-      // writes dominate their timings by design)
-      "ann_ivf_incremental", "ann_ivf_compacted",
-      "stream_sparse_vector_compacted",
-      "dedup_exact_fingerprint", "dedup_exact_incremental",
-      "decontaminate_fuzzy", "decontaminate_containment",
-      "join_asof_forward", "join_rolling_features_chunked",
-      "q6_phrase_prefix_indexed", "q6_phrase_prefix_unicode",
-      "sample_split", "sample_stratified", "sample_embedding_percell",
-      "sample_mix_sources", "sample_mix_temperature", "pack_sequences_text",
-      // same bucketed-prefix plan family as the visible pack_sequences
-      "pack_length_bins",
-      // embedding-side anti-join whose cost rides the visible embedding
-      // pair numbers; decontaminate_ngram is the family's visible number
-      "decontaminate_semantic",
-      "text_langid", "text_fingerprint", "text_redact_pii", "text_normalize",
-      "text_chunk_windows", "text_repetition", "text_boilerplate_stream",
-      "recipe_harmonize_detroit", "recipe_harmonize_losangeles",
-      "mm_meta_stats", "vocab_topk_incremental", "dict_profile_incremental",
-      // the quantile surface of the visible dict_profile_lineitem (same
-      // single-pass profiling family)
-      "dict_quantiles",
-      // the date sibling of the pruned g_histogram scan form — the
-      // bucket-histogram serving number is g_histogram_preagg; the
-      // increment-merge twin re-runs the same rollup three times
-      "g_date_histogram", "g_date_histogram_incremental",
-      "g6_geohash_grid", "pipeline_assemble_published",
-      // the filter composes quality_lm_score (the family's visible number)
-      "quality_lm_filter",
-      // same DAG as the visible dedup_ngram_jaccard (SCALE_r11: identical
-      // cause and ratio); the cluster-keep composition's visible number is
-      // dedup_cluster_keep_minhash
-      "dedup_cluster_keep",
-      // corpus-scan twin of the visible g_cardinality_preagg (the same
-      // scan-vs-rollup split as the pruned g6_geohash_grid)
-      "g_cardinality",
-      // same split for the percentiles metric: the rollup-served form is
-      // the visible number
-      "g_percentiles",
-      // same split for the numeric histogram
-      "g_histogram",
-      // the inverse-percentile pair rides the visible g_percentiles_preagg
-      // (identical rollup scan, two conditional sums instead of rank math)
-      "g_percentile_ranks", "g_percentile_ranks_preagg",
-      // scan-vs-rollup serving twins of the round-13 ES agg additions —
-      // the preagg side is each family's visible number in DETAIL only;
-      // one-row metric tiles ride the visible g_filters_agg plan family
-      "g_extended_stats", "g_weighted_avg", "g_missing",
-      "g_rare_terms", "g_multi_terms", "g_serial_diff",
-      "g_sampler_terms", "g_date_range", "g_geo_centroid", "g_bucket_stats",
-      "g_missing_preagg",
-      // one-pass conditional-sum family: the FilterSpec-driven filters
-      // form is the visible number; range buckets share its plan shape,
-      // and the rollup-served twins ride in DETAIL
-      "g_range_buckets", "g_range_buckets_preagg", "g_filters_agg_preagg",
-      "g_adjacency_matrix_preagg",
-      // micro-op exercised inside every city recipe —
-      // recipe_harmonize_baltimore is the etl family's visible number
-      "p6_regex_extract",
-      // the same windowed per-bucket top-k plan as the visible
-      // g4_nested_terms family
-      "g_top_hits",
-      // two pages of the same group-by plan as the visible g2 terms
-      // family (the pagination mechanism is the point, not the cost)
-      "g_composite_pages",
-      // the exact all-pairs baseline of the embedding near-dup family —
-      // the LSH and SemDeDup candidate generators are the visible numbers
-      "dedup_embedding",
-      // the brute-force-vector-run RRF baseline; the serving-scale
-      // search_hybrid_rrf_ivfpq is the family's visible (verdict-tracked)
-      // number
-      "search_hybrid_rrf",
-      // ANN family keeps bruteforce (the exact baseline) and ivf/ivfpq
-      // (the scale paths) visible; the sign-LSH variants ride in DETAIL
-      "ann_lsh", "ann_lsh_probe",
-      // windowed counts are the simpler half of the streaming pair —
-      // stream_sessionize stays the family's visible number
-      "stream_window_counts",
-      // the go/no-go diagnostic half of the skew family; join_salted is
-      // the perf number
-      "join_keyskew",
-      // layout twin of a plain equi-join (PlanSpec pins the exchange-free
-      // plan; its cost story is the ingest-side bucketing, not the query)
-      "join_bucketed",
-      // describe() computes the same count/mean/stddev/min/max surface
-      // the visible dict_profile_lineitem prices at full width
-      "a5_describe",
-      // composes vocab_bpe_merges (the BPE family's visible number)
-      "text_bpe_tokens",
-      // the proportional-draw twin re-runs sample_importance's scoring DAG
-      // plus two arithmetic columns, and the stream twin re-runs it over
-      // epoch increments — the scoring query is the visible one
-      "sample_importance_priority", "sample_importance_stream",
-      // the multi-probe recall twin of the visible dedup_semantic
-      "dedup_semantic_probe",
-      // one row-local codegen'd corpus scan, same shape as the visible
-      // text_profile (regex counts over the same column)
-      "text_gopher_rules",
-      // composition twin: pipeline_assemble is the visible end-to-end
-      // composition, pipeline_prep the visible prep half
-      "pipeline_prep_llm")
+  private[graft] def tier(name: String): String = registry.Registry.tiers(name)
 
   /** Hard cap on headline per-query entries. 30 entries ≈ 1.1 KB of dict —
     * comfortably inside BenchLineSpec's 1900-char budget even with
@@ -209,11 +46,23 @@ object Bench {
     */
   private[graft] val headlineCap = 30
 
+  /** The ONE machine-read line of this program. Kept deliberately small —
+    * per-query minimums plus scalar totals — so it survives a
+    * tail-truncated output capture whole (BenchLineSpec pins the length
+    * against the real registry). Compact field glossary:
+    * `sf` = scale-factor dir basename; `load` = [start, end] 1-min load
+    * averages (see [[loadAvg]]); `queries` = per-query min-of-N seconds;
+    * `tiers` = per-[[tier]] `[min_sum, median_sum, n]`; `failed` = count
+    * of queries that threw (excluded from every sum) and `failed_names`
+    * their names; `median` = sum of per-query medians; `value` = sum of
+    * per-query minimums.
+    */
   private[graft] def renderHeadline(
       results: Seq[(String, Double, Double)],
       sfDir: String,
       loadStart: Double,
-      loadEnd: Double): String = {
+      loadEnd: Double,
+      failed: Seq[String] = Nil): String = {
     // Tier-ordered with SERVING LAST: the driver keeps a bounded TAIL of
     // stdout, and tail truncation cuts the dict's head — ordering the
     // baseline-graded serving tier last means any residual cut costs
@@ -222,13 +71,11 @@ object Bench {
     val tierOrder = Map("etl" -> 0, "pipeline" -> 1, "serving" -> 2)
     // Size bound that survives ANY registry growth (r11 AND r12 artifacts
     // both came back `parsed: null` because curation alone couldn't keep
-    // pace with the registry): after the family-visibility pruning, cap the
-    // dict to the top headlineCap queries by cost. The cap — not the
-    // curation — is what guarantees the line fits the driver's ~2 KB
+    // pace with the registry): cap the dict to the top headlineCap queries
+    // by cost. The cap is what guarantees the line fits the ~2 KB output
     // capture window; tier subtotals and totals still cover every query,
     // and the full per-query record lands in BENCH_DETAIL.json.
-    val visible = results.filterNot(r => headlinePruned(r._1))
-      .sortBy(-_._2).take(headlineCap)
+    val visible = results.sortBy(-_._2).take(headlineCap)
     val qs = jmap(visible
       .sortBy(r => (tierOrder(tier(r._1)), r._1))
       .map(r => r._1 -> r._2))
@@ -240,8 +87,31 @@ object Bench {
     }.mkString("{", ",", "}")
     val load = s""""load":[${fmtQ(loadStart)},${fmtQ(loadEnd)}]"""
     val sf = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    s"""{"metric":"total","unit":"sec","sf":"$sf",$load,"queries":$qs,"tiers":$tiers,"median":$totalMed,"value":$total}"""
+    s"""{"metric":"total","unit":"sec","sf":"$sf",$load,"queries":$qs,"tiers":$tiers,${failedJson(failed)},"median":$totalMed,"value":$total}"""
   }
+
+  private def failedJson(failed: Seq[String]): String =
+    s""""failed":${failed.size},"failed_names":""" +
+      failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** Times `passes` runs of one query, each materializing `count()` of a
+    * freshly built DataFrame, after one untimed run when `prime` is set
+    * (the pinned-cache build of a warm-served query). Any run that throws,
+    * the prime included, makes the query a failure — Left, never a timing:
+    * a pass cut short by an exception would otherwise read as a speedup.
+    */
+  private[graft] def timeQuery(
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      spark: SparkSession, sfDir: String, passes: Int,
+      prime: Boolean = false): Either[Throwable, Seq[Double]] =
+    try {
+      if (prime) fn(spark, sfDir).count()
+      Right((1 to passes).map { _ =>
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      })
+    } catch { case e: Throwable => Left(e) }
 
   /** 1-minute system load average — recorded in the artifact so a reader
     * can adjudicate noise without a re-run (three of the first seven rounds
@@ -297,16 +167,6 @@ object Bench {
     }
     val warmServed = SparkEntry.warmServed
     val loadStart = loadAvg()
-    def timePasses(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        n: Int): Seq[Double] =
-      (1 to n).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
-          case e: Throwable => System.err.println(s"[bench] $name failed: $e")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
     val registry = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val firstPass = registry.map { case (name, fn) =>
@@ -314,13 +174,10 @@ object Bench {
       // serving path. Populate the pinned cache once untimed first:
       // otherwise the first timed pass pays the cold cache build and the
       // reported numbers read as "no gain" when the true warm cost is
-      // 10-30x lower. Membership comes from SparkEntry.warmServed (behavior,
-      // not the `_warm` name suffix — federated fetches and the map
-      // drilldown serve from the same pinned caches).
-      if (warmServed.contains(name)) {
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      }
-      val times = timePasses(name, fn, repeat)
+      // 10-30x lower. Membership comes from SparkEntry.warmServed (the
+      // cases declared warm: federated fetches and the map drilldown serve
+      // from the same pinned caches as the `_warm` names).
+      val times = timeQuery(fn, spark, sfDir, repeat, prime = warmServed.contains(name))
       // Session hygiene between queries, OUTSIDE the timed window: several
       // operators localCheckpoint scratch frames (IVF-PQ residuals, the
       // PPJoin prefix table); their blocks are freed by the ContextCleaner
@@ -344,12 +201,20 @@ object Bench {
     // disturbed reading costs a round of false drift adjudication (the
     // r13 dedup_ngram_prefix/dedup_simhash episode sat just under the old
     // 2.0 trigger) — re-run past 1.5×.
-    val results = firstPass.map { case (name, fn, times) =>
-      val trigger = if (times.min > 0.5) 1.5 else 2.0
-      val noisy = times.min > 0.2 && median(times) / times.min > trigger
-      val all = if (noisy) times ++ timePasses(name, fn, repeat) else times
-      (name, all.min, median(all))
+    // A query that throws on any pass is a failure: it is named in the
+    // `failed` fields and kept out of every min/median sum.
+    val outcomes = firstPass.map { case (name, fn, first) =>
+      name -> first.flatMap { times =>
+        val trigger = if (times.min > 0.5) 1.5 else 2.0
+        val noisy = times.min > 0.2 && median(times) / times.min > trigger
+        if (noisy) timeQuery(fn, spark, sfDir, repeat).map(times ++ _) else Right(times)
+      }
     }
+    outcomes.foreach { case (name, r) =>
+      r.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+    }
+    val results = outcomes.collect { case (name, Right(all)) => (name, all.min, median(all)) }
+    val failed = outcomes.collect { case (name, Left(_)) => name }
     // Per-query medians on stdout ONLY for partial (SPARK_GRAFT_ONLY) scale
     // probes, which skip the detail file below. Full-registry runs write the
     // same data to BENCH_DETAIL.json and print nothing here: three rounds
@@ -378,13 +243,14 @@ object Bench {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
         s"""{"sf":"$sf","cpus":$cpus,"load":[${fmt(loadStart)},${fmt(loadEnd)}],
            |"queries_min_med":$qdetail,
+           |${failedJson(failed)},
            |"value":${fmt(results.map(_._2).sum)},"median":${fmt(results.map(_._3).sum)}}
            |""".stripMargin)
     } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
     // The contract line goes LAST, compact enough to fit a ~2 KB tail
     // capture whole even with sbt's epilogue after it (BenchLineSpec pins
     // the budget against the real registry).
-    val headline = renderHeadline(results, sfDir, loadStart, loadEnd)
+    val headline = renderHeadline(results, sfDir, loadStart, loadEnd, failed)
     // The headline ALSO lands as a repo file: a file either parses or the
     // bench failed — no stdout-capture hygiene in the loop. Stdout scrape
     // stays for driver compatibility; BENCH_HEADLINE.json is the artifact

@@ -71,7 +71,7 @@ object WidgetServer {
             val (code, payload) = out match {
               case Right(json) => (200, json)
               case Left((c, err)) =>
-                (c, "{\"error\":" + quoteJson(err) + "}")
+                (c, "{\"error\":" + graft.Json.quote(err) + "}")
             }
             val bytes = payload.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             ex.getResponseHeaders.add("Content-Type", "application/json")
@@ -83,19 +83,5 @@ object WidgetServer {
     }
     server.start()
     server
-  }
-
-  private[serve] def quoteJson(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
   }
 }

@@ -19,12 +19,12 @@ class BenchLineSpec extends AnyFunSuite {
     // driver keeps a ~2048-char TAIL of stdout, and sbt's success epilogue
     // (~90 chars) rides after the headline — so the whole line must fit
     // ~1900 chars or the committed artifact's `parsed` comes back null
-    // (r11 did: 2.6 KB line, capture started mid-dict). The relief valve
-    // is Bench.headlinePruned — the full per-query record is written to
-    // BENCH_DETAIL.json regardless, so pruning costs the capture nothing
-    // but redundancy. Never nudge this bound upward.
+    // (r11 did: 2.6 KB line, capture started mid-dict). Bench.headlineCap
+    // (top 30 by cost) is what holds the line inside it as the registry
+    // grows — the full per-query record is written to BENCH_DETAIL.json
+    // regardless. Never nudge this bound upward.
     assert(line.length < 1900,
-      s"headline is ${line.length} chars — prune a query from the headline " +
+      s"headline is ${line.length} chars — lower Bench.headlineCap " +
         "(the full numbers are in BENCH_DETAIL.json)")
   }
 
@@ -47,6 +47,34 @@ class BenchLineSpec extends AnyFunSuite {
     assert(math.abs(serving.get(1).asDouble() - 0.42) < 1e-9)
     assert(serving.get(2).asInt() == 2)
     assert(node.get("tiers").get("pipeline").get(2).asInt() == 0)
+  }
+
+  test("a query that throws is a failure, never a timing") {
+    var runs = 0
+    val broken: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (_, _) => { runs += 1; throw new IllegalStateException("boom") }
+    // no session is needed: the query throws before anything touches it
+    val timed = Bench.timeQuery(broken, null, "/nowhere", passes = 3)
+    assert(timed.isLeft, s"a throwing query produced timings: $timed")
+    assert(timed.left.toOption.get.getMessage == "boom")
+    assert(runs == 1, "the first throwing pass ends the query")
+    // the untimed warm prime fails the query the same way
+    assert(Bench.timeQuery(broken, null, "/nowhere", passes = 3, prime = true).isLeft)
+  }
+
+  test("headline reports failed queries by count and name") {
+    val results = Seq(("q1_agg", 0.25, 0.5))
+    val line = Bench.renderHeadline(results, "/tmp/sf", 1.0, 1.0,
+      failed = Seq("g1_count"))
+    val node = new ObjectMapper().readTree(line)
+    assert(node.get("failed").asInt() == 1)
+    assert(node.get("failed_names").get(0).asText() == "g1_count")
+    assert(!node.get("queries").has("g1_count"))
+    assert(math.abs(node.get("value").asDouble() - 0.25) < 1e-9)
+    assert(node.get("tiers").get("serving").get(2).asInt() == 1)
+    val clean = new ObjectMapper().readTree(
+      Bench.renderHeadline(results, "/tmp/sf", 1.0, 1.0))
+    assert(clean.get("failed").asInt() == 0 && clean.get("failed_names").size() == 0)
   }
 
   test("every registered query lands in a tier, and the families are stable") {
