@@ -124,15 +124,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle width is a DEPLOYMENT knob: a real cluster sizes it to the
-    // data (then AQE coalesces small stages back down), not to the core
-    // count. Default stays = cpus for artifact comparability; scale runs
-    // (10×+ corpora through the same 32 cores) set it higher so per-task
-    // aggregate state keeps fitting in memory instead of spilling.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

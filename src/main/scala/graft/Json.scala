@@ -1,6 +1,17 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
 object Json {
+
+  /** The one Jackson mapper the engine reads JSON with. An ObjectMapper is
+    * thread-safe once configured, and this one is never reconfigured, so
+    * the concurrent HTTP routes share it instead of building one per call.
+    */
+  private val mapper = new ObjectMapper()
+
+  /** Parse a JSON document into Jackson's tree model. */
+  def read(s: String): JsonNode = mapper.readTree(s)
 
   /** A JSON string literal: backslash, quote and ALL control chars (<0x20)
     * escaped — a tab or CR in hand-written SQL or an error message would

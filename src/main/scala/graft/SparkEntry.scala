@@ -192,16 +192,55 @@ object SparkEntry {
       }
     }
 
+  /** Decode a widget-state JSON array against the federated city
+    * dictionary and decide rollup vs scan: the at-rest rollup serves the
+    * state iff every field it filters, plus any `aggregated` field the
+    * request buckets on, is a rollup dimension ([[PreAgg.covers]]).
+    */
+  private def widgetState(
+      s: SparkSession,
+      stateJson: String,
+      aggregated: String*): (graft.query.FieldCollection, Boolean) = {
+    val fc = Widgets.fromJson(dashboardWidgetFields(s), stateJson)
+    (fc, PreAgg.covers(dashboardCubeDims.map(_._1), aggregated ++ fc.selections.keys.toSeq))
+  }
+
+  /** A request's `state` member as widget-state JSON; absent means no
+    * widget is set.
+    */
+  private def postedState(o: com.fasterxml.jackson.databind.JsonNode): String = {
+    val state = o.path("state")
+    if (state.isMissingNode || state.isNull) "[]" else state.toString
+  }
+
   private[graft] def dashboardFiltered(
       s: SparkSession,
       warm: Boolean,
       stateJson: String = dashboardStateJson): DataFrame = {
-    val fields = dashboardWidgetFields(s)
-    val fc = Widgets.fromJson(fields, stateJson)
+    val (fc, _) = widgetState(s, stateJson)
     federatedHarmonized(s, warm)
       .where(col("datetime").isNotNull && col("datetime") >= "2010-01-01 00:00:00")
       .where(fc.compile)
   }
+
+  /** The lineitem widget fields, typed from the warm approx-distinct
+    * dictionary (one per corpus dir, materialized once per session).
+    */
+  private[graft] def lineitemWarmFields(
+      s: SparkSession, li: DataFrame, dir: String): graft.query.FieldCollection =
+    Widgets.fieldsFromDictionary(
+      Dictionary.materializeProfile(s, li,
+        s"graft_dict_lineitem_approx_${math.abs(dir.hashCode)}",
+        exactDistinct = false))
+
+  /** The §3.2 widget aggregation: the lineitem rows the widgets select,
+    * counted and summed per l_linestatus.
+    */
+  private[graft] def lineStatusRevenue(li: DataFrame, fc: graft.query.FieldCollection): DataFrame =
+    li.where(fc.compile)
+      .groupBy("l_linestatus")
+      .agg(count(lit(1)).as("n"), round(sum(col("l_extendedprice")), 2).as("revenue"))
+      .orderBy("l_linestatus")
 
   /** The HTTP serving entry (§3 lifecycle parity): POST the webapp's
     * widget-state JSON, get buckets back as a JSON row array — the
@@ -230,16 +269,8 @@ object SparkEntry {
     WidgetServer.start(port)(
       "/query" -> { body =>
         val li = load(dir, "lineitem")
-        val fields = Widgets.fieldsFromDictionary(
-          Dictionary.materializeProfile(s, li,
-            s"graft_dict_lineitem_approx_${math.abs(dir.hashCode)}",
-            exactDistinct = false))
-        val fc = Widgets.fromJson(fields, body)
-        WidgetServer.collectRowsJson(
-          li.where(fc.compile)
-            .groupBy("l_linestatus")
-            .agg(count(lit(1)).as("n"), round(sum(col("l_extendedprice")), 2).as("revenue"))
-            .orderBy("l_linestatus"))
+        val fc = Widgets.fromJson(lineitemWarmFields(s, li, dir), body)
+        WidgetServer.collectRowsJson(lineStatusRevenue(li, fc))
       },
       "/dashboard" -> { body =>
         val state = if (body.trim.isEmpty) dashboardStateJson else body
@@ -248,8 +279,7 @@ object SparkEntry {
         // proves it); a state outside the cube falls back to the pinned
         // scan. This is the routing a 100 TB deployment runs: doc_values
         // first, documents only when the query demands them.
-        val covered = PreAgg.covers(dashboardCubeDims.map(_._1),
-          Widgets.fromJson(dashboardWidgetFields(s), state).selections.keys.toSeq)
+        val (_, covered) = widgetState(s, state)
         WidgetServer.collectRowsJson(
           if (covered) dashboardRefreshPreagg(s, state)
           else dashboardRefresh(s, warm = true, state))
@@ -261,7 +291,7 @@ object SparkEntry {
         // The webapp's typeahead against `*harmonized*` (views.js:378-412):
         // {"field": "description", "prefix": "th", "size": 10} → top
         // completions from the pinned federated cache.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val field = o.path("field").asText("description")
         WidgetServer.collectRowsJson(Aggs.typeahead(
           federatedHarmonized(s, warm = true), field,
@@ -274,15 +304,10 @@ object SparkEntry {
         // field AND every state field stay inside the cube (quantization
         // commutes with the rollup — the same doc_values routing as
         // /dashboard); anything else scans the pinned federation.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val field = o.path("field").asText("hour")
         val interval = o.path("interval").asDouble(1.0)
-        val state = o.path("state")
-        val stateJson =
-          if (state.isMissingNode || state.isNull) "[]" else state.toString
-        val fc = Widgets.fromJson(dashboardWidgetFields(s), stateJson)
-        val covered = PreAgg.covers(dashboardCubeDims.map(_._1),
-          field +: fc.selections.keys.toSeq)
+        val (fc, covered) = widgetState(s, postedState(o), field)
         WidgetServer.collectRowsJson(
           if (covered)
             PreAgg.numericHistogram(
@@ -298,7 +323,7 @@ object SparkEntry {
         // tile, {"size": N} to widen. Every request is integer shifts
         // over the at-rest zoom-10 rollup (PreAgg.geoTileGridAt /
         // geoTileGridDrilldown) — no geometry, no corpus, any zoom ≤ 10.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val z = o.path("z").asInt(4)
         val size = o.path("size").asInt(10)
         val cell = o.path("cell").asText("")
@@ -320,16 +345,10 @@ object SparkEntry {
         // the whole route serves from the at-rest rollup whenever the
         // state and field stay inside the cube (the 100 TB doc_values
         // routing, same as /dashboard).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val field = o.path("field").asText("description")
         val size = o.path("size").asInt(10)
-        val state = o.path("state")
-        val stateJson =
-          if (state.isMissingNode || state.isNull) "[]" else state.toString
-        val fc = Widgets.fromJson(dashboardWidgetFields(s), stateJson)
-        val dimNames = dashboardCubeDims.map(_._1)
-        val covered = PreAgg.covers(dimNames,
-          field +: fc.selections.keys.toSeq)
+        val (fc, covered) = widgetState(s, postedState(o), field)
         WidgetServer.collectRowsJson(
           if (covered)
             PreAgg.significantTerms(dashboardRollup(s), field, fc.compile, size)
@@ -342,7 +361,7 @@ object SparkEntry {
         // ranked top-N with each doc's per-term score decomposition
         // (tf/df/idf/dl/contribution/total), the relevance-debugging
         // payload.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val qText = o.path("q").asText("")
         require(qText.nonEmpty, "explain: missing q")
         WidgetServer.collectRowsJson(
@@ -354,7 +373,7 @@ object SparkEntry {
         // ES _termvectors over the wire: {"ids": [1, 2, ...]} — per-(doc,
         // term) frequency + sorted positions for the requested documents
         // (the API is per-document; the id list bounds the scan).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val ids = o.path("ids")
         require(ids.isArray && ids.size() > 0, "termvectors: missing ids")
         val idSeq = (0 until ids.size()).map(ids.get(_).asLong())
@@ -374,7 +393,7 @@ object SparkEntry {
         // response rides the engine's rows-JSON envelope rather than
         // ES's columnar columns/values split (a documented wire delta —
         // one serving shape across every route).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val q = o.path("query").asText("")
         require(q.nonEmpty, "esql: missing query")
         val known = Set("region", "nation", "customer", "supplier", "part",
@@ -432,7 +451,7 @@ object SparkEntry {
         // over the analyzed text; filter compiled by the query_string
         // parser; collapse/after are the Paging tier; highlight wraps
         // matched tokens.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val qText = o.path("q").asText("")
         require(qText.nonEmpty, "search: missing q")
         val size = o.path("size").asInt(10)
@@ -569,7 +588,7 @@ object SparkEntry {
         // through. "standard" is the engine's ASCII tokenizer (the
         // stated subset of ES's standard), "english" adds the stopword
         // filter + the Snowball stemmer.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val text = o.path("text").asText("")
         require(text.nonEmpty, "analyze: missing text")
         val an = analyzerByName(o.path("analyzer").asText("standard"))
@@ -584,7 +603,7 @@ object SparkEntry {
         // "minimum_should_match": "50%", "size": N, "scored": bool}.
         // scored=true (default) returns the BM25 top-k; scored=false the
         // filter-context match set with per-doc matched counts.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val like = o.path("like").asText("")
         require(like.nonEmpty, "mlt: missing like")
         val mltSize = o.path("size").asInt(10)
@@ -616,7 +635,7 @@ object SparkEntry {
         // ES completion suggester: {"prefix": "sp", "size": N,
         // "fuzziness": 0..2, "prefix_length": N} over the documents
         // vocabulary (the at-rest suggest artifact).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val prefix = o.path("prefix").asText("")
         require(prefix.nonEmpty, "complete: missing prefix")
         require(o.path("size").asInt(5) >= 1 && o.path("size").asInt(5) <= 1000,
@@ -642,7 +661,7 @@ object SparkEntry {
         // semantics (candidates prune before ranking, the
         // recall-preserving form); the query vector is looked up by id,
         // the kNN-by-example shape.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         require(o.hasNonNull("vec_id"), "knn: missing vec_id")
         val qid = o.path("vec_id").asLong()
         val emb0 = load(dir, "embeddings")
@@ -707,7 +726,7 @@ object SparkEntry {
         // missing/empty terms, a non-numeric weight, duplicate terms
         // (the array form can carry them; SparseVector rejects), and
         // prune thresholds outside their ES ranges.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val t = o.path("terms")
         val b = Seq.newBuilder[(String, Double)]
         if (t.isObject && t.size() > 0) {
@@ -748,7 +767,7 @@ object SparkEntry {
         // points (the map's clustered-dots layer after a pan/pin).
         // Filters compile to plain comparisons / the pinned haversine
         // tree and push into the scan (PlanSpec).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val precision = o.path("precision").asInt(2)
         val pts = load(dir, "customer")
           .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
@@ -774,7 +793,7 @@ object SparkEntry {
         // "linear", "weights": [wLex, wVec] (linear only), "mmr":
         // {"k": n, "lambda": l} (optional diversification of the fused
         // list using the embedding vectors)}.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val qText = o.path("q").asText("")
         require(qText.nonEmpty, "fuse: missing q")
         require(o.hasNonNull("vec_id"), "fuse: missing vec_id")
@@ -835,7 +854,7 @@ object SparkEntry {
         // The alerting endpoint: {"queries": {"alert_id": "<query_string
         // text>", ...}} percolated against the documents corpus — one
         // (query_id, doc_id) row per match, the Watcher wire shape.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = Json.read(body)
         val qs = o.path("queries")
         require(qs.isObject && qs.size() > 0, "percolate: missing queries")
         val it = qs.fields()
@@ -869,20 +888,46 @@ object SparkEntry {
   private lazy val dashboardVizes: Seq[graft.query.VisState.Viz] =
     graft.query.VisState.bundledDashboard()
 
-  /** Render one saved visualization over the filtered federated frame onto
-    * the dashboard's `(viz, key, subkey, count)` bucket schema. Bucket
-    * fields resolve against the frame; a field the engine's published
-    * projection does not carry is dropped (the export's `notebookhtml`
-    * descriptor link — Kibana buckets a missing field into nothing, and
-    * the DatasetTable panel degrades to its first level, per-city counts).
+  /** The dashboard's bucket aggregations over one backend: what differs
+    * between rendering a panel from the corpus scan ([[Aggs]]) and from the
+    * at-rest rollup ([[PreAgg]]). `carries` says whether a frame can serve
+    * a bucket; the other three compute the bucket's `count` frame.
     */
-  private[graft] def renderViz(f: DataFrame, v: graft.query.VisState.Viz): DataFrame = {
+  private final case class VizBackend(
+      carries: (DataFrame, graft.query.VisState.BucketAgg) => Boolean,
+      geohashGrid: (DataFrame, graft.query.VisState.BucketAgg) => DataFrame,
+      terms: (DataFrame, graft.query.VisState.BucketAgg) => DataFrame,
+      nestedTerms: (DataFrame, graft.query.VisState.BucketAgg,
+        graft.query.VisState.BucketAgg) => DataFrame)
+
+  /** Bucket fields resolve against the filtered federated frame; a field
+    * the engine's published projection does not carry is dropped (the
+    * export's `notebookhtml` descriptor link — Kibana buckets a missing
+    * field into nothing, and the DatasetTable panel degrades to its first
+    * level, per-city counts).
+    */
+  private val scanBackend = VizBackend(
+    (f, b) => f.columns.contains(b.field),
+    (f, b) => Aggs.geohashGridFromGeoloc(f, b.field, b.precision),
+    (f, b) => Aggs.termsTopN(f, b.field, b.size),
+    (f, p, c) => Aggs.nestedTermsBuckets(f, p.field, c.field,
+      parentSize = p.size, childSize = c.size))
+
+  /** Render one saved visualization onto the dashboard's
+    * `(viz, key, subkey, count)` bucket schema, aggregating through
+    * `backend`. A bucket field the frame does not carry drops out; a
+    * panel whose every bucket field is absent renders as nothing.
+    */
+  private def renderPanel(
+      f: DataFrame,
+      v: graft.query.VisState.Viz,
+      backend: VizBackend): DataFrame = {
     import graft.query.VisState.BucketAgg
     val label = vizLabels.getOrElse(v.id, v.id)
     def flat(df: DataFrame, key: String) =
       df.select(lit(label).as("viz"), col(key).cast("string").as("key"),
         lit("").as("subkey"), col("count"))
-    val buckets = v.buckets.filter(b => f.columns.contains(b.field))
+    val buckets = v.buckets.filter(backend.carries(f, _))
     buckets match {
       case Seq() if v.buckets.nonEmpty =>
         // every bucket field is absent from the serving frame: the panel
@@ -891,12 +936,11 @@ object SparkEntry {
           .select(lit(label).as("viz"), lit("").as("key"),
             lit("").as("subkey"), lit(0L).as("count"))
       case Seq(b @ BucketAgg("geohash_grid", _, _, _, _)) =>
-        flat(Aggs.geohashGridFromGeoloc(f, b.field, b.precision), "geohash")
+        flat(backend.geohashGrid(f, b), "geohash")
       case Seq(b @ BucketAgg("terms", _, _, _, _)) =>
-        flat(Aggs.termsTopN(f, b.field, b.size), b.field)
+        flat(backend.terms(f, b), b.field)
       case Seq(p @ BucketAgg("terms", _, _, _, _), c @ BucketAgg("terms", _, _, _, _)) =>
-        Aggs.nestedTermsBuckets(f, p.field, c.field,
-          parentSize = p.size, childSize = c.size)
+        backend.nestedTerms(f, p, c)
           .select(lit(label).as("viz"), col(p.field).cast("string").as("key"),
             col(c.field).cast("string").as("subkey"), col("count"))
       case other =>
@@ -905,14 +949,17 @@ object SparkEntry {
     }
   }
 
-  private[graft] def dashboardRefresh(
-      s: SparkSession,
-      warm: Boolean,
-      stateJson: String = dashboardStateJson,
-      vizes: Seq[graft.query.VisState.Viz] = null): DataFrame = {
-    val f = dashboardFiltered(s, warm, stateJson)
-    Option(vizes).getOrElse(dashboardVizes)
-      .map(renderViz(f, _))
+  /** Render one saved visualization over the filtered federated frame. */
+  private[graft] def renderViz(f: DataFrame, v: graft.query.VisState.Viz): DataFrame =
+    renderPanel(f, v, scanBackend)
+
+  /** Every panel of `vizes` through `backend`, as one sorted frame. */
+  private def renderDashboard(
+      f: DataFrame,
+      vizes: Seq[graft.query.VisState.Viz],
+      backend: VizBackend): DataFrame =
+    vizes
+      .map(renderPanel(f, _, backend))
       .reduce(_.unionByName(_))
       // Total order without a range-partitioning exchange: a global sort
       // would sample the (tiny) result in an extra job per interaction;
@@ -920,7 +967,14 @@ object SparkEntry {
       // cardinality.
       .coalesce(1)
       .sortWithinPartitions("viz", "key", "subkey")
-  }
+
+  private[graft] def dashboardRefresh(
+      s: SparkSession,
+      warm: Boolean,
+      stateJson: String = dashboardStateJson,
+      vizes: Seq[graft.query.VisState.Viz] = null): DataFrame =
+    renderDashboard(dashboardFiltered(s, warm, stateJson),
+      Option(vizes).getOrElse(dashboardVizes), scanBackend)
 
   /** The saved map panel's precision — baked into the rollup's geohash
     * dimension at build time (ES likewise indexes the geohash_grid's
@@ -949,60 +1003,29 @@ object SparkEntry {
           dashboardCubePrecision)))
   }
 
-  /** [[renderViz]] over the at-rest rollup instead of the corpus: identical
-    * buckets (the weighted ops in [[PreAgg]] restate each aggregation's
-    * ordering contract over `sum(cnt)`), same degrade rules — a bucket
-    * field the rollup does not carry drops out, a fully-missing panel
-    * renders as nothing.
+  /** [[scanBackend]]'s twin over the at-rest rollup: identical buckets
+    * (the weighted ops in [[PreAgg]] restate each aggregation's ordering
+    * contract over `sum(cnt)`), same degrade rules — a bucket field the
+    * rollup does not carry drops out, a fully-missing panel renders as
+    * nothing.
     */
-  private[graft] def renderVizPreagg(pre: DataFrame, v: graft.query.VisState.Viz): DataFrame = {
-    import graft.query.VisState.BucketAgg
-    val label = vizLabels.getOrElse(v.id, v.id)
-    def flat(df: DataFrame, key: String) =
-      df.select(lit(label).as("viz"), col(key).cast("string").as("key"),
-        lit("").as("subkey"), col("count"))
-    val buckets = v.buckets.filter(b =>
+  private val rollupBackend = VizBackend(
+    (pre, b) =>
       if (b.aggType == "geohash_grid") pre.columns.contains("geohash")
-      else pre.columns.contains(b.field))
-    buckets match {
-      case Seq() if v.buckets.nonEmpty =>
-        pre.sparkSession.emptyDataFrame
-          .select(lit(label).as("viz"), lit("").as("key"),
-            lit("").as("subkey"), lit(0L).as("count"))
-      case Seq(b @ BucketAgg("geohash_grid", _, _, _, _)) =>
-        // any precision at or below the ingest precision truncates from
-        // the rollup (geohash prefixes ARE the coarser cells); only a
-        // FINER saved map forces a rebuild or the corpus scan
-        require(PreAgg.coversGeohash(dashboardCubePrecision, b.precision),
-          s"saved map precision ${b.precision} > rollup ingest precision " +
-            s"$dashboardCubePrecision — rebuild the rollup or fall back to the scan")
-        flat(PreAgg.geohashGridAt(pre, dashboardCubePrecision, b.precision), "geohash")
-      case Seq(b @ BucketAgg("terms", _, _, _, _)) =>
-        flat(PreAgg.termsTopN(pre, b.field, b.size), b.field)
-      case Seq(p @ BucketAgg("terms", _, _, _, _), c @ BucketAgg("terms", _, _, _, _)) =>
-        PreAgg.nestedTerms(pre, p.field, c.field,
-          parentSize = p.size, childSize = c.size)
-          .select(lit(label).as("viz"), col(p.field).cast("string").as("key"),
-            col(c.field).cast("string").as("subkey"), col("count"))
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported panel shape for '${v.id}': ${other.mkString(", ")}")
-    }
-  }
+      else pre.columns.contains(b.field),
+    (pre, b) => {
+      // any precision at or below the ingest precision truncates from
+      // the rollup (geohash prefixes ARE the coarser cells); only a
+      // FINER saved map forces a rebuild or the corpus scan
+      require(PreAgg.coversGeohash(dashboardCubePrecision, b.precision),
+        s"saved map precision ${b.precision} > rollup ingest precision " +
+          s"$dashboardCubePrecision — rebuild the rollup or fall back to the scan")
+      PreAgg.geohashGridAt(pre, dashboardCubePrecision, b.precision)
+    },
+    (pre, b) => PreAgg.termsTopN(pre, b.field, b.size),
+    (pre, p, c) => PreAgg.nestedTerms(pre, p.field, c.field,
+      parentSize = p.size, childSize = c.size))
 
-  /** The dashboard served ENTIRELY from the pre-aggregated rollup — the
-    * 100 TB serving path. Identical results to [[dashboardRefresh]] (one
-    * oracle pins both), but the serving plan reads only the rollup: the
-    * corpus is scanned exactly once, at rollup build, and a widget change
-    * re-aggregates |distinct dim combos| rows. The global time filter
-    * (`datetime >= 2010-01-01T00:00`, a year-boundary instant in the
-    * published string encoding) is applied as `year >= 2010` — `year` and
-    * `datetime` are harmonized from the same source parts, so the
-    * predicates select identical rows (the shared oracle certifies it).
-    * A state filtering any field outside the rollup's dimensions fails
-    * loudly ([[PreAgg.covers]]): fall back to [[dashboardRefresh]], never
-    * serve silently-wrong buckets.
-    */
   /** The dashboard rollup, built once per session (the at-rest table a
     * 100 TB deployment maintains at ingest).
     */
@@ -1030,25 +1053,32 @@ object SparkEntry {
       "graft_geotile_preagg")
   }
 
+  /** The dashboard served ENTIRELY from the pre-aggregated rollup — the
+    * 100 TB serving path. Identical results to [[dashboardRefresh]] (one
+    * oracle pins both), but the serving plan reads only the rollup: the
+    * corpus is scanned exactly once, at rollup build, and a widget change
+    * re-aggregates |distinct dim combos| rows. The global time filter
+    * (`datetime >= 2010-01-01T00:00`, a year-boundary instant in the
+    * published string encoding) is applied as `year >= 2010` — `year` and
+    * `datetime` are harmonized from the same source parts, so the
+    * predicates select identical rows (the shared oracle certifies it).
+    * A state filtering any field outside the rollup's dimensions fails
+    * loudly ([[PreAgg.covers]]): fall back to [[dashboardRefresh]], never
+    * serve silently-wrong buckets.
+    */
   private[graft] def dashboardRefreshPreagg(
       s: SparkSession,
       stateJson: String = dashboardStateJson,
       rollup: Option[DataFrame] = None): DataFrame = {
-    val dims = dashboardCubeDims
     val pre = rollup.getOrElse(dashboardRollup(s))
-    val fc = Widgets.fromJson(dashboardWidgetFields(s), stateJson)
-    val dimNames = dims.map(_._1)
-    require(PreAgg.covers(dimNames, fc.selections.keys.toSeq),
-      s"widget state filters outside rollup dims ${dimNames.mkString(",")} — " +
-        "serve this state from dashboard_refresh (full scan) instead")
+    val (fc, covered) = widgetState(s, stateJson)
+    require(covered, "widget state filters outside rollup dims " +
+      s"${dashboardCubeDims.map(_._1).mkString(",")} — " +
+      "serve this state from dashboard_refresh (full scan) instead")
     val f = pre
       .where(col("year").isNotNull && col("year") >= 2010)
       .where(fc.compile)
-    dashboardVizes
-      .map(renderVizPreagg(f, _))
-      .reduce(_.unionByName(_))
-      .coalesce(1)
-      .sortWithinPartitions("viz", "key", "subkey")
+    renderDashboard(f, dashboardVizes, rollupBackend)
   }
 
   // ---------------------------------------------------------------------

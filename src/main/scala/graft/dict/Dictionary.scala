@@ -6,31 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** One data-dictionary row — one per *column* of a profiled table. Schema
-  * restates the reference's fixed 13-column dictionary
-  * (`harmonizeCrimeIncidents.py:356-381`; executed DDL
-  * `notebooks/html/Detroit-notebook.html:13505`). Deliberately preserved
-  * quirks (SURVEY.md §1.4): `dict_min`/`dict_max` are STRING (the
-  * reference's UNION ALL coerces mixed types to string);
-  * `dict_uifilter` is the *string* `'True'`/`'False'` (webapp
-  * string-compares it, `views.js:582`).
-  */
-final case class DictEntry(
-    dict_field: String,
-    dict_count: Long,
-    dict_countdistinct: Long,
-    dict_countmissing: Long,
-    dict_mean: Option[Double],
-    dict_stddev: Option[Double],
-    dict_min: Option[String],
-    dict_max: Option[String],
-    dict_vargroup: String,
-    dict_vardescr: String,
-    dict_uifilter: String,
-    dict_varmapping: String,
-    dict_vartype: String,
-)
-
 /** Data-dictionary profiler (reference `buildDataDict`,
   * `harmonizeCrimeIncidents.py:337-406`).
   *
@@ -57,7 +32,14 @@ object Dictionary {
     case _ => false
   }
 
-  /** Profile every column of `df` into a dictionary DataFrame.
+  /** Profile every column of `df` into a dictionary DataFrame: one row per
+    * *column* of `df`. The schema restates the reference's fixed 13-column
+    * dictionary (`harmonizeCrimeIncidents.py:356-381`; executed DDL
+    * `notebooks/html/Detroit-notebook.html:13505`). Deliberately preserved
+    * quirks (SURVEY.md §1.4): `dict_min`/`dict_max` are STRING (the
+    * reference's UNION ALL coerces mixed types to string); `dict_uifilter`
+    * is the *string* `'True'`/`'False'` (webapp string-compares it,
+    * `views.js:582`).
     *
     * @param metadata       per-field harmonized metadata (defaults to the
     *                       standard vocabulary registry)
@@ -399,13 +381,6 @@ object Dictionary {
       java.util.Arrays.asList(rows: _*), result.schema)
     local.createOrReplaceTempView(viewName)
     spark.table(viewName)
-  }
-
-  /** Typed view of a dictionary frame. */
-  def asEntries(dict: DataFrame): org.apache.spark.sql.Dataset[DictEntry] = {
-    val spark = dict.sparkSession
-    import spark.implicits._
-    dict.as[DictEntry]
   }
 
   /** Parsed widget types per field — the hook the query layer uses to decide

@@ -308,18 +308,32 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 3,
       numChunks: Int = 4): DataFrame = {
-    require(64 % numChunks == 0, "numChunks must divide 64")
-    require(numChunks > maxHamming, "pigeonhole needs numChunks > maxHamming")
-    val chunkBits = 64 / numChunks
-    val mask = if (chunkBits == 64) -1L else (1L << chunkBits) - 1
     val sims = spread(df.select(col(idCol), col(textCol)))
       .select(col(idCol), SimHash.simhash64(tokens(col(textCol))).as("_sim"))
+    simhashChunkPairs(sims, idCol, bits = 64, numChunks, maxHamming)
+  }
+
+  /** The pigeonhole stage both simhash pair generators share: split each
+    * `bits`-bit fingerprint `_sim` into `numChunks` chunks, join on any
+    * equal chunk, verify the Hamming distance `<= maxHamming`. Returns
+    * `(id_a, id_b, hamming)` with `id_a < id_b`.
+    */
+  private def simhashChunkPairs(
+      sims: DataFrame,
+      idCol: String,
+      bits: Int,
+      numChunks: Int,
+      maxHamming: Int): DataFrame = {
+    require(bits % numChunks == 0, s"numChunks must divide $bits")
+    require(numChunks > maxHamming, "pigeonhole needs numChunks > maxHamming")
+    val chunkBits = bits / numChunks
+    val mask = if (chunkBits == 64) -1L else (1L << chunkBits) - 1
     val chunks = sims
       .select(col(idCol), col("_sim"), explode(array((0 until numChunks).map(j =>
         struct(lit(j).as("idx"), shiftrightunsigned(col("_sim"), j * chunkBits).bitwiseAND(mask).as("v"))): _*)).as("_chunk"))
       .select(col(idCol), col("_sim"), col("_chunk.idx").as("_cidx"), col("_chunk.v").as("_cval"))
 
-    // The 64-bit simhash rides along in the chunk join (8 bytes — unlike the
+    // The simhash rides along in the chunk join (8 bytes — unlike the
     // minhash sets there's nothing to save by joining it back later), so the
     // Hamming verify prunes candidates before the pair-dedup shuffle.
     val a = chunks.select(col(idCol).as("id_a"), col("_sim").as("_sim_a"), col("_cidx"), col("_cval"))
@@ -351,10 +365,6 @@ object Dedup {
       maxHamming: Int = 3,
       numChunks: Int = 4): DataFrame = {
     val bits = 52
-    require(bits % numChunks == 0, s"numChunks must divide $bits")
-    require(numChunks > maxHamming, "pigeonhole needs numChunks > maxHamming")
-    val chunkBits = bits / numChunks
-    val mask = (1L << chunkBits) - 1
     def portableHash(c: Column): Column =
       conv(substring(md5(c), 1, 13), 16, 10).cast("long")
     val tallyAggs = (0 until bits).map { b =>
@@ -370,18 +380,7 @@ object Dedup {
         (0 until bits).map(b =>
           when(col(s"_t$b") > 0, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _).as("_sim"))
-    val chunks = sims
-      .select(col(idCol), col("_sim"), explode(array((0 until numChunks).map(j =>
-        struct(lit(j).as("idx"), shiftrightunsigned(col("_sim"), j * chunkBits).bitwiseAND(mask).as("v"))): _*)).as("_chunk"))
-      .select(col(idCol), col("_sim"), col("_chunk.idx").as("_cidx"), col("_chunk.v").as("_cval"))
-    val a = chunks.select(col(idCol).as("id_a"), col("_sim").as("_sim_a"), col("_cidx"), col("_cval"))
-    val b = chunks.select(col(idCol).as("id_b"), col("_sim").as("_sim_b"), col("_cidx"), col("_cval"))
-    a.join(b, Seq("_cidx", "_cval"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("_sim_a").bitwiseXOR(col("_sim_b"))))
-      .where(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-      .dropDuplicates("id_a", "id_b")
+    simhashChunkPairs(sims, idCol, bits, numChunks, maxHamming)
   }
 
   /** Connected components over a near-duplicate pair list, by iterative

@@ -298,10 +298,20 @@ object Aggs {
     require(size > 0, s"compositeAgg size must be positive, got $size")
     require(after.forall(_.size == keys.size),
       s"after key arity ${after.map(_.size)} != ${keys.size}")
-    // tuple "greater than" in key order, null-free keys assumed (ES's
-    // composite sources skip missing by default — mirrored here)
+    compositePage(df, keys, after).groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("count"))
+      .orderBy(keys.map(asc): _*)
+      .limit(size)
+  }
+
+  /** The rows of a [[compositeAgg]] page: non-null keys (ES's composite
+    * sources skip missing by default — mirrored here), strictly after the
+    * `after` key tuple in key order. Shared with the rollup twin.
+    */
+  private[query] def compositePage(
+      df: DataFrame, keys: Seq[String], after: Option[Seq[Any]]): DataFrame = {
     val base = keys.foldLeft(df)((d, k) => d.where(col(k).isNotNull))
-    val paged = after match {
+    after match {
       case None => base
       case Some(ak) =>
         val gt = keys.indices.map { i =>
@@ -311,10 +321,6 @@ object Aggs {
         }.reduce(_ || _)
         base.where(gt)
     }
-    paged.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("count"))
-      .orderBy(keys.map(asc): _*)
-      .limit(size)
   }
 
   /** ES numeric `histogram` bucket agg (the fixed-interval sibling of
@@ -654,18 +660,24 @@ object Aggs {
         (max(cents).cast("double") / 100.0).as("max"),
         sum(cents).as("_sc"),
         sum(cents * cents).as("_sc2"))
-      .select(
-        col("count"), col("min"), col("max"),
-        (col("_sc") / 100.0).as("sum"),
-        ((col("_sc") / 100.0) / col("count")).as("avg"),
-        (col("_sc2") / 10000.0).as("sum_of_squares"),
-        ((col("_sc2") / 10000.0) / col("count") -
-          ((col("_sc") / 100.0) / col("count")) *
-          ((col("_sc") / 100.0) / col("count"))).as("variance"),
-        sqrt((col("_sc2") / 10000.0) / col("count") -
-          ((col("_sc") / 100.0) / col("count")) *
-          ((col("_sc") / 100.0) / col("count"))).as("std_deviation"))
+      .select(centsStatsColumns: _*)
   }
+
+  /** [[extendedStats]]'s output row from the `count`/`min`/`max` and
+    * cents-sum `_sc`/`_sc2` aggregate — shared with the rollup twin
+    * ([[PreAgg.extendedStats]]).
+    */
+  private[query] def centsStatsColumns: Seq[Column] = Seq(
+    col("count"), col("min"), col("max"),
+    (col("_sc") / 100.0).as("sum"),
+    ((col("_sc") / 100.0) / col("count")).as("avg"),
+    (col("_sc2") / 10000.0).as("sum_of_squares"),
+    ((col("_sc2") / 10000.0) / col("count") -
+      ((col("_sc") / 100.0) / col("count")) *
+      ((col("_sc") / 100.0) / col("count"))).as("variance"),
+    sqrt((col("_sc2") / 10000.0) / col("count") -
+      ((col("_sc") / 100.0) / col("count")) *
+      ((col("_sc") / 100.0) / col("count"))).as("std_deviation"))
 
   /** ES `weighted_avg` metric agg, integer-exact like [[extendedStats]]:
     * `Σ floor(v·100)·w / Σ w` in cents (weights integer-shaped by the
@@ -952,6 +964,16 @@ object Aggs {
         sum(when(col("_fg"), 1L).otherwise(0L)).as("fg_count"))
       .where(col("fg_count") > 0)
       .crossJoin(broadcast(totals))
+    rankSignificant(counted, heuristic, n)
+  }
+
+  /** Score and rank significant-terms candidates: `counted` carries each
+    * term's `fg_count`/`bg_count` and the set totals `_fg_total`/
+    * `_bg_total`; the top `n` by `heuristic`, ties by term ascending.
+    * Shared with the rollup-served form ([[PreAgg.significantTerms]]),
+    * where rollup counts replace doc-frequency counts.
+    */
+  private[query] def rankSignificant(counted: DataFrame, heuristic: String, n: Int): DataFrame = {
     // The score heuristics, per ES's significance family (all public
     // formulas). bg here is the SUPERSET (ES's background_is_superset
     // default): every doc counts toward bg, foreground docs included.

@@ -770,9 +770,10 @@ object Bm25 {
 
   /** The shared `d`/`base`/`st` CTE bodies (no `WITH` keyword) — the
     * tokenized corpus, per-doc tf/dl, and the 1-row statistics — so
-    * multi-stage oracles (explain) can extend the same scope.
+    * multi-stage oracles (explain, [[Ltr.oracleSql]]) can extend the
+    * same scope.
     */
-  private def oracleBaseCtes(
+  private[query] def oracleBaseCtes(
       table: String,
       idCol: String,
       textExpr: String,

@@ -782,27 +782,11 @@ object FilterSpec {
         }
       exists(array(struct(toks.as("_t"))), trow => {
         val tk = trow("_t")
-        // occurrence START positions of one analyzed phrase — a plain
+        // occurrence START positions of each analyzed phrase — a plain
         // INT list (lengths are static per alternative: e = s + L − 1 is
-        // literal arithmetic, chosen widths fold to compile-time Ints);
-        // candidate start at every token index, the full window compared
-        // in-bounds (the bound conjunct leads, so element_at never reads
-        // past the list)
-        def phraseStarts(ts: Seq[String]): Column = {
-          val L = ts.length
-          filter(
-            transform(tk, (x, i0) => {
-              val inBounds = i0 + lit(L - 1) < size(tk)
-              val matches = ts.zipWithIndex.map { case (t, j) =>
-                if (j == 0) x === t
-                else element_at(tk, i0 + lit(j + 1)) === t
-              }.reduce(_ && _)
-              when(inBounds && matches, i0)
-            }),
-            v => v.isNotNull)
-        }
+        // literal arithmetic, chosen widths fold to compile-time Ints)
         exists(array(struct(
-          flat.map { case (name, ts) => phraseStarts(ts).as(name) }: _*)), row => {
+          flat.map { case (name, ts) => phraseStartsIn(tk, ts).as(name) }: _*)), row => {
           // ordered chain: pick one occurrence per slot, each starting
           // strictly after the previous slot's end; the last pick closes
           // the gap check (enclosing width − Σ static widths ≤ maxGaps)

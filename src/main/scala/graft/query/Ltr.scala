@@ -146,12 +146,6 @@ object Ltr {
       b: Double = Bm25.DefaultB): String = {
     val terms = Bm25.queryTerms(query)
     require(terms.nonEmpty && terms.forall(!_.contains(' ')))
-    val tfCols = terms.zipWithIndex.map { case (t, i) =>
-      s"len(list_filter(toks, x -> x = '$t'))::BIGINT AS tf$i"
-    }.mkString(",\n    ")
-    val dfCols = terms.indices.map { i =>
-      s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END)::BIGINT AS df$i"
-    }.mkString(",\n    ")
     val idfCols = terms.indices.map { i =>
       s"ln(1.0 + (st.n - st.df$i + 0.5) / (st.df$i + 0.5)) AS f_idf$i"
     }.mkString(",\n  ")
@@ -162,20 +156,7 @@ object Ltr {
     }.mkString("(", "\n    + ", ")")
     val anyMatch = terms.indices.map(i => s"b.tf$i > 0").mkString(" OR ")
     val tfOut = terms.indices.map(i => s"b.tf$i AS f_tf$i").mkString(", ")
-    s"""WITH d AS (
-       |  SELECT $idCol,
-       |    list_filter(str_split_regex(trim(regexp_replace(lower($textExpr), '[^a-z0-9]+', ' ', 'g')), ' +'),
-       |      x -> x <> '') AS toks
-       |  FROM $table
-       |), base AS (
-       |  SELECT $idCol, len(toks)::BIGINT AS dl,
-       |    $tfCols
-       |  FROM d
-       |), st AS (
-       |  SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS sumdl,
-       |    $dfCols
-       |  FROM base
-       |), rel AS (
+    s"""WITH ${Bm25.oracleBaseCtes(table, idCol, textExpr, terms)}, rel AS (
        |  SELECT $idCol FROM $table WHERE $relPredSql
        |)
        |SELECT b.$idCol,

@@ -131,32 +131,7 @@ object PreAgg {
         sum(when(col("_fg"), col(CntCol)).otherwise(0L)).as("fg_count"))
       .where(col("fg_count") > 0)
       .crossJoin(broadcast(totals))
-    // the same score trees as the corpus-scan form
-    // ([[graft.query.Aggs.significantTerms]]) — rollup counts replace
-    // doc-frequency counts, the heuristic algebra is shared
-    val score = heuristic match {
-      case "jlh" =>
-        val fgPct = col("fg_count").cast("double") / col("_fg_total")
-        val bgPct = col("bg_count").cast("double") / col("_bg_total")
-        (fgPct - bgPct) * (fgPct / bgPct)
-      case "chi_square" =>
-        val a = col("fg_count").cast("double")
-        val b = col("_fg_total").cast("double") - a
-        val c = col("bg_count").cast("double") - a
-        val d = (col("_bg_total").cast("double") - col("_fg_total").cast("double")) -
-          (col("bg_count").cast("double") - a)
-        val nTot = col("_bg_total").cast("double")
-        val num = (a * d - b * c) * (a * d - b * c) * nTot
-        val den = (a + b) * (c + d) * (a + c) * (b + d)
-        when(den === 0.0, lit(0.0)).otherwise(num / den)
-      case "percentage" =>
-        col("fg_count").cast("double") / col("bg_count").cast("double")
-    }
-    counted
-      .withColumn("score", score)
-      .orderBy(desc("score"), asc("term"))
-      .select("term", "fg_count", "bg_count", "score")
-      .limit(n)
+    Aggs.rankSignificant(counted, heuristic, n)
   }
 
   /** ES "Unique Count" (the cardinality metric agg — Kibana's second-most
@@ -488,18 +463,7 @@ object PreAgg {
     require(size > 0, s"compositeAgg size must be positive, got $size")
     require(after.forall(_.size == keys.size),
       s"after key arity ${after.map(_.size)} != ${keys.size}")
-    val base = keys.foldLeft(pre)((d, k) => d.where(col(k).isNotNull))
-    val paged = after match {
-      case None => base
-      case Some(ak) =>
-        val gt = keys.indices.map { i =>
-          val eqPrefix = (0 until i).map(j => col(keys(j)) === lit(ak(j)))
-            .reduceOption(_ && _).getOrElse(lit(true))
-          eqPrefix && col(keys(i)) > lit(ak(i))
-        }.reduce(_ || _)
-        base.where(gt)
-    }
-    paged.groupBy(keys.map(col): _*)
+    Aggs.compositePage(pre, keys, after).groupBy(keys.map(col): _*)
       .agg(sum(col(CntCol)).as("count"))
       .orderBy(keys.map(asc): _*)
       .limit(size)
@@ -617,17 +581,7 @@ object PreAgg {
         (max(c).cast("double") / 100.0).as("max"),
         sum(c * col(CntCol)).as("_sc"),
         sum(c * c * col(CntCol)).as("_sc2"))
-      .select(
-        col("count"), col("min"), col("max"),
-        (col("_sc") / 100.0).as("sum"),
-        ((col("_sc") / 100.0) / col("count")).as("avg"),
-        (col("_sc2") / 10000.0).as("sum_of_squares"),
-        ((col("_sc2") / 10000.0) / col("count") -
-          ((col("_sc") / 100.0) / col("count")) *
-          ((col("_sc") / 100.0) / col("count"))).as("variance"),
-        sqrt((col("_sc2") / 10000.0) / col("count") -
-          ((col("_sc") / 100.0) / col("count")) *
-          ((col("_sc") / 100.0) / col("count"))).as("std_deviation"))
+      .select(Aggs.centsStatsColumns: _*)
   }
 
   /** date_trunc grains that compose upward: truncating at a finer grain

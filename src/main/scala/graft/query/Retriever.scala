@@ -1,6 +1,6 @@
 package graft.query
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import graft.expr.TextMatch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -61,7 +61,7 @@ object Retriever {
     * ranked frame: `(doc_id, rank[, score][, pinned])`, rank ascending.
     */
   def compile(docs: DataFrame, embeddings: DataFrame, json: String): DataFrame = {
-    val root0 = new ObjectMapper().readTree(json)
+    val root0 = graft.Json.read(json)
     val root = if (root0.has("retriever")) root0.get("retriever") else root0
     compileNode(docs, embeddings, root).run
   }

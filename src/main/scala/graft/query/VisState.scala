@@ -1,6 +1,6 @@
 package graft.query
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 
 /** Parser for Kibana's exported saved objects — the reference ships its
   * dashboard as an importable export (`notebooks/kibana-content/
@@ -39,15 +39,13 @@ object VisState {
     */
   final case class Viz(id: String, title: String, vizType: String, buckets: Seq[BucketAgg])
 
-  private def mapper = new ObjectMapper()
-
   /** Parse one `visState` JSON payload. The metric agg must be `count` —
     * the only metric the reference's export uses (every panel is G1 doc
     * counts under buckets); anything else is a config this engine has no
     * saved-object for, so fail loudly rather than render wrong numbers.
     */
   def parseVisState(id: String, json: String): Viz = {
-    val root = mapper.readTree(json)
+    val root = graft.Json.read(json)
     val aggs = root.path("aggs")
     require(aggs.isArray, s"visState '$id' has no aggs array")
     var buckets = Vector.empty[BucketAgg]
@@ -84,13 +82,13 @@ object VisState {
     var vizes = Map.empty[String, Viz]
     var panels = Seq.empty[String]
     text.linesIterator.filter(_.trim.nonEmpty).foreach { line =>
-      val o = mapper.readTree(line)
+      val o = graft.Json.read(line)
       val id = o.path("_id").asText()
       o.path("_type").asText() match {
         case "visualization" =>
           vizes += id -> parseVisState(id, o.path("_source").path("visState").asText())
         case "dashboard" =>
-          val ps = mapper.readTree(o.path("_source").path("panelsJSON").asText())
+          val ps = graft.Json.read(o.path("_source").path("panelsJSON").asText())
           val it = ps.elements()
           val buf = Seq.newBuilder[String]
           while (it.hasNext) buf += it.next().path("id").asText()

@@ -71,8 +71,7 @@ object Widgets {
     * of compiling nonsense. Unknown field names fail like any `select`.
     */
   def fromJson(fields: FieldCollection, json: String): FieldCollection = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(json)
+    val root = graft.Json.read(json)
     require(root.isArray, s"widget state must be a JSON array, got: ${root.getNodeType}")
     var fc = fields
     val it = root.elements()
@@ -177,8 +176,6 @@ final case class FieldCollection(
       s"'$field' of type ${f.varType.serialize}")
     copy(selections = selections + (field -> sel))
   }
-
-  def deselect(field: String): FieldCollection = copy(selections = selections - field)
 
   /** The FilterSpec conjunction of all enabled (selected) widgets —
     * `generateQuery` (`collections.js:146-208`); empty/no-op selections

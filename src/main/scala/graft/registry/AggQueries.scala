@@ -142,7 +142,7 @@ object AggQueries extends Family("serving") {
 
   /** Micro-degree centroid per segment, shared scan/sum-rollup. */
   private val geoCentroidOracleSql: String =
-    """WITH pts AS (
+    s"""WITH pts AS (
       |  -- two IEEE pins the micro-degree floor needs that the coarse
       |  -- geohash oracles never noticed: (a) 0.001 must be DOUBLE (as a
       |  -- DECIMAL literal the addition stays exact and the floor flips
@@ -150,9 +150,7 @@ object AggQueries extends Family("serving") {
       |  -- + conditional add — the ((x%m)+m)%m double-mod form re-rounds
       |  -- r+m and loses the low bits of small remainders
       |  SELECT c_mktsegment,
-      |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-      |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-      |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+      |    $customerLatLonSql
       |  FROM customer
       |), m AS (
       |  SELECT c_mktsegment, count(*)::BIGINT AS count,
@@ -331,18 +329,7 @@ object AggQueries extends Family("serving") {
     * scan/rollup-served-series.
     */
   private val changePointOracleSql: String =
-    """WITH s AS (
-      |  SELECT date_trunc('day', ts) AS b, count(*)::BIGINT AS c
-      |  FROM events GROUP BY 1
-      |), x AS (
-      |  SELECT b, c, row_number() OVER (ORDER BY b)::BIGINT AS k,
-      |    sum(c) OVER (ORDER BY b
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS s1,
-      |    count(*) OVER ()::BIGINT AS n,
-      |    sum(c) OVER ()::BIGINT AS tot,
-      |    lead(b) OVER (ORDER BY b) AS nxt
-      |  FROM s
-      |), y AS (
+    dailyChangePointCtesSql + """), y AS (
       |  SELECT strftime(nxt, '%Y-%m-%d') AS change_point,
       |    abs(s1 * (n - k) - (tot - s1) * k)::DOUBLE /
       |      (k * (n - k))::DOUBLE AS delta,
@@ -398,11 +385,9 @@ object AggQueries extends Family("serving") {
       |ORDER BY count DESC, e.event_type LIMIT 10""".stripMargin
 
   private val geoBoundsOracleSql: String =
-    """WITH pts AS (
+    s"""WITH pts AS (
         |  SELECT c_mktsegment,
-        |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-        |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-        |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+        |    $customerLatLonSql
         |  FROM customer
         |)
         |SELECT c_mktsegment, count(*)::BIGINT AS count,
@@ -465,11 +450,9 @@ object AggQueries extends Family("serving") {
     * trees differ).
     */
   private val geoTileGrid5OracleSql: String =
-    """WITH pts AS (
+    s"""WITH pts AS (
       |  SELECT
-      |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-      |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-      |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+      |    $customerLatLonSql
       |  FROM customer
       |), idx AS (
       |  SELECT
@@ -589,6 +572,15 @@ object AggQueries extends Family("serving") {
       |       count(*) AS count
       |FROM gh GROUP BY 1 ORDER BY count DESC, geohash ASC""".stripMargin
 
+  /** Synthetic map points over `customer` (FIXTURES.md §3): `lat` in
+    * [-90, 90) from c_acctbal, `lon` in [-180, 180) from c_custkey, each
+    * nudged off the grid lines by 0.001.
+    */
+  private[registry] def customerPoints(dir: String)(implicit spark: SparkSession): DataFrame =
+    load(dir, "customer")
+      .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
+      .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+
   val cases: Seq[QueryCase] = Seq(
     // ===== §2.3 aggregations / sorts (A1-A7, O1-O2) =====
 
@@ -693,9 +685,7 @@ object AggQueries extends Family("serving") {
       implicit val spark: SparkSession = s
       // Geohash grid over synthetic coordinates derived from numeric columns
       // scaled into valid lat/lon ranges (FIXTURES.md §3).
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       Aggs.geohashGrid(pts, "lat", "lon", precision = 2)
     }, Some(geohashGrid2OracleSql)),
 
@@ -707,9 +697,7 @@ object AggQueries extends Family("serving") {
       // .json:7`): zoomed into cell "9" (lat [0,45), lon [-135,-90)) the
       // zoom ladder picks precision 3 (1024 cells ≤ 2000 < 32768); the
       // viewport becomes lat/lon range predicates that push into the scan.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       Aggs.geohashGridDrilldown(pts, "lat", "lon", cell = "9", targetCells = 2000)
     }, Some(
       """WITH pts AS (
@@ -719,24 +707,7 @@ object AggQueries extends Family("serving") {
         |), zoomed AS (
         |  SELECT * FROM pts
         |  WHERE lat >= 0 AND lat < 45 AND lon >= -135 AND lon < -90
-        |), idx AS (
-        |  SELECT least(127, greatest(0, floor((lat + 90) / 180 * 128)))::INT AS la,
-        |         least(255, greatest(0, floor((lon + 180) / 360 * 256)))::INT AS lo
-        |  FROM zoomed
-        |), gh AS (
-        |  SELECT ((lo & 128) << 7) | ((lo & 64) << 6) | ((lo & 32) << 5)
-        |       | ((lo & 16) << 4) | ((lo & 8) << 3) | ((lo & 4) << 2)
-        |       | ((lo & 2) << 1) | (lo & 1)
-        |       | ((la & 64) << 7) | ((la & 32) << 6) | ((la & 16) << 5)
-        |       | ((la & 8) << 4) | ((la & 4) << 3) | ((la & 2) << 2)
-        |       | ((la & 1) << 1) AS v
-        |  FROM idx
-        |)
-        |SELECT substr('0123456789bcdefghjkmnpqrstuvwxyz', (v >> 10) + 1, 1) ||
-        |       substr('0123456789bcdefghjkmnpqrstuvwxyz', ((v >> 5) & 31) + 1, 1) ||
-        |       substr('0123456789bcdefghjkmnpqrstuvwxyz', (v & 31) + 1, 1) AS geohash,
-        |       count(*) AS count
-        |FROM gh GROUP BY 1 ORDER BY count DESC, geohash ASC""".stripMargin)),
+        |""".stripMargin + geohash3CellsSql)),
 
     // The rollup-served precision-2 grid must equal the corpus scan —
     // same SQL by construction (the serving layer is invisible to results).
@@ -750,9 +721,7 @@ object AggQueries extends Family("serving") {
       // the world-view precision-2 grid from the precision-3 rollup; the
       // oracle is g6_geohash_grid's corpus scan VERBATIM (the serving
       // layer must be invisible to results).
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       val rollup = PreAgg.increment(pts, Seq(
         "geohash" -> graft.expr.Geohash.geohash(col("lat"), col("lon"), 3)))
       PreAgg.geohashGridAt(rollup, ingestPrecision = 3, precision = 2)
@@ -976,9 +945,7 @@ object AggQueries extends Family("serving") {
       // customer coordinates (the g6 fixture): micro-degree LONG sums +
       // one fixed conversion tree — hash-exact cross-engine where ES's
       // raw-double mean drifts with shard order.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       Aggs.geoCentroid(pts, "c_mktsegment", "lat", "lon")
     }, Some(geoCentroidOracleSql)),
 
@@ -989,9 +956,7 @@ object AggQueries extends Family("serving") {
       // LONG sums are mergeable measures, so serving is |segments| rows
       // through the scan's own conversion tree (shared oracle) — map
       // markers at 100 TB without touching a document.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
         .where(col("lat").isNotNull && col("lon").isNotNull)
       val pre = query.PreAgg.incrementWithSums(pts,
         Seq("c_mktsegment" -> col("c_mktsegment")),
@@ -1045,20 +1010,7 @@ object AggQueries extends Family("serving") {
       s"""WITH base AS (
          |  SELECT list_distinct($duckToks) AS terms, fg FROM (
          |    SELECT DISTINCT text, (lang = 'zh') AS fg FROM documents)
-         |), tot AS (
-         |  SELECT count(*) AS bgt,
-         |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fgt FROM base
-         |), e AS (SELECT unnest(terms) AS term, fg FROM base),
-         |c AS (
-         |  SELECT term, count(*) AS bg_count,
-         |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fg_count
-         |  FROM e GROUP BY term
-         |)
-         |SELECT term, fg_count, bg_count,
-         |  (fg_count::DOUBLE / fgt - bg_count::DOUBLE / bgt)
-         |    * ((fg_count::DOUBLE / fgt) / (bg_count::DOUBLE / bgt)) AS score
-         |FROM c, tot WHERE fg_count > 0
-         |ORDER BY score DESC, term ASC LIMIT 15""".stripMargin)),
+         |""".stripMargin + significantCountCtesSql + jlhScoreSql(15))),
 
     QueryCase("g_diversified_sampler", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -1164,9 +1116,7 @@ object AggQueries extends Family("serving") {
       // (the g6 fixture): slippy z/x/y Web-Mercator tiles, the one grid
       // whose cell function is transcendental (tan/ln library-rounded;
       // boundary-flip odds ~1e-14/row, documented at Aggs.geoTileGrid).
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       Aggs.geoTileGrid(pts, "lat", "lon", z = 5)
     }, Some(geoTileGrid5OracleSql)),
 
@@ -1178,9 +1128,7 @@ object AggQueries extends Family("serving") {
       // shared oracle certifies the serving identity. One rollup serves
       // every coarser zoom, the slippy-map-server identity as an
       // aggregation (PreAgg.geoTileGridAt).
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       val Seq(tx, ty) = Aggs.geoTileXY(col("lat"), col("lon"), 8)
       val pre = query.PreAgg.increment(pts, Seq("tx" -> tx, "ty" -> ty))
       query.PreAgg.geoTileGridAt(pre, ingestZoom = 8, z = 5)
@@ -1190,9 +1138,7 @@ object AggQueries extends Family("serving") {
       implicit val spark: SparkSession = s
       // ES geo_bounds per market-segment bucket: the viewport-fit box.
       // min/max on raw doubles are order-exact — no quantization needed.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       Aggs.geoBounds(pts, "c_mktsegment", "lat", "lon")
     }, Some(geoBoundsOracleSql)),
 
@@ -1203,9 +1149,7 @@ object AggQueries extends Family("serving") {
       // are idempotent-mergeable and order-exact, so the served box
       // hash-matches the scan (shared oracle) from |distinct buckets|
       // rows at any corpus size.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
         .where(col("lat").isNotNull && col("lon").isNotNull)
       def inc(df: DataFrame) = query.PreAgg.incrementWithExtremes(df,
         Seq("c_mktsegment" -> col("c_mktsegment")),
@@ -1382,17 +1326,13 @@ object AggQueries extends Family("serving") {
       // key-ordered micro-degree track, WKT lon-lat order, size-capped.
       // Integer rendering sidesteps the engines' diverging double
       // formatting rules (Aggs.geoLine scaladoc).
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       Aggs.geoLine(pts, "c_mktsegment", "lat", "lon", "c_custkey",
         tiebreak = col("c_custkey"), size = 20)
     }, Some(
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT c_mktsegment, c_custkey,
-        |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-        |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-        |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+        |    $customerLatLonSql
         |  FROM customer
         |), r AS (
         |  SELECT c_mktsegment,
@@ -1424,27 +1364,7 @@ object AggQueries extends Family("serving") {
       Aggs.timeSeriesCounterRate(ctr, Seq("event_type"), "ts",
           col("event_id"), "ctr", interval = "hour")
         .orderBy("event_type", "bucket")
-    }, Some(
-      """WITH c AS (
-        |  SELECT event_type, ts, event_id,
-        |    (row_number() OVER (PARTITION BY event_type
-        |       ORDER BY ts, event_id) * 7) % 1000 AS ctr
-        |  FROM events
-        |), d AS (
-        |  SELECT event_type, ts, ctr,
-        |    lag(ctr) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM c
-        |)
-        |SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |  sum(CASE WHEN prev IS NULL THEN 0
-        |           WHEN ctr >= prev THEN ctr - prev
-        |           ELSE ctr END)::BIGINT AS increase,
-        |  sum(CASE WHEN prev IS NULL THEN 0
-        |           WHEN ctr >= prev THEN ctr - prev
-        |           ELSE ctr END)::DOUBLE / 3600.0 AS rate
-        |FROM d GROUP BY 1, 2
-        |ORDER BY event_type, bucket""".stripMargin)),
+    }, Some(counterRateOracleSql)),
 
     QueryCase("g_categorize_text", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -1703,19 +1623,15 @@ object AggQueries extends Family("serving") {
       // rollup: the clicked zoom-1 NE-quadrant tile bounds the view by a
       // PURE integer ancestor test (tx >> 7 == 1), deepened to zoom 4 by
       // the same >> identity — no geometry anywhere, rollup rows only.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       val Seq(tx, ty) = Aggs.geoTileXY(col("lat"), col("lon"), 8)
       val pre = query.PreAgg.increment(pts, Seq("tx" -> tx, "ty" -> ty))
       query.PreAgg.geoTileGridDrilldown(pre, ingestZoom = 8,
         cellZ = 1, cellX = 1, cellY = 0, z = 4)
     }, Some(
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT
-        |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-        |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-        |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+        |    $customerLatLonSql
         |  FROM customer
         |), idx AS (
         |  SELECT
@@ -1783,18 +1699,14 @@ object AggQueries extends Family("serving") {
       // synthetic customer coordinates: half-open km rings, zero-count
       // rings kept, one conditionalBuckets pass (haversine tree pinned at
       // Aggs.haversineKm).
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = customerPoints(dir)
       Aggs.geoDistanceRings(pts, "lat", "lon", 0.0, 0.0,
         Seq((None, Some(2000.0)), (Some(2000.0), Some(5000.0)),
           (Some(5000.0), Some(10000.0)), (Some(10000.0), None)))
     }, Some(
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT
-        |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-        |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-        |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+        |    $customerLatLonSql
         |  FROM customer
         |), d AS (
         |  SELECT (2.0 * 6371.0088) * asin(sqrt(

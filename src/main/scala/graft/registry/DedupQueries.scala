@@ -23,6 +23,20 @@ object DedupQueries extends Family("pipeline") {
   private def pairSorted(df: DataFrame): DataFrame =
     df.repartition(1).sortWithinPartitions("id_a", "id_b")
 
+  /** All document pairs whose word-bigram sets have Jaccard similarity of
+    * at least `threshold` (a DuckDB literal), in DuckDB: the unfiltered
+    * and the prefix-filtered pair joins must agree with it.
+    */
+  private def ngramJaccardOracleSql(threshold: String): String =
+    wordBigramSetsCtesSql + s"""), pairs AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |    len(list_intersect(a.sh, b.sh))::DOUBLE
+       |      / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
+       |  FROM d a, d b WHERE a.doc_id < b.doc_id
+       |)
+       |SELECT id_a, id_b, jaccard FROM pairs
+       |WHERE jaccard >= $threshold ORDER BY id_a, id_b""".stripMargin
+
   val cases: Seq[QueryCase] = Seq(
     // The whole-corpus restatement restricted to the arriving half: the
     // duplicated set still comes from ALL documents (that is the point),
@@ -319,21 +333,7 @@ object DedupQueries extends Family("pipeline") {
       Dedup.ngramJaccardPairs(load(dir, "documents"), "doc_id", "text",
           threshold = 0.35, shingleK = 2)
         .transform(pairSorted)
-    }, Some(
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(generate_series(1, len(toks) - 1),
-         |      i -> toks[i] || ' ' || toks[i + 1])) AS sh
-         |  FROM (SELECT doc_id, $duckToks AS toks FROM documents)
-         |  WHERE len(toks) >= 2
-         |), pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    len(list_intersect(a.sh, b.sh))::DOUBLE
-         |      / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-         |  FROM d a, d b WHERE a.doc_id < b.doc_id
-         |)
-         |SELECT id_a, id_b, jaccard FROM pairs
-         |WHERE jaccard >= 0.35 ORDER BY id_a, id_b""".stripMargin)),
+    }, Some(ngramJaccardOracleSql("0.35"))),
 
     // Integer postings → BIGINT dot/norms → three IEEE ops: bit-exact in
     // any engine (see Dedup.tfCosinePairs).
@@ -389,19 +389,7 @@ object DedupQueries extends Family("pipeline") {
         .agg(count(lit(1)).as("n_kept"))
         .orderBy("source")
     }, Some(
-      s"""WITH t AS (
-         |  SELECT doc_id, $duckToks AS toks FROM documents
-         |), g AS (
-         |  SELECT doc_id, list_transform(generate_series(1, len(toks) - 2),
-         |    i -> ('0x' || substr(md5(array_to_string(toks[i:i+2], ' ')), 1, 13))::BIGINT) AS hs
-         |  FROM t WHERE len(toks) >= 3
-         |), f AS (
-         |  SELECT doc_id, list_sort(list_distinct(
-         |    CASE WHEN len(hs) < 4 THEN [list_min(hs)]
-         |         ELSE list_transform(generate_series(1, len(hs) - 3),
-         |                i -> list_min(hs[i:i+3])) END)) AS fp
-         |  FROM g
-         |), pairs AS (
+      winnowFingerprintCtesSql + s"""), pairs AS (
          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
          |  FROM f a, f b
          |  WHERE a.doc_id < b.doc_id
@@ -440,19 +428,7 @@ object DedupQueries extends Family("pipeline") {
           tau = 0.5, shingleK = 3, window = 4)
         .transform(pairSorted)
     }, Some(
-      s"""WITH t AS (
-         |  SELECT doc_id, $duckToks AS toks FROM documents
-         |), g AS (
-         |  SELECT doc_id, list_transform(generate_series(1, len(toks) - 2),
-         |    i -> ('0x' || substr(md5(array_to_string(toks[i:i+2], ' ')), 1, 13))::BIGINT) AS hs
-         |  FROM t WHERE len(toks) >= 3
-         |), f AS (
-         |  SELECT doc_id, list_sort(list_distinct(
-         |    CASE WHEN len(hs) < 4 THEN [list_min(hs)]
-         |         ELSE list_transform(generate_series(1, len(hs) - 3),
-         |                i -> list_min(hs[i:i+3])) END)) AS fp
-         |  FROM g
-         |), pairs AS (
+      winnowFingerprintCtesSql + s"""), pairs AS (
          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |    len(list_intersect(a.fp, b.fp))::DOUBLE
          |      / least(len(a.fp), len(b.fp))::DOUBLE AS containment
@@ -475,21 +451,7 @@ object DedupQueries extends Family("pipeline") {
       Dedup.ngramJaccardPairsPrefix(load(dir, "documents"), "doc_id", "text",
           threshold = 0.8, shingleK = 2)
         .transform(pairSorted)
-    }, Some(
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(generate_series(1, len(toks) - 1),
-         |      i -> toks[i] || ' ' || toks[i + 1])) AS sh
-         |  FROM (SELECT doc_id, $duckToks AS toks FROM documents)
-         |  WHERE len(toks) >= 2
-         |), pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    len(list_intersect(a.sh, b.sh))::DOUBLE
-         |      / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-         |  FROM d a, d b WHERE a.doc_id < b.doc_id
-         |)
-         |SELECT id_a, id_b, jaccard FROM pairs
-         |WHERE jaccard >= 0.8 ORDER BY id_a, id_b""".stripMargin)),
+    }, Some(ngramJaccardOracleSql("0.8"))),
 
     QueryCase("dedup_embedding", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -576,21 +538,6 @@ object DedupQueries extends Family("pipeline") {
          |  WHERE x.vec_id < y.vec_id AND $candPred
          |    AND list_inner_product(x.v, y.v)
          |      / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.42
-         |), edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |), reach AS (
-         |  WITH RECURSIVE r(a, b) AS (
-         |    SELECT a, b FROM edges
-         |    UNION
-         |    SELECT r.a, e2.b FROM r JOIN edges e2 ON r.b = e2.a
-         |  ) SELECT * FROM r
-         |), comp AS (
-         |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-         |)
-         |SELECT label, count(*) AS n_kept
-         |FROM embeddings emb LEFT JOIN comp ON emb.vec_id = comp.id
-         |WHERE comp.id IS NULL OR comp.component = emb.vec_id
-         |GROUP BY label ORDER BY label""".stripMargin
+         |""".stripMargin + keepPerLabelSql
     })))
 }

@@ -11,6 +11,19 @@ import OracleSql._
   */
 object EsqlQueries extends Family("etl") {
 
+  /** The two FORK branches the esql_fork_fuse pair fuses, in DuckDB:
+    * `b1`/`b2`, the top-10 English documents by length and by doc_id mod
+    * 97. Callers go on with the fusion CTE.
+    */
+  private val forkBranchesSql: String =
+    """WITH b1 AS (
+      |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS s FROM documents
+      |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10),
+      |b2 AS (
+      |  SELECT doc_id, CAST(doc_id % 97 AS DOUBLE) AS s FROM documents
+      |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10),
+      |""".stripMargin
+
   val cases: Seq[QueryCase] = Seq(
     // ===== ES|QL front-end (query/Esql.scala): the piped query language
     // compiled to ONE declarative plan — pushdown / pruning / top-K /
@@ -279,18 +292,7 @@ object EsqlQueries extends Family("etl") {
           | KEEP day, type, pvalue""",
         t => if (t == "events") loadEvents(dir) else load(dir, t))
     }, Some(
-      """WITH s AS (
-        |  SELECT date_trunc('day', ts) AS b, count(*)::BIGINT AS c
-        |  FROM events GROUP BY 1
-        |), x AS (
-        |  SELECT b, c, row_number() OVER (ORDER BY b)::BIGINT AS k,
-        |    sum(c) OVER (ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS s1,
-        |    count(*) OVER ()::BIGINT AS n,
-        |    sum(c) OVER ()::BIGINT AS tot,
-        |    lead(b) OVER (ORDER BY b) AS nxt
-        |  FROM s
-        |), y AS (
+      dailyChangePointCtesSql + """), y AS (
         |  SELECT strftime(nxt, '%Y-%m-%d') AS day,
         |    abs(s1 * (n - k) - (tot - s1) * k)::DOUBLE /
         |      (k * (n - k))::DOUBLE AS pvalue,
@@ -315,13 +317,7 @@ object EsqlQueries extends Family("etl") {
           | SORT _score DESC, doc_id | LIMIT 15""",
         t => load(dir, t))
     }, Some(
-      """WITH b1 AS (
-        |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS s FROM documents
-        |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10),
-        |b2 AS (
-        |  SELECT doc_id, CAST(doc_id % 97 AS DOUBLE) AS s FROM documents
-        |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10),
-        |u AS (
+      forkBranchesSql + """u AS (
         |  SELECT doc_id, 1.0 / (60 + row_number() OVER (ORDER BY s DESC, doc_id)) AS c FROM b1
         |  UNION ALL
         |  SELECT doc_id, 1.0 / (60 + row_number() OVER (ORDER BY s DESC, doc_id)) AS c FROM b2)
@@ -454,27 +450,7 @@ object EsqlQueries extends Family("etl") {
               BY bucket = BUCKET(ts, 1 hour), event_type
           | SORT event_type, bucket""",
         t => if (t == "events_ctr") ctr else load(dir, t))
-    }, Some(
-      """WITH c AS (
-        |  SELECT event_type, ts, event_id,
-        |    (row_number() OVER (PARTITION BY event_type
-        |       ORDER BY ts, event_id) * 7) % 1000 AS ctr
-        |  FROM events
-        |), d AS (
-        |  SELECT event_type, ts, ctr,
-        |    lag(ctr) OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM c
-        |)
-        |SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |  sum(CASE WHEN prev IS NULL THEN 0
-        |           WHEN ctr >= prev THEN ctr - prev
-        |           ELSE ctr END)::BIGINT AS increase,
-        |  sum(CASE WHEN prev IS NULL THEN 0
-        |           WHEN ctr >= prev THEN ctr - prev
-        |           ELSE ctr END)::DOUBLE / 3600.0 AS rate
-        |FROM d GROUP BY 1, 2
-        |ORDER BY event_type, bucket""".stripMargin)),
+    }, Some(counterRateOracleSql)),
 
     // FUSE linear restated: per-branch min-max over each top-10 window,
     // the same weight-times-normalized tree (multiplication commutes
@@ -495,13 +471,7 @@ object EsqlQueries extends Family("etl") {
           | SORT _score DESC, doc_id | LIMIT 15""",
         t => load(dir, t))
     }, Some(
-      """WITH b1 AS (
-        |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS s FROM documents
-        |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10),
-        |b2 AS (
-        |  SELECT doc_id, CAST(doc_id % 97 AS DOUBLE) AS s FROM documents
-        |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10),
-        |u AS (
+      forkBranchesSql + """u AS (
         |  SELECT doc_id,
         |    (CASE WHEN mx = mn THEN 1.0 ELSE (s - mn) / (mx - mn) END) * 0.7 AS c
         |  FROM (SELECT doc_id, s, min(s) OVER () AS mn, max(s) OVER () AS mx FROM b1)

@@ -131,13 +131,29 @@ object OracleSql {
          |FROM asm""".stripMargin
   }
 
-  /** The sparse_vector retrieval restated for the oracle — shared by the
-    * one-shot postings query (`search_sparse_vector`) and its streamed
-    * maintained-index twin (`stream_sparse_vector`): epochs, the
-    * at-least-once replay, and the bucket-partitioned at-rest layout
-    * must all be invisible in the ranked page.
+  /** The analyzer's token stream of `documents.text` in DuckDB, as CTE
+    * `t(doc_id, lang, toks)` (lower-cased `[a-z0-9]+` runs, the engine's
+    * ASCII analyzer), then one CTE per `(name, column, predicate)` holding
+    * `column`, the 1-based positions of the tokens where `predicate`
+    * holds. The last CTE is left open: callers close it and go on.
     */
-  private[registry] val sparseVectorOracleSql: String =
+  private[registry] def tokenPositionCtesSql(positions: (String, String, String)*): String =
+    """WITH t AS (
+      |  SELECT doc_id, lang,
+      |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+      |  FROM documents
+      |""".stripMargin + positions.map { case (name, column, predicate) =>
+      s"""), $name AS (
+         |  SELECT doc_id, u.i AS $column FROM t, unnest(range(1, len(toks)+1)) AS u(i)
+         |  WHERE $predicate
+         |""".stripMargin
+    }.mkString
+
+  /** The tf postings of `documents.text` in DuckDB: CTE `p(doc_id, term,
+    * weight)`, the term frequency as DOUBLE, over the same token stream as
+    * [[tokenPositionCtesSql]]. Left open like it.
+    */
+  private[registry] val tfPostingsCtesSql: String =
     """WITH t AS (
       |  SELECT doc_id,
       |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
@@ -147,15 +163,213 @@ object OracleSql {
       |), p AS (
       |  SELECT doc_id, term, count(*)::DOUBLE AS weight
       |  FROM e GROUP BY doc_id, term
-      |), q AS (
-      |  SELECT * FROM (VALUES ('vector', 2.0), ('dup', 1.5), ('scan', 0.5))
-      |    AS q(term, qw)
-      |)
+      |""".stripMargin
+
+  /** Closes a query-weight CTE `q(term, qw)` after [[tfPostingsCtesSql]]:
+    * the top 15 documents by Σ tf·qw, ties to the smaller doc_id.
+    */
+  private[registry] val sparseTop15Sql: String =
+    """)
       |SELECT doc_id,
       |  row_number() OVER (ORDER BY sum(weight * qw) DESC, doc_id ASC) AS rank,
       |  sum(weight * qw) AS score
       |FROM p JOIN q USING (term) GROUP BY doc_id
       |ORDER BY rank LIMIT 15""".stripMargin
+
+  /** The hourly reset-adjusted increase and per-second rate of the
+    * derived per-event_type counter `(row_number · 7) mod 1000` — shared by
+    * `g_time_series_rate` and its ES|QL twin `esql_ts_rate`: the pipe
+    * front-end must be invisible in the result.
+    */
+  private[registry] val counterRateOracleSql: String =
+    """WITH c AS (
+      |  SELECT event_type, ts, event_id,
+      |    (row_number() OVER (PARTITION BY event_type
+      |       ORDER BY ts, event_id) * 7) % 1000 AS ctr
+      |  FROM events
+      |), d AS (
+      |  SELECT event_type, ts, ctr,
+      |    lag(ctr) OVER (PARTITION BY event_type
+      |      ORDER BY ts, event_id) AS prev
+      |  FROM c
+      |)
+      |SELECT event_type, date_trunc('hour', ts) AS bucket,
+      |  sum(CASE WHEN prev IS NULL THEN 0
+      |           WHEN ctr >= prev THEN ctr - prev
+      |           ELSE ctr END)::BIGINT AS increase,
+      |  sum(CASE WHEN prev IS NULL THEN 0
+      |           WHEN ctr >= prev THEN ctr - prev
+      |           ELSE ctr END)::DOUBLE / 3600.0 AS rate
+      |FROM d GROUP BY 1, 2
+      |ORDER BY event_type, bucket""".stripMargin
+
+  /** Closes a `zoomed(lat, lon)` CTE with the precision-3 geohash grid
+    * over its points: the 15-bit interleave (lon leads with 8 bits at even
+    * positions, lat 7 at odd), base-32 encoded, by count descending.
+    */
+  private[registry] val geohash3CellsSql: String =
+    """), idx AS (
+      |  SELECT least(127, greatest(0, floor((lat + 90) / 180 * 128)))::INT AS la,
+      |         least(255, greatest(0, floor((lon + 180) / 360 * 256)))::INT AS lo
+      |  FROM zoomed
+      |), gh AS (
+      |  SELECT ((lo & 128) << 7) | ((lo & 64) << 6) | ((lo & 32) << 5)
+      |       | ((lo & 16) << 4) | ((lo & 8) << 3) | ((lo & 4) << 2)
+      |       | ((lo & 2) << 1) | (lo & 1)
+      |       | ((la & 64) << 7) | ((la & 32) << 6) | ((la & 16) << 5)
+      |       | ((la & 8) << 4) | ((la & 4) << 3) | ((la & 2) << 2)
+      |       | ((la & 1) << 1) AS v
+      |  FROM idx
+      |)
+      |SELECT substr('0123456789bcdefghjkmnpqrstuvwxyz', (v >> 10) + 1, 1) ||
+      |       substr('0123456789bcdefghjkmnpqrstuvwxyz', ((v >> 5) & 31) + 1, 1) ||
+      |       substr('0123456789bcdefghjkmnpqrstuvwxyz', (v & 31) + 1, 1) AS geohash,
+      |       count(*) AS count
+      |FROM gh GROUP BY 1 ORDER BY count DESC, geohash ASC""".stripMargin
+
+  /** Closes a near-duplicate `pairs(id_a, id_b)` CTE over embeddings:
+    * the pairs' transitive closure into components, the smallest vec_id
+    * kept per component, kept vectors counted per label.
+    */
+  private[registry] val keepPerLabelSql: String =
+    """), edges AS (
+      |  SELECT id_a AS a, id_b AS b FROM pairs
+      |  UNION SELECT id_b, id_a FROM pairs
+      |), reach AS (
+      |  WITH RECURSIVE r(a, b) AS (
+      |    SELECT a, b FROM edges
+      |    UNION
+      |    SELECT r.a, e2.b FROM r JOIN edges e2 ON r.b = e2.a
+      |  ) SELECT * FROM r
+      |), comp AS (
+      |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
+      |)
+      |SELECT label, count(*) AS n_kept
+      |FROM embeddings emb LEFT JOIN comp ON emb.vec_id = comp.id
+      |WHERE comp.id IS NULL OR comp.component = emb.vec_id
+      |GROUP BY label ORDER BY label""".stripMargin
+
+  /** Winnowing fingerprints of every document in DuckDB: CTE `f(doc_id,
+    * fp)`, the sorted distinct minima of each 4-window over the portable
+    * md5 hashes of the word 3-grams (the whole hash list when shorter).
+    * Left open: callers close it and go on.
+    */
+  private[registry] def winnowFingerprintCtesSql: String =
+    s"""WITH t AS (
+       |  SELECT doc_id, $duckToks AS toks FROM documents
+       |), g AS (
+       |  SELECT doc_id, list_transform(generate_series(1, len(toks) - 2),
+       |    i -> ('0x' || substr(md5(array_to_string(toks[i:i+2], ' ')), 1, 13))::BIGINT) AS hs
+       |  FROM t WHERE len(toks) >= 3
+       |), f AS (
+       |  SELECT doc_id, list_sort(list_distinct(
+       |    CASE WHEN len(hs) < 4 THEN [list_min(hs)]
+       |         ELSE list_transform(generate_series(1, len(hs) - 3),
+       |                i -> list_min(hs[i:i+3])) END)) AS fp
+       |  FROM g
+       |""".stripMargin
+
+  /** The significant-terms counts in DuckDB, after a `base(terms, fg)`
+    * CTE of per-document distinct terms and slice membership: totals
+    * `tot(bgt, fgt)` and per-term `c(term, bg_count, fg_count)`, exact
+    * integers. Left open: [[jlhScoreSql]] or [[chi2ScoreSql]] closes it.
+    */
+  private[registry] val significantCountCtesSql: String =
+    """), tot AS (
+      |  SELECT count(*) AS bgt,
+      |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fgt FROM base
+      |), e AS (SELECT unnest(terms) AS term, fg FROM base),
+      |c AS (
+      |  SELECT term, count(*) AS bg_count,
+      |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fg_count
+      |  FROM e GROUP BY term
+      |""".stripMargin
+
+  /** Closes a significant-terms count CTE `c(term, bg_count, fg_count)`
+    * (with totals `tot(bgt, fgt)`) with the JLH score — the identical
+    * three-op IEEE tree as the engine — and the top `limit` terms.
+    */
+  private[registry] def jlhScoreSql(limit: Int): String =
+    s""")
+       |SELECT term, fg_count, bg_count,
+       |  (fg_count::DOUBLE / fgt - bg_count::DOUBLE / bgt)
+       |    * ((fg_count::DOUBLE / fgt) / (bg_count::DOUBLE / bgt)) AS score
+       |FROM c, tot WHERE fg_count > 0
+       |ORDER BY score DESC, term ASC LIMIT $limit""".stripMargin
+
+  /** [[jlhScoreSql]]'s chi_square twin: the textbook 2×2 contingency
+    * tree in DOUBLE arithmetic, identical operation order.
+    */
+  private[registry] def chi2ScoreSql(limit: Int): String =
+    s"""), m AS (
+       |  SELECT term, fg_count, bg_count,
+       |    fg_count::DOUBLE AS a,
+       |    fgt::DOUBLE - fg_count::DOUBLE AS b,
+       |    bg_count::DOUBLE - fg_count::DOUBLE AS c,
+       |    (bgt::DOUBLE - fgt::DOUBLE) - (bg_count::DOUBLE - fg_count::DOUBLE) AS d,
+       |    bgt::DOUBLE AS n
+       |  FROM c, tot WHERE fg_count > 0
+       |)
+       |SELECT term, fg_count, bg_count,
+       |  CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) = 0.0 THEN 0.0
+       |       ELSE ((a * d - b * c) * (a * d - b * c) * n)
+       |            / ((a + b) * (c + d) * (a + c) * (b + d)) END AS score
+       |FROM m
+       |ORDER BY score DESC, term ASC LIMIT $limit""".stripMargin
+
+  /** The daily event-count series in DuckDB with every candidate split's
+    * running sums: `x(b, c, k, s1, n, tot, nxt)` — left open for the
+    * change-point magnitude (shared by g_change_point and its ES|QL
+    * CHANGE_POINT twin).
+    */
+  private[registry] val dailyChangePointCtesSql: String =
+    """WITH s AS (
+      |  SELECT date_trunc('day', ts) AS b, count(*)::BIGINT AS c
+      |  FROM events GROUP BY 1
+      |), x AS (
+      |  SELECT b, c, row_number() OVER (ORDER BY b)::BIGINT AS k,
+      |    sum(c) OVER (ORDER BY b
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS s1,
+      |    count(*) OVER ()::BIGINT AS n,
+      |    sum(c) OVER ()::BIGINT AS tot,
+      |    lead(b) OVER (ORDER BY b) AS nxt
+      |  FROM s
+      |""".stripMargin
+
+  /** The synthetic customer map point's `lat, lon` select items in DuckDB
+    * (the engine's `pmod` restated; 0.001 cast to DOUBLE so the addition
+    * rounds like the engine's).
+    */
+  private[registry] val customerLatLonSql: String =
+    """(CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
+      |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
+      |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon""".stripMargin
+
+  /** Each document's distinct word bigrams in DuckDB: CTE `d(doc_id, sh)`
+    * over documents with at least 2 tokens. Left open: callers close it
+    * and go on.
+    */
+  private[registry] def wordBigramSetsCtesSql: String =
+    s"""WITH d AS (
+       |  SELECT doc_id,
+       |    list_distinct(list_transform(generate_series(1, len(toks) - 1),
+       |      i -> toks[i] || ' ' || toks[i + 1])) AS sh
+       |  FROM (SELECT doc_id, $duckToks AS toks FROM documents)
+       |  WHERE len(toks) >= 2
+       |""".stripMargin
+
+  /** The sparse_vector retrieval restated for the oracle — shared by the
+    * one-shot postings query (`search_sparse_vector`) and its streamed
+    * maintained-index twin (`stream_sparse_vector`): epochs, the
+    * at-least-once replay, and the bucket-partitioned at-rest layout
+    * must all be invisible in the ranked page.
+    */
+  private[registry] val sparseVectorOracleSql: String =
+    tfPostingsCtesSql +
+    """), q AS (
+      |  SELECT * FROM (VALUES ('vector', 2.0), ('dup', 1.5), ('scan', 0.5))
+      |    AS q(term, qw)
+      |""".stripMargin + sparseTop15Sql
 
   /** The three stored alert queries restated clause-for-clause — shared
     * by the one-shot percolation (`q_percolate`) and its streamed

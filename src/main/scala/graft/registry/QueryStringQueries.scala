@@ -133,6 +133,52 @@ object QueryStringQueries extends Family("serving") {
        |) ${subs.mkString(" UNION ALL ")})""".stripMargin
   }
 
+  /** The widget selections every w_* query makes (l_quantity in
+    * [10, 20], l_returnflag phrase-prefixed by "r"), aggregated per
+    * l_linestatus — one oracle for the cold, warm and JSON-wire forms.
+    */
+  private val lineStatusWidgetOracleSql: String =
+    s"""SELECT l_linestatus, count(*) AS n,
+       |  round(sum(l_extendedprice), 2) AS revenue
+       |FROM lineitem
+       |WHERE l_quantity >= 10 AND l_quantity <= 20
+       |  AND ${graft.expr.TextMatch.phrasePrefixSql("l_returnflag", "r")}
+       |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin
+
+  /** The top 10 federated descriptions phrase-prefixed by "a" — one
+    * oracle for the pinned-corpus and the rollup-served typeahead.
+    */
+  private def typeaheadOracleSql: String =
+    s"""WITH fed AS (
+       |${federatedCitySql}
+       |)
+       |SELECT description FROM (
+       |  SELECT description, count(*) AS count FROM fed
+       |  WHERE ${graft.expr.TextMatch.phrasePrefixSql("description", "a")}
+       |  GROUP BY description
+       |  ORDER BY count DESC, description ASC LIMIT 10
+       |)""".stripMargin
+
+  /** The federated description counts in and out of the Baltimore slice:
+    * `tot(bgt, fgt)` and `c(term, bg_count, fg_count)`, left open for
+    * [[jlhScoreSql]] or [[chi2ScoreSql]]. Null descriptions form no
+    * bucket but count toward the set totals.
+    */
+  private def baltimoreCountCtesSql: String =
+    s"""WITH fed AS (
+       |${federatedCitySql}
+       |), tot AS (
+       |  SELECT count(*) AS bgt,
+       |    sum(CASE WHEN dataset = 'baltimore' THEN 1 ELSE 0 END)::BIGINT
+       |      AS fgt
+       |  FROM fed
+       |), c AS (
+       |  SELECT description AS term, count(*) AS bg_count,
+       |    sum(CASE WHEN dataset = 'baltimore' THEN 1 ELSE 0 END)::BIGINT
+       |      AS fg_count
+       |  FROM fed WHERE description IS NOT NULL GROUP BY 1
+       |""".stripMargin
+
   val cases: Seq[QueryCase] = Seq(
     // ===== query_string — the Kibana search bar (round-13 fifth batch) =====
 
@@ -257,9 +303,7 @@ object QueryStringQueries extends Family("serving") {
       // transpositions:false delta, Spark and DuckDB share it).
       val spec = graft.query.QueryString.parse(
         "text:dupe~1", defaultField = "text")
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      SearchQueries.matchingDocs(dir, spec)
     }, Some(
       """SELECT doc_id, lang FROM documents
         |WHERE len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
@@ -315,21 +359,12 @@ object QueryStringQueries extends Family("serving") {
       // check are higher-order Column algebra — no UDF, row-local.
       val spec = graft.query.QueryString.parse(
         """text:"spark scan"~2""", defaultField = "text")
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), a AS (
-        |  SELECT doc_id, u.i AS p1 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'spark'
-        |), b AS (
-        |  SELECT doc_id, u.i AS p2 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'scan'
-        |)
+      tokenPositionCtesSql(
+        ("a", "p1", "toks[u.i] = 'spark'"),
+        ("b", "p2", "toks[u.i] = 'scan'")) +
+      """)
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM a JOIN b USING (doc_id) JOIN t USING (doc_id)
         |WHERE p2 > p1 AND p2 - p1 - 1 <= 2
@@ -349,24 +384,13 @@ object QueryStringQueries extends Family("serving") {
       // no UDF, no join.
       val spec = graft.query.QueryString.parse(
         """text:"spark scan merge"~near4""", defaultField = "text")
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), a AS (
-        |  SELECT doc_id, u.i AS p1 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'spark'
-        |), b AS (
-        |  SELECT doc_id, u.i AS p2 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'scan'
-        |), c AS (
-        |  SELECT doc_id, u.i AS p3 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'merge'
-        |)
+      tokenPositionCtesSql(
+        ("a", "p1", "toks[u.i] = 'spark'"),
+        ("b", "p2", "toks[u.i] = 'scan'"),
+        ("c", "p3", "toks[u.i] = 'merge'")) +
+      """)
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM a JOIN b USING (doc_id) JOIN c USING (doc_id) JOIN t USING (doc_id)
         |WHERE p1 <> p2 AND p1 <> p3 AND p2 <> p3
@@ -384,21 +408,12 @@ object QueryStringQueries extends Family("serving") {
       // position-list machinery as span_near/phrase-slop.
       val spec = graft.query.QueryString.parse(
         """text:"scan spark"~gaps3""", defaultField = "text")
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), a AS (
-        |  SELECT doc_id, u.i AS p1 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'scan'
-        |), b AS (
-        |  SELECT doc_id, u.i AS p2 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'spark'
-        |)
+      tokenPositionCtesSql(
+        ("a", "p1", "toks[u.i] = 'scan'"),
+        ("b", "p2", "toks[u.i] = 'spark'")) +
+      """)
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM a JOIN b USING (doc_id) JOIN t USING (doc_id)
         |WHERE p2 > p1 AND p2 - p1 - 1 <= 3
@@ -419,15 +434,10 @@ object QueryStringQueries extends Family("serving") {
       // row's own phrase-occurrence lists.
       val spec = graft.query.FilterSpec.IntervalsAllOf("text",
         Seq(Seq("spark", "big vector"), Seq("merge join", "scan")), maxGaps = 3)
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), s1 AS (
+      tokenPositionCtesSql() +
+      """), s1 AS (
         |  SELECT doc_id, u.i AS s, u.i AS e
         |  FROM t, unnest(range(1, len(toks)+1)) AS u(i)
         |  WHERE toks[u.i] = 'spark'
@@ -468,15 +478,10 @@ object QueryStringQueries extends Family("serving") {
       // slots (reversed arrangements join here).
       val spec = graft.query.FilterSpec.IntervalsAllOf("text",
         Seq(Seq("spark"), Seq("batch scan")), maxGaps = 2, ordered = false)
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), s1 AS (
+      tokenPositionCtesSql() +
+      """), s1 AS (
         |  SELECT doc_id, u.i AS s, u.i AS e
         |  FROM t, unnest(range(1, len(toks)+1)) AS u(i)
         |  WHERE toks[u.i] = 'spark'
@@ -515,15 +520,10 @@ object QueryStringQueries extends Family("serving") {
       val spec = graft.query.FilterSpec.IntervalsAllOf("text",
         Seq(Seq("scan", "batch scan"), Seq("merge")), maxGaps = 0,
         ordered = false)
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), s1 AS (
+      tokenPositionCtesSql() +
+      """), s1 AS (
         |  SELECT doc_id, u.i AS s, u.i AS e
         |  FROM t, unnest(range(1, len(toks)+1)) AS u(i)
         |  WHERE toks[u.i] = 'scan'
@@ -812,17 +812,8 @@ object QueryStringQueries extends Family("serving") {
       val fc = fields
         .select("l_quantity", Widgets.Selection.RangeSel(10, 20))
         .select("l_returnflag", Widgets.Selection.TextSel("r"))
-      li.where(fc.compile)
-        .groupBy("l_linestatus")
-        .agg(count(lit(1)).as("n"), round(sum(col("l_extendedprice")), 2).as("revenue"))
-        .orderBy("l_linestatus")
-    }, Some(
-      s"""SELECT l_linestatus, count(*) AS n,
-         |  round(sum(l_extendedprice), 2) AS revenue
-         |FROM lineitem
-         |WHERE l_quantity >= 10 AND l_quantity <= 20
-         |  AND ${graft.expr.TextMatch.phrasePrefixSql("l_returnflag", "r")}
-         |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin)),
+      lineStatusRevenue(li, fc)
+    }, Some(lineStatusWidgetOracleSql)),
 
     // identical compiled predicate — the warm dictionary only changes where
     // the widget typing is read from
@@ -834,24 +825,12 @@ object QueryStringQueries extends Family("serving") {
       // index, one ES query per widget change). Same oracle as the cold form.
       import graft.query.Widgets
       val li = load(dir, "lineitem")
-      val fields = Widgets.fieldsFromDictionary(
-        Dictionary.materializeProfile(s, li,
-          s"graft_dict_lineitem_approx_${math.abs(dir.hashCode)}",
-          exactDistinct = false))
+      val fields = lineitemWarmFields(s, li, dir)
       val fc = fields
         .select("l_quantity", Widgets.Selection.RangeSel(10, 20))
         .select("l_returnflag", Widgets.Selection.TextSel("r"))
-      li.where(fc.compile)
-        .groupBy("l_linestatus")
-        .agg(count(lit(1)).as("n"), round(sum(col("l_extendedprice")), 2).as("revenue"))
-        .orderBy("l_linestatus")
-    }, Some(
-      s"""SELECT l_linestatus, count(*) AS n,
-         |  round(sum(l_extendedprice), 2) AS revenue
-         |FROM lineitem
-         |WHERE l_quantity >= 10 AND l_quantity <= 20
-         |  AND ${graft.expr.TextMatch.phrasePrefixSql("l_returnflag", "r")}
-         |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin), warm = true),
+      lineStatusRevenue(li, fc)
+    }, Some(lineStatusWidgetOracleSql), warm = true),
 
     // identical compiled predicate to w_dict_driven_query — the JSON wire
     // decode changes where the selections come from, not what they compile to
@@ -865,10 +844,7 @@ object QueryStringQueries extends Family("serving") {
       // skip rules.
       import graft.query.Widgets
       val li = load(dir, "lineitem")
-      val fields = Widgets.fieldsFromDictionary(
-        Dictionary.materializeProfile(s, li,
-          s"graft_dict_lineitem_approx_${math.abs(dir.hashCode)}",
-          exactDistinct = false))
+      val fields = lineitemWarmFields(s, li, dir)
       val fc = Widgets.fromJson(fields,
         """[{"name": "l_quantity", "type": "range", "value": [10, 20],
           |  "enabled": {"state": true, "lastEnabled": 1}},
@@ -878,17 +854,8 @@ object QueryStringQueries extends Family("serving") {
           |  "enabled": {"state": false, "lastEnabled": 0}},
           | {"name": "l_shipdate", "type": "text", "value": "",
           |  "enabled": {"state": true, "lastEnabled": 3}}]""".stripMargin)
-      li.where(fc.compile)
-        .groupBy("l_linestatus")
-        .agg(count(lit(1)).as("n"), round(sum(col("l_extendedprice")), 2).as("revenue"))
-        .orderBy("l_linestatus")
-    }, Some(
-      s"""SELECT l_linestatus, count(*) AS n,
-         |  round(sum(l_extendedprice), 2) AS revenue
-         |FROM lineitem
-         |WHERE l_quantity >= 10 AND l_quantity <= 20
-         |  AND ${graft.expr.TextMatch.phrasePrefixSql("l_returnflag", "r")}
-         |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin)),
+      lineStatusRevenue(li, fc)
+    }, Some(lineStatusWidgetOracleSql)),
 
     // Metadata fields are literals here: no lineitem column is in the
     // harmonized vocabulary, so every row gets the registry defaults.
@@ -973,16 +940,7 @@ object QueryStringQueries extends Family("serving") {
       // top values of the shared `description` field across every city at
       // once, served from the pinned federated cache.
       Aggs.typeahead(federatedHarmonized(s, warm = true), "description", "a", 10)
-    }, Some(
-      s"""WITH fed AS (
-         |${federatedCitySql}
-         |)
-         |SELECT description FROM (
-         |  SELECT description, count(*) AS count FROM fed
-         |  WHERE ${graft.expr.TextMatch.phrasePrefixSql("description", "a")}
-         |  GROUP BY description
-         |  ORDER BY count DESC, description ASC LIMIT 10
-         |)""".stripMargin), warm = true),
+    }, Some(typeaheadOracleSql), warm = true),
 
     QueryCase("dashboard_refresh", (s, _) => dashboardRefresh(s, warm = false), Some(dashboardRefreshOracleSql)),
 
@@ -1002,16 +960,7 @@ object QueryStringQueries extends Family("serving") {
       // dictionary, like ES suggest. Same oracle as g7_typeahead_federated
       // (the equivalence claim); PlanSpec pins the rollup-only plan.
       PreAgg.typeahead(dashboardRollup(s), "description", "a", 10)
-    }, Some(
-      s"""WITH fed AS (
-         |${federatedCitySql}
-         |)
-         |SELECT description FROM (
-         |  SELECT description, count(*) AS count FROM fed
-         |  WHERE ${graft.expr.TextMatch.phrasePrefixSql("description", "a")}
-         |  GROUP BY description
-         |  ORDER BY count DESC, description ASC LIMIT 10
-         |)""".stripMargin), warm = true),
+    }, Some(typeaheadOracleSql), warm = true),
 
     // The rollup-served JLH restated over the federated CORPUS relation —
     // the serving layer is invisible to results. Null descriptions form no
@@ -1025,25 +974,7 @@ object QueryStringQueries extends Family("serving") {
       // the corpus-scan oracle.
       PreAgg.significantTerms(dashboardRollup(s), "description",
         col("dataset") === "baltimore", n = 10)
-    }, Some(
-      s"""WITH fed AS (
-         |${federatedCitySql}
-         |), tot AS (
-         |  SELECT count(*) AS bgt,
-         |    sum(CASE WHEN dataset = 'baltimore' THEN 1 ELSE 0 END)::BIGINT
-         |      AS fgt
-         |  FROM fed
-         |), c AS (
-         |  SELECT description AS term, count(*) AS bg_count,
-         |    sum(CASE WHEN dataset = 'baltimore' THEN 1 ELSE 0 END)::BIGINT
-         |      AS fg_count
-         |  FROM fed WHERE description IS NOT NULL GROUP BY 1
-         |)
-         |SELECT term, fg_count, bg_count,
-         |  (fg_count::DOUBLE / fgt - bg_count::DOUBLE / bgt)
-         |    * ((fg_count::DOUBLE / fgt) / (bg_count::DOUBLE / bgt)) AS score
-         |FROM c, tot WHERE fg_count > 0
-         |ORDER BY score DESC, term ASC LIMIT 10""".stripMargin)),
+    }, Some(baltimoreCountCtesSql + jlhScoreSql(10))),
 
     // chi_square over the rollup: the same contingency tree over the same
     // federated counts.
@@ -1054,34 +985,7 @@ object QueryStringQueries extends Family("serving") {
       // corpus-scan oracle restatement.
       PreAgg.significantTerms(dashboardRollup(s), "description",
         col("dataset") === "baltimore", n = 10, heuristic = "chi_square")
-    }, Some(
-      s"""WITH fed AS (
-         |${federatedCitySql}
-         |), tot AS (
-         |  SELECT count(*) AS bgt,
-         |    sum(CASE WHEN dataset = 'baltimore' THEN 1 ELSE 0 END)::BIGINT
-         |      AS fgt
-         |  FROM fed
-         |), c AS (
-         |  SELECT description AS term, count(*) AS bg_count,
-         |    sum(CASE WHEN dataset = 'baltimore' THEN 1 ELSE 0 END)::BIGINT
-         |      AS fg_count
-         |  FROM fed WHERE description IS NOT NULL GROUP BY 1
-         |), m AS (
-         |  SELECT term, fg_count, bg_count,
-         |    fg_count::DOUBLE AS a,
-         |    fgt::DOUBLE - fg_count::DOUBLE AS b,
-         |    bg_count::DOUBLE - fg_count::DOUBLE AS c,
-         |    (bgt::DOUBLE - fgt::DOUBLE) - (bg_count::DOUBLE - fg_count::DOUBLE) AS d,
-         |    bgt::DOUBLE AS n
-         |  FROM c, tot WHERE fg_count > 0
-         |)
-         |SELECT term, fg_count, bg_count,
-         |  CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) = 0.0 THEN 0.0
-         |       ELSE ((a * d - b * c) * (a * d - b * c) * n)
-         |            / ((a + b) * (c + d) * (a + c) * (b + d)) END AS score
-         |FROM m
-         |ORDER BY score DESC, term ASC LIMIT 10""".stripMargin)),
+    }, Some(baltimoreCountCtesSql + chi2ScoreSql(10))),
 
     // the pre-agg path must reproduce the FULL-SCAN oracle exactly — that
     // equivalence is the whole claim
@@ -1156,22 +1060,5 @@ object QueryStringQueries extends Family("serving") {
          |), zoomed AS (
          |  SELECT * FROM pts
          |  WHERE lat >= 0 AND lat < 45 AND lon >= -90 AND lon < -45
-         |), idx AS (
-         |  SELECT least(127, greatest(0, floor((lat + 90) / 180 * 128)))::INT AS la,
-         |         least(255, greatest(0, floor((lon + 180) / 360 * 256)))::INT AS lo
-         |  FROM zoomed
-         |), gh AS (
-         |  SELECT ((lo & 128) << 7) | ((lo & 64) << 6) | ((lo & 32) << 5)
-         |       | ((lo & 16) << 4) | ((lo & 8) << 3) | ((lo & 4) << 2)
-         |       | ((lo & 2) << 1) | (lo & 1)
-         |       | ((la & 64) << 7) | ((la & 32) << 6) | ((la & 16) << 5)
-         |       | ((la & 8) << 4) | ((la & 4) << 3) | ((la & 2) << 2)
-         |       | ((la & 1) << 1) AS v
-         |  FROM idx
-         |)
-         |SELECT substr('0123456789bcdefghjkmnpqrstuvwxyz', (v >> 10) + 1, 1) ||
-         |       substr('0123456789bcdefghjkmnpqrstuvwxyz', ((v >> 5) & 31) + 1, 1) ||
-         |       substr('0123456789bcdefghjkmnpqrstuvwxyz', (v & 31) + 1, 1) AS geohash,
-         |       count(*) AS count
-         |FROM gh GROUP BY 1 ORDER BY count DESC, geohash ASC""".stripMargin), warm = true))
+         |""".stripMargin + geohash3CellsSql), warm = true))
 }

@@ -31,6 +31,27 @@ object RetrievalQueries extends Family("serving") {
     maxQueryTerms = 4, minTermFreq = 2, minDocFreq = 5,
     minWordLength = 3, minimumShouldMatch = "50%")
 
+  /** The retriever tree's knn leaf in DuckDB: `knr(doc_id, rank)`, the
+    * top 50 embeddings by exact cosine against the dyadic literal query
+    * vector. Continues an open CTE list and leaves `knr` open.
+    */
+  private def knnLeafCtesSql: String = {
+    val qLit = s"CAST(${knnQueryVec.mkString("[", ", ", "]")} AS DOUBLE[])"
+    s"""), e AS (
+       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+       |), kn AS (
+       |  SELECT vec_id AS doc_id,
+       |    list_inner_product(v, $qLit)
+       |      / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product($qLit, $qLit))) AS score
+       |  FROM e
+       |), knr AS (
+       |  SELECT doc_id, rank FROM (
+       |    SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
+       |    FROM kn
+       |  ) WHERE rank <= 50
+       |""".stripMargin
+  }
+
   val cases: Seq[QueryCase] = Seq(
     // LTR feature log: Bm25's exact analyzer/TF/IDF/score spellings with
     // the feature projection and the judged-label join.
@@ -132,20 +153,7 @@ object RetrievalQueries extends Family("serving") {
       s"""WITH base AS (
          |  SELECT list_distinct($duckToks) AS terms, (lang = 'zh') AS fg
          |  FROM documents
-         |), tot AS (
-         |  SELECT count(*) AS bgt,
-         |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fgt FROM base
-         |), e AS (SELECT unnest(terms) AS term, fg FROM base),
-         |c AS (
-         |  SELECT term, count(*) AS bg_count,
-         |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fg_count
-         |  FROM e GROUP BY term
-         |)
-         |SELECT term, fg_count, bg_count,
-         |  (fg_count::DOUBLE / fgt - bg_count::DOUBLE / bgt)
-         |    * ((fg_count::DOUBLE / fgt) / (bg_count::DOUBLE / bgt)) AS score
-         |FROM c, tot WHERE fg_count > 0
-         |ORDER BY score DESC, term ASC LIMIT 15""".stripMargin)),
+         |""".stripMargin + significantCountCtesSql + jlhScoreSql(15))),
 
     // The chi_square heuristic: the same exact counts, the textbook 2×2
     // contingency tree in DOUBLE arithmetic, identical operation order.
@@ -162,29 +170,7 @@ object RetrievalQueries extends Family("serving") {
       s"""WITH base AS (
          |  SELECT list_distinct($duckToks) AS terms, (lang = 'zh') AS fg
          |  FROM documents
-         |), tot AS (
-         |  SELECT count(*) AS bgt,
-         |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fgt FROM base
-         |), e AS (SELECT unnest(terms) AS term, fg FROM base),
-         |c AS (
-         |  SELECT term, count(*) AS bg_count,
-         |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fg_count
-         |  FROM e GROUP BY term
-         |), m AS (
-         |  SELECT term, fg_count, bg_count,
-         |    fg_count::DOUBLE AS a,
-         |    fgt::DOUBLE - fg_count::DOUBLE AS b,
-         |    bg_count::DOUBLE - fg_count::DOUBLE AS c,
-         |    (bgt::DOUBLE - fgt::DOUBLE) - (bg_count::DOUBLE - fg_count::DOUBLE) AS d,
-         |    bgt::DOUBLE AS n
-         |  FROM c, tot WHERE fg_count > 0
-         |)
-         |SELECT term, fg_count, bg_count,
-         |  CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) = 0.0 THEN 0.0
-         |       ELSE ((a * d - b * c) * (a * d - b * c) * n)
-         |            / ((a + b) * (c + d) * (a + c) * (b + d)) END AS score
-         |FROM m
-         |ORDER BY score DESC, term ASC LIMIT 15""".stripMargin)),
+         |""".stripMargin + significantCountCtesSql + chi2ScoreSql(15))),
 
     // The scale-path hybrid: BM25 run via its oracle builder, vector run
     // via the full oracled IVF-PQ restatement, fused with the same
@@ -300,25 +286,13 @@ object RetrievalQueries extends Family("serving") {
     }, Some({
       val bm = graft.query.Bm25.oracleSql(
         "documents", "doc_id", "text", "spark merge join window", 50)
-      val qLit = s"CAST(${knnQueryVec.mkString("[", ", ", "]")} AS DOUBLE[])"
       s"""WITH bm AS (
          |$bm
          |), bmr AS (
          |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
          |  FROM bm
-         |), e AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         |), kn AS (
-         |  SELECT vec_id AS doc_id,
-         |    list_inner_product(v, $qLit)
-         |      / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product($qLit, $qLit))) AS score
-         |  FROM e
-         |), knr AS (
-         |  SELECT doc_id, rank FROM (
-         |    SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-         |    FROM kn
-         |  ) WHERE rank <= 50
-         |), c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM bmr),
+         |""".stripMargin + knnLeafCtesSql +
+      s"""), c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM bmr),
          |c1 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM knr),
          |f AS (
          |  SELECT doc_id, coalesce(c0.c, 0.0) + coalesce(c1.c, 0.0) AS score
@@ -358,7 +332,6 @@ object RetrievalQueries extends Family("serving") {
         "documents", "doc_id", "text", "dup vector scan", 30)
       val bm2 = graft.query.Bm25.oracleSql(
         "documents", "doc_id", "text", "spark merge join window", 50)
-      val qLit = s"CAST(${knnQueryVec.mkString("[", ", ", "]")} AS DOUBLE[])"
       s"""WITH s1 AS (
          |$bm1
          |), bm2 AS (
@@ -366,19 +339,8 @@ object RetrievalQueries extends Family("serving") {
          |), bmr AS (
          |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
          |  FROM bm2
-         |), e AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         |), kn AS (
-         |  SELECT vec_id AS doc_id,
-         |    list_inner_product(v, $qLit)
-         |      / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product($qLit, $qLit))) AS score
-         |  FROM e
-         |), knr AS (
-         |  SELECT doc_id, rank FROM (
-         |    SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-         |    FROM kn
-         |  ) WHERE rank <= 50
-         |), c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM bmr),
+         |""".stripMargin + knnLeafCtesSql +
+      s"""), c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM bmr),
          |c1 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM knr),
          |s2 AS (
          |  SELECT doc_id, coalesce(c0.c, 0.0) + coalesce(c1.c, 0.0) AS score
@@ -1110,16 +1072,8 @@ object RetrievalQueries extends Family("serving") {
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("rank")
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), e AS (
-        |  SELECT doc_id, u.x AS term FROM t, unnest(toks) AS u(x)
-        |), p AS (
-        |  SELECT doc_id, term, count(*)::DOUBLE AS weight
-        |  FROM e GROUP BY doc_id, term
-        |), df AS (
+      tfPostingsCtesSql +
+      """), df AS (
         |  SELECT term, count(*)::DOUBLE AS df FROM p GROUP BY term
         |), a AS (
         |  SELECT count(*)::DOUBLE / count(DISTINCT term) AS avg_df FROM p
@@ -1130,12 +1084,7 @@ object RetrievalQueries extends Family("serving") {
         |  SELECT q0.term, q0.qw FROM q0 LEFT JOIN df USING (term), a
         |  WHERE NOT (coalesce(df.df, 0.0) > 1.0 * a.avg_df
         |    AND q0.qw < 0.4 * (SELECT max(qw) FROM q0))
-        |)
-        |SELECT doc_id,
-        |  row_number() OVER (ORDER BY sum(weight * qw) DESC, doc_id ASC) AS rank,
-        |  sum(weight * qw) AS score
-        |FROM p JOIN q USING (term) GROUP BY doc_id
-        |ORDER BY rank LIMIT 15""".stripMargin)),
+        |""".stripMargin + sparseTop15Sql)),
 
     // Quantized learned weights restated: the identical
     // floor(w·256 + 0.5)/256 dyadic snap on the same double literals
@@ -1158,25 +1107,12 @@ object RetrievalQueries extends Family("serving") {
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("rank")
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), e AS (
-        |  SELECT doc_id, u.x AS term FROM t, unnest(toks) AS u(x)
-        |), p AS (
-        |  SELECT doc_id, term, count(*)::DOUBLE AS weight
-        |  FROM e GROUP BY doc_id, term
-        |), q AS (
+      tfPostingsCtesSql +
+      """), q AS (
         |  SELECT term, floor(w * 256.0 + 0.5) / 256.0 AS qw
         |  FROM (VALUES ('vector', 1.7), ('dup', 0.9), ('scan', 0.31))
         |    AS q0(term, w)
-        |)
-        |SELECT doc_id,
-        |  row_number() OVER (ORDER BY sum(weight * qw) DESC, doc_id ASC) AS rank,
-        |  sum(weight * qw) AS score
-        |FROM p JOIN q USING (term) GROUP BY doc_id
-        |ORDER BY rank LIMIT 15""".stripMargin)),
+        |""".stripMargin + sparseTop15Sql)),
 
     // The pruning+rescore composition restated: quantized weights, the
     // ES keep rule splitting the query into kept/pruned legs, the cheap
@@ -1219,16 +1155,8 @@ object RetrievalQueries extends Family("serving") {
           windowSize = 10)
         .orderBy("rank").limit(15)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), e AS (
-        |  SELECT doc_id, u.x AS term FROM t, unnest(toks) AS u(x)
-        |), p AS (
-        |  SELECT doc_id, term, count(*)::DOUBLE AS weight
-        |  FROM e GROUP BY doc_id, term
-        |), df AS (
+      tfPostingsCtesSql +
+      """), df AS (
         |  SELECT term, count(*)::DOUBLE AS df FROM p GROUP BY term
         |), a AS (
         |  SELECT count(*)::DOUBLE / count(DISTINCT term) AS avg_df FROM p

@@ -2,7 +2,7 @@ package graft
 package registry
 
 import graft.query.FilterSpec
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import SparkEntry._
 import OracleSql._
@@ -20,6 +20,37 @@ object SearchQueries extends Family("serving") {
     Seq((-50.0, -160.0), (50.0, -160.0), (50.0, -40.0), (-50.0, -40.0)),
     Seq((-20.0, -120.0), (20.0, -120.0), (20.0, -80.0), (-20.0, -80.0)),
     Seq((-30.0, 60.0), (30.0, 60.0), (30.0, 120.0), (-30.0, 120.0)))
+
+  /** The documents `spec` matches, as `(doc_id, lang)` by doc_id — the
+    * result shape of every search-bar query here and in
+    * [[QueryStringQueries]].
+    */
+  private[registry] def matchingDocs(dir: String, spec: FilterSpec)(
+      implicit spark: SparkSession): DataFrame =
+    load(dir, "documents").where(spec.compile)
+      .select("doc_id", "lang")
+      .orderBy("doc_id")
+
+  /** The docs with a 'spark … scan' window (at most 5 gaps) that does,
+    * or with `containing = false` does not, contain 'vector' — the
+    * intervals filter pair's oracle.
+    */
+  private def vectorInSpanOracleSql(containing: Boolean): String = {
+    val exists = if (containing) "EXISTS" else "NOT EXISTS"
+    tokenPositionCtesSql(
+      ("a", "p1", "toks[u.i] = 'spark'"),
+      ("b", "p2", "toks[u.i] = 'scan'")) +
+    s"""), iv AS (
+       |  SELECT a.doc_id, p1, p2 FROM a JOIN b USING (doc_id)
+       |  WHERE p2 > p1 AND p2 - p1 - 1 <= 5
+       |)
+       |SELECT DISTINCT t.doc_id, t.lang
+       |FROM iv JOIN t USING (doc_id)
+       |WHERE $exists (SELECT 1 FROM t f, unnest(range(1, len(f.toks)+1)) AS u(i)
+       |  WHERE f.doc_id = iv.doc_id AND f.toks[u.i] = 'vector'
+       |    AND u.i >= iv.p1 AND u.i <= iv.p2)
+       |ORDER BY doc_id""".stripMargin
+  }
 
   val cases: Seq[QueryCase] = Seq(
     // ===== §2.4 search predicates (Q1-Q9) =====
@@ -181,9 +212,7 @@ object SearchQueries extends Family("serving") {
       // §3), with the box CROSSING the antimeridian (left 150 > right
       // -120) to exercise the dateline disjunction. Pure comparisons:
       // oracle-exact, and the predicate pushes into the scan.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = AggQueries.customerPoints(dir)
       val box = graft.query.FilterSpec.GeoBoundingBox("lat", "lon",
         top = 60.0, left = 150.0, bottom = -10.0, right = -120.0)
       pts.where(box.compile)
@@ -191,11 +220,9 @@ object SearchQueries extends Family("serving") {
           sum(floor(col("lat") * 1000000).cast("long")).as("slat"))
         .orderBy("c_mktsegment")
     }, Some(
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT c_mktsegment,
-        |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-        |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-        |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+        |    $customerLatLonSql
         |  FROM customer)
         |SELECT c_mktsegment, count(*)::BIGINT AS n,
         |  sum(floor(lat * 1000000)::BIGINT)::BIGINT AS slat
@@ -215,9 +242,7 @@ object SearchQueries extends Family("serving") {
       // is libm-stable at this fixture: min |km − 3000| over the corpus
       // is 2.35 km at sf0.01 / 4.07 km at sf0.1 (margin asserted in
       // FilterSpecSpec), ~12 orders above the ≤1-ulp trig drift.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = AggQueries.customerPoints(dir)
       val near = graft.query.FilterSpec.GeoDistance("lat", "lon",
         originLat = 10.0, originLon = 20.0, radiusKm = 3000.0)
       pts.where(near.compile)
@@ -225,11 +250,9 @@ object SearchQueries extends Family("serving") {
           sum(floor(col("lat") * 1000000).cast("long")).as("slat"))
         .orderBy("c_mktsegment")
     }, Some(
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT c_mktsegment,
-        |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-        |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-        |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+        |    $customerLatLonSql
         |  FROM customer
         |), d AS (
         |  SELECT c_mktsegment, lat,
@@ -257,9 +280,7 @@ object SearchQueries extends Family("serving") {
       // coordinates: 255 of 1,500 customers inside at sf0.01. Ray
       // casting is pure +,-,*,/ — no libm, so unlike the geo_distance
       // twin the oracle is bit-exact with no fixture margin.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = AggQueries.customerPoints(dir)
       val poly = graft.query.FilterSpec.GeoPolygon("lat", "lon", Seq(
         (-60.0, -150.0), (60.0, -150.0), (60.0, -30.0), (-60.0, -30.0),
         (0.0, -90.0)))
@@ -267,11 +288,9 @@ object SearchQueries extends Family("serving") {
         .select("c_custkey", "c_mktsegment")
         .orderBy("c_custkey")
     }, Some(
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT c_custkey, c_mktsegment,
-        |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-        |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-        |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+        |    $customerLatLonSql
         |  FROM customer
         |)
         |SELECT c_custkey, c_mktsegment FROM pts
@@ -307,30 +326,8 @@ object SearchQueries extends Family("serving") {
       val spec = graft.query.FilterSpec.IntervalsFiltered("text",
         phrase = "spark scan", maxGaps = 5,
         rule = "not_containing", filterPhrase = "vector")
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), a AS (
-        |  SELECT doc_id, u.i AS p1 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'spark'
-        |), b AS (
-        |  SELECT doc_id, u.i AS p2 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'scan'
-        |), iv AS (
-        |  SELECT a.doc_id, p1, p2 FROM a JOIN b USING (doc_id)
-        |  WHERE p2 > p1 AND p2 - p1 - 1 <= 5
-        |)
-        |SELECT DISTINCT t.doc_id, t.lang
-        |FROM iv JOIN t USING (doc_id)
-        |WHERE NOT EXISTS (SELECT 1 FROM t f, unnest(range(1, len(f.toks)+1)) AS u(i)
-        |  WHERE f.doc_id = iv.doc_id AND f.toks[u.i] = 'vector'
-        |    AND u.i >= iv.p1 AND u.i <= iv.p2)
-        |ORDER BY doc_id""".stripMargin)),
+      matchingDocs(dir, spec)
+    }, Some(vectorInSpanOracleSql(containing = false))),
 
     QueryCase("q_intervals_containing", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -341,30 +338,8 @@ object SearchQueries extends Family("serving") {
       val spec = graft.query.FilterSpec.IntervalsFiltered("text",
         phrase = "spark scan", maxGaps = 5,
         rule = "containing", filterPhrase = "vector")
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), a AS (
-        |  SELECT doc_id, u.i AS p1 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'spark'
-        |), b AS (
-        |  SELECT doc_id, u.i AS p2 FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'scan'
-        |), iv AS (
-        |  SELECT a.doc_id, p1, p2 FROM a JOIN b USING (doc_id)
-        |  WHERE p2 > p1 AND p2 - p1 - 1 <= 5
-        |)
-        |SELECT DISTINCT t.doc_id, t.lang
-        |FROM iv JOIN t USING (doc_id)
-        |WHERE EXISTS (SELECT 1 FROM t f, unnest(range(1, len(f.toks)+1)) AS u(i)
-        |  WHERE f.doc_id = iv.doc_id AND f.toks[u.i] = 'vector'
-        |    AND u.i >= iv.p1 AND u.i <= iv.p2)
-        |ORDER BY doc_id""".stripMargin)),
+      matchingDocs(dir, spec)
+    }, Some(vectorInSpanOracleSql(containing = true))),
 
     // span_first restated: 1-based DuckDB position p = 0-based start + 1;
     // the end-position bound s + L <= 6 becomes p <= 6 for the single term.
@@ -375,15 +350,10 @@ object SearchQueries extends Family("serving") {
       // vs 384 with 'spark' anywhere). Same bound-position machinery as
       // span_near, substring-guarded.
       val spec = graft.query.FilterSpec.SpanFirst("text", "spark", end = 6)
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |)
+      tokenPositionCtesSql() +
+      """)
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM t, unnest(range(1, len(toks)+1)) AS u(i)
         |WHERE toks[u.i] = 'spark' AND u.i <= 6
@@ -400,21 +370,12 @@ object SearchQueries extends Family("serving") {
       // starts.
       val spec = graft.query.FilterSpec.SpanNot("text",
         include = "scan", exclude = "vector scan")
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), i AS (
-        |  SELECT doc_id, u.i AS s FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'scan'
-        |), e AS (
-        |  SELECT doc_id, u.i AS x FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i:u.i+1] = ['vector', 'scan']
-        |)
+      tokenPositionCtesSql(
+        ("i", "s", "toks[u.i] = 'scan'"),
+        ("e", "x", "toks[u.i:u.i+1] = ['vector', 'scan']")) +
+      """)
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM i JOIN t USING (doc_id)
         |WHERE NOT EXISTS (SELECT 1 FROM e
@@ -436,24 +397,13 @@ object SearchQueries extends Family("serving") {
       // the window bounds, row-local.
       val spec = graft.query.FilterSpec.SpanWithin("text",
         little = "key", big = Seq("scan", "table"), slop = 3)
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), l AS (
-        |  SELECT doc_id, u.i AS s FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'key'
-        |), b1 AS (
-        |  SELECT doc_id, u.i AS s FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'scan'
-        |), b2 AS (
-        |  SELECT doc_id, u.i AS s FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE toks[u.i] = 'table'
-        |)
+      tokenPositionCtesSql(
+        ("l", "s", "toks[u.i] = 'key'"),
+        ("b1", "s", "toks[u.i] = 'scan'"),
+        ("b2", "s", "toks[u.i] = 'table'")) +
+      """)
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM t
         |WHERE EXISTS (SELECT 1 FROM b1, b2, l
@@ -478,21 +428,12 @@ object SearchQueries extends Family("serving") {
       import graft.query.FilterSpec.IntervalSource.{Fuzzy, Prefix}
       val spec = graft.query.FilterSpec.IntervalsPattern("text",
         Seq(Prefix("sca"), Fuzzy("tabel", 1)), maxGaps = 3)
-      load(dir, "documents").where(spec.compile)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+      matchingDocs(dir, spec)
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), a AS (
-        |  SELECT doc_id, u.i AS s FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE starts_with(toks[u.i], 'sca')
-        |), b AS (
-        |  SELECT doc_id, u.i AS s FROM t, unnest(range(1, len(toks)+1)) AS u(i)
-        |  WHERE len(toks[u.i]) > 0 AND damerau_levenshtein(toks[u.i], 'tabel') <= 1
-        |)
+      tokenPositionCtesSql(
+        ("a", "s", "starts_with(toks[u.i], 'sca')"),
+        ("b", "s", "len(toks[u.i]) > 0 AND damerau_levenshtein(toks[u.i], 'tabel') <= 1")) +
+      """)
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM t
         |WHERE EXISTS (SELECT 1 FROM a, b
@@ -972,18 +913,14 @@ object SearchQueries extends Family("serving") {
       // whose crossings flip the parity back). Same synthetic coordinate
       // fixture as q_geo_shape_polygon; the oracle restates the unrolled
       // arithmetic edge for edge via geoCrossingsSql — bit-exact, no libm.
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = AggQueries.customerPoints(dir)
       pts.where(graft.query.FilterSpec.GeoShape("lat", "lon", geoMultiRings).compile)
         .select("c_custkey", "c_mktsegment")
         .orderBy("c_custkey")
     }, Some({
       s"""WITH pts AS (
          |  SELECT c_custkey, c_mktsegment,
-         |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-         |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-         |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+         |    $customerLatLonSql
          |  FROM customer
          |)
          |SELECT c_custkey, c_mktsegment FROM pts
@@ -996,19 +933,15 @@ object SearchQueries extends Family("serving") {
       // ES geo_shape `envelope` under the DISJOINT relation — four range
       // comparisons negated, aggregated per segment (the complement set is
       // corpus-sized; a grouped count keeps the result page-shaped).
-      val pts = load(dir, "customer")
-        .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
-        .withColumn("lon", pmod(col("c_custkey"), lit(360)) - 180 + lit(0.001))
+      val pts = AggQueries.customerPoints(dir)
       pts.where(graft.query.FilterSpec.GeoEnvelope("lat", "lon",
           -30, 30, -60, 60, relation = "disjoint").compile)
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
         .orderBy("c_mktsegment")
     }, Some(
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT c_mktsegment,
-        |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-        |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-        |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+        |    $customerLatLonSql
         |  FROM customer
         |)
         |SELECT c_mktsegment, count(*) AS n FROM pts

@@ -100,6 +100,120 @@ object SimilarityQueries extends Family("pipeline") {
        |SELECT query_id, rank, neighbor_id, cos FROM reranked
        |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
+  /** The rank tail every top-5 cosine oracle here ends with: the `scored`
+    * CTE's `(query_id, neighbor_id, cos)` rows ranked per query, cosine
+    * descending, ties to the smaller neighbor id.
+    */
+  private val top5ByCosSql: String =
+    """), ranked AS (
+      |  SELECT *, row_number() OVER (PARTITION BY query_id
+      |    ORDER BY cos DESC, neighbor_id ASC) AS rank
+      |  FROM scored
+      |)
+      |SELECT query_id, rank, neighbor_id, cos FROM ranked
+      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** Exact top-5 cosine neighbors of vectors 0-4 in DuckDB, where `v` is
+    * the DuckDB expression for a row's vector (the raw embedding, or its
+    * random projection).
+    */
+  private def bruteTop5OracleSql(v: String): String =
+    s"""WITH e AS (SELECT vec_id, $v AS v FROM embeddings),
+       |q AS (SELECT * FROM e WHERE vec_id < 5),
+       |scored AS (
+       |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+       |    list_inner_product(e.v, q.v)
+       |      / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
+       |  FROM e, q WHERE e.vec_id <> q.vec_id
+       |""".stripMargin + top5ByCosSql
+
+  /** LSH top-5 in DuckDB: the seeded 6-plane hyperplane buckets inlined,
+    * candidates within `maxHamming` sign flips of the query's bucket.
+    */
+  private def lshTop5OracleSql(maxHamming: Int): String = {
+    val bucket = Similarity.lshBucketSql("v", dim = 64, numPlanes = 6, seed = 42L)
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |b AS (SELECT vec_id, v, $bucket AS bkt FROM e),
+       |q AS (SELECT * FROM b WHERE vec_id < 5),
+       |scored AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |    list_inner_product(c.v, q.v)
+       |      / (sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
+       |  FROM b c, q
+       |  WHERE c.vec_id <> q.vec_id AND bit_count(xor(c.bkt, q.bkt)) <= $maxHamming
+       |""".stripMargin + top5ByCosSql
+  }
+
+  /** IVF top-5 in DuckDB over `assignCtes` (an [[ivfAssignCtesSql]] list):
+    * each of vectors 0-4 probes its `nprobe` nearest cells, and the rows
+    * assigned there rank by cosine.
+    */
+  private def ivfTopKOracleSql(assignCtes: String, nprobe: Int): String =
+    s"""WITH $assignCtes, qprobe AS (
+       |  SELECT vec_id AS query_id, v AS qv, cell
+       |  FROM cellranked WHERE r <= $nprobe AND vec_id < 5
+       |), scored AS (
+       |  SELECT q.query_id, a.vec_id AS neighbor_id,
+       |    list_inner_product(a.v, q.qv)
+       |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
+       |  FROM assigned a JOIN qprobe q ON a.cell = q.cell
+       |  WHERE a.vec_id <> q.query_id
+       |""".stripMargin + top5ByCosSql
+
+  /** The maintained IVF index restated from scratch: centroids frozen on
+    * the even-id half, assignment and probing over the whole corpus. One
+    * oracle for ann_ivf_incremental and ann_ivf_compacted.
+    */
+  private val frozenIvfOracleSql: String =
+    ivfTopKOracleSql(ivfAssignCtesSql(nlist = 8, trainPred = "vec_id % 2 = 0"), nprobe = 3)
+
+  /** Each click as-of joined to one purchase of the same user within 7
+    * days: the latest at-or-before it, or with `forward` the next
+    * at-or-after it; ties on (user_id, ts) go to the largest purchase
+    * event_id. Timestamps project to whole-second strings (the events-
+    * table convention — ns vs µs precision differs by engine).
+    */
+  private def clickPurchaseAsOf(dir: String, forward: Boolean)(
+      implicit spark: SparkSession): DataFrame = {
+    val ev = loadEvents(dir)
+    val clicks = ev.where(col("event_type") === "click")
+      .select("event_id", "user_id", "ts")
+    val purchases = ev.where(col("event_type") === "purchase")
+      .select("user_id", "ts", "event_id", "value")
+    val asOf = if (forward) ops.Joins.asOfJoinForward _ else ops.Joins.asOfJoin _
+    asOf(clicks, purchases, Seq("user_id"), "ts", "ts", Seq("value"),
+        Some(expr("INTERVAL 7 DAYS")), Some("event_id"))
+      .select(
+        col("event_id"), col("user_id"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
+        col("asof_value"),
+        date_format(col("asof_ts"), "yyyy-MM-dd HH:mm:ss").as("asof_ts"))
+      .orderBy("event_id")
+  }
+
+  /** [[clickPurchaseAsOf]] as a per-row LATERAL top-1 lookup in DuckDB. */
+  private def clickPurchaseAsOfOracleSql(forward: Boolean): String = {
+    val (atOrNear, withinWeek, order) =
+      if (forward) (">= c.ts", "<= c.ts + INTERVAL 7 DAY", "ASC")
+      else ("<= c.ts", ">= c.ts - INTERVAL 7 DAY", "DESC")
+    s"""WITH clicks AS (
+       |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
+       |), purchases AS (
+       |  SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase'
+       |)
+       |SELECT c.event_id, c.user_id,
+       |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts,
+       |  p.value AS asof_value,
+       |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts
+       |FROM clicks c LEFT JOIN LATERAL (
+       |  SELECT r.ts, r.value FROM purchases r
+       |  WHERE r.user_id = c.user_id AND r.ts $atOrNear
+       |    AND r.ts $withinWeek
+       |  ORDER BY r.ts $order, r.event_id DESC LIMIT 1
+       |) p ON true
+       |ORDER BY c.event_id""".stripMargin
+  }
+
   /** ann_bbq's query vector — 64 dyadic values in [-0.5, 0.5] — and the
     * per-dimension thresholds (zeros: comparisons against them are exact
     * in every engine).
@@ -128,21 +242,7 @@ object SimilarityQueries extends Family("pipeline") {
           queries, "vec_id", "embedding", k = 5)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
-    }, Some(
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-        |    list_inner_product(e.v, q.v)
-        |      / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
-        |  FROM e, q WHERE e.vec_id <> q.vec_id
-        |), ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+    }, Some(bruteTop5OracleSql("embedding::DOUBLE[]"))),
 
     // Radius search restated: same cosine tree as ann_bruteforce, the
     // threshold replacing the window.
@@ -268,23 +368,8 @@ object SimilarityQueries extends Family("pipeline") {
           queries, "vec_id", "vec", k = 5)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
-    }, Some({
-      val proj = Similarity.randomProjectSql("embedding::DOUBLE[]", outDim = 16, dim = 64)
-      s"""WITH e AS (SELECT vec_id, $proj AS v FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id < 5),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    list_inner_product(e.v, q.v)
-         |      / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
-         |  FROM e, q WHERE e.vec_id <> q.vec_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    })),
+    }, Some(bruteTop5OracleSql(
+      Similarity.randomProjectSql("embedding::DOUBLE[]", outDim = 16, dim = 64)))),
 
     // SQ8 restated end to end: per-dim bounds from the same corpus scan,
     // the same clamp(floor((v-mn)·(256/(mx-mn)))) codes, the same midpoint
@@ -381,24 +466,7 @@ object SimilarityQueries extends Family("pipeline") {
       val index = EventStreams.ivfIndexFromIncrements(s, path)
       Similarity.ivfTopKFromIndex(index, centroids,
         emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 5, nprobe = 3)
-    }, Some({
-      s"""WITH ${ivfAssignCtesSql(nlist = 8, trainPred = "vec_id % 2 = 0")}, qprobe AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell
-         |  FROM cellranked WHERE r <= 3 AND vec_id < 5
-         |), scored AS (
-         |  SELECT q.query_id, a.vec_id AS neighbor_id,
-         |    list_inner_product(a.v, q.qv)
-         |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
-         |  FROM assigned a JOIN qprobe q ON a.cell = q.cell
-         |  WHERE a.vec_id <> q.query_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    })),
+    }, Some(frozenIvfOracleSql)),
 
     // The compacted lifecycle twin shares ann_ivf_incremental's oracle
     // VERBATIM: compaction (sentinel fold + staged swap) and the
@@ -440,24 +508,7 @@ object SimilarityQueries extends Family("pipeline") {
       val index = EventStreams.ivfIndexFromIncrements(s, path)
       Similarity.ivfTopKFromIndex(index, centroids,
         emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 5, nprobe = 3)
-    }, Some({
-      s"""WITH ${ivfAssignCtesSql(nlist = 8, trainPred = "vec_id % 2 = 0")}, qprobe AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell
-         |  FROM cellranked WHERE r <= 3 AND vec_id < 5
-         |), scored AS (
-         |  SELECT q.query_id, a.vec_id AS neighbor_id,
-         |    list_inner_product(a.v, q.qv)
-         |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
-         |  FROM assigned a JOIN qprobe q ON a.cell = q.cell
-         |  WHERE a.vec_id <> q.query_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    })),
+    }, Some(frozenIvfOracleSql)),
 
     // Pre-filter knn, brute baseline: the corpus side filters BEFORE the
     // ranking window — queries stay unfiltered (ES filters results, not
@@ -484,13 +535,7 @@ object SimilarityQueries extends Family("pipeline") {
         |    list_inner_product(c.v, q.v)
         |      / (sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
         |  FROM c, q WHERE c.vec_id <> q.vec_id
-        |), ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+        |""".stripMargin + top5ByCosSql)),
 
     // Pre-filter knn over the SHARED full-corpus IVF index: identical
     // centroid/assignment CTEs, the filter applied to the candidate index
@@ -525,13 +570,7 @@ object SimilarityQueries extends Family("pipeline") {
          |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
          |  FROM fidx a JOIN qprobe q ON a.cell = q.cell
          |  WHERE a.vec_id <> q.query_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+         |""".stripMargin + top5ByCosSql
     })),
 
     QueryCase("ann_ivf", (s, dir) => {
@@ -548,24 +587,7 @@ object SimilarityQueries extends Family("pipeline") {
           queries, "vec_id", "embedding", k = 5, nlist = 8, nprobe = 3)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
-    }, Some({
-      s"""WITH ${ivfAssignCtesSql(nlist = 8)}, qprobe AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell
-         |  FROM cellranked WHERE r <= 3 AND vec_id < 5
-         |), scored AS (
-         |  SELECT q.query_id, a.vec_id AS neighbor_id,
-         |    list_inner_product(a.v, q.qv)
-         |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
-         |  FROM assigned a JOIN qprobe q ON a.cell = q.cell
-         |  WHERE a.vec_id <> q.query_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    })),
+    }, Some(ivfTopKOracleSql(ivfAssignCtesSql(nlist = 8), nprobe = 3))),
 
     // The refined-index twin: one k-means round whose cell means are the
     // bit-stable ascending-id fold on BOTH engines (see ivfAssignCtesSql's
@@ -585,24 +607,7 @@ object SimilarityQueries extends Family("pipeline") {
           refineIters = 1)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
-    }, Some({
-      s"""WITH ${ivfAssignCtesSql(nlist = 256, refineIters = 1)}, qprobe AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell
-         |  FROM cellranked WHERE r <= 16 AND vec_id < 5
-         |), scored AS (
-         |  SELECT q.query_id, a.vec_id AS neighbor_id,
-         |    list_inner_product(a.v, q.qv)
-         |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
-         |  FROM assigned a JOIN qprobe q ON a.cell = q.cell
-         |  WHERE a.vec_id <> q.query_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    })),
+    }, Some(ivfTopKOracleSql(ivfAssignCtesSql(nlist = 256, refineIters = 1), nprobe = 16))),
 
     // The sampled-training build twin: the training set is the portable
     // md5-unit threshold sample (trainingFramePredSql — LEAST/count
@@ -628,22 +633,7 @@ object SimilarityQueries extends Family("pipeline") {
         .orderBy("query_id", "rank")
     }, Some({
       val pred = ops.Similarity.trainingFramePredSql("embeddings", "vec_id", cap = 200)
-      s"""WITH ${ivfAssignCtesSql(nlist = 8, refineIters = 1, trainPred = pred)}, qprobe AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell
-         |  FROM cellranked WHERE r <= 3 AND vec_id < 5
-         |), scored AS (
-         |  SELECT q.query_id, a.vec_id AS neighbor_id,
-         |    list_inner_product(a.v, q.qv)
-         |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
-         |  FROM assigned a JOIN qprobe q ON a.cell = q.cell
-         |  WHERE a.vec_id <> q.query_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+      ivfTopKOracleSql(ivfAssignCtesSql(nlist = 8, refineIters = 1, trainPred = pred), nprobe = 3)
     })),
 
     // The refined-index IVF-PQ twin: coarse centroids AND residual
@@ -883,38 +873,8 @@ object SimilarityQueries extends Family("pipeline") {
       // after its timestamp within a 7-day lookahead (time-to-conversion
       // attachment). Same one-exchange union-and-fill sweep, traversed
       // descending; oracle is the mirrored LATERAL (ts ASC LIMIT 1).
-      val ev = loadEvents(dir)
-      val clicks = ev.where(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id", "value")
-      ops.Joins.asOfJoinForward(clicks, purchases, Seq("user_id"), "ts", "ts",
-          rightPayload = Seq("value"),
-          tolerance = Some(expr("INTERVAL 7 DAYS")),
-          rightTieBreak = Some("event_id"))
-        .select(
-          col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
-          col("asof_value"),
-          date_format(col("asof_ts"), "yyyy-MM-dd HH:mm:ss").as("asof_ts"))
-        .orderBy("event_id")
-    }, Some(
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
-        |), purchases AS (
-        |  SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase'
-        |)
-        |SELECT c.event_id, c.user_id,
-        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-        |  p.value AS asof_value,
-        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts
-        |FROM clicks c LEFT JOIN LATERAL (
-        |  SELECT r.ts, r.value FROM purchases r
-        |  WHERE r.user_id = c.user_id AND r.ts >= c.ts
-        |    AND r.ts <= c.ts + INTERVAL 7 DAY
-        |  ORDER BY r.ts ASC, r.event_id DESC LIMIT 1
-        |) p ON true
-        |ORDER BY c.event_id""".stripMargin)),
+      clickPurchaseAsOf(dir, forward = true)
+    }, Some(clickPurchaseAsOfOracleSql(forward = true))),
 
     QueryCase("join_asof", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -924,40 +884,9 @@ object SimilarityQueries extends Family("pipeline") {
       // user_id + a per-key sort — no range-join candidate blow-up. The
       // oracle is a genuinely different algorithm (DuckDB LATERAL top-1
       // lookup per row), so the window construction is cross-checked, not
-      // restated. Timestamps project to whole-second strings (the events-
-      // table convention — ns vs µs precision differs by engine).
-      val ev = loadEvents(dir)
-      val clicks = ev.where(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id", "value")
-      ops.Joins.asOfJoin(clicks, purchases, Seq("user_id"), "ts", "ts",
-          rightPayload = Seq("value"),
-          tolerance = Some(expr("INTERVAL 7 DAYS")),
-          rightTieBreak = Some("event_id"))
-        .select(
-          col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
-          col("asof_value"),
-          date_format(col("asof_ts"), "yyyy-MM-dd HH:mm:ss").as("asof_ts"))
-        .orderBy("event_id")
-    }, Some(
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
-        |), purchases AS (
-        |  SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase'
-        |)
-        |SELECT c.event_id, c.user_id,
-        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-        |  p.value AS asof_value,
-        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts
-        |FROM clicks c LEFT JOIN LATERAL (
-        |  SELECT r.ts, r.value FROM purchases r
-        |  WHERE r.user_id = c.user_id AND r.ts <= c.ts
-        |    AND r.ts >= c.ts - INTERVAL 7 DAY
-        |  ORDER BY r.ts DESC, r.event_id DESC LIMIT 1
-        |) p ON true
-        |ORDER BY c.event_id""".stripMargin)),
+      // restated.
+      clickPurchaseAsOf(dir, forward = false)
+    }, Some(clickPurchaseAsOfOracleSql(forward = false))),
 
     // Same bucket + Morton arithmetic rendered by Layout's SQL mirrors:
     // 64-bit shifts, masks and truncating integer division only, so the
@@ -1030,25 +959,7 @@ object SimilarityQueries extends Family("pipeline") {
           queries, "vec_id", "embedding", k = 5, dim = 64, numPlanes = 6)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
-    }, Some({
-      val bucket = Similarity.lshBucketSql("v", dim = 64, numPlanes = 6, seed = 42L)
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |b AS (SELECT vec_id, v, $bucket AS bkt FROM e),
-         |q AS (SELECT * FROM b WHERE vec_id < 5),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    list_inner_product(c.v, q.v)
-         |      / (sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
-         |  FROM b c, q
-         |  WHERE c.vec_id <> q.vec_id AND bit_count(xor(c.bkt, q.bkt)) <= 1
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    })),
+    }, Some(lshTop5OracleSql(maxHamming = 1))),
 
     // 2-bit multi-probe twin: same buckets, hamming predicate loosened to
     // <= 2 — exactly the candidate set the mask enumeration visits.
@@ -1066,25 +977,7 @@ object SimilarityQueries extends Family("pipeline") {
           probeBits = 2)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
-    }, Some({
-      val bucket = Similarity.lshBucketSql("v", dim = 64, numPlanes = 6, seed = 42L)
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |b AS (SELECT vec_id, v, $bucket AS bkt FROM e),
-         |q AS (SELECT * FROM b WHERE vec_id < 5),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    list_inner_product(c.v, q.v)
-         |      / (sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
-         |  FROM b c, q
-         |  WHERE c.vec_id <> q.vec_id AND bit_count(xor(c.bkt, q.bkt)) <= 2
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    })),
+    }, Some(lshTop5OracleSql(maxHamming = 2))),
 
     QueryCase("ann_maxsim", (s, dir) => {
       implicit val spark: SparkSession = s

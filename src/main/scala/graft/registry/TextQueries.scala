@@ -328,6 +328,83 @@ object TextQueries extends Family("pipeline") {
        |  count(*) AS n_docs, sum(n_tok)::BIGINT AS n_tokens
        |FROM sel GROUP BY 1, 2 ORDER BY source, shard""".stripMargin
 
+  /** The frozen-model holdout: `(holdout, scored)`. The deployment
+    * contract: weights trained on one (hash-sampled) split are a FROZEN
+    * model applied to unseen rows — the daily-ingest scoring pass. Same
+    * integer-exact pipeline as quality_classifier_score; the split is the
+    * portable md5 unit hash, so the oracle reproduces membership exactly.
+    */
+  private def holdoutScored(dir: String)(implicit spark: SparkSession): (DataFrame, DataFrame) = {
+    val docs = load(dir, "documents")
+    val train = ops.Sampling.hashSample(docs, "doc_id", 0.6, seed = 7)
+    val holdout = docs.join(train.select("doc_id"), Seq("doc_id"), "left_anti")
+    val weights = ops.QualityModel.trainTokenWeights(train, "doc_id", "text",
+      ops.QualityModel.lengthLabel(col("text")), minDf = 2)
+    (holdout, ops.QualityModel.scoreDocs(holdout, "doc_id", "text", weights))
+  }
+
+  /** The scored holdout joined with its truth label `actual`. */
+  private def holdoutLabeled(dir: String)(implicit spark: SparkSession): DataFrame = {
+    val (holdout, scoredH) = holdoutScored(dir)
+    val truth = holdout.select(col("doc_id"),
+      ops.QualityModel.lengthLabel(col("text")).as("actual"))
+    scoredH.join(truth, "doc_id")
+  }
+
+  /** [[holdoutScored]] in DuckDB, up to the holdout score CTE `s`; each
+    * caller closes the CTE list.
+    */
+  private def holdoutScoreCtes: String =
+    s"""WITH train AS (
+       |  SELECT * FROM documents
+       |  WHERE ${ops.Sampling.hashUnitSql("doc_id", 7)} < 0.6
+       |), holdout AS (
+       |  SELECT * FROM documents
+       |  WHERE doc_id NOT IN (SELECT doc_id FROM train)
+       |), tposting AS (
+       |  SELECT doc_id, t, count(*)::BIGINT AS tf
+       |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM train)
+       |  GROUP BY 1, 2
+       |), labels AS (
+       |  SELECT doc_id,
+       |    (CASE WHEN len(trim(text)) = 0 THEN 0
+       |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) >= 50 AS pos
+       |  FROM train
+       |), dfc AS (
+       |  SELECT t,
+       |    sum(CASE WHEN l.pos THEN 1 ELSE 0 END)::BIGINT AS pos_df,
+       |    sum(CASE WHEN l.pos THEN 0 ELSE 1 END)::BIGINT AS neg_df
+       |  FROM tposting p JOIN labels l USING (doc_id) GROUP BY t
+       |), w AS (
+       |  SELECT t,
+       |    (${ops.QualityModel.Scale} * (pos_df + 1)) // (neg_df + 1)
+       |      - (${ops.QualityModel.Scale} * (neg_df + 1)) // (pos_df + 1) AS w
+       |  FROM dfc WHERE pos_df + neg_df >= 2
+       |), hposting AS (
+       |  SELECT doc_id, t, count(*)::BIGINT AS tf
+       |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM holdout)
+       |  GROUP BY 1, 2
+       |), s AS (
+       |  SELECT p.doc_id, sum(p.tf * w.w)::BIGINT AS score
+       |  FROM hposting p JOIN w USING (t) GROUP BY 1
+       |""".stripMargin
+
+  /** The boilerplate 3-grams in DuckDB: each document's distinct word
+    * 3-grams `g(doc_id, gram)` and `freq(gram)`, those in at least 1 % of
+    * the documents. Left open: callers close `freq` and go on.
+    */
+  private def boilerplateCtesSql: String =
+    s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
+       |g AS (
+       |  SELECT doc_id, unnest(list_distinct(list_transform(
+       |    generate_series(1, len(toks) - 2),
+       |    i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))) AS gram
+       |  FROM t WHERE len(toks) >= 3
+       |), freq AS (
+       |  SELECT gram FROM g GROUP BY gram
+       |  HAVING count(*) >= ceil((SELECT count(*) FROM documents) * 0.01)
+       |""".stripMargin
+
   val cases: Seq[QueryCase] = Seq(
     // ===== Training-data ops: text analysis =====
 
@@ -444,52 +521,9 @@ object TextQueries extends Family("pipeline") {
     // unit hash, everything else the quality_classifier_score pipeline.
     QueryCase("quality_classifier_holdout", (s, dir) => {
       implicit val spark: SparkSession = s
-      // The deployment contract: weights trained on one (hash-sampled)
-      // split are a FROZEN model applied to unseen rows — the daily-ingest
-      // scoring pass. Same integer-exact pipeline; the split is the
-      // portable md5 unit hash, so the oracle reproduces membership
-      // exactly.
-      val docs = load(dir, "documents")
-      val train = ops.Sampling.hashSample(docs, "doc_id", 0.6, seed = 7)
-      val holdout = docs.join(train.select("doc_id"), Seq("doc_id"), "left_anti")
-      val weights = ops.QualityModel.trainTokenWeights(train, "doc_id", "text",
-        ops.QualityModel.lengthLabel(col("text")), minDf = 2)
-      ops.QualityModel.scoreDocs(holdout, "doc_id", "text", weights)
-        .orderBy("doc_id")
+      holdoutScored(dir)._2.orderBy("doc_id")
     }, Some(
-      s"""WITH train AS (
-         |  SELECT * FROM documents
-         |  WHERE ${ops.Sampling.hashUnitSql("doc_id", 7)} < 0.6
-         |), holdout AS (
-         |  SELECT * FROM documents
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM train)
-         |), tposting AS (
-         |  SELECT doc_id, t, count(*)::BIGINT AS tf
-         |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM train)
-         |  GROUP BY 1, 2
-         |), labels AS (
-         |  SELECT doc_id,
-         |    (CASE WHEN len(trim(text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) >= 50 AS pos
-         |  FROM train
-         |), dfc AS (
-         |  SELECT t,
-         |    sum(CASE WHEN l.pos THEN 1 ELSE 0 END)::BIGINT AS pos_df,
-         |    sum(CASE WHEN l.pos THEN 0 ELSE 1 END)::BIGINT AS neg_df
-         |  FROM tposting p JOIN labels l USING (doc_id) GROUP BY t
-         |), w AS (
-         |  SELECT t,
-         |    (${ops.QualityModel.Scale} * (pos_df + 1)) // (neg_df + 1)
-         |      - (${ops.QualityModel.Scale} * (neg_df + 1)) // (pos_df + 1) AS w
-         |  FROM dfc WHERE pos_df + neg_df >= 2
-         |), hposting AS (
-         |  SELECT doc_id, t, count(*)::BIGINT AS tf
-         |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM holdout)
-         |  GROUP BY 1, 2
-         |), s AS (
-         |  SELECT p.doc_id, sum(p.tf * w.w)::BIGINT AS score
-         |  FROM hposting p JOIN w USING (t) GROUP BY 1
-         |)
+      holdoutScoreCtes + s""")
          |SELECT h.doc_id, coalesce(s.score, 0)::BIGINT AS score,
          |  coalesce(s.score, 0) > 0 AS predicted
          |FROM holdout h LEFT JOIN s USING (doc_id)
@@ -504,49 +538,9 @@ object TextQueries extends Family("pipeline") {
       // the frozen classifier's integer scores against the truth labels
       // on unseen rows — Mann-Whitney rank sums with exact average-rank
       // tie handling (every addend a multiple of 0.5, order-free exact).
-      val docs = load(dir, "documents")
-      val train = ops.Sampling.hashSample(docs, "doc_id", 0.6, seed = 7)
-      val holdout = docs.join(train.select("doc_id"), Seq("doc_id"), "left_anti")
-      val weights = ops.QualityModel.trainTokenWeights(train, "doc_id", "text",
-        ops.QualityModel.lengthLabel(col("text")), minDf = 2)
-      val scoredH = ops.QualityModel.scoreDocs(holdout, "doc_id", "text", weights)
-      val truth = holdout.select(col("doc_id"),
-        ops.QualityModel.lengthLabel(col("text")).as("actual"))
-      ops.QualityModel.auc(scoredH.join(truth, "doc_id"), "score", "actual")
+      ops.QualityModel.auc(holdoutLabeled(dir), "score", "actual")
     }, Some(
-      s"""WITH train AS (
-         |  SELECT * FROM documents
-         |  WHERE ${ops.Sampling.hashUnitSql("doc_id", 7)} < 0.6
-         |), holdout AS (
-         |  SELECT * FROM documents
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM train)
-         |), tposting AS (
-         |  SELECT doc_id, t, count(*)::BIGINT AS tf
-         |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM train)
-         |  GROUP BY 1, 2
-         |), labels AS (
-         |  SELECT doc_id,
-         |    (CASE WHEN len(trim(text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) >= 50 AS pos
-         |  FROM train
-         |), dfc AS (
-         |  SELECT t,
-         |    sum(CASE WHEN l.pos THEN 1 ELSE 0 END)::BIGINT AS pos_df,
-         |    sum(CASE WHEN l.pos THEN 0 ELSE 1 END)::BIGINT AS neg_df
-         |  FROM tposting p JOIN labels l USING (doc_id) GROUP BY t
-         |), w AS (
-         |  SELECT t,
-         |    (${ops.QualityModel.Scale} * (pos_df + 1)) // (neg_df + 1)
-         |      - (${ops.QualityModel.Scale} * (neg_df + 1)) // (pos_df + 1) AS w
-         |  FROM dfc WHERE pos_df + neg_df >= 2
-         |), hposting AS (
-         |  SELECT doc_id, t, count(*)::BIGINT AS tf
-         |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM holdout)
-         |  GROUP BY 1, 2
-         |), s AS (
-         |  SELECT p.doc_id, sum(p.tf * w.w)::BIGINT AS score
-         |  FROM hposting p JOIN w USING (t) GROUP BY 1
-         |), hl AS (
+      holdoutScoreCtes + s"""), hl AS (
          |  SELECT h.doc_id, coalesce(s.score, 0)::BIGINT AS score,
          |    (CASE WHEN len(trim(h.text)) = 0 THEN 0
          |          ELSE len(regexp_split_to_array(trim(h.text), '\\s+')) END) >= 50 AS actual
@@ -579,50 +573,9 @@ object TextQueries extends Family("pipeline") {
       // The holdout report card: confusion cells + accuracy, precision,
       // recall, F1, and Cohen's kappa (honest under class imbalance) —
       // every metric one fixed tree over four integer cells.
-      val docs = load(dir, "documents")
-      val train = ops.Sampling.hashSample(docs, "doc_id", 0.6, seed = 7)
-      val holdout = docs.join(train.select("doc_id"), Seq("doc_id"), "left_anti")
-      val weights = ops.QualityModel.trainTokenWeights(train, "doc_id", "text",
-        ops.QualityModel.lengthLabel(col("text")), minDf = 2)
-      val scoredH = ops.QualityModel.scoreDocs(holdout, "doc_id", "text", weights)
-      val truth = holdout.select(col("doc_id"),
-        ops.QualityModel.lengthLabel(col("text")).as("actual"))
-      ops.QualityModel.classifierReport(
-        scoredH.join(truth, "doc_id"), "predicted", "actual")
+      ops.QualityModel.classifierReport(holdoutLabeled(dir), "predicted", "actual")
     }, Some(
-      s"""WITH train AS (
-         |  SELECT * FROM documents
-         |  WHERE ${ops.Sampling.hashUnitSql("doc_id", 7)} < 0.6
-         |), holdout AS (
-         |  SELECT * FROM documents
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM train)
-         |), tposting AS (
-         |  SELECT doc_id, t, count(*)::BIGINT AS tf
-         |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM train)
-         |  GROUP BY 1, 2
-         |), labels AS (
-         |  SELECT doc_id,
-         |    (CASE WHEN len(trim(text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) >= 50 AS pos
-         |  FROM train
-         |), dfc AS (
-         |  SELECT t,
-         |    sum(CASE WHEN l.pos THEN 1 ELSE 0 END)::BIGINT AS pos_df,
-         |    sum(CASE WHEN l.pos THEN 0 ELSE 1 END)::BIGINT AS neg_df
-         |  FROM tposting p JOIN labels l USING (doc_id) GROUP BY t
-         |), w AS (
-         |  SELECT t,
-         |    (${ops.QualityModel.Scale} * (pos_df + 1)) // (neg_df + 1)
-         |      - (${ops.QualityModel.Scale} * (neg_df + 1)) // (pos_df + 1) AS w
-         |  FROM dfc WHERE pos_df + neg_df >= 2
-         |), hposting AS (
-         |  SELECT doc_id, t, count(*)::BIGINT AS tf
-         |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM holdout)
-         |  GROUP BY 1, 2
-         |), s AS (
-         |  SELECT p.doc_id, sum(p.tf * w.w)::BIGINT AS score
-         |  FROM hposting p JOIN w USING (t) GROUP BY 1
-         |), hl AS (
+      holdoutScoreCtes + s"""), hl AS (
          |  SELECT coalesce(s.score, 0) > 0 AS pred,
          |    (CASE WHEN len(trim(h.text)) = 0 THEN 0
          |          ELSE len(regexp_split_to_array(trim(h.text), '\\s+')) END) >= 50 AS actual
@@ -1549,22 +1502,7 @@ object TextQueries extends Family("pipeline") {
          |    ON x.cell = y.cell AND x.vec_id < y.vec_id
          |  WHERE list_inner_product(x.v, y.v)
          |      / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.42
-         |), edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |), reach AS (
-         |  WITH RECURSIVE r(a, b) AS (
-         |    SELECT a, b FROM edges
-         |    UNION
-         |    SELECT r.a, e2.b FROM r JOIN edges e2 ON r.b = e2.a
-         |  ) SELECT * FROM r
-         |), comp AS (
-         |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-         |)
-         |SELECT label, count(*) AS n_kept
-         |FROM embeddings emb LEFT JOIN comp ON emb.vec_id = comp.id
-         |WHERE comp.id IS NULL OR comp.component = emb.vec_id
-         |GROUP BY label ORDER BY label""".stripMargin)),
+         |""".stripMargin + keepPerLabelSql)),
 
     // The multi-probe twin: candidates additionally pair each vector's
     // top-2 cells (cellranked r <= 2) against home cells, LEAST/GREATEST-
@@ -1599,22 +1537,7 @@ object TextQueries extends Family("pipeline") {
          |  JOIN e y ON y.vec_id = c.id_b
          |  WHERE list_inner_product(x.v, y.v)
          |      / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.42
-         |), edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |), reach AS (
-         |  WITH RECURSIVE r(a, b) AS (
-         |    SELECT a, b FROM edges
-         |    UNION
-         |    SELECT r.a, e2.b FROM r JOIN edges e2 ON r.b = e2.a
-         |  ) SELECT * FROM r
-         |), comp AS (
-         |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-         |)
-         |SELECT label, count(*) AS n_kept
-         |FROM embeddings emb LEFT JOIN comp ON emb.vec_id = comp.id
-         |WHERE comp.id IS NULL OR comp.component = emb.vec_id
-         |GROUP BY label ORDER BY label""".stripMargin)),
+         |""".stripMargin + keepPerLabelSql)),
 
     // Segment dedup restated verbatim: same analyzer tokens, same 1-based
     // inclusive span slicing (both engines truncate the last span), same
@@ -1704,16 +1627,7 @@ object TextQueries extends Family("pipeline") {
           "doc_id", "text", n = 3, minDocFrac = 0.01)
         .orderBy("doc_id")
     }, Some(
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |g AS (
-         |  SELECT doc_id, unnest(list_distinct(list_transform(
-         |    generate_series(1, len(toks) - 2),
-         |    i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))) AS gram
-         |  FROM t WHERE len(toks) >= 3
-         |), freq AS (
-         |  SELECT gram FROM g GROUP BY gram
-         |  HAVING count(*) >= ceil((SELECT count(*) FROM documents) * 0.01)
-         |)
+      boilerplateCtesSql + s""")
          |SELECT g.doc_id, count(*) AS n_grams, count(f.gram) AS n_boilerplate,
          |  count(f.gram)::DOUBLE / count(*) AS boilerplate_ratio
          |FROM g LEFT JOIN freq f ON g.gram = f.gram
@@ -1730,16 +1644,7 @@ object TextQueries extends Family("pipeline") {
         .agg(count(lit(1)).as("n_kept"))
         .orderBy("source")
     }, Some(
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |g AS (
-         |  SELECT doc_id, unnest(list_distinct(list_transform(
-         |    generate_series(1, len(toks) - 2),
-         |    i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))) AS gram
-         |  FROM t WHERE len(toks) >= 3
-         |), freq AS (
-         |  SELECT gram FROM g GROUP BY gram
-         |  HAVING count(*) >= ceil((SELECT count(*) FROM documents) * 0.01)
-         |), p AS (
+      boilerplateCtesSql + s"""), p AS (
          |  SELECT g.doc_id, count(f.gram)::DOUBLE / count(*) AS ratio
          |  FROM g LEFT JOIN freq f ON g.gram = f.gram GROUP BY g.doc_id
          |)
@@ -1983,19 +1888,7 @@ object TextQueries extends Family("pipeline") {
           bench, "doc_id", "text", tau = 0.5, shingleK = 3, window = 4)
         .orderBy("doc_id", "bench_id")
     }, Some(
-      s"""WITH t AS (
-         |  SELECT doc_id, $duckToks AS toks FROM documents
-         |), g AS (
-         |  SELECT doc_id, list_transform(generate_series(1, len(toks) - 2),
-         |    i -> ('0x' || substr(md5(array_to_string(toks[i:i+2], ' ')), 1, 13))::BIGINT) AS hs
-         |  FROM t WHERE len(toks) >= 3
-         |), f AS (
-         |  SELECT doc_id, list_sort(list_distinct(
-         |    CASE WHEN len(hs) < 4 THEN [list_min(hs)]
-         |         ELSE list_transform(generate_series(1, len(hs) - 3),
-         |                i -> list_min(hs[i:i+3])) END)) AS fp
-         |  FROM g
-         |), b AS (
+      winnowFingerprintCtesSql + s"""), b AS (
          |  SELECT doc_id AS bench_id, fp FROM f WHERE doc_id % 97 = 0
          |), pairs AS (
          |  SELECT f.doc_id, b.bench_id,
@@ -2017,13 +1910,7 @@ object TextQueries extends Family("pipeline") {
           bench, "doc_id", "text", threshold = 0.35, shingleK = 2)
         .orderBy("doc_id", "bench_id")
     }, Some(
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(generate_series(1, len(toks) - 1),
-         |      i -> toks[i] || ' ' || toks[i + 1])) AS sh
-         |  FROM (SELECT doc_id, $duckToks AS toks FROM documents)
-         |  WHERE len(toks) >= 2
-         |), b AS (
+      wordBigramSetsCtesSql + s"""), b AS (
          |  SELECT doc_id AS bench_id, sh FROM d WHERE doc_id % 97 = 0
          |), pairs AS (
          |  SELECT d.doc_id, b.bench_id,

@@ -292,6 +292,27 @@ object EventStreams {
       }
       .start()
 
+  /** Replace the table at `path` with `merged`, a frame that reads it: the
+    * staged swap every compaction here shares. `merged` is written to
+    * `<path>.compacting` (partitioned by `partitionBy`, if any), then
+    * [[graft.store.FsOps.promote]] swaps it in.
+    *
+    * No cache()+count() pre-pass: the staged WRITE is itself the
+    * materialization — it reads the source directory and lands in
+    * `.compacting`, and the source is only touched by the promote AFTER the
+    * write completed. A pre-pass only runs the merge a second time (a
+    * leftover from a pre-staged-swap shape), so even a corpus-sized rewrite
+    * streams through: one scan, one write, constant memory. If the write
+    * fails, nothing is promoted and the table reads as before.
+    */
+  private[graft] def swapIn(merged: DataFrame, path: String, partitionBy: String*): Unit = {
+    val staged = path + ".compacting"
+    val writer = merged.write.mode("overwrite")
+    (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*)).parquet(staged)
+    graft.store.FsOps.promote(graft.store.FsOps.fileSystem(merged.sparkSession, staged),
+      new org.apache.hadoop.fs.Path(staged), new org.apache.hadoop.fs.Path(path))
+  }
+
   /** Compact the accepted-corpus store [[dedupToCorpus]] maintains: a
     * long-running stream leaves one `_batch=<id>` partition per micro-batch
     * — the classic streaming small-files problem — and this folds every
@@ -305,20 +326,9 @@ object EventStreams {
     */
   def compactAcceptedCorpus(
       spark: org.apache.spark.sql.SparkSession,
-      acceptedPath: String): Unit = {
-    // No cache: unlike [[compactIncrements]]' kilobyte table this is the
-    // corpus. The staged write reads the source directory and completes
-    // fully before promote touches it, so the rewrite streams through —
-    // one scan, one write, constant memory.
-    val staged = acceptedPath + ".compacting"
-    spark.read.parquet(acceptedPath)
-      .withColumn("_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("_batch").parquet(staged)
-    val fs = graft.store.FsOps.fileSystem(spark, staged)
-    graft.store.FsOps.promote(fs,
-      new org.apache.hadoop.fs.Path(staged),
-      new org.apache.hadoop.fs.Path(acceptedPath))
-  }
+      acceptedPath: String): Unit =
+    swapIn(spark.read.parquet(acceptedPath).withColumn("_batch", lit(-1L)),
+      acceptedPath, "_batch")
 
   /** Streaming sink into the at-rest search index: every micro-batch is
     * appended to a parquet table with its analyzed `_split` companions
@@ -606,21 +616,10 @@ object EventStreams {
     */
   def compactGramDfIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit = {
-    val merged = gramDfFromIncrements(spark, incrementPath)
+      incrementPath: String): Unit =
+    swapIn(gramDfFromIncrements(spark, incrementPath)
       .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1)
-      .cache()
-    try {
-      merged.count() // materialize BEFORE touching the directory being read
-      val staged = incrementPath + ".compacting"
-      merged.write.mode("overwrite").parquet(staged)
-      val fs = graft.store.FsOps.fileSystem(spark, staged)
-      graft.store.FsOps.promote(fs,
-        new org.apache.hadoop.fs.Path(staged),
-        new org.apache.hadoop.fs.Path(incrementPath))
-    } finally merged.unpersist()
-  }
+      .coalesce(1), incrementPath)
 
   /** Maintain the fuzzy-search vocabulary from a DOCUMENT stream — the
     * at-rest artifact behind the SymSpell deletion index, the term
@@ -665,21 +664,10 @@ object EventStreams {
     */
   def compactFuzzyVocabIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit = {
-    val merged = fuzzyVocabFromIncrements(spark, incrementPath)
+      incrementPath: String): Unit =
+    swapIn(fuzzyVocabFromIncrements(spark, incrementPath)
       .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1)
-      .cache()
-    try {
-      merged.count() // materialize BEFORE touching the directory being read
-      val staged = incrementPath + ".compacting"
-      merged.write.mode("overwrite").parquet(staged)
-      val fs = graft.store.FsOps.fileSystem(spark, staged)
-      graft.store.FsOps.promote(fs,
-        new org.apache.hadoop.fs.Path(staged),
-        new org.apache.hadoop.fs.Path(incrementPath))
-    } finally merged.unpersist()
-  }
+      .coalesce(1), incrementPath)
 
   /** Maintain the unigram piece-count artifact from a DOCUMENT stream
     * ([[graft.ops.Unigram]]): per micro-batch, the RAW weighted substring
@@ -768,23 +756,12 @@ object EventStreams {
     */
   def compactBigramLmIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit = {
-    val merged = spark.read.parquet(incrementPath)
+      incrementPath: String): Unit =
+    swapIn(spark.read.parquet(incrementPath)
       .dropDuplicates(Seq("w1", "w2", "inc_batch_id"))
       .groupBy("w1", "w2").agg(sum(col("c2")).as("c2"))
       .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1)
-      .cache()
-    try {
-      merged.count() // materialize BEFORE touching the directory being read
-      val staged = incrementPath + ".compacting"
-      merged.write.mode("overwrite").parquet(staged)
-      val fs = graft.store.FsOps.fileSystem(spark, staged)
-      graft.store.FsOps.promote(fs,
-        new org.apache.hadoop.fs.Path(staged),
-        new org.apache.hadoop.fs.Path(incrementPath))
-    } finally merged.unpersist()
-  }
+      .coalesce(1), incrementPath)
 
   /** Maintain the ExactSubstr gram-count state from a document stream:
     * per micro-batch, the sliding `minLen`-gram occurrence counts
@@ -830,21 +807,10 @@ object EventStreams {
     */
   def compactSpanGramIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit = {
-    val merged = spanGramCountsFromIncrements(spark, incrementPath)
+      incrementPath: String): Unit =
+    swapIn(spanGramCountsFromIncrements(spark, incrementPath)
       .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1)
-      .cache()
-    try {
-      merged.count()
-      val staged = incrementPath + ".compacting"
-      merged.write.mode("overwrite").parquet(staged)
-      val fs = graft.store.FsOps.fileSystem(spark, staged)
-      graft.store.FsOps.promote(fs,
-        new org.apache.hadoop.fs.Path(staged),
-        new org.apache.hadoop.fs.Path(incrementPath))
-    } finally merged.unpersist()
-  }
+      .coalesce(1), incrementPath)
 
   /** Maintain the DSIR importance model from a document stream: per
     * micro-batch, [[graft.ops.Sampling.importanceModel]]'s `(b, cr, ct)`
@@ -892,21 +858,10 @@ object EventStreams {
     */
   def compactImportanceModelIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit = {
-    val merged = importanceModelFromIncrements(spark, incrementPath)
+      incrementPath: String): Unit =
+    swapIn(importanceModelFromIncrements(spark, incrementPath)
       .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1)
-      .cache()
-    try {
-      merged.count() // materialize BEFORE touching the directory being read
-      val staged = incrementPath + ".compacting"
-      merged.write.mode("overwrite").parquet(staged)
-      val fs = graft.store.FsOps.fileSystem(spark, staged)
-      graft.store.FsOps.promote(fs,
-        new org.apache.hadoop.fs.Path(staged),
-        new org.apache.hadoop.fs.Path(incrementPath))
-    } finally merged.unpersist()
-  }
+      .coalesce(1), incrementPath)
 
   /** Maintain drift-detection histograms from a document stream: per
     * micro-batch, each named bucketing's counts append at rest stamped
@@ -1048,24 +1003,10 @@ object EventStreams {
     */
   def compactIvfIndexIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Unit = {
-    val merged = ivfIndexFromIncrements(spark, indexPath)
+      indexPath: String): Unit =
+    swapIn(ivfIndexFromIncrements(spark, indexPath)
       .withColumn("inc_batch_id", lit(-1L))
-      .repartition(col("cell"))
-    // r18 optimization: the staged WRITE is itself the materialization —
-    // it reads the source directory and lands in `.compacting`; the
-    // source is only touched by the promote AFTER the write completed.
-    // The former cache()+count() pre-pass was a full extra execution of
-    // the corpus-sized merge view (a leftover from a pre-staged-swap
-    // shape), real money here unlike the coalesce(1) vocabulary-sized
-    // compactions, which keep the uniform defensive pattern.
-    val staged = indexPath + ".compacting"
-    merged.write.mode("overwrite").partitionBy("cell").parquet(staged)
-    val fs = graft.store.FsOps.fileSystem(spark, staged)
-    graft.store.FsOps.promote(fs,
-      new org.apache.hadoop.fs.Path(staged),
-      new org.apache.hadoop.fs.Path(indexPath))
-  }
+      .repartition(col("cell")), indexPath, "cell")
 
   /** Streamed maintenance of the at-rest SPARSE POSTINGS index (the
     * `sparse_vector` serving table, [[graft.query.SparseVector]]): each
@@ -1134,21 +1075,10 @@ object EventStreams {
   def compactPostingsIncrements(
       spark: org.apache.spark.sql.SparkSession,
       idCol: String,
-      postingsPath: String): Unit = {
-    val merged = postingsFromIncrements(spark, idCol, postingsPath)
+      postingsPath: String): Unit =
+    swapIn(postingsFromIncrements(spark, idCol, postingsPath)
       .withColumn("inc_batch_id", lit(-1L))
-      .repartition(col("term_bucket"))
-    // r18 optimization: staged write IS the materialization; promote only
-    // touches the source after it completes — the former cache()+count()
-    // pre-pass double-executed the corpus-sized merge view (see
-    // compactIvfIndexIncrements).
-    val staged = postingsPath + ".compacting"
-    merged.write.mode("overwrite").partitionBy("term_bucket").parquet(staged)
-    val fs = graft.store.FsOps.fileSystem(spark, staged)
-    graft.store.FsOps.promote(fs,
-      new org.apache.hadoop.fs.Path(staged),
-      new org.apache.hadoop.fs.Path(postingsPath))
-  }
+      .repartition(col("term_bucket")), postingsPath, "term_bucket")
 
   /** Streamed maintenance of the SQ8 quantization bounds: each arriving
     * micro-batch appends its per-dimension `(dim, mn, mx)` increment
@@ -1205,21 +1135,10 @@ object EventStreams {
     */
   def compactRollupIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit = {
-    val merged = rollupFromIncrements(spark, incrementPath)
+      incrementPath: String): Unit =
+    swapIn(rollupFromIncrements(spark, incrementPath)
       .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1)
-      .cache()
-    try {
-      merged.count() // materialize BEFORE touching the directory being read
-      val staged = incrementPath + ".compacting"
-      merged.write.mode("overwrite").parquet(staged)
-      val fs = graft.store.FsOps.fileSystem(spark, staged)
-      graft.store.FsOps.promote(fs,
-        new org.apache.hadoop.fs.Path(staged),
-        new org.apache.hadoop.fs.Path(incrementPath))
-    } finally merged.unpersist()
-  }
+      .coalesce(1), incrementPath)
 
   /** [[maintainRollup]] for a rollup carrying HLL sketch measures
     * ([[graft.query.PreAgg.incrementWithSketches]] — the Unique Count
@@ -1269,21 +1188,10 @@ object EventStreams {
     */
   def compactSketchedRollupIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit = {
-    val merged = sketchedRollupFromIncrements(spark, incrementPath)
+      incrementPath: String): Unit =
+    swapIn(sketchedRollupFromIncrements(spark, incrementPath)
       .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1)
-      .cache()
-    try {
-      merged.count() // materialize BEFORE touching the directory being read
-      val staged = incrementPath + ".compacting"
-      merged.write.mode("overwrite").parquet(staged)
-      val fs = graft.store.FsOps.fileSystem(spark, staged)
-      graft.store.FsOps.promote(fs,
-        new org.apache.hadoop.fs.Path(staged),
-        new org.apache.hadoop.fs.Path(incrementPath))
-    } finally merged.unpersist()
-  }
+      .coalesce(1), incrementPath)
 
   /** Compact an increment table: merge the accumulated per-batch rows into
     * ONE increment per column and swap it in, bounding the table at columns
@@ -1298,8 +1206,8 @@ object EventStreams {
     */
   def compactIncrements(
       spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit = {
-    val merged = graft.dict.Dictionary
+      incrementPath: String): Unit =
+    swapIn(graft.dict.Dictionary
       .mergeIncrements(dedupedIncrements(spark.read.parquet(incrementPath)))
       // Keep the table single-schema: later streaming appends carry
       // inc_batch_id, and a parquet directory mixing stamped and unstamped
@@ -1307,18 +1215,7 @@ object EventStreams {
       // footer wins, the replay dedup silently disables. The compacted row
       // wears a sentinel epoch instead.
       .withColumn("inc_batch_id", org.apache.spark.sql.functions.lit(-1L))
-      .coalesce(1)
-      .cache()
-    try {
-      merged.count() // materialize BEFORE touching the directory being read
-      val staged = incrementPath + ".compacting"
-      merged.write.mode("overwrite").parquet(staged)
-      val fs = graft.store.FsOps.fileSystem(spark, staged)
-      graft.store.FsOps.promote(fs,
-        new org.apache.hadoop.fs.Path(staged),
-        new org.apache.hadoop.fs.Path(incrementPath))
-    } finally merged.unpersist()
-  }
+      .coalesce(1), incrementPath)
 
   /** Batch sessionization — the backfill twin of [[sessionize]]: a gap of
     * more than `gapMs` between consecutive events of a user starts a new

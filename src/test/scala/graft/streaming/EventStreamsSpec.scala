@@ -247,6 +247,46 @@ class EventStreamsSpec extends SparkSpecBase {
     assert(rows(EventStreams.rollupFromIncrements(spark, incPath)) === scratch)
   }
 
+  test("a compaction whose staged write fails promotes nothing and leaves the table readable") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_swapfail").toFile
+    dir.deleteOnExit()
+    val incPath = dir.getAbsolutePath + "/inc"
+    val dims = Seq("event_type" -> col("event_type"), "user_id" -> col("user_id"))
+    val batches = Seq(Seq(ev(1, 0, 1), ev(2, 5, 2)), Seq(ev(3, 10, 1), ev(4, 20, 1)))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      graft.query.PreAgg.increment(b.toDS().toDF(), dims)
+        .withColumn("inc_batch_id", lit(i.toLong))
+        .write.mode("append").parquet(incPath)
+    }
+    def raw() = spark.read.parquet(incPath).collect().map(_.toString).sorted.toSeq
+    def files() = new java.io.File(incPath).list().sorted.toSeq
+    def served() = EventStreams.rollupFromIncrements(spark, incPath)
+      .orderBy("event_type", "user_id").collect().map(_.toSeq).toSeq
+    val (rawBefore, filesBefore, servedBefore) = (raw(), files(), served())
+
+    // the merge evaluates raise_error in its tasks, so the staged write dies
+    // after it has started writing `.compacting`
+    val cnt = graft.query.PreAgg.CntCol
+    val poisoned = EventStreams.rollupFromIncrements(spark, incPath)
+      .withColumn("inc_batch_id", lit(-1L))
+      .withColumn(cnt, when(col(cnt) > 0, raise_error(lit("poisoned merge")))
+        .otherwise(col(cnt)))
+      .coalesce(1)
+    intercept[Exception](EventStreams.swapIn(poisoned, incPath))
+
+    assert(raw() === rawBefore, "a failed compaction changed the increment rows")
+    assert(files() === filesBefore, "a failed compaction promoted something")
+    assert(served() === servedBefore)
+
+    // a later good compaction still succeeds over the failed one's leftovers
+    EventStreams.compactRollupIncrements(spark, incPath)
+    assert(spark.read.parquet(incPath).select("inc_batch_id").distinct()
+      .collect().map(_.getLong(0)).toSeq === Seq(-1L))
+    assert(spark.read.parquet(incPath).count() === servedBefore.length.toLong)
+    assert(served() === servedBefore)
+  }
+
   test("streaming sketched-rollup maintenance serves the whole-corpus unique counts") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.col
