@@ -216,12 +216,15 @@ object SparkEntry {
   private[graft] def dashboardFiltered(
       s: SparkSession,
       warm: Boolean,
-      stateJson: String = dashboardStateJson): DataFrame = {
-    val (fc, _) = widgetState(s, stateJson)
+      stateJson: String = dashboardStateJson): DataFrame =
+    scanFiltered(s, warm, widgetState(s, stateJson)._1)
+
+  /** [[dashboardFiltered]] under an already-decoded widget state. */
+  private def scanFiltered(
+      s: SparkSession, warm: Boolean, fc: graft.query.FieldCollection): DataFrame =
     federatedHarmonized(s, warm)
       .where(col("datetime").isNotNull && col("datetime") >= "2010-01-01 00:00:00")
       .where(fc.compile)
-  }
 
   /** The lineitem widget fields, typed from the warm approx-distinct
     * dictionary (one per corpus dir, materialized once per session).
@@ -279,10 +282,10 @@ object SparkEntry {
         // proves it); a state outside the cube falls back to the pinned
         // scan. This is the routing a 100 TB deployment runs: doc_values
         // first, documents only when the query demands them.
-        val (_, covered) = widgetState(s, state)
+        val (fc, covered) = widgetState(s, state)
         WidgetServer.collectRowsJson(
-          if (covered) dashboardRefreshPreagg(s, state)
-          else dashboardRefresh(s, warm = true, state))
+          if (covered) rollupDashboard(dashboardRollup(s), fc)
+          else renderDashboard(scanFiltered(s, warm = true, fc), dashboardVizes, scanBackend))
       },
       "/fields" -> { _ =>
         WidgetServer.collectRowsJson(queries("q8_dict_fetch_warm")(s, dir))
@@ -559,15 +562,12 @@ object SparkEntry {
             val r = o.path("rescore")
             val rq = r.path("q").asText("")
             require(rq.nonEmpty, "search: rescore.q missing")
-            val boost = docs0.select(col("doc_id"),
-              when(graft.expr.TextMatch.containsToken(col("text"), rq),
-                lit(1.0)).otherwise(lit(0.0)).as("boost"))
             // ROUTE CONTRACT: rescore serves at most runLimit (default
             // 1000) ranks — ranks beyond it truncate BY DESIGN (the
             // distributed top-k page budget; rescore's scaladoc). A
             // deeper page product would pass runLimit explicitly here.
             graft.query.Hybrid.rescore(scored, "doc_id", "score",
-                boost, "boost",
+                graft.query.Hybrid.phraseBoost(docs0, rq), "boost",
                 windowSize = r.path("window").asInt(10),
                 rescoreWeight = r.path("weight").asDouble(2.0))
               .orderBy("rank").limit(size)
@@ -1075,11 +1075,16 @@ object SparkEntry {
     require(covered, "widget state filters outside rollup dims " +
       s"${dashboardCubeDims.map(_._1).mkString(",")} — " +
       "serve this state from dashboard_refresh (full scan) instead")
-    val f = pre
-      .where(col("year").isNotNull && col("year") >= 2010)
-      .where(fc.compile)
-    renderDashboard(f, dashboardVizes, rollupBackend)
+    rollupDashboard(pre, fc)
   }
+
+  /** [[dashboardRefreshPreagg]] over rollup `pre` under an already-decoded,
+    * covered widget state.
+    */
+  private def rollupDashboard(pre: DataFrame, fc: graft.query.FieldCollection): DataFrame =
+    renderDashboard(
+      pre.where(col("year").isNotNull && col("year") >= 2010).where(fc.compile),
+      dashboardVizes, rollupBackend)
 
   // ---------------------------------------------------------------------
   // The query registry, derived once from the family files in

@@ -1943,11 +1943,10 @@ object Aggs {
     * low enough to admit a combinatorial lattice raises at `maxSetSize`
     * rather than running away.
     *
-    * `idCol` is unused since the r19 compression (kept for source
-    * compatibility); transaction identity is row identity, so `tx` must
-    * carry one row per transaction.
+    * Transaction identity is row identity, so `tx` must carry one row per
+    * transaction.
     */
-  def frequentItemSets(tx: DataFrame, idCol: Column, itemsCol: Column,
+  def frequentItemSets(tx: DataFrame, itemsCol: Column,
       minSupport: Double = 0.1, minSetSize: Int = 1, size: Int = 10,
       maxSetSize: Int = 10, localMiningMaxBaskets: Int = 65536): DataFrame = {
     require(minSupport > 0 && minSupport <= 1,

@@ -161,6 +161,15 @@ object Hybrid {
       .limit(topK)
   }
 
+  /** The phrase-boost secondary scorer every rescore surface passes to
+    * [[rescore]]: `(doc_id, boost)` with boost 1.0 where `text` contains
+    * `phrase` ([[graft.expr.TextMatch.containsToken]]), else 0.0.
+    */
+  def phraseBoost(docs: DataFrame, phrase: String): DataFrame =
+    docs.select(col("doc_id"),
+      when(graft.expr.TextMatch.containsToken(col("text"), phrase), lit(1.0))
+        .otherwise(lit(0.0)).as("boost"))
+
   /** ES `rescore`: re-rank ONLY the top `windowSize` of a ranked run by a
     * secondary scorer — `total = queryWeight·primary +
     * rescoreWeight·secondary` inside the window (missing secondary scores

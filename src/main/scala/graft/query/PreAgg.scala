@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   *
   * Contracts:
   *  - MERGEABLE: `increment` of a batch is the same shape as the whole;
-  *    `merge` is a group-sum. Daily ingest appends increments and compacts
-  *    — the same increment contract as the dictionary's HLL/KLL sketches
-  *    ([[graft.dict.Dictionary]] mergeable profiles).
+  *    [[merge]] folds each measure by the kind its name declares (see
+  *    [[isMeasure]]) and groups by everything else. Daily ingest appends
+  *    increments and compacts — the same increment contract as the
+  *    dictionary's HLL/KLL sketches ([[graft.dict.Dictionary]] mergeable
+  *    profiles).
   *  - COVERING: a filter is servable iff every filtered field is a rollup
   *    dimension ([[covers]]); a state that filters outside the cube must
   *    fall back to the full scan — enforced loudly, never silently wrong.
@@ -37,22 +39,63 @@ object PreAgg {
   /** The rollup's count column. */
   val CntCol = "cnt"
 
+  /** Suffix of rollup SUM measures. */
+  val SumSuffix = "_sum"
+
+  /** Suffix of rollup HLL sketch measures. */
+  val SketchSuffix = "_hll"
+
+  /** Suffix of rollup KLL quantile-sketch measures. */
+  val QuantileSketchSuffix = "_kll"
+
+  /** How [[merge]] folds a rollup column, read off its name: `cnt` and
+    * `*_sum` add, `*_min` takes the min and `*_max` the max, `*_hll`
+    * unions HLL sketches and `*_kll` merges KLL sketches. Any other column
+    * is a dimension (None).
+    */
+  private def measureFold(c: String): Option[Column] =
+    if (c == CntCol || c.endsWith(SumSuffix)) Some(sum(col(c)).as(c))
+    else if (c.endsWith("_min")) Some(min(col(c)).as(c))
+    else if (c.endsWith("_max")) Some(max(col(c)).as(c))
+    else if (c.endsWith(SketchSuffix)) Some(hll_union_agg(col(c)).as(c))
+    else if (c.endsWith(QuantileSketchSuffix)) Some(expr(s"kll_merge_agg_double($c)").as(c))
+    else None
+
+  /** Is `column` a rollup measure (rather than a dimension)? */
+  private[graft] def isMeasure(column: String): Boolean = measureFold(column).isDefined
+
+  /** The group-by every increment builder shares: one row per distinct
+    * combination of `dims` (name → deriving expression over `df`'s
+    * columns) carrying `cnt` and then `measures`. A dimension named like a
+    * measure is refused, since [[merge]] tells the two apart by name alone.
+    */
+  private def rollUp(df: DataFrame, dims: Seq[(String, Column)], measures: Column*): DataFrame = {
+    dims.foreach { case (n, _) =>
+      require(!isMeasure(n), s"rollup dimension '$n' is named like a measure " +
+        s"($CntCol, *_sum, *_min, *_max, *$SketchSuffix, *$QuantileSketchSuffix) — rename it")
+    }
+    df.groupBy(dims.map { case (n, c) => c.as(n) }: _*)
+      .agg(count(lit(1)).as(CntCol), measures: _*)
+  }
+
   /** One rollup increment from a (batch of the) corpus: count per distinct
-    * combination of `dims` (name → deriving expression over the corpus
-    * columns). The whole-corpus rollup is the increment of the whole corpus.
+    * combination of `dims`. The whole-corpus rollup is the increment of the
+    * whole corpus.
     */
   def increment(df: DataFrame, dims: Seq[(String, Column)]): DataFrame =
-    df.groupBy(dims.map { case (n, c) => c.as(n) }: _*)
-      .agg(count(lit(1)).as(CntCol))
+    rollUp(df, dims)
 
-  /** Merge rollup increments: union + group-sum. Associative and
-    * commutative, so batches may arrive and compact in any order.
+  /** Merge rollup increments of any flavour: union, group by the
+    * dimensions, fold each measure by its kind ([[isMeasure]]). Measures
+    * keep their column order. Associative and commutative (KLL modulo its
+    * documented compaction, see [[incrementWithQuantileSketches]]), so
+    * batches may arrive and compact in any order.
     */
   def merge(increments: DataFrame*): DataFrame = {
     val all = increments.reduce(_.unionByName(_))
-    val dims = all.columns.filter(_ != CntCol)
-    all.groupBy(dims.map(col): _*)
-      .agg(sum(col(CntCol)).as(CntCol))
+    val dims = all.columns.filterNot(isMeasure)
+    val folds = all.columns.toSeq.flatMap(measureFold)
+    all.groupBy(dims.map(col).toSeq: _*).agg(folds.head, folds.tail: _*)
   }
 
   /** Is a selection over `fields` servable from a rollup carrying `dims`? */
@@ -305,9 +348,9 @@ object PreAgg {
     * an epoch cannot even inflate them), so per-batch increments merge to
     * the whole-corpus extremes exactly, and order-exactness means the
     * served row hash-matches the scan with no quantization. Measure
-    * names must end `_min`/`_max` — the suffix is what [[mergeExtremes]]
-    * merges by. A lexicographic `max(struct(sort, tiebreak, metric))` is
-    * a legal max measure (struct ordering is total), which is how
+    * names must end `_min`/`_max` — the suffix is what [[merge]] merges
+    * by. A lexicographic `max(struct(sort, tiebreak, metric))` is a legal
+    * max measure (struct ordering is total), which is how
     * [[termsTopMetrics]] serves from this rollup.
     */
   def incrementWithExtremes(
@@ -316,25 +359,10 @@ object PreAgg {
       mins: Seq[(String, Column)],
       maxs: Seq[(String, Column)]): DataFrame = {
     require(mins.forall(_._1.endsWith("_min")) && maxs.forall(_._1.endsWith("_max")),
-      "extreme measure names must end _min/_max (mergeExtremes merges by suffix)")
-    df.groupBy(dims.map { case (n, c) => c.as(n) }: _*)
-      .agg(count(lit(1)).as(CntCol),
-        mins.map { case (n, c) => min(c).as(n) } ++
-          maxs.map { case (n, c) => max(c).as(n) }: _*)
-  }
-
-  /** Merge extremes increments: group-sum the count, min the `_min`
-    * measures, max the `_max` measures.
-    */
-  def mergeExtremes(increments: DataFrame*): DataFrame = {
-    val all = increments.reduce(_.unionByName(_))
-    val dims = all.columns.filterNot(c =>
-      c == CntCol || c.endsWith("_min") || c.endsWith("_max"))
-    val measures =
-      Seq(sum(col(CntCol)).as(CntCol)) ++
-        all.columns.filter(_.endsWith("_min")).map(c => min(col(c)).as(c)) ++
-        all.columns.filter(_.endsWith("_max")).map(c => max(col(c)).as(c))
-    all.groupBy(dims.map(col).toSeq: _*).agg(measures.head, measures.tail: _*)
+      "extreme measure names must end _min/_max (merge merges by suffix)")
+    rollUp(df, dims,
+      mins.map { case (n, c) => min(c).as(n) } ++
+        maxs.map { case (n, c) => max(c).as(n) }: _*)
   }
 
   /** [[Aggs.geoBounds]] from an extremes rollup keyed by the bucket field
@@ -363,9 +391,6 @@ object PreAgg {
       .orderBy(desc("count"), asc(field))
       .limit(n)
 
-  /** Suffix of rollup sketch measures. */
-  val SketchSuffix = "_hll"
-
   /** Rollup increment carrying mergeable HLL sketch measures — the
     * approximate unique-count path for fields too high-cardinality to be
     * rollup dimensions (ES's own cardinality agg is exactly this sketch).
@@ -381,22 +406,8 @@ object PreAgg {
       dims: Seq[(String, Column)],
       sketches: Seq[(String, Column)],
       lgK: Int = 12): DataFrame =
-    df.groupBy(dims.map { case (n, c) => c.as(n) }: _*)
-      .agg(count(lit(1)).as(CntCol),
-        sketches.map { case (n, c) =>
-          hll_sketch_agg(c, lgK).as(n + SketchSuffix) }: _*)
-
-  /** Merge sketched rollup increments: group-sum the counts, register-max
-    * union the sketches. Associative and commutative like [[merge]].
-    */
-  def mergeSketched(increments: DataFrame*): DataFrame = {
-    val all = increments.reduce(_.unionByName(_))
-    val dims = all.columns.filter(c => c != CntCol && !c.endsWith(SketchSuffix))
-    val sketchCols = all.columns.filter(_.endsWith(SketchSuffix)).toSeq
-    all.groupBy(dims.map(col): _*)
-      .agg(sum(col(CntCol)).as(CntCol),
-        sketchCols.map(c => hll_union_agg(col(c)).as(c)): _*)
-  }
+    rollUp(df, dims,
+      sketches.map { case (n, c) => hll_sketch_agg(c, lgK).as(n + SketchSuffix) }: _*)
 
   /** Unique Count per bucket from a sketched rollup: union the bucket's
     * sketches, estimate. The estimate is deterministic (register state is a
@@ -707,9 +718,6 @@ object PreAgg {
       .limit(n)
   }
 
-  /** Suffix of rollup quantile-sketch measures. */
-  val QuantileSketchSuffix = "_kll"
-
   /** Rollup increment carrying mergeable KLL quantile sketches — the
     * percentile path for fields too continuous/wide to be pair-rollup
     * dimensions, completing the sketch symmetry (HLL ↔ unique count,
@@ -717,7 +725,10 @@ object PreAgg {
     * DataSketches KLL the dictionary's quantile surface already maintains
     * ([[graft.dict.Dictionary]] `quantileIncrement`), with the same
     * increment contract: fixed-size binary state per dim combo, merges by
-    * sketch union.
+    * sketch union. The merge is associative/commutative modulo KLL's
+    * documented compaction nondeterminism — exact (and deterministic)
+    * while sketches hold fewer than k values, rank-error-bounded beyond,
+    * the same trade the dictionary's quantile surface certifies.
     */
   def incrementWithQuantileSketches(
       df: DataFrame,
@@ -728,28 +739,9 @@ object PreAgg {
     val staged = measures.zipWithIndex.foldLeft(df) {
       case (d, ((_, c), i)) => d.withColumn(s"_q$i", c.cast("double"))
     }
-    staged.groupBy(dims.map { case (n, c) => c.as(n) }: _*)
-      .agg(count(lit(1)).as(CntCol),
-        measures.zipWithIndex.map { case ((n, _), i) =>
-          expr(s"kll_sketch_agg_double(_q$i)")
-            .as(n + QuantileSketchSuffix) }: _*)
-  }
-
-  /** Merge quantile-sketched rollup increments: group-sum the counts,
-    * union the sketches. Associative/commutative modulo KLL's documented
-    * compaction nondeterminism — exact (and deterministic) while sketches
-    * hold fewer than k values, rank-error-bounded beyond, the same trade
-    * the dictionary's quantile surface certifies.
-    */
-  def mergeQuantileSketched(increments: DataFrame*): DataFrame = {
-    val all = increments.reduce(_.unionByName(_))
-    val dims = all.columns.filter(c =>
-      c != CntCol && !c.endsWith(QuantileSketchSuffix))
-    val sketchCols = all.columns.filter(_.endsWith(QuantileSketchSuffix)).toSeq
-    all.groupBy(dims.map(col): _*)
-      .agg(sum(col(CntCol)).as(CntCol),
-        sketchCols.map(c =>
-          expr(s"kll_merge_agg_double($c)").as(c)): _*)
+    rollUp(staged, dims,
+      measures.zipWithIndex.map { case ((n, _), i) =>
+        expr(s"kll_sketch_agg_double(_q$i)").as(n + QuantileSketchSuffix) }: _*)
   }
 
   /** Percentiles per bucket from a quantile-sketched rollup: union the
@@ -905,9 +897,6 @@ object PreAgg {
       ingestPrecision, p, geohashCol)
   }
 
-  /** Suffix of rollup SUM measures. */
-  val SumSuffix = "_sum"
-
   /** Rollup increment carrying exact LONG SUM measures beside the count —
     * the moments layer: integer sums are associative/commutative, so
     * per-batch increments merge to the whole-corpus sums exactly and any
@@ -915,7 +904,7 @@ object PreAgg {
     * centroid, variance, covariance, correlation, Welch t — the
     * [[Aggs.extendedStats]] cents discipline) serves from |distinct dim
     * combos| rollup rows hash-identically to its corpus scan. Measure
-    * names must end `_sum` ([[mergeSums]] merges by suffix). Callers
+    * names must end `_sum` ([[merge]] merges by suffix). Callers
     * integer-scale measures at ingest (cents, micro-degrees) and apply
     * the scan's own null-row exclusions — the rollup stores no doubles.
     */
@@ -924,21 +913,8 @@ object PreAgg {
       dims: Seq[(String, Column)],
       sums: Seq[(String, Column)]): DataFrame = {
     require(sums.nonEmpty && sums.forall(_._1.endsWith(SumSuffix)),
-      "sum measure names must end _sum (mergeSums merges by suffix)")
-    df.groupBy(dims.map { case (n, c) => c.as(n) }: _*)
-      .agg(count(lit(1)).as(CntCol),
-        sums.map { case (n, c) => sum(c.cast("long")).as(n) }: _*)
-  }
-
-  /** Merge sum-measure increments: group-sum the count and every `_sum`
-    * measure. Associative and commutative like [[merge]].
-    */
-  def mergeSums(increments: DataFrame*): DataFrame = {
-    val all = increments.reduce(_.unionByName(_))
-    val dims = all.columns.filterNot(c => c == CntCol || c.endsWith(SumSuffix))
-    val measures = (CntCol +: all.columns.filter(_.endsWith(SumSuffix)).toSeq)
-      .map(c => sum(col(c)).as(c))
-    all.groupBy(dims.map(col).toSeq: _*).agg(measures.head, measures.tail: _*)
+      "sum measure names must end _sum (merge merges by suffix)")
+    rollUp(df, dims, sums.map { case (n, c) => sum(c.cast("long")).as(n) }: _*)
   }
 
   /** [[Aggs.weightedAvg]] from a sum rollup carrying `swv_sum`

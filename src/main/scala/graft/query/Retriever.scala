@@ -201,11 +201,8 @@ object Retriever {
         require(rq.nonEmpty, "retriever.rescorer: rescore.q missing")
         val child = compileNode(docs, emb, o.get("retriever"))
         require(child.scored, "retriever.rescorer: the wrapped child must be scored")
-        val boost = docs.select(col("doc_id"),
-          when(TextMatch.containsToken(col("text"), rq), lit(1.0))
-            .otherwise(lit(0.0)).as("boost"))
         Compiled(
-          Hybrid.rescore(child.run, "doc_id", "score", boost, "boost",
+          Hybrid.rescore(child.run, "doc_id", "score", Hybrid.phraseBoost(docs, rq), "boost",
             windowSize = bounded(r.path("window").asInt(10), "rescore window"),
             rescoreWeight = r.path("weight").asDouble(2.0)),
           scored = true)

@@ -1155,7 +1155,7 @@ object AggQueries extends Family("serving") {
         Seq("c_mktsegment" -> col("c_mktsegment")),
         mins = Seq("lat_min" -> col("lat"), "lon_min" -> col("lon")),
         maxs = Seq("lat_max" -> col("lat"), "lon_max" -> col("lon")))
-      val merged = query.PreAgg.mergeExtremes(
+      val merged = query.PreAgg.merge(
         inc(pts.where(pmod(col("c_custkey"), lit(2)) === 0)),
         inc(pts.where(pmod(col("c_custkey"), lit(2)) === 1)))
       query.PreAgg.geoBounds(merged, "c_mktsegment")
@@ -1172,7 +1172,7 @@ object AggQueries extends Family("serving") {
         mins = Nil,
         maxs = Seq("top_max" -> struct(col("ts").as("s"),
           col("event_id").as("t"), col("value").as("m"))))
-      val merged = query.PreAgg.mergeExtremes(
+      val merged = query.PreAgg.merge(
         inc(ev.where(pmod(col("event_id"), lit(2)) === 0)),
         inc(ev.where(pmod(col("event_id"), lit(2)) === 1)))
       query.PreAgg.termsTopMetrics(merged, "event_type")

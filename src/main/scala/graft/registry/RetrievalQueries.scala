@@ -835,10 +835,8 @@ object RetrievalQueries extends Family("serving") {
       val docs = load(dir, "documents")
       val primary = query.Bm25.topKRaw(docs, "doc_id", "text",
         "spark merge join window", k = 30)
-      val secondary = docs.select(col("doc_id"),
-        when(graft.expr.TextMatch.containsToken(col("text"), "big vector"),
-          lit(1.0)).otherwise(lit(0.0)).as("boost"))
-      query.Hybrid.rescore(primary, "doc_id", "score", secondary, "boost",
+      query.Hybrid.rescore(primary, "doc_id", "score",
+          query.Hybrid.phraseBoost(docs, "big vector"), "boost",
           windowSize = 10, queryWeight = 1.0, rescoreWeight = 2.0)
         .orderBy("rank")
     }, Some({

@@ -638,7 +638,7 @@ object SearchQueries extends Family("serving") {
         array(basket.map(lit): _*))
       graft.query.Aggs.frequentItemSets(
         load(dir, "documents").select(col("doc_id"), items.as("items")),
-        col("doc_id"), col("items"),
+        col("items"),
         minSupport = 0.45, minSetSize = 2, size = 10, maxSetSize = 6)
     }, Some(
       """WITH tx AS (

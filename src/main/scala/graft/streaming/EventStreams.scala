@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming surface — beyond the reference (which is batch-only,
   * SURVEY.md §2.6) but first-class for a training-data pipeline: the same
@@ -233,7 +233,7 @@ object EventStreams {
       acceptedPath: String,
       checkpointDir: String,
       bloomNumBits: Long = 0,
-      bloomExpectedItems: Long = 1000000): org.apache.spark.sql.streaming.StreamingQuery =
+      bloomExpectedItems: Long = 1000000): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -324,10 +324,8 @@ object EventStreams {
     * the accepted set never changes. Bloom states are untouched (their
     * merge is already one row per batch and OR-idempotent).
     */
-  def compactAcceptedCorpus(
-      spark: org.apache.spark.sql.SparkSession,
-      acceptedPath: String): Unit =
-    swapIn(spark.read.parquet(acceptedPath).withColumn("_batch", lit(-1L)),
+  def compactAcceptedCorpus(spark: SparkSession, acceptedPath: String): Unit =
+    swapIn(spark.read.parquet(acceptedPath).withColumn("_batch", lit(CompactedEpoch)),
       acceptedPath, "_batch")
 
   /** Streaming sink into the at-rest search index: every micro-batch is
@@ -342,7 +340,7 @@ object EventStreams {
       events: DataFrame,
       path: String,
       analyzeColumns: Seq[String],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -351,53 +349,124 @@ object EventStreams {
       }
       .start()
 
-  /** Streaming dictionary maintenance — the live half of
-    * [[graft.dict.Dictionary.profileIncrement]]'s 100 TB update story: keep
-    * the data dictionary current while a stream ingests, without ever
-    * re-profiling the corpus.
+  /** The epoch column of every increment table ([[appendEpochs]]). */
+  private val EpochCol = "inc_batch_id"
+
+  /** The epoch compacted rows wear ([[compactTo]]); also the `_batch` of a
+    * compacted [[dedupToCorpus]] store. Every real epoch is ≥ 0.
+    */
+  private val CompactedEpoch = -1L
+
+  /** The sink behind every increment table here — the live half of the
+    * engine's 100 TB update story: a table derived from the corpus
+    * (rollup, dictionary, vocabularies, postings, ANN indexes) is kept
+    * current by appending one small MERGEABLE increment per micro-batch,
+    * never by re-reading the corpus. The contract that keeps such a table
+    * correct, stated once for all of them:
     *
-    * Each micro-batch is profiled into one MERGEABLE increment (counts and
-    * moments as sums, min/max under the field's ordering, distincts as HLL
-    * sketches) and appended to a tiny at-rest increment table — per batch
-    * that's one row per column, kilobytes, regardless of batch size. The
-    * current dictionary is [[dictionaryFromIncrements]]: merge + finalize
-    * over the accumulated increments, cost proportional to
-    * batches × columns, never to rows. Compaction, when the batch count
-    * grows, is the same merge written back as one increment — it can run
-    * any time, because merging is associative and commutative.
+    *  - STAMP: each micro-batch appends `batchFrame(batch)` with the
+    *    batch's epoch in `inc_batch_id` (partitioned by `partitionBy`, if
+    *    any). foreachBatch is at-least-once: a failure after the append but
+    *    before the checkpoint commit replays the batch and appends again.
+    *    Increment rows are a pure function of the batch, so a replay
+    *    re-appends the same rows under the same epoch.
+    *  - DEDUP ON READ: a reader keeps one row per (key, epoch), which drops
+    *    exactly the replays — or, where rows are REPLACED per key (the
+    *    postings and IVF indexes), only the latest epoch per key. Stamping
+    *    the epoch makes the table idempotent to READ without an
+    *    atomic-commit sink.
+    *  - MERGE: the surviving rows merge by each measure's kind — counts and
+    *    sums add, extremes fold, sketches union ([[graft.query.PreAgg.merge]])
+    *    — associatively and commutatively, so the current table costs
+    *    accumulated increment rows, never corpus rows.
+    *  - COMPACT: [[compactTo]] writes the merged view back under the
+    *    sentinel epoch `-1` on whatever cadence owns the table (pause the
+    *    writer first), bounding it at one row per key.
+    *
+    * Each `maintain*` below states only what is particular to its table:
+    * its increment, its merge property and its dedup key.
+    */
+  private def appendEpochs(
+      stream: DataFrame,
+      path: String,
+      checkpointDir: String,
+      partitionBy: String*)(batchFrame: DataFrame => DataFrame): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val writer = batchFrame(batch).withColumn(EpochCol, lit(batchId)).write.mode("append")
+        (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*)).parquet(path)
+      }
+      .start()
+
+  /** Compact an increment table at `path` to `merged`, its served view:
+    * every row wears the sentinel epoch and [[swapIn]] swaps it in. Safe at
+    * any time — merging is associative and commutative — but it commutes
+    * with concurrent appends only if the writer is paused; call it from the
+    * maintenance cadence that owns the table (the streaming query's own
+    * `foreachBatch` epoch, a nightly job). On a real deployment this seam is
+    * a transactional table format's atomic commit.
+    *
+    * The sentinel keeps the table single-schema: later streaming appends
+    * carry inc_batch_id, and a parquet directory mixing stamped and
+    * unstamped files can resolve to either schema at read time — if the
+    * unstamped footer wins, the replay dedup silently disables. It also
+    * keeps replay dedup armed, and any real epoch (≥ 0) outranks it, so a
+    * latest-epoch reader still prefers a post-compaction append.
+    *
+    * Layout: an unpartitioned (vocabulary-sized) table compacts to one file
+    * (`coalesce(1)`). A partitioned table is corpus-sized (one row per
+    * vector or posting), so it repartitions ON the partition key — one task
+    * per directory, one file each; a single writer task funneling the whole
+    * index is exactly the driver-shaped bottleneck the partitioned layout
+    * exists to avoid.
+    */
+  private def compactTo(merged: DataFrame, path: String, partitionBy: String*): Unit = {
+    val stamped = merged.withColumn(EpochCol, lit(CompactedEpoch))
+    swapIn(
+      if (partitionBy.isEmpty) stamped.coalesce(1)
+      else stamped.repartition(partitionBy.map(col): _*),
+      path, partitionBy: _*)
+  }
+
+  /** The sum-merge read shared by the counting tables: drop replayed epochs
+    * per (`keys`, epoch), then group by `keys` summing each of `measures`.
+    */
+  private def sumMerged(
+      spark: SparkSession, path: String, keys: Seq[String], measures: String*): DataFrame = {
+    val sums = measures.map(m => sum(col(m)).as(m))
+    spark.read.parquet(path)
+      .dropDuplicates(keys :+ EpochCol)
+      .groupBy(keys.head, keys.tail: _*)
+      .agg(sums.head, sums.tail: _*)
+  }
+
+  /** Streaming dictionary maintenance — the live half of
+    * [[graft.dict.Dictionary.profileIncrement]]: each micro-batch is
+    * profiled into one increment row per column (counts and moments as
+    * sums, min/max under the field's ordering, distincts as HLL sketches),
+    * kilobytes per batch regardless of batch size. Dedup key: (column,
+    * epoch). The current dictionary is [[dictionaryFromIncrements]], cost
+    * proportional to batches × columns.
     */
   def maintainDictionary(
       events: DataFrame,
       incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // foreachBatch is at-least-once: a failure after the append but
-        // before the checkpoint commit replays the batch and appends again.
-        // Stamping the epoch makes the table idempotent to READ — consumers
-        // keep one increment per (column, batch) — without needing an
-        // atomic-commit sink.
-        graft.dict.Dictionary.profileIncrement(batch)
-          .withColumn("inc_batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(events, incrementPath, checkpointDir)(graft.dict.Dictionary.profileIncrement)
 
   /** One increment row per (column, batch), dropping at-least-once replays;
     * tables without the epoch column (plain batch writers) pass through.
     */
   private def dedupedIncrements(df: DataFrame): DataFrame =
-    if (!df.columns.contains("inc_batch_id")) df
-    else df.dropDuplicates("dict_field", "inc_batch_id").drop("inc_batch_id")
+    if (!df.columns.contains(EpochCol)) df
+    else df.dropDuplicates("dict_field", EpochCol).drop(EpochCol)
 
   /** The current dictionary implied by an increment table maintained by
     * [[maintainDictionary]] (or any batch writer of
     * [[graft.dict.Dictionary.profileIncrement]] rows).
     */
-  def dictionaryFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame =
+  def dictionaryFromIncrements(spark: SparkSession, incrementPath: String): DataFrame =
     graft.dict.Dictionary.finalizeIncrement(
       graft.dict.Dictionary.mergeIncrements(
         dedupedIncrements(spark.read.parquet(incrementPath))))
@@ -414,7 +483,7 @@ object EventStreams {
       textCol: String,
       statePath: String,
       checkpointDir: String,
-      maxTracked: Int = 4096): org.apache.spark.sql.streaming.StreamingQuery =
+      maxTracked: Int = 4096): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -430,7 +499,7 @@ object EventStreams {
     * the batch-side `vocab_topk_incremental` oracle pins).
     */
   def vocabularyFromStates(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       statePath: String,
       k: Int,
       maxTracked: Int = 4096): DataFrame = {
@@ -443,129 +512,45 @@ object EventStreams {
   }
 
   /** Live serving-rollup maintenance — the ingest half of
-    * [[graft.query.PreAgg]]'s 100 TB serving story: the dashboard's rollup
-    * table cannot be rebuilt by re-scanning the corpus on every arrival, so
-    * each micro-batch is rolled up into one MERGEABLE increment (counts per
-    * distinct dimension combination — [[graft.query.PreAgg.increment]], the
-    * same contract as the dictionary's HLL/KLL and the vocabulary's
-    * `approx_top_k` states) and appended at rest, epoch-stamped for
-    * at-least-once replay idempotence. The current rollup is
-    * [[rollupFromIncrements]]: drop replayed epochs, group-sum — cost
-    * proportional to accumulated increment rows, never to ingested corpus
-    * rows. [[compactRollupIncrements]] bounds the table at |distinct
-    * combos| rows on whatever cadence owns it.
+    * [[graft.query.PreAgg]]'s 100 TB serving story: each micro-batch is
+    * rolled up by `increment`, any of PreAgg's builders — the count
+    * rollup (`PreAgg.increment(_, dims)`) or one carrying extremes, exact
+    * sums or HLL/KLL sketches (e.g. `PreAgg.incrementWithSums(_, dims,
+    * sums)`). Dedup key: (dimension combo, epoch) — each epoch's rollup
+    * carries a combo at most once, and the recomputed measures (sketch
+    * bytes included) are a pure function of the batch. The dedup is
+    * load-bearing for counts and sums; extremes would survive a replay
+    * unguarded (min/max are idempotent).
     */
   def maintainRollup(
       events: DataFrame,
-      dims: Seq[(String, Column)],
+      increment: DataFrame => DataFrame,
       incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.query.PreAgg.increment(batch, dims)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(events, incrementPath, checkpointDir)(increment)
 
-  /** The current serving rollup implied by an increment table maintained by
-    * [[maintainRollup]]: one increment row per (dimension combo, batch) —
-    * a foreachBatch retry re-appends a whole epoch, and each epoch's rollup
-    * carries a combo at most once, so the per-combo epoch dedup drops
-    * exactly the replays — then merge (group-sum). The result feeds
-    * [[graft.query.PreAgg]]'s weighted serving twins unchanged.
+  /** The current serving rollup implied by [[maintainRollup]]'s increments,
+    * any flavour: per-(combo, epoch) dedup, then [[graft.query.PreAgg.merge]].
+    * The result feeds [[graft.query.PreAgg]]'s serving twins unchanged.
     */
-  def rollupFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame = {
+  def rollupFromIncrements(spark: SparkSession, incrementPath: String): DataFrame = {
     val inc = spark.read.parquet(incrementPath)
-    val dims = inc.columns.filter(c => c != graft.query.PreAgg.CntCol && c != "inc_batch_id")
-    graft.query.PreAgg.merge(
-      inc.dropDuplicates(dims :+ "inc_batch_id").drop("inc_batch_id"))
+    val dims = inc.columns.filterNot(c => c == EpochCol || graft.query.PreAgg.isMeasure(c))
+    graft.query.PreAgg.merge(inc.dropDuplicates(dims :+ EpochCol).drop(EpochCol))
   }
 
-  /** [[maintainRollup]] for the EXTREMES rollup flavor
-    * ([[graft.query.PreAgg.incrementWithExtremes]]): per-batch min/max
-    * measures beside the count. Replay dedup is per (dim combo, epoch)
-    * like the count rollup — though the extreme measures would survive a
-    * replay even unguarded (min/max are idempotent), the count would
-    * not, so the same discipline applies.
+  /** Compact a rollup-increment table of any flavour to one row per
+    * dimension combination.
     */
-  def maintainExtremesRollup(
-      events: DataFrame,
-      dims: Seq[(String, Column)],
-      mins: Seq[(String, Column)],
-      maxs: Seq[(String, Column)],
-      incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.query.PreAgg.incrementWithExtremes(batch, dims, mins, maxs)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
-
-  /** The serving extremes rollup implied by [[maintainExtremesRollup]]'s
-    * increments — per-combo epoch dedup, then [[graft.query.PreAgg
-    * .mergeExtremes]].
-    */
-  def extremesRollupFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame = {
-    val inc = spark.read.parquet(incrementPath)
-    val dims = inc.columns.filter(c => c != graft.query.PreAgg.CntCol &&
-      c != "inc_batch_id" && !c.endsWith("_min") && !c.endsWith("_max"))
-    graft.query.PreAgg.mergeExtremes(
-      inc.dropDuplicates(dims :+ "inc_batch_id").drop("inc_batch_id"))
-  }
-
-  /** [[maintainRollup]] for the SUM-MEASURE rollup flavor
-    * ([[graft.query.PreAgg.incrementWithSums]]): exact LONG sum measures
-    * beside the count — the moments layer behind the weighted_avg /
-    * geo_centroid / matrix_stats / string_stats serves. Unlike the
-    * extremes, a replayed epoch WOULD inflate a sum, so the per-(combo,
-    * epoch) dedup in [[sumRollupFromIncrements]] is load-bearing for
-    * every measure here, not just the count.
-    */
-  def maintainSumRollup(
-      events: DataFrame,
-      dims: Seq[(String, Column)],
-      sums: Seq[(String, Column)],
-      incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.query.PreAgg.incrementWithSums(batch, dims, sums)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
-
-  /** The serving sum-measure rollup implied by [[maintainSumRollup]]'s
-    * increments — per-combo epoch dedup (exactly the replays, see
-    * [[rollupFromIncrements]]), then [[graft.query.PreAgg.mergeSums]].
-    */
-  def sumRollupFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame = {
-    val inc = spark.read.parquet(incrementPath)
-    val dims = inc.columns.filter(c => c != graft.query.PreAgg.CntCol &&
-      c != "inc_batch_id" && !c.endsWith(graft.query.PreAgg.SumSuffix))
-    graft.query.PreAgg.mergeSums(
-      inc.dropDuplicates(dims :+ "inc_batch_id").drop("inc_batch_id"))
-  }
+  def compactRollupIncrements(spark: SparkSession, incrementPath: String): Unit =
+    compactTo(rollupFromIncrements(spark, incrementPath), incrementPath)
 
   /** Maintain the boilerplate gram-df statistics from a DOCUMENT stream —
     * the corpus-fraction threshold needs corpus-wide document frequencies,
     * which are sum-mergeable: each batch appends `(gram, df)` counts plus
     * one null-gram row carrying the batch's document count (grams are
     * xxhash64 values and never null, so the sentinel is unambiguous and
-    * the table stays single-schema). Same replay contract as
-    * [[maintainRollup]]: per-batch epochs dedup retried appends.
+    * the table stays single-schema). Dedup key: (gram, epoch).
     *
     * Serving: [[gramDfFromIncrements]] → [[graft.ops.TextAnalysis
     * .boilerplateFrequent]] → [[graft.ops.TextAnalysis
@@ -577,201 +562,133 @@ object EventStreams {
       textCol: String,
       n: Int,
       incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dfs = batch
-          .select(explode(graft.expr.TextShingles.shingleHashes(
-            col(s"`$textCol`"), n)).as("gram"))
-          .groupBy("gram").agg(count(lit(1)).as("df"))
-        val total = batch.agg(count(lit(1)).as("df"))
-          .select(lit(null).cast("long").as("gram"), col("df"))
-        dfs.unionByName(total)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(docs, incrementPath, checkpointDir) { batch =>
+      val dfs = batch
+        .select(explode(graft.expr.TextShingles.shingleHashes(
+          col(s"`$textCol`"), n)).as("gram"))
+        .groupBy("gram").agg(count(lit(1)).as("df"))
+      val total = batch.agg(count(lit(1)).as("df"))
+        .select(lit(null).cast("long").as("gram"), col("df"))
+      dfs.unionByName(total)
+    }
 
   /** The corpus-so-far gram-df table implied by [[maintainGramDf]]'s
-    * increments: replay-deduped per (gram, epoch), then sum-merged —
-    * `(gram, df)` plus the null-gram total-documents row,
+    * increments: `(gram, df)` plus the null-gram total-documents row,
     * [[graft.ops.TextAnalysis.boilerplateFrequent]]'s input shape.
     */
-  def gramDfFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame =
-    spark.read.parquet(incrementPath)
-      .dropDuplicates(Seq("gram", "inc_batch_id"))
-      .groupBy("gram").agg(sum(col("df")).as("df"))
+  def gramDfFromIncrements(spark: SparkSession, incrementPath: String): DataFrame =
+    sumMerged(spark, incrementPath, Seq("gram"), "df")
 
   /** Compact a gram-df increment table to one row per gram (plus the
-    * null-gram document-count sentinel) via the same staged swap as
-    * [[compactRollupIncrements]]. Without this the table grows one row per
-    * (gram, batch) forever and [[gramDfFromIncrements]] re-aggregates the
-    * full history on every serve — gram cardinality makes that much heavier
-    * than the rollup case, so the compaction cadence matters MORE here.
-    * The compacted rows wear the sentinel epoch so replay dedup stays armed
-    * for subsequent appends.
+    * null-gram document-count sentinel). Without this the table grows one
+    * row per (gram, batch) forever and [[gramDfFromIncrements]]
+    * re-aggregates the full history on every serve — gram cardinality makes
+    * that much heavier than the rollup case, so the compaction cadence
+    * matters MORE here.
     */
-  def compactGramDfIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit =
-    swapIn(gramDfFromIncrements(spark, incrementPath)
-      .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1), incrementPath)
+  def compactGramDfIncrements(spark: SparkSession, incrementPath: String): Unit =
+    compactTo(gramDfFromIncrements(spark, incrementPath), incrementPath)
 
   /** Maintain the fuzzy-search vocabulary from a DOCUMENT stream — the
     * at-rest artifact behind the SymSpell deletion index, the term
     * suggester, and the phrase suggester's candidate generator
     * ([[graft.query.Fuzzy]]): per micro-batch, per-doc-distinct term
-    * counts append as `(term, freq, inc_batch_id)`. Document frequencies
-    * are integer sums, so the corpus-so-far vocabulary is one group-sum
-    * away and every fuzzy serve path runs WITHOUT re-reading corpus
-    * text. Same replay contract as [[maintainGramDf]]: per-(term, epoch)
-    * dedup makes retried appends idempotent.
+    * counts `(term, freq)`. Document frequencies are integer sums, so every
+    * fuzzy serve path runs WITHOUT re-reading corpus text. Dedup key:
+    * (term, epoch).
     */
   def maintainFuzzyVocab(
       docs: DataFrame,
       textCol: String,
       incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.query.Fuzzy.vocabularyWithFreq(batch, col(s"`$textCol`"))
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(docs, incrementPath, checkpointDir)(
+      graft.query.Fuzzy.vocabularyWithFreq(_, col(s"`$textCol`")))
 
   /** The corpus-so-far `(term, freq)` vocabulary implied by
-    * [[maintainFuzzyVocab]]'s increments: replay-deduped per
-    * (term, epoch), then sum-merged — feed it straight to
+    * [[maintainFuzzyVocab]]'s increments — feed it straight to
     * [[graft.query.Fuzzy.suggestTermsFromVocab]] /
     * [[graft.query.Fuzzy.deletionIndex]].
     */
-  def fuzzyVocabFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame =
-    spark.read.parquet(incrementPath)
-      .dropDuplicates(Seq("term", "inc_batch_id"))
-      .groupBy("term").agg(sum(col("freq")).as("freq"))
+  def fuzzyVocabFromIncrements(spark: SparkSession, incrementPath: String): DataFrame =
+    sumMerged(spark, incrementPath, Seq("term"), "freq")
 
-  /** Compact a fuzzy-vocabulary increment table to one row per term via
-    * the staged swap (sentinel epoch keeps replay dedup armed — the
-    * [[compactGramDfIncrements]] contract).
-    */
-  def compactFuzzyVocabIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit =
-    swapIn(fuzzyVocabFromIncrements(spark, incrementPath)
-      .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1), incrementPath)
+  /** Compact a fuzzy-vocabulary increment table to one row per term. */
+  def compactFuzzyVocabIncrements(spark: SparkSession, incrementPath: String): Unit =
+    compactTo(fuzzyVocabFromIncrements(spark, incrementPath), incrementPath)
 
   /** Maintain the unigram piece-count artifact from a DOCUMENT stream
     * ([[graft.ops.Unigram]]): per micro-batch, the RAW weighted substring
-    * counts append with epochs — integer sums, merge-safe precisely
-    * because pruning lives at SERVE time
-    * ([[graft.ops.Unigram.segmentCountsWithPieces]] prunes the MERGED
-    * counts; pruning per batch would lose sub-minCount mass that later
-    * batches complete). Tokenize any corpus against the vocabulary-so-far
-    * without re-reading corpus text.
+    * counts `(piece, cnt)` — integer sums, merge-safe precisely because
+    * pruning lives at SERVE time ([[graft.ops.Unigram.segmentCountsWithPieces]]
+    * prunes the MERGED counts; pruning per batch would lose sub-minCount
+    * mass that later batches complete). Dedup key: (piece, epoch).
     */
   def maintainUnigramPieces(
       docs: DataFrame,
       textCol: String,
       maxPieceLen: Int,
       incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Unigram.pieceCounts(batch, textCol, maxPieceLen)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(docs, incrementPath, checkpointDir)(
+      graft.ops.Unigram.pieceCounts(_, textCol, maxPieceLen))
 
   /** The corpus-so-far raw piece counts implied by
-    * [[maintainUnigramPieces]]'s increments: replay-deduped per
-    * (piece, epoch), then summed — feed straight to
+    * [[maintainUnigramPieces]]'s increments — feed straight to
     * [[graft.ops.Unigram.segmentCountsWithPieces]].
     */
-  def unigramPiecesFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame =
-    spark.read.parquet(incrementPath)
-      .dropDuplicates(Seq("piece", "inc_batch_id"))
-      .groupBy("piece").agg(sum(col("cnt")).as("cnt"))
+  def unigramPiecesFromIncrements(spark: SparkSession, incrementPath: String): DataFrame =
+    sumMerged(spark, incrementPath, Seq("piece"), "cnt")
 
   /** Maintain the bigram-LM state from a DOCUMENT stream — the model
     * behind the perplexity gate ([[graft.ops.NgramLm.perplexityScore]])
     * and Moore–Lewis selection ([[graft.ops.NgramLm.contrastScores]]):
-    * per micro-batch, `(w1, w2, c2)` bigram counts append with epochs.
-    * Bigram counts are integer sums, so the corpus-so-far model is one
-    * replay-deduped group-sum away, and a NEW batch scores against the
-    * model-so-far WITHOUT re-reading corpus text — the CCNet deployment
-    * shape (train once on the reference corpus, gate every later crawl).
+    * per micro-batch, `(w1, w2, c2)` bigram counts, integer sums, so a NEW
+    * batch scores against the model-so-far WITHOUT re-reading corpus text
+    * — the CCNet deployment shape (train once on the reference corpus,
+    * gate every later crawl). Dedup key: ((w1, w2), epoch).
     */
   def maintainBigramLm(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.NgramLm.bigramCounts(batch, idCol, textCol)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(docs, incrementPath, checkpointDir)(
+      graft.ops.NgramLm.bigramCounts(_, idCol, textCol))
 
   /** The corpus-so-far `(bigrams, contexts)` model implied by
-    * [[maintainBigramLm]]'s increments — replay-deduped per
-    * ((w1, w2), epoch), summed, then EXACTLY [[graft.ops.NgramLm.train]]'s
-    * derivation: context totals from the FULL summed table (pruning the
-    * head never changes a denominator), both pruned to `minCount`. Feed
-    * straight to [[graft.ops.NgramLm.scoreDocs]].
+    * [[maintainBigramLm]]'s increments — summed, then EXACTLY
+    * [[graft.ops.NgramLm.train]]'s derivation: context totals from the FULL
+    * summed table (pruning the head never changes a denominator), both
+    * pruned to `minCount`. Feed straight to [[graft.ops.NgramLm.scoreDocs]].
     */
   def bigramLmFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       incrementPath: String,
       minCount: Int = 2): (DataFrame, DataFrame) = {
-    val c2 = spark.read.parquet(incrementPath)
-      .dropDuplicates(Seq("w1", "w2", "inc_batch_id"))
-      .groupBy("w1", "w2").agg(sum(col("c2")).as("c2"))
+    val c2 = sumMerged(spark, incrementPath, Seq("w1", "w2"), "c2")
     val contexts = c2.groupBy(col("w1"))
       .agg(sum(col("c2")).as("c1"))
       .where(col("c1") >= minCount)
     (c2.where(col("c2") >= minCount), contexts)
   }
 
-  /** Compact a bigram-count increment table to one row per bigram via the
-    * staged swap ([[compactGramDfIncrements]]'s contract: sentinel epoch
-    * keeps replay dedup armed; bigram cardinality grows with the corpus,
-    * so cadence matters like the gram-df case).
+  /** Compact a bigram-count increment table to one row per bigram (bigram
+    * cardinality grows with the corpus, so cadence matters like the gram-df
+    * case).
     */
-  def compactBigramLmIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit =
-    swapIn(spark.read.parquet(incrementPath)
-      .dropDuplicates(Seq("w1", "w2", "inc_batch_id"))
-      .groupBy("w1", "w2").agg(sum(col("c2")).as("c2"))
-      .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1), incrementPath)
+  def compactBigramLmIncrements(spark: SparkSession, incrementPath: String): Unit =
+    compactTo(sumMerged(spark, incrementPath, Seq("w1", "w2"), "c2"), incrementPath)
 
   /** Maintain the ExactSubstr gram-count state from a document stream:
     * per micro-batch, the sliding `minLen`-gram occurrence counts
-    * ([[graft.ops.Dedup.slidingGramPostings]]) append at rest as
-    * `(g, n, inc_batch_id)` — occurrence counts are sum-mergeable, so the
-    * corpus-so-far state is a group-sum away and an arriving batch
-    * deduplicates against it WITHOUT re-reading any corpus text
-    * ([[graft.ops.Dedup.duplicateSpanRemovalAgainst]]). Same replay
-    * contract as [[maintainGramDf]] (per-(gram, epoch) dedup), same
-    * compaction ([[compactSpanGramIncrements]]).
+    * ([[graft.ops.Dedup.slidingGramPostings]]) as `(g, n)` — occurrence
+    * counts are sum-mergeable, so an arriving batch deduplicates against
+    * the corpus-so-far state WITHOUT re-reading any corpus text
+    * ([[graft.ops.Dedup.duplicateSpanRemovalAgainst]]). Dedup key:
+    * (gram, epoch).
     */
   def maintainSpanGramCounts(
       docs: DataFrame,
@@ -779,50 +696,31 @@ object EventStreams {
       textCol: String,
       minLen: Int,
       incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.slidingGramPostings(batch, idCol, textCol, minLen)
-          .groupBy(col("_g").as("g")).agg(count(lit(1)).as("n"))
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(docs, incrementPath, checkpointDir)(
+      graft.ops.Dedup.slidingGramPostings(_, idCol, textCol, minLen)
+        .groupBy(col("_g").as("g")).agg(count(lit(1)).as("n")))
 
   /** The corpus-so-far gram counts implied by [[maintainSpanGramCounts]]'s
-    * increments: replay-deduped per (gram, epoch), sum-merged — the
-    * `(g, n)` shape [[graft.ops.Dedup.duplicateSpanRemovalAgainst]]
-    * consumes.
+    * increments — the `(g, n)` shape
+    * [[graft.ops.Dedup.duplicateSpanRemovalAgainst]] consumes.
     */
-  def spanGramCountsFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame =
-    spark.read.parquet(incrementPath)
-      .dropDuplicates(Seq("g", "inc_batch_id"))
-      .groupBy("g").agg(sum(col("n")).as("n"))
+  def spanGramCountsFromIncrements(spark: SparkSession, incrementPath: String): DataFrame =
+    sumMerged(spark, incrementPath, Seq("g"), "n")
 
-  /** Compact a span-gram increment table to one row per gram — the
-    * [[compactGramDfIncrements]] staged swap on the `(g, n)` schema.
-    */
-  def compactSpanGramIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit =
-    swapIn(spanGramCountsFromIncrements(spark, incrementPath)
-      .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1), incrementPath)
+  /** Compact a span-gram increment table to one row per gram. */
+  def compactSpanGramIncrements(spark: SparkSession, incrementPath: String): Unit =
+    compactTo(spanGramCountsFromIncrements(spark, incrementPath), incrementPath)
 
   /** Maintain the DSIR importance model from a document stream: per
     * micro-batch, [[graft.ops.Sampling.importanceModel]]'s `(b, cr, ct)`
-    * bucket counts append at rest stamped with the epoch — the model is
-    * bucket-wise sum-mergeable (its defining property), so the corpus-
-    * so-far model is a group-sum away at serve time and incoming documents
-    * score against it without re-reading any corpus text
+    * bucket counts — the model is bucket-wise sum-mergeable (its defining
+    * property), so incoming documents score against the corpus-so-far model
+    * without re-reading any corpus text
     * ([[graft.ops.Sampling.importanceScoresAgainst]]). Increment volume is
     * ≤ `numBuckets` rows per batch — FIXED-width by construction, the
-    * smallest maintenance payload of any streamed artifact here. Same
-    * replay contract as [[maintainGramDf]]: per-batch epochs dedup retried
-    * appends (the increment rows are a pure function of the batch).
+    * smallest maintenance payload of any streamed artifact here. Dedup
+    * key: (bucket, epoch).
     */
   def maintainImportanceModel(
       docs: DataFrame,
@@ -830,81 +728,52 @@ object EventStreams {
       targetCond: Column,
       incrementPath: String,
       checkpointDir: String,
-      numBuckets: Int = 1024): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Sampling.importanceModel(batch, textCol, targetCond, numBuckets)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+      numBuckets: Int = 1024): StreamingQuery =
+    appendEpochs(docs, incrementPath, checkpointDir)(
+      graft.ops.Sampling.importanceModel(_, textCol, targetCond, numBuckets))
 
   /** The corpus-so-far DSIR model implied by [[maintainImportanceModel]]'s
-    * increments: replay-deduped per (bucket, epoch), then bucket-summed —
-    * `(b, cr, ct)`, [[graft.ops.Sampling.importanceWeights]]'s input.
+    * increments: `(b, cr, ct)`, [[graft.ops.Sampling.importanceWeights]]'s
+    * input.
     */
-  def importanceModelFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame =
-    spark.read.parquet(incrementPath)
-      .dropDuplicates(Seq("b", "inc_batch_id"))
-      .groupBy("b")
-      .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
+  def importanceModelFromIncrements(spark: SparkSession, incrementPath: String): DataFrame =
+    sumMerged(spark, incrementPath, Seq("b"), "cr", "ct")
 
-  /** Compact an importance-model increment table to one row per bucket via
-    * the same staged swap as [[compactGramDfIncrements]]; bounded at
-    * `numBuckets` rows, sentinel epoch keeps replay dedup armed.
+  /** Compact an importance-model increment table to one row per bucket
+    * (bounded at `numBuckets` rows).
     */
-  def compactImportanceModelIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit =
-    swapIn(importanceModelFromIncrements(spark, incrementPath)
-      .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1), incrementPath)
+  def compactImportanceModelIncrements(spark: SparkSession, incrementPath: String): Unit =
+    compactTo(importanceModelFromIncrements(spark, incrementPath), incrementPath)
 
   /** Maintain drift-detection histograms from a document stream: per
-    * micro-batch, each named bucketing's counts append at rest stamped
-    * with the epoch — histogram counts are sum-mergeable (the defining
-    * property every increment table here shares), so the corpus-so-far
-    * histogram is a group-sum away and [[graft.ops.Drift]]'s comparisons
-    * run against a FROZEN reference snapshot without re-reading any
-    * corpus text. Increment volume per batch is Σ bucket cardinalities —
-    * a schema property, not a data-volume one. Same replay contract as
-    * [[maintainGramDf]] (per-(feature, bucket, epoch) dedup).
+    * micro-batch, each named bucketing's counts `(feature, bucket, n)` —
+    * histogram counts are sum-mergeable, so [[graft.ops.Drift]]'s
+    * comparisons run against a FROZEN reference snapshot without re-reading
+    * any corpus text. Increment volume per batch is Σ bucket cardinalities
+    * — a schema property, not a data-volume one. Dedup key: (feature,
+    * bucket, epoch).
     */
   def maintainDriftHistograms(
       docs: DataFrame,
       features: Seq[(String, Column)],
       incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     require(features.nonEmpty, "maintainDriftHistograms: at least one feature")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        features.map { case (name, bucket) =>
-          batch.groupBy(bucket.cast("string").as("bucket"))
-            .agg(count(lit(1)).as("n"))
-            .select(lit(name).as("feature"), col("bucket"), col("n"))
-        }.reduce(_.unionByName(_))
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
+    appendEpochs(docs, incrementPath, checkpointDir) { batch =>
+      features.map { case (name, bucket) =>
+        batch.groupBy(bucket.cast("string").as("bucket"))
+          .agg(count(lit(1)).as("n"))
+          .select(lit(name).as("feature"), col("bucket"), col("n"))
+      }.reduce(_.unionByName(_))
+    }
   }
 
   /** The corpus-so-far histograms implied by [[maintainDriftHistograms]]'
-    * increments: replay-deduped per (feature, bucket, epoch), then
-    * sum-merged — `(feature, bucket, n)`. Feed two of these (or one
-    * against a frozen reference) to [[driftFromHistograms]].
+    * increments: `(feature, bucket, n)`. Feed two of these (or one against
+    * a frozen reference) to [[driftFromHistograms]].
     */
-  def driftHistogramsFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame =
-    spark.read.parquet(incrementPath)
-      .dropDuplicates(Seq("feature", "bucket", "inc_batch_id"))
-      .groupBy("feature", "bucket")
-      .agg(sum(col("n")).as("n"))
+  def driftHistogramsFromIncrements(spark: SparkSession, incrementPath: String): DataFrame =
+    sumMerged(spark, incrementPath, Seq("feature", "bucket"), "n")
 
   /** [[graft.ops.Drift.driftReport]] computed from two HISTOGRAM frames
     * (`(feature, bucket, n)`) instead of two corpora — the serve-time
@@ -938,14 +807,12 @@ object EventStreams {
     * micro-batch, [[graft.ops.Similarity.assignCells]] assigns incoming
     * vectors to the FROZEN centroid table (row-local, centroids are plan
     * literals — no shuffle beyond the cell-partitioned write) and appends
-    * `(vec_id, vec, cell, inc_batch_id)` partitioned by cell — index
-    * freshness is an append, serving prunes to probed cells, and the
-    * same replay contract as every increment table here applies (epoch
-    * stamps dedup retried appends). Centroid drift under a shifting
-    * distribution is the documented FAISS add-after-train trade; retrain
-    * + reassign on a cadence (a rebuild of the partitioned table, not of
-    * the serving code — [[graft.ops.Similarity.ivfTopKFromIndex]] reads
-    * whatever index is current).
+    * `(vec_id, vec, cell)` partitioned by cell — index freshness is an
+    * append, serving prunes to probed cells. Centroid drift under a
+    * shifting distribution is the documented FAISS add-after-train trade;
+    * retrain + reassign on a cadence (a rebuild of the partitioned table,
+    * not of the serving code — [[graft.ops.Similarity.ivfTopKFromIndex]]
+    * reads whatever index is current).
     */
   def maintainIvfIndex(
       vecs: DataFrame,
@@ -953,15 +820,9 @@ object EventStreams {
       vecCol: String,
       centroids: Seq[Array[Double]],
       indexPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Similarity.assignCells(batch, idCol, vecCol, centroids)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").partitionBy("cell").parquet(indexPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(vecs, indexPath, checkpointDir, "cell")(
+      graft.ops.Similarity.assignCells(_, idCol, vecCol, centroids))
 
   /** The servable index implied by [[maintainIvfIndex]]'s appends: the
     * LATEST epoch wins per vec_id. This subsumes replay dedup (a retried
@@ -972,48 +833,31 @@ object EventStreams {
     * persisting and a stale duplicate occupying a top-k slot in
     * [[graft.ops.Similarity.ivfTopKFromIndex]].
     */
-  def ivfIndexFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): DataFrame = {
+  def ivfIndexFromIncrements(spark: SparkSession, indexPath: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(desc("inc_batch_id"))
+      .partitionBy("vec_id").orderBy(desc(EpochCol))
     spark.read.parquet(indexPath)
       .withColumn("_r", row_number().over(w))
       .where(col("_r") === 1)
       .select("vec_id", "vec", "cell")
   }
 
-  /** Compact an IVF-index increment table to its SERVED rows — the
-    * latest epoch per vec_id ([[ivfIndexFromIncrements]]), stamped with
-    * the sentinel epoch and swapped in via the staged-promote contract
-    * ([[compactGramDfIncrements]]). Unlike the sum-merge compactions this
-    * one materializes a LATEST-WINS view: update churn (a vector
-    * re-emitted across epochs) leaves exactly one row, and the per-vec
-    * window [[ivfIndexFromIncrements]] pays on every serve-view rebuild
-    * shrinks back to one epoch's worth of rows. Post-compaction appends
-    * keep the update semantic — any real batch epoch (≥ 0) outranks the
-    * sentinel, so a re-emitted vector still wins over its compacted row.
-    *
-    * The index is corpus-sized (one row per vector), so the compacted
-    * write repartitions ON the partition key — one task per cell, one
-    * file per directory — instead of the `coalesce(1)` the
-    * vocabulary-sized increment tables use; a single writer task funneling
-    * the whole index is exactly the driver-shaped bottleneck the
-    * cell-partitioned layout exists to avoid.
+  /** Compact an IVF-index increment table to its SERVED rows, the latest
+    * epoch per vec_id ([[ivfIndexFromIncrements]]). Unlike the sum-merge
+    * compactions this one materializes a LATEST-WINS view: update churn (a
+    * vector re-emitted across epochs) leaves exactly one row, and the
+    * per-vec window [[ivfIndexFromIncrements]] pays on every serve-view
+    * rebuild shrinks back to one epoch's worth of rows. A vector re-emitted
+    * after compaction still wins over its compacted row.
     */
-  def compactIvfIndexIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Unit =
-    swapIn(ivfIndexFromIncrements(spark, indexPath)
-      .withColumn("inc_batch_id", lit(-1L))
-      .repartition(col("cell")), indexPath, "cell")
+  def compactIvfIndexIncrements(spark: SparkSession, indexPath: String): Unit =
+    compactTo(ivfIndexFromIncrements(spark, indexPath), indexPath, "cell")
 
   /** Streamed maintenance of the at-rest SPARSE POSTINGS index (the
     * `sparse_vector` serving table, [[graft.query.SparseVector]]): each
-    * arriving document batch appends its term-bucket-partitioned tf
-    * postings stamped with the epoch — index freshness is an APPEND,
-    * exactly the [[maintainIvfIndex]] contract with `term_bucket` as
-    * the partition key instead of `cell`.
+    * arriving document batch appends its tf postings partitioned by
+    * `term_bucket` — index freshness is an APPEND, the [[maintainIvfIndex]]
+    * shape with `term_bucket` as the partition key instead of `cell`.
     */
   def maintainPostings(
       docs: DataFrame,
@@ -1021,15 +865,9 @@ object EventStreams {
       textCol: String,
       numBuckets: Int,
       postingsPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.query.SparseVector.tfPostingsBucketed(batch, idCol, textCol, numBuckets)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").partitionBy("term_bucket").parquet(postingsPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(docs, postingsPath, checkpointDir, "term_bucket")(
+      graft.query.SparseVector.tfPostingsBucketed(_, idCol, textCol, numBuckets))
 
   /** The servable postings implied by [[maintainPostings]]' appends:
     * per DOCUMENT, only its latest epoch's rows survive — which both
@@ -1042,7 +880,7 @@ object EventStreams {
     * not a value updated per key, so the epoch cut must be per doc).
     */
   def postingsFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       idCol: String,
       postingsPath: String): DataFrame = {
     val perDoc = org.apache.spark.sql.expressions.Window
@@ -1053,8 +891,8 @@ object EventStreams {
     val keep = Seq(idCol, "term", "weight", "term_bucket") ++
       (if (raw.columns.contains("num_buckets")) Seq("num_buckets") else Nil)
     raw
-      .withColumn("_maxe", max(col("inc_batch_id")).over(perDoc))
-      .where(col("inc_batch_id") === col("_maxe"))
+      .withColumn("_maxe", max(col(EpochCol)).over(perDoc))
+      .where(col(EpochCol) === col("_maxe"))
       .dropDuplicates(idCol, "term")
       .select(keep.map(c => col(s"`$c`")): _*)
   }
@@ -1062,30 +900,24 @@ object EventStreams {
   /** Compact a sparse-postings increment table to its SERVED rows — the
     * per-DOC latest-epoch cut of [[postingsFromIncrements]] (a compacted
     * re-emitted doc keeps only its FINAL term set; the per-key rule the
-    * IVF compaction uses would resurrect dropped terms), stamped with the
-    * sentinel epoch and swapped in via the staged-promote contract. This
-    * bounds the table at one row per live (doc, term) no matter how many
-    * epochs have run, and the full-history per-doc window the serve view
-    * pays per rebuild shrinks to the live rows. Post-compaction appends
-    * keep the update semantic: a real epoch (≥ 0) outranks the sentinel,
-    * so a doc re-emitted after compaction replaces its compacted term set
-    * whole. Corpus-sized table → repartition on the partition key
-    * (one task per bucket; see [[compactIvfIndexIncrements]]).
+    * IVF compaction uses would resurrect dropped terms). This bounds the
+    * table at one row per live (doc, term) no matter how many epochs have
+    * run, and the full-history per-doc window the serve view pays per
+    * rebuild shrinks to the live rows. A doc re-emitted after compaction
+    * replaces its compacted term set whole.
     */
   def compactPostingsIncrements(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       idCol: String,
       postingsPath: String): Unit =
-    swapIn(postingsFromIncrements(spark, idCol, postingsPath)
-      .withColumn("inc_batch_id", lit(-1L))
-      .repartition(col("term_bucket")), postingsPath, "term_bucket")
+    compactTo(postingsFromIncrements(spark, idCol, postingsPath), postingsPath, "term_bucket")
 
   /** Streamed maintenance of the SQ8 quantization bounds: each arriving
     * micro-batch appends its per-dimension `(dim, mn, mx)` increment
     * ([[graft.ops.Similarity.sqBoundsFrame]]). min/max are idempotent and
     * commutative, so this is the SIMPLEST possible maintained index —
-    * at-least-once replays and batch boundaries vanish by algebra, no
-    * dedup or epoch bookkeeping (the bounds can only WIDEN as data
+    * at-least-once replays and batch boundaries vanish by algebra, and the
+    * reader needs no epoch dedup (the bounds can only WIDEN as data
     * arrives, FAISS's add-after-train contract in its mildest form;
     * retrain on a cadence if the distribution tightens).
     */
@@ -1094,15 +926,9 @@ object EventStreams {
       vecCol: String,
       dim: Int,
       boundsPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Similarity.sqBoundsFrame(batch, vecCol, dim)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(boundsPath)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    appendEpochs(vecs, boundsPath, checkpointDir)(
+      graft.ops.Similarity.sqBoundsFrame(_, vecCol, dim))
 
   /** The servable bounds implied by [[maintainSqBounds]]'s appends: one
     * `groupBy(dim).agg(min, max)` over the increment table — equal to the
@@ -1110,7 +936,7 @@ object EventStreams {
     * corpus (the `ann_sq8_incremental` oracle equivalence).
     */
   def sqBoundsFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       boundsPath: String): (Array[Double], Array[Double]) = {
     val rows = spark.read.parquet(boundsPath)
       .groupBy("dim").agg(min("mn").as("mn"), max("mx").as("mx"))
@@ -1128,94 +954,13 @@ object EventStreams {
     (mn, mx)
   }
 
-  /** Compact a rollup-increment table to one row per dimension combination
-    * via the same staged swap as [[compactIncrements]] (pause the writer or
-    * call from its own cadence). The compacted row wears the sentinel epoch
-    * so the table stays single-schema and replay dedup stays armed.
+  /** Compact a dictionary increment table ([[maintainDictionary]]): merge
+    * the accumulated per-batch rows into ONE increment per column, bounding
+    * the table at columns × 1 rows no matter how many batches have run.
     */
-  def compactRollupIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit =
-    swapIn(rollupFromIncrements(spark, incrementPath)
-      .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1), incrementPath)
-
-  /** [[maintainRollup]] for a rollup carrying HLL sketch measures
-    * ([[graft.query.PreAgg.incrementWithSketches]] — the Unique Count
-    * serving path for fields too high-cardinality to be dimensions): each
-    * batch appends its own sketched rollup under an epoch stamp. The
-    * replay contract is unchanged — a foreachBatch retry re-appends a
-    * whole epoch, a combo appears at most once per epoch, and the
-    * recomputed sketch bytes are identical (the register state is a pure
-    * function of the batch's value multiset) — so per-(combo, epoch) dedup
-    * drops exactly the replays.
-    */
-  def maintainSketchedRollup(
-      events: DataFrame,
-      dims: Seq[(String, Column)],
-      sketches: Seq[(String, Column)],
-      incrementPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.query.PreAgg.incrementWithSketches(batch, dims, sketches)
-          .withColumn("inc_batch_id", lit(batchId))
-          .write.mode("append").parquet(incrementPath)
-      }
-      .start()
-
-  /** The current sketched serving rollup implied by
-    * [[maintainSketchedRollup]]'s increments: replay-dedup per (dimension
-    * combo, epoch), then [[graft.query.PreAgg.mergeSketched]] (group-sum
-    * counts, register-max union sketches). Feeds
-    * [[graft.query.PreAgg.termsUniqueCountSketch]] unchanged.
-    */
-  def sketchedRollupFromIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): DataFrame = {
-    val inc = spark.read.parquet(incrementPath)
-    val dims = inc.columns.filter(c =>
-      c != graft.query.PreAgg.CntCol && c != "inc_batch_id" &&
-        !c.endsWith(graft.query.PreAgg.SketchSuffix))
-    graft.query.PreAgg.mergeSketched(
-      inc.dropDuplicates(dims :+ "inc_batch_id").drop("inc_batch_id"))
-  }
-
-  /** Compact a sketched-rollup increment table to one row per dimension
-    * combo (counts summed, sketches unioned) via the same staged swap and
-    * sentinel epoch as [[compactRollupIncrements]].
-    */
-  def compactSketchedRollupIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit =
-    swapIn(sketchedRollupFromIncrements(spark, incrementPath)
-      .withColumn("inc_batch_id", lit(-1L))
-      .coalesce(1), incrementPath)
-
-  /** Compact an increment table: merge the accumulated per-batch rows into
-    * ONE increment per column and swap it in, bounding the table at columns
-    * × 1 rows no matter how many batches have run. Safe at any time —
-    * merging is associative and commutative, so compaction commutes with
-    * concurrent appends only if the writer is paused; call it from the
-    * maintenance cadence that owns the table (the streaming query's own
-    * `foreachBatch` epoch, a nightly job). The swap is write-new → move-old
-    * → promote — the same recover-by-re-merge posture as the appends (on a
-    * real deployment this seam is a transactional table format's atomic
-    * commit).
-    */
-  def compactIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      incrementPath: String): Unit =
-    swapIn(graft.dict.Dictionary
-      .mergeIncrements(dedupedIncrements(spark.read.parquet(incrementPath)))
-      // Keep the table single-schema: later streaming appends carry
-      // inc_batch_id, and a parquet directory mixing stamped and unstamped
-      // files can resolve to either schema at read time — if the unstamped
-      // footer wins, the replay dedup silently disables. The compacted row
-      // wears a sentinel epoch instead.
-      .withColumn("inc_batch_id", org.apache.spark.sql.functions.lit(-1L))
-      .coalesce(1), incrementPath)
+  def compactIncrements(spark: SparkSession, incrementPath: String): Unit =
+    compactTo(graft.dict.Dictionary
+      .mergeIncrements(dedupedIncrements(spark.read.parquet(incrementPath))), incrementPath)
 
   /** Batch sessionization — the backfill twin of [[sessionize]]: a gap of
     * more than `gapMs` between consecutive events of a user starts a new

@@ -947,30 +947,30 @@ class AggsSpec extends SparkSpecBase {
       (5L, Seq("c", "d")),
       (6L, Seq("d")),
     ).toDF("id", "items")
-    val got = Aggs.frequentItemSets(tx, col("id"), col("items"),
+    val got = Aggs.frequentItemSets(tx, col("items"),
         minSupport = 0.3, minSetSize = 1, size = 10)
       .as[(String, Long, Double)].collect().toSeq
     assert(got === Seq(
       ("c", 5L, 5.0 / 6), ("a,c", 4L, 4.0 / 6),
       ("a,b,c", 3L, 3.0 / 6), ("d", 2L, 2.0 / 6)))
     // minimum_set_size drops the singleton; size truncates after ordering
-    assert(Aggs.frequentItemSets(tx, col("id"), col("items"),
+    assert(Aggs.frequentItemSets(tx, col("items"),
         minSupport = 0.3, minSetSize = 2, size = 2)
       .as[(String, Long, Double)].collect().toSeq
       === Seq(("a,c", 4L, 4.0 / 6), ("a,b,c", 3L, 3.0 / 6)))
     // a level still growing at maxSetSize raises instead of truncating
     // (closed-filter completeness), naming the cap
     val e = intercept[IllegalArgumentException](
-      Aggs.frequentItemSets(tx, col("id"), col("items"),
+      Aggs.frequentItemSets(tx, col("items"),
         minSupport = 0.3, maxSetSize = 2))
     assert(e.getMessage.contains("maxSetSize=2"))
     // parameter rejects
     intercept[IllegalArgumentException](
-      Aggs.frequentItemSets(tx, col("id"), col("items"), minSupport = 0.0))
+      Aggs.frequentItemSets(tx, col("items"), minSupport = 0.0))
     intercept[IllegalArgumentException](
-      Aggs.frequentItemSets(tx, col("id"), col("items"), minSupport = 1.5))
+      Aggs.frequentItemSets(tx, col("items"), minSupport = 1.5))
     intercept[IllegalArgumentException](
-      Aggs.frequentItemSets(tx, col("id"), col("items"), minSetSize = 0))
+      Aggs.frequentItemSets(tx, col("items"), minSetSize = 0))
   }
 
   test("frequentItemSets: local mining ≡ distributed counting (r19 basket compression)") {
@@ -990,10 +990,10 @@ class AggsSpec extends SparkSpecBase {
       (7L, null.asInstanceOf[Seq[String]]), // null basket
       (8L, Seq("a", "c", "d")),
     ).toDF("id", "items")
-    val local = Aggs.frequentItemSets(tx, col("id"), col("items"),
+    val local = Aggs.frequentItemSets(tx, col("items"),
         minSupport = 0.25, minSetSize = 1, size = 20)
       .as[(String, Long, Double)].collect().toSeq
-    val dist = Aggs.frequentItemSets(tx, col("id"), col("items"),
+    val dist = Aggs.frequentItemSets(tx, col("items"),
         minSupport = 0.25, minSetSize = 1, size = 20,
         localMiningMaxBaskets = 0) // force the distributed backend
       .as[(String, Long, Double)].collect().toSeq
@@ -1005,10 +1005,10 @@ class AggsSpec extends SparkSpecBase {
     assert(local.contains(("c", 6L, 6.0 / 8)))
     // the probe boundary itself: a bound of exactly |distinct baskets|
     // stays local, one below falls back — both identical
-    val boundary = Aggs.frequentItemSets(tx, col("id"), col("items"),
+    val boundary = Aggs.frequentItemSets(tx, col("items"),
         minSupport = 0.25, size = 20, localMiningMaxBaskets = 6)
       .as[(String, Long, Double)].collect().toSeq
-    val fallback = Aggs.frequentItemSets(tx, col("id"), col("items"),
+    val fallback = Aggs.frequentItemSets(tx, col("items"),
         minSupport = 0.25, size = 20, localMiningMaxBaskets = 5)
       .as[(String, Long, Double)].collect().toSeq
     assert(boundary === local && fallback === local)

@@ -214,8 +214,8 @@ class PreAggSpec extends SparkSpecBase {
     def canon(df: org.apache.spark.sql.DataFrame) =
       PreAgg.termsPercentilesSketch(df, "city", "year", ps, 3)
         .collect().map(_.toString).toSeq
-    assert(canon(PreAgg.mergeQuantileSketched(day1, day2)) === canon(pre))
-    assert(canon(PreAgg.mergeQuantileSketched(day2, day1)) === canon(pre))
+    assert(canon(PreAgg.merge(day1, day2)) === canon(pre))
+    assert(canon(PreAgg.merge(day2, day1)) === canon(pre))
     // loud failure when the rollup carries no sketch for the metric
     assert(intercept[IllegalArgumentException] {
       PreAgg.termsPercentilesSketch(PreAgg.increment(corpus, dims),
@@ -368,7 +368,7 @@ class PreAggSpec extends SparkSpecBase {
         mins = Seq("lat_min" -> col("lat"), "lon_min" -> col("lon")),
         maxs = Seq("lat_max" -> col("lat"), "lon_max" -> col("lon"),
           "top_max" -> struct(col("s").as("s"), col("id").as("t"), col("lat").as("m"))))
-    val merged = PreAgg.mergeExtremes(
+    val merged = PreAgg.merge(
       inc(pts.where(col("id") % 2 === 0)), inc(pts.where(col("id") % 2 === 1)))
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
     // split-merge ≡ whole-corpus increment
@@ -382,7 +382,7 @@ class PreAggSpec extends SparkSpecBase {
       === canon(Aggs.termsTopMetrics(pts, "k", col("s"), col("id"), col("lat"))))
     // replaying an increment epoch cannot inflate idempotent extremes,
     // and the count guard below is why cnt-bearing rollups still dedup
-    val replayed = PreAgg.mergeExtremes(inc(pts), inc(pts))
+    val replayed = PreAgg.merge(inc(pts), inc(pts))
     assert(canon(PreAgg.geoBounds(replayed, "k").drop("count"))
       === canon(PreAgg.geoBounds(merged, "k").drop("count")))
     intercept[IllegalArgumentException] {
@@ -417,8 +417,8 @@ class PreAggSpec extends SparkSpecBase {
         .collect().map(_.toString).toSeq
     // merged increments serve identically to the whole-corpus rollup,
     // in any batch order
-    assert(serve(PreAgg.mergeSketched(day1, day2, day3)) === serve(whole))
-    assert(serve(PreAgg.mergeSketched(day3, day1, day2)) === serve(whole))
+    assert(serve(PreAgg.merge(day1, day2, day3)) === serve(whole))
+    assert(serve(PreAgg.merge(day3, day1, day2)) === serve(whole))
     // at this cardinality the sketch is in exact (list) mode: estimates
     // equal the exact distinct counts
     val exact = Aggs.termsWithMetrics(corpus, "city",
@@ -457,7 +457,7 @@ class PreAggSpec extends SparkSpecBase {
           "slat_sum" -> floor(col("lat") * 1000000).cast("long"),
           "slon_sum" -> floor(col("lon") * 1000000).cast("long")))
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
-    val merged = PreAgg.mergeSums(
+    val merged = PreAgg.merge(
       inc(rows.where(col("w") % 2 === 0)), inc(rows.where(col("w") % 2 === 1)))
     assert(canon(merged.orderBy("k")) === canon(inc(rows).orderBy("k")))
     // served statistics equal the scan twins bit-for-bit
@@ -539,7 +539,7 @@ class PreAggSpec extends SparkSpecBase {
     val b2 = ev.where(col("t") < ts("2024-01-02 00:00:00"))
     val served = PreAgg.cumulativeCardinality(
       PreAgg.dateHistogram(PreAgg.merge(datePre(b1), datePre(b2)), "h", "hour", "day"),
-      PreAgg.mergeExtremes(seenPre(b1), seenPre(b2)), "fb_min")
+      PreAgg.merge(seenPre(b1), seenPre(b2)), "fb_min")
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
     assert(canon(served) === canon(Aggs.cumulativeCardinality(ev, "t", "user")))
   }
@@ -573,5 +573,49 @@ class PreAggSpec extends SparkSpecBase {
     val e = intercept[IllegalArgumentException](
       PreAgg.variableWidthHistogram(merged, "value", 50L))
     assert(e.getMessage.contains("not a rollup dimension"))
+  }
+
+  test("merge folds each measure by its suffix and is order-free across flavours") {
+    // one rollup carrying every measure kind beside the dims
+    val events = Seq(
+      ("balt", 1L, 2.5), ("balt", 2L, 4.0), ("balt", 1L, 1.5),
+      ("det", 3L, 7.0), ("det", 3L, 2.0), ("det", 4L, 9.5),
+      ("balt", 5L, 3.0), ("det", 6L, 0.5)).toDF("city", "user", "v")
+    def inc(df: org.apache.spark.sql.DataFrame) = df.groupBy(col("city"))
+      .agg(count(lit(1)).as(PreAgg.CntCol),
+        sum(floor(col("v") * 100).cast("long")).as("v_sum"),
+        min(col("v")).as("v_min"), max(col("v")).as("v_max"),
+        hll_sketch_agg(col("user")).as("user" + PreAgg.SketchSuffix),
+        expr("kll_sketch_agg_double(v)").as("v" + PreAgg.QuantileSketchSuffix))
+    val b1 = inc(events.where(col("user") <= 2))
+    val b2 = inc(events.where(col("user") === 3))
+    val b3 = inc(events.where(col("user") >= 4))
+    // sketches compared through their estimates (exact at this size)
+    def served(pre: org.apache.spark.sql.DataFrame) = pre
+      .select(col("city"), col(PreAgg.CntCol), col("v_sum"), col("v_min"), col("v_max"),
+        hll_sketch_estimate(col("user_hll")).as("users"),
+        expr("kll_sketch_get_n_double(v_kll)").as("kll_n"),
+        expr("kll_sketch_get_quantile_double(v_kll, 0.5)").as("median"))
+      .orderBy("city").collect().map(_.toString).toSeq
+    val whole = served(inc(events))
+    assert(whole === Seq("[balt,4,1100,1.5,4.0,3,4,2.5]", "[det,4,1900,0.5,9.5,3,4,2.0]"))
+    assert(served(PreAgg.merge(b1, b2, b3)) === whole)
+    assert(served(PreAgg.merge(b3, PreAgg.merge(b2, b1))) === whole)
+    // measures keep their column order behind the dimensions
+    assert(PreAgg.merge(b1, b2).columns.toSeq === b1.columns.toSeq)
+  }
+
+  test("increment builders refuse a dimension named like a measure") {
+    val v = Seq[(String, org.apache.spark.sql.Column)]("year" -> col("year"))
+    def refused(build: Seq[(String, org.apache.spark.sql.Column)] => Any) =
+      Seq("cnt", "x_sum", "x_min", "x_max", "x_hll", "x_kll").foreach { n =>
+        val e = intercept[IllegalArgumentException](build(Seq(n -> col("city"))))
+        assert(e.getMessage.contains(s"'$n' is named like a measure"), n)
+      }
+    refused(PreAgg.increment(corpus, _))
+    refused(PreAgg.incrementWithSums(corpus, _, Seq("y_sum" -> col("year"))))
+    refused(PreAgg.incrementWithExtremes(corpus, _, Seq("y_min" -> col("year")), Nil))
+    refused(PreAgg.incrementWithSketches(corpus, _, v))
+    refused(PreAgg.incrementWithQuantileSketches(corpus, _, v))
   }
 }

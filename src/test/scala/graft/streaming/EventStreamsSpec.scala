@@ -173,7 +173,7 @@ class EventStreamsSpec extends SparkSpecBase {
     val dims = Seq("tx" -> tx, "ty" -> ty)
     val mem = MemoryStream[EventStreams.Event]
     val q = EventStreams.maintainRollup(
-      mem.toDS().toDF(), dims, incPath, dir.getAbsolutePath + "/ckpt")
+      mem.toDS().toDF(), graft.query.PreAgg.increment(_, dims), incPath, dir.getAbsolutePath + "/ckpt")
     val all = (1 to 12).map(i => ev(i, i * 3, i * 7, value = i * 1.37))
     try {
       mem.addData(all.take(6): _*)
@@ -201,7 +201,7 @@ class EventStreamsSpec extends SparkSpecBase {
     val dims = Seq("event_type" -> col("event_type"), "user_id" -> col("user_id"))
     val mem = MemoryStream[EventStreams.Event]
     val q = EventStreams.maintainRollup(
-      mem.toDS().toDF(), dims, incPath, dir.getAbsolutePath + "/ckpt")
+      mem.toDS().toDF(), graft.query.PreAgg.increment(_, dims), incPath, dir.getAbsolutePath + "/ckpt")
     val all = Seq(ev(1, 0, 1), ev(2, 5, 2), ev(3, 10, 1), ev(4, 20, 1))
     try {
       mem.addData(all(0), all(1))
@@ -300,8 +300,9 @@ class EventStreamsSpec extends SparkSpecBase {
     val all = Seq(e(1, 1, "a"), e(2, 2, "a"), e(3, 1, "a"), e(4, 1, "b"),
       e(5, 3, "a"), e(6, 2, "b"))
     val mem = MemoryStream[EventStreams.Event]
-    val q = EventStreams.maintainSketchedRollup(
-      mem.toDS().toDF(), dims, sketches, incPath, dir.getAbsolutePath + "/ckpt")
+    val q = EventStreams.maintainRollup(
+      mem.toDS().toDF(), graft.query.PreAgg.incrementWithSketches(_, dims, sketches),
+      incPath, dir.getAbsolutePath + "/ckpt")
     try {
       mem.addData(all(0), all(1), all(2))
       q.processAllAvailable()
@@ -312,7 +313,7 @@ class EventStreamsSpec extends SparkSpecBase {
     def serve(pre: org.apache.spark.sql.DataFrame) =
       graft.query.PreAgg.termsUniqueCountSketch(pre, "event_type", "user_id", 10)
         .as[(String, Long, Long)].collect().toSeq
-    val streamed = serve(EventStreams.sketchedRollupFromIncrements(spark, incPath))
+    val streamed = serve(EventStreams.rollupFromIncrements(spark, incPath))
     val whole = serve(graft.query.PreAgg.incrementWithSketches(
       all.toDS().toDF(), dims, sketches))
     assert(streamed === whole)
@@ -322,13 +323,13 @@ class EventStreamsSpec extends SparkSpecBase {
     // at-least-once replay: re-appending an epoch must not move estimates
     val replay = spark.read.parquet(incPath).where(org.apache.spark.sql.functions.col("inc_batch_id") === 0L)
     replay.write.mode("append").parquet(incPath)
-    assert(serve(EventStreams.sketchedRollupFromIncrements(spark, incPath)) === whole,
+    assert(serve(EventStreams.rollupFromIncrements(spark, incPath)) === whole,
       "a replayed batch moved a sketched estimate")
 
     // compaction bounds the table at |distinct combos| and preserves serving
-    EventStreams.compactSketchedRollupIncrements(spark, incPath)
+    EventStreams.compactRollupIncrements(spark, incPath)
     assert(spark.read.parquet(incPath).count() === 2L)
-    assert(serve(EventStreams.sketchedRollupFromIncrements(spark, incPath)) === whole)
+    assert(serve(EventStreams.rollupFromIncrements(spark, incPath)) === whole)
   }
 
   test("batch and streaming sessionization agree on closed sessions") {
@@ -376,12 +377,13 @@ class EventStreamsSpec extends SparkSpecBase {
     dir.deleteOnExit()
     val incPath = dir.getAbsolutePath + "/inc"
     val mem = MemoryStream[EventStreams.Event]
-    val q = EventStreams.maintainExtremesRollup(
+    val q = EventStreams.maintainRollup(
       mem.toDS().toDF().where(col("ts").isNotNull),
-      Seq("event_type" -> col("event_type")),
-      mins = Seq("value_min" -> col("value")),
-      maxs = Seq("top_max" -> struct(col("ts").as("s"),
-        col("event_id").as("t"), col("value").as("m"))),
+      graft.query.PreAgg.incrementWithExtremes(_,
+        Seq("event_type" -> col("event_type")),
+        mins = Seq("value_min" -> col("value")),
+        maxs = Seq("top_max" -> struct(col("ts").as("s"),
+          col("event_id").as("t"), col("value").as("m")))),
       incPath, dir.getAbsolutePath + "/ckpt")
     val all = Seq(ev(1, 0, 1, 2.0), ev(2, 5, 2, 9.0), ev(3, 10, 1, 4.0),
       ev(4, 20, 3, 1.0))
@@ -392,7 +394,7 @@ class EventStreamsSpec extends SparkSpecBase {
       q.processAllAvailable()
     } finally q.stop()
     val served = graft.query.PreAgg.termsTopMetrics(
-      EventStreams.extremesRollupFromIncrements(spark, incPath), "event_type")
+      EventStreams.rollupFromIncrements(spark, incPath), "event_type")
     val scan = graft.query.Aggs.termsTopMetrics(all.toDS().toDF(), "event_type",
       col("ts"), col("event_id"), col("value"))
     assert(served.collect().toSeq === scan.collect().toSeq)
@@ -401,7 +403,7 @@ class EventStreamsSpec extends SparkSpecBase {
       .where(org.apache.spark.sql.functions.col("inc_batch_id") === 0L)
     replay.write.mode("append").parquet(incPath)
     assert(graft.query.PreAgg.termsTopMetrics(
-        EventStreams.extremesRollupFromIncrements(spark, incPath), "event_type")
+        EventStreams.rollupFromIncrements(spark, incPath), "event_type")
       .collect().toSeq === scan.collect().toSeq)
   }
 
@@ -412,12 +414,13 @@ class EventStreamsSpec extends SparkSpecBase {
     dir.deleteOnExit()
     val incPath = dir.getAbsolutePath + "/inc"
     val mem = MemoryStream[EventStreams.Event]
-    val q = EventStreams.maintainSumRollup(
+    val q = EventStreams.maintainRollup(
       mem.toDS().toDF().where(col("value").isNotNull && col("user_id").isNotNull),
-      Seq("event_type" -> col("event_type")),
-      Seq("swv_sum" -> (floor(col("value") * 100).cast("long") *
-          col("user_id").cast("long")),
-        "w_sum" -> col("user_id")),
+      graft.query.PreAgg.incrementWithSums(_,
+        Seq("event_type" -> col("event_type")),
+        Seq("swv_sum" -> (floor(col("value") * 100).cast("long") *
+            col("user_id").cast("long")),
+          "w_sum" -> col("user_id"))),
       incPath, dir.getAbsolutePath + "/ckpt")
     val all = Seq(ev(1, 0, 2, 2.25), ev(2, 5, 3, 9.5), ev(3, 10, 1, 4.0),
       ev(4, 20, 4, 1.75))
@@ -430,7 +433,7 @@ class EventStreamsSpec extends SparkSpecBase {
     val scan = graft.query.Aggs.weightedAvg(all.toDS().toDF(),
       col("value"), col("user_id")).collect().toSeq
     def served() = graft.query.PreAgg.weightedAvg(
-      EventStreams.sumRollupFromIncrements(spark, incPath)).collect().toSeq
+      EventStreams.rollupFromIncrements(spark, incPath)).collect().toSeq
     assert(served() === scan)
     // replayed epoch: the per-(combo, epoch) dedup is load-bearing here —
     // a sum, unlike an extreme, would inflate if the replay survived
@@ -438,6 +441,57 @@ class EventStreamsSpec extends SparkSpecBase {
       .where(org.apache.spark.sql.functions.col("inc_batch_id") === 0L)
     replay.write.mode("append").parquet(incPath)
     assert(served() === scan)
+  }
+
+  test("extremes and sum rollups maintained through maintainRollup survive replay and compact") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.functions.{col, floor, lit, struct}
+    import graft.query.PreAgg
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_flavours").toFile
+    dir.deleteOnExit()
+    val dims = Seq[(String, org.apache.spark.sql.Column)]("event_type" -> col("event_type"))
+    val extremes = PreAgg.incrementWithExtremes(_: org.apache.spark.sql.DataFrame, dims,
+      mins = Seq("value_min" -> col("value")),
+      maxs = Seq("top_max" -> struct(col("ts").as("s"),
+        col("event_id").as("t"), col("value").as("m"))))
+    val sums = PreAgg.incrementWithSums(_: org.apache.spark.sql.DataFrame, dims,
+      Seq("swv_sum" -> floor(col("value") * 100).cast("long") * col("user_id"),
+        "w_sum" -> col("user_id")))
+    def e(id: Long, user: Long, typ: String, value: Double) =
+      Event(id, new java.sql.Timestamp((1440 + id) * 60000L), user, typ, value)
+    val all = Seq(e(1, 2, "a", 2.25), e(2, 3, "b", 9.5), e(3, 1, "a", 4.0),
+      e(4, 4, "b", 1.75), e(5, 2, "a", 0.5))
+    val flavours = Seq("extremes" -> extremes, "sums" -> sums)
+    flavours.foreach { case (name, inc) =>
+      val mem = MemoryStream[Event]
+      val q = EventStreams.maintainRollup(mem.toDS().toDF(), inc,
+        s"${dir.getAbsolutePath}/$name", s"${dir.getAbsolutePath}/ckpt_$name")
+      try {
+        mem.addData(all.take(3): _*)
+        q.processAllAvailable()
+        mem.addData(all.drop(3): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+
+    flavours.foreach { case (name, inc) =>
+      val path = s"${dir.getAbsolutePath}/$name"
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("event_type").collect().map(_.toString).toSeq
+      val whole = rows(inc(all.toDS().toDF()))
+      assert(rows(EventStreams.rollupFromIncrements(spark, path)) === whole, name)
+      // a replayed epoch changes neither the count nor any measure
+      spark.read.parquet(path).where(col("inc_batch_id") === 0L)
+        .write.mode("append").parquet(path)
+      assert(rows(EventStreams.rollupFromIncrements(spark, path)) === whole,
+        s"$name: a replayed batch moved the rollup")
+      // compaction leaves one sentinel-epoch row per combo, same rollup
+      EventStreams.compactRollupIncrements(spark, path)
+      val compacted = spark.read.parquet(path)
+      assert(compacted.count() === whole.size.toLong, name)
+      assert(compacted.where(col("inc_batch_id") =!= lit(-1L)).isEmpty, name)
+      assert(rows(EventStreams.rollupFromIncrements(spark, path)) === whole, name)
+    }
   }
 
   test("streamed span-gram counts: batch removal against state equals the whole-corpus cut") {
