@@ -26,17 +26,11 @@ object TextMatch {
 
   /** The analyzed form of a text column: lowercased with every run of
     * non-alphanumerics collapsed to a single space. Not trimmed — matching
-    * always goes through the space-padded form below, so edge spaces are
-    * harmless and the expression stays a cheap two-op chain.
+    * always goes through the space-padded form ([[Analyzer.padded]]), so
+    * edge spaces are harmless and the expression stays a cheap two-op chain.
     */
   def normalized(c: Column): Column =
     regexp_replace(lower(c), "[^a-z0-9]+", " ")
-
-  /** Space-padded normalized text: token boundaries become literal spaces so
-    * token-sequence matching is substring matching.
-    */
-  private def padded(c: Column): Column =
-    concat(lit(" "), normalized(c), lit(" "))
 
   /** Phrase-prefix match (ES `match_phrase_prefix` over the `.split` field):
     * the query's tokens appear contiguously in the column's token stream,
@@ -49,7 +43,7 @@ object TextMatch {
     if (toks.isEmpty) lit(true)
     // " tok1 tok2 tokN" against " text ": every token but the last is
     // followed by a space (complete word); the last may continue (prefix).
-    else instr(padded(c), " " + toks.mkString(" ")) > 0
+    else instr(AsciiAnalyzer.padded(c), " " + toks.mkString(" ")) > 0
   }
 
   /** ES `fingerprint` analyzer (the OpenRefine clustering key): analyze,
@@ -78,7 +72,7 @@ object TextMatch {
   def containsToken(c: Column, token: String): Column = {
     val toks = analyze(token)
     if (toks.isEmpty) lit(true)
-    else instr(padded(c), " " + toks.mkString(" ") + " ") > 0
+    else instr(AsciiAnalyzer.padded(c), " " + toks.mkString(" ") + " ") > 0
   }
 
   /** DuckDB-compatible SQL text for the same phrase-prefix predicate — used
@@ -253,14 +247,11 @@ object TextMatch {
     array_join(regexp_extract_all(spaced, lit(jWord), lit(0)), " ")
   }
 
-  private def paddedUnicode(c: Column): Column =
-    concat(lit(" "), normalizedUnicode(c), lit(" "))
-
   /** [[phrasePrefix]] under the Unicode analyzer. */
   def phrasePrefixUnicode(c: Column, query: String): Column = {
     val toks = analyzeUnicode(query)
     if (toks.isEmpty) lit(true)
-    else instr(paddedUnicode(c), " " + toks.mkString(" ")) > 0
+    else instr(UnicodeAnalyzer.padded(c), " " + toks.mkString(" ")) > 0
   }
 
   /** Analyzer choice, threaded through the at-rest index build
@@ -273,6 +264,11 @@ object TextMatch {
   sealed trait Analyzer {
     def analyze(text: String): Seq[String]
     def normalized(c: Column): Column
+
+    /** Space-padded normalized text: token boundaries become literal
+      * spaces, so token-sequence matching is substring matching.
+      */
+    def padded(c: Column): Column = concat(lit(" "), normalized(c), lit(" "))
   }
 
   /** The reference-faithful ASCII analyzer (lowercase, split on

@@ -375,7 +375,7 @@ object Bm25 {
       b: Double = DefaultB,
       analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame =
     topK(docs, idCol,
-      concat(lit(" "), analyzer.normalized(col(s"`$textCol`")), lit(" ")),
+      analyzer.padded(col(s"`$textCol`")),
       query, k, k1, b, stats = None, analyzer = analyzer)
 
   /** ES `multi_match` over several raw text columns, each scored by its
@@ -409,7 +409,7 @@ object Bm25 {
       "multiMatch: tie_breaker applies to best_fields (dis_max) only")
     val perField = textCols.zipWithIndex.map { case (f, i) =>
       scoredAll(docs, idCol,
-          concat(lit(" "), analyzer.normalized(col(s"`$f`")), lit(" ")),
+          analyzer.padded(col(s"`$f`")),
           query, k1, b, stats = None, analyzer = analyzer)
         .select(col(s"`$idCol`"), col("score").as(s"_s$i"))
     }
@@ -460,7 +460,7 @@ object Bm25 {
       s"multiMatchWeighted: unsupported mode <$mode> (best_fields|most_fields)")
     val perField = fieldBoosts.zipWithIndex.map { case ((f, _), i) =>
       scoredAll(docs, idCol,
-          concat(lit(" "), analyzer.normalized(col(s"`$f`")), lit(" ")),
+          analyzer.padded(col(s"`$f`")),
           query, k1, b, stats = None, analyzer = analyzer)
         .select(col(s"`$idCol`"), col("score").as(s"_s$i"))
     }
@@ -502,7 +502,7 @@ object Bm25 {
     val combined = concat_ws(" ",
       textCols.map(f => coalesce(col(s"`$f`"), lit(""))): _*)
     topK(docs, idCol,
-      concat(lit(" "), analyzer.normalized(combined), lit(" ")),
+      analyzer.padded(combined),
       query, k, k1, b, stats = None, analyzer = analyzer)
   }
 
@@ -557,7 +557,7 @@ object Bm25 {
     require(terms.nonEmpty, s"crossFields: query '$query' has no analyzable terms")
     val nf = fieldBoosts.size
     val analyzedCols = fieldBoosts.map { case (f, _) =>
-      concat(lit(" "), analyzer.normalized(col(s"`$f`")), lit(" "))
+      analyzer.padded(col(s"`$f`"))
     }
     // one-pass statistics: doc count, per-field total length, per
     // (term × field) document frequency — every cell an integer sum

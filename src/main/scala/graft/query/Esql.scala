@@ -1631,7 +1631,7 @@ object Esql {
         }
         val terms = an.analyze(q)
         require(terms.nonEmpty, s"esql: MATCH query '$q' has no analyzable terms")
-        val padded = concat(lit(" "), an.normalized(rec(f)), lit(" "))
+        val padded = an.padded(rec(f))
         terms.map(t => padded.contains(lit(s" $t ")))
           .reduce(_ || _)
       case _ => throw new IllegalArgumentException(
@@ -2558,7 +2558,7 @@ object Esql {
       ft.asInstanceOf[Fn].args match {
         case Seq(f @ ColRef(_), StrLit(q)) =>
           val analyzer = graft.expr.TextMatch.AsciiAnalyzer
-          val analyzed = concat(lit(" "), analyzer.normalized(compileExpr(f)), lit(" "))
+          val analyzed = analyzer.padded(compileExpr(f))
           val terms = ft.asInstanceOf[Fn].name match {
             case "MATCH" => Bm25.queryTerms(q, analyzer)
             // phrase = ONE pseudo-term: TF counts token positions where
@@ -2689,7 +2689,7 @@ object Esql {
       val analyzer = graft.expr.TextMatch.AsciiAnalyzer
       scorerId match {
         case "bm25" =>
-          val analyzed = concat(lit(" "), analyzer.normalized(col(field)), lit(" "))
+          val analyzed = analyzer.padded(col(field))
           val terms = Bm25.queryTerms(queryText, analyzer)
           require(terms.nonEmpty, s"esql: RERANK query '$queryText' has no analyzable terms")
           val reserved = ("_dl" +: "_n" +: "_sumdl" +:

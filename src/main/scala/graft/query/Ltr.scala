@@ -33,7 +33,7 @@ object Ltr {
       b: Double = Bm25.DefaultB): DataFrame = {
     val terms = Bm25.queryTerms(query)
     require(terms.nonEmpty, s"ltr: query '$query' has no analyzable terms")
-    val analyzed = concat(lit(" "), TextMatch.normalized(col(s"`$textCol`")), lit(" "))
+    val analyzed = TextMatch.AsciiAnalyzer.padded(col(s"`$textCol`"))
     val st = Bm25.corpusStats(docs, analyzed, terms)
     val base = docs.select(
       col(s"`$idCol`") +:

@@ -2,6 +2,7 @@ package graft.query
 
 import com.fasterxml.jackson.databind.JsonNode
 import graft.expr.TextMatch
+import graft.serve.Requests.{choice, page, text}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,24 +47,71 @@ import org.apache.spark.sql.functions._
   */
 object Retriever {
 
-  /** Every node's output bound — rank_window_size / k — shares the
-    * serving tier's 1..1000 page budget; a deeper window is a client
-    * fault, not a driver-memory risk.
-    */
-  private def bounded(n: Int, what: String): Int = {
-    require(n >= 1 && n <= 1000, s"retriever: $what must be 1..1000, got $n")
-    n
-  }
-
   private final case class Compiled(run: DataFrame, scored: Boolean)
 
   /** Compile `{"retriever": {...}}` (or the bare node) and return the
     * ranked frame: `(doc_id, rank[, score][, pinned])`, rank ascending.
+    * Every node's output bound — rank_window_size / k / window — is a
+    * serving page ([[graft.serve.Requests.page]]): a deeper window is a
+    * client fault, not a driver-memory risk.
     */
-  def compile(docs: DataFrame, embeddings: DataFrame, json: String): DataFrame = {
-    val root0 = graft.Json.read(json)
-    val root = if (root0.has("retriever")) root0.get("retriever") else root0
-    compileNode(docs, embeddings, root).run
+  def compile(docs: DataFrame, embeddings: DataFrame, json: String): DataFrame =
+    compile(docs, embeddings, graft.Json.read(json))
+
+  /** [[compile]] over an already-decoded tree. */
+  def compile(docs: DataFrame, embeddings: DataFrame, root: JsonNode): DataFrame =
+    compileNode(docs, embeddings,
+      if (root.has("retriever")) root.get("retriever") else root).run
+
+  /** The single-field lexical leaf — the `standard` node and the `/search`
+    * route: BM25 over `docs`' padded analyzed `text`, per-term weights when
+    * `q` carries `term^2` carets, the tolerant bag of words otherwise.
+    * Unordered and unlimited, like [[Bm25.scoredAll]]; [[ranked]] cuts
+    * the page.
+    */
+  private[graft] def lexical(
+      docs: DataFrame, q: String, an: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame = {
+    val analyzed = an.padded(col("text"))
+    if (QueryString.hasBoost(q))
+      Bm25.scoredAllBoosted(docs, "doc_id", analyzed, QueryString.boostedTerms(q))
+    else Bm25.scoredAll(docs, "doc_id", analyzed, q, analyzer = an)
+  }
+
+  /** The top `n` of a scored frame: score descending, ties by doc_id. */
+  private[graft] def ranked(scored: DataFrame, n: Int): DataFrame =
+    scored.orderBy(desc("score"), asc("doc_id")).limit(n)
+
+  /** The rescore leaf — `/search`'s `rescore` member and the `rescorer`
+    * node: `{"rescore": {"q": "<phrase>", "window": N?, "weight": w?}}`
+    * re-ranks the top window of the scored `run` by the phrase boost over
+    * `docs`, the tail keeping primary order ([[Hybrid.rescore]]).
+    */
+  private[graft] def rescored(run: DataFrame, docs: DataFrame, o: JsonNode, what: String): DataFrame = {
+    val r = o.path("rescore")
+    val rq = r.path("q").asText("")
+    require(rq.nonEmpty, s"$what: rescore.q missing")
+    Hybrid.rescore(run, "doc_id", "score", Hybrid.phraseBoost(docs, rq), "boost",
+      windowSize = page(o, "rescore.window", 10, what),
+      rescoreWeight = r.path("weight").asDouble(2.0))
+  }
+
+  /** A node's optional `filter` over `base`: a query_string STRING — the
+    * ES DSL-object form is not compiled (a loud seam, not a silent
+    * MatchAll).
+    */
+  private def filtered(base: DataFrame, o: JsonNode, what: String, defaultField: String): DataFrame =
+    if (!o.hasNonNull("filter")) base
+    else {
+      require(o.path("filter").isTextual, s"$what: filter is a query_string STRING here — the " +
+        "ES DSL-object form is not compiled (loud seam, not a silent MatchAll)")
+      base.where(QueryString.parse(o.path("filter").asText(), defaultField).compile)
+    }
+
+  /** A combiner's `retrievers` array. */
+  private def children(o: JsonNode, what: String): Seq[JsonNode] = {
+    val arr = o.path("retrievers")
+    require(arr.isArray && arr.size() > 0, s"$what: retrievers must be a non-empty array")
+    (0 until arr.size()).map(arr.get)
   }
 
   private def compileNode(docs: DataFrame, emb: DataFrame, n: JsonNode): Compiled = {
@@ -73,23 +121,11 @@ object Retriever {
     val o = n.get(kind)
     kind match {
       case "standard" =>
-        val q = o.path("query").asText("")
-        require(q.nonEmpty, "retriever.standard: missing query")
-        val window = bounded(o.path("rank_window_size").asInt(10), "standard rank_window_size")
-        val base =
-          if (o.hasNonNull("filter")) {
-            require(o.path("filter").isTextual,
-              "retriever.standard: filter is a query_string STRING here — the " +
-                "ES DSL-object form is not compiled (loud seam, not a silent MatchAll)")
-            docs.where(QueryString.parse(o.path("filter").asText(), "text").compile)
-          } else docs
-        val analyzed = concat(lit(" "), TextMatch.normalized(col("text")), lit(" "))
-        val scored =
-          if (QueryString.hasBoost(q))
-            Bm25.scoredAllBoosted(base, "doc_id", analyzed, QueryString.boostedTerms(q))
-          else Bm25.scoredAll(base, "doc_id", analyzed, q)
-        val run = scored.orderBy(desc("score"), asc("doc_id")).limit(window)
-        Compiled(Hybrid.withRank(run, "score", "doc_id"), scored = true)
+        val q = text(o, "query", "retriever.standard")
+        val window = page(o, "rank_window_size", 10, "retriever.standard")
+        val base = filtered(docs, o, "retriever.standard", "text")
+        Compiled(Hybrid.withRank(ranked(lexical(base, q), window), "score", "doc_id"),
+          scored = true)
 
       case "knn" =>
         require(o.path("field").asText("") == "embedding",
@@ -98,7 +134,7 @@ object Retriever {
         val qvNode = o.path("query_vector")
         require(qvNode.isArray && qvNode.size() > 0,
           "retriever.knn: query_vector must be a non-empty array")
-        val k = bounded(o.path("k").asInt(10), "knn k")
+        val k = page(o, "k", 10, "retriever.knn")
         // num_candidates accepted and inert — this is an exact scan
         val qv = array((0 until qvNode.size()).map(i => lit(qvNode.get(i).asDouble())): _*)
           .cast("array<double>")
@@ -106,47 +142,30 @@ object Retriever {
         // ES knn filter: PRE-filter semantics — candidates prune BEFORE
         // the k cut (the recall-preserving form, the /knn route's
         // contract), query_string over the vector corpus's metadata
-        val base =
-          if (o.hasNonNull("filter")) {
-            require(o.path("filter").isTextual,
-              "retriever.knn: filter is a query_string STRING here — the ES " +
-                "DSL-object form is not compiled (loud seam, not a silent MatchAll)")
-            emb.where(QueryString.parse(o.path("filter").asText(),
-              defaultField = "label").compile)
-          } else emb
-        val run = base
-          .select(col("vec_id").as("doc_id"),
-            graft.expr.VectorMath.cosine(v, qv).as("score"))
-          .orderBy(desc("score"), asc("doc_id")).limit(k)
-        Compiled(Hybrid.withRank(run, "score", "doc_id"), scored = true)
+        val run = filtered(emb, o, "retriever.knn", "label")
+          .select(col("vec_id").as("doc_id"), graft.expr.VectorMath.cosine(v, qv).as("score"))
+        Compiled(Hybrid.withRank(ranked(run, k), "score", "doc_id"), scored = true)
 
       case "rrf" =>
-        val arr = o.path("retrievers")
-        require(arr.isArray && arr.size() > 0, "retriever.rrf: retrievers must be a non-empty array")
-        val children = (0 until arr.size()).map(i => compileNode(docs, emb, arr.get(i)))
+        val runs = children(o, "retriever.rrf").map(compileNode(docs, emb, _).run)
         val fused = Hybrid.rrf(
-          children.map(_.run.select(col("doc_id"), col("rank"))),
+          runs.map(_.select(col("doc_id"), col("rank"))),
           "doc_id", "rank",
           rrfK = o.path("rank_constant").asInt(60),
-          topK = bounded(o.path("rank_window_size").asInt(10), "rank_window_size"))
+          topK = page(o, "rank_window_size", 10, "retriever.rrf"))
         Compiled(
           Hybrid.withRank(fused.withColumnRenamed("rrf_score", "score"), "score", "doc_id"),
           scored = true)
 
       case "linear" =>
-        val arr = o.path("retrievers")
-        require(arr.isArray && arr.size() > 0, "retriever.linear: retrievers must be a non-empty array")
-        val entries = (0 until arr.size()).map { i =>
-          val e = arr.get(i)
+        val entries = children(o, "retriever.linear").map { e =>
           require(e.isObject && e.has("retriever"),
             "retriever.linear: each entry is {\"retriever\": <node>, \"weight\": w, \"normalizer\": ...}")
           val child = compileNode(docs, emb, e.get("retriever"))
           require(child.scored,
             "retriever.linear: children must be SCORED retrievers (a pinned " +
               "child has rank but no score magnitude — fuse it with rrf)")
-          val norm = e.path("normalizer").asText("none")
-          require(norm == "none" || norm == "minmax",
-            s"retriever.linear: normalizer must be none|minmax, got '$norm'")
+          val norm = choice(e, "normalizer", "retriever.linear", "none", "minmax")
           (child.run, e.path("weight").asDouble(1.0), norm)
         }
         // r18 optimization: min/max over a whole-frame window instead of a
@@ -179,7 +198,7 @@ object Retriever {
         val fused = joined.withColumn("score", score)
           .select(col("doc_id"), col("score"))
           .orderBy(desc("score"), asc("doc_id"))
-          .limit(bounded(o.path("rank_window_size").asInt(10), "linear rank_window_size"))
+          .limit(page(o, "rank_window_size", 10, "retriever.linear"))
         Compiled(Hybrid.withRank(fused, "score", "doc_id"), scored = true)
 
       case "pinned" =>
@@ -191,21 +210,14 @@ object Retriever {
         val ids = (0 until idsNode.size()).map(i => idsNode.get(i).asLong())
         Compiled(
           Hybrid.pinned(child.run, "doc_id", "score", ids,
-            topK = o.path("rank_window_size").asInt(10), corpus = Some(docs)),
+            topK = page(o, "rank_window_size", 10, "retriever.pinned"), corpus = Some(docs)),
           scored = false)
 
       case "rescorer" =>
         require(o.has("retriever"), "retriever.rescorer: missing the wrapped retriever")
-        val r = o.path("rescore")
-        val rq = r.path("q").asText("")
-        require(rq.nonEmpty, "retriever.rescorer: rescore.q missing")
         val child = compileNode(docs, emb, o.get("retriever"))
         require(child.scored, "retriever.rescorer: the wrapped child must be scored")
-        Compiled(
-          Hybrid.rescore(child.run, "doc_id", "score", Hybrid.phraseBoost(docs, rq), "boost",
-            windowSize = bounded(r.path("window").asInt(10), "rescore window"),
-            rescoreWeight = r.path("weight").asDouble(2.0)),
-          scored = true)
+        Compiled(rescored(child.run, docs, o, "retriever.rescorer"), scored = true)
 
       case "text_similarity_reranker" =>
         throw new IllegalArgumentException(

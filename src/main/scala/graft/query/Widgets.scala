@@ -70,8 +70,11 @@ object Widgets {
     * so a state blob that contradicts the dictionary fails fast instead
     * of compiling nonsense. Unknown field names fail like any `select`.
     */
-  def fromJson(fields: FieldCollection, json: String): FieldCollection = {
-    val root = graft.Json.read(json)
+  def fromJson(fields: FieldCollection, json: String): FieldCollection =
+    fromJson(fields, graft.Json.read(json))
+
+  /** [[fromJson]] over an already-decoded state. */
+  def fromJson(fields: FieldCollection, root: com.fasterxml.jackson.databind.JsonNode): FieldCollection = {
     require(root.isArray, s"widget state must be a JSON array, got: ${root.getNodeType}")
     var fc = fields
     val it = root.elements()

@@ -44,9 +44,8 @@ object BuildQueries extends Family("etl") {
       val docs = load(dir, "documents")
       val alertsPath = s"/tmp/graft_percolate_alerts_${math.abs(dir.hashCode)}"
       def inc(epoch: Int): DataFrame =
-        graft.query.Percolator.percolateLong(
-            docs.where(pmod(col("doc_id"), lit(2)) === epoch), "doc_id", stored)
-          .withColumn("inc_batch_id", lit(epoch.toLong))
+        EventStreams.stampEpoch(graft.query.Percolator.percolateLong(
+          docs.where(pmod(col("doc_id"), lit(2)) === epoch), "doc_id", stored), epoch)
       // (r18: examined — a localCheckpoint of the replayed epoch-0
       // increment measured cost-neutral: the percolation is row-local and
       // cheap, and the checkpoint adds its own materialization job.)
@@ -252,10 +251,9 @@ object BuildQueries extends Family("etl") {
       val docs = load(dir, "documents")
       val path = s"/tmp/graft_postings_inc_${math.abs(dir.hashCode)}"
       def inc(epoch: Int): DataFrame =
-        query.SparseVector.tfPostingsBucketed(
-            docs.where(pmod(col("doc_id"), lit(2)) === epoch),
-            "doc_id", "text", numBuckets = 64)
-          .withColumn("inc_batch_id", lit(epoch.toLong))
+        EventStreams.stampEpoch(query.SparseVector.tfPostingsBucketed(
+          docs.where(pmod(col("doc_id"), lit(2)) === epoch),
+          "doc_id", "text", numBuckets = 64), epoch)
       // r19: the r18 pre-write repartition(term_bucket) is REVERTED for
       // the epoch APPENDS after the verdict-requested A/B (min-of-3 at 32
       // cores, sf0.1): no-repartition 2.9 s vs repartition(col) 3.1 s vs
@@ -300,9 +298,8 @@ object BuildQueries extends Family("etl") {
       graft.store.FsOps.fileSystem(s, path)
         .delete(new org.apache.hadoop.fs.Path(path), true)
       def inc(epoch: Long, cond: Column): DataFrame =
-        query.SparseVector.tfPostingsBucketed(
-            docs.where(cond), "doc_id", "text", numBuckets = 64)
-          .withColumn("inc_batch_id", lit(epoch))
+        EventStreams.stampEpoch(query.SparseVector.tfPostingsBucketed(
+          docs.where(cond), "doc_id", "text", numBuckets = 64), epoch)
       // r19: append-side repartition reverted after the A/B — see
       // stream_sparse_vector (this query's three appends paid the barrier
       // thrice: 5.8 s with repartition / 6.0 s with REBALANCE vs 4.6 s

@@ -630,8 +630,7 @@ object QueryStringQueries extends Family("serving") {
       // the result list by source/domain without an aggregation round
       // trip), collapsed list ranked by surviving scores.
       val docs = load(dir, "documents")
-      val analyzed = concat(lit(" "),
-        graft.expr.TextMatch.normalized(col("text")), lit(" "))
+      val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
       val scored = graft.query.Bm25.scoredAll(docs, "doc_id", analyzed,
         "dup vector scan")
       val withLang = scored.join(docs.select("doc_id", "lang"), "doc_id")
@@ -658,8 +657,7 @@ object QueryStringQueries extends Family("serving") {
       // each group carrying its own top-2 hits (group_rank × inner_rank)
       // — the "best page per site, with runners-up" serving shape.
       val docs = load(dir, "documents")
-      val analyzed = concat(lit(" "),
-        graft.expr.TextMatch.normalized(col("text")), lit(" "))
+      val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
       val scored = graft.query.Bm25.scoredAll(docs, "doc_id", analyzed,
         "dup vector scan")
       val withLang = scored.join(docs.select("doc_id", "lang"), "doc_id")
@@ -695,8 +693,7 @@ object QueryStringQueries extends Family("serving") {
       // work per page), never an offset scan. Anchor = page 1's last hit
       // at sf0.01, passed back as literals the way a client would.
       val docs = load(dir, "documents")
-      val analyzed = concat(lit(" "),
-        graft.expr.TextMatch.normalized(col("text")), lit(" "))
+      val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
       val scored = graft.query.Bm25.scoredAll(docs, "doc_id", analyzed,
         "dup vector scan")
       graft.query.Paging.searchAfter(scored, "doc_id", "score",

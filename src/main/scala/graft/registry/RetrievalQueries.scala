@@ -17,7 +17,7 @@ object RetrievalQueries extends Family("serving") {
     * convention, shared by the more_like_this entries.
     */
   private def analyzedText(c: String) =
-    concat(lit(" "), graft.expr.TextMatch.normalized(col(c)), lit(" "))
+    graft.expr.TextMatch.AsciiAnalyzer.padded(col(c))
 
   /** more_like_this's like-text and knobs, shared by the three committed
     * queries and their oracles. tf: dup=3, vector/scan/fast/the=2, rest 1;
@@ -967,8 +967,7 @@ object RetrievalQueries extends Family("serving") {
       // 0.25 is dyadic so the demotion multiply is IEEE-exact; the
       // oracle replays the scored set and the same CASE.
       val docs = load(dir, "documents")
-      val analyzed = concat(lit(" "),
-        graft.expr.TextMatch.normalized(col("text")), lit(" "))
+      val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
       val scored = query.Bm25.scoredAll(docs, "doc_id", analyzed, "dup vector")
       val neg = docs.select(col("doc_id"),
         graft.expr.TextMatch.containsToken(col("text"), "merge").as("_neg"))

@@ -777,7 +777,7 @@ object SearchQueries extends Family("serving") {
       // computes, restated branch-for-branch in the oracle.
       val docs = load(dir, "documents")
       graft.query.Bm25.explainTopK(docs, "doc_id",
-        concat(lit(" "), graft.expr.TextMatch.normalized(col("text")), lit(" ")),
+        graft.expr.TextMatch.AsciiAnalyzer.padded(col("text")),
         "dup vector scan", k = 5)
     }, Some(
       graft.query.Bm25.oracleSqlExplain(
@@ -827,7 +827,7 @@ object SearchQueries extends Family("serving") {
       val docs = load(dir, "documents")
       val termBoosts = graft.query.QueryString.boostedTerms("vector^2 dup scan^0.5")
       graft.query.Bm25.topKBoosted(docs, "doc_id",
-        concat(lit(" "), graft.expr.TextMatch.normalized(col("text")), lit(" ")),
+        graft.expr.TextMatch.AsciiAnalyzer.padded(col("text")),
         termBoosts, k = 15)
     }, Some(
       graft.query.Bm25.oracleSqlBoosted("documents", "doc_id", "text",
@@ -1029,8 +1029,7 @@ object SearchQueries extends Family("serving") {
       // tree as every other predicate; 0.5 is dyadic, the length term is
       // one fixed division both engines restate.
       val docs = load(dir, "documents")
-      val analyzed = concat(lit(" "),
-        graft.expr.TextMatch.normalized(col("text")), lit(" "))
+      val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
       val scored = query.Bm25.scoredAll(docs, "doc_id", analyzed, "dup vector")
       scored.join(docs.select("doc_id", "n_chars"), "doc_id")
         .withColumn("score", query.Esql.column("score * 0.5 + n_chars / 1000.0"))

@@ -406,9 +406,8 @@ object SimilarityQueries extends Family("pipeline") {
       val emb = load(dir, "embeddings")
       val path = s"/tmp/graft_sq8_bounds_${math.abs(dir.hashCode)}"
       def inc(epoch: Int): DataFrame =
-        Similarity.sqBoundsFrame(
-            emb.where(pmod(col("vec_id"), lit(2)) === epoch), "embedding", 64)
-          .withColumn("inc_batch_id", lit(epoch.toLong))
+        EventStreams.stampEpoch(Similarity.sqBoundsFrame(
+          emb.where(pmod(col("vec_id"), lit(2)) === epoch), "embedding", 64), epoch)
       // (r18: examined — the replayed epoch-0 branch ends in the bounds
       // aggregate's exchange, which ReuseExchange dedupes at runtime; a
       // localCheckpoint here measured cost-neutral at best. Left as is.)
@@ -448,9 +447,8 @@ object SimilarityQueries extends Family("pipeline") {
         k = 8, iters = 0)
       val path = s"/tmp/graft_ivf_inc_${math.abs(dir.hashCode)}"
       def inc(epoch: Int): DataFrame =
-        Similarity.assignCells(emb.where(pmod(col("vec_id"), lit(2)) === epoch),
-            "vec_id", "embedding", centroids)
-          .withColumn("inc_batch_id", lit(epoch.toLong))
+        EventStreams.stampEpoch(Similarity.assignCells(
+          emb.where(pmod(col("vec_id"), lit(2)) === epoch), "vec_id", "embedding", centroids), epoch)
       // r18 optimization: checkpoint the replayed epoch-0 batch (a replay
       // is a re-delivered micro-batch, not a recompute) and repartition ON
       // the cell key before the partitioned write (guide §6 — otherwise
@@ -491,8 +489,8 @@ object SimilarityQueries extends Family("pipeline") {
       graft.store.FsOps.fileSystem(s, path)
         .delete(new org.apache.hadoop.fs.Path(path), true)
       def inc(epoch: Long, cond: Column): DataFrame =
-        Similarity.assignCells(emb.where(cond), "vec_id", "embedding", centroids)
-          .withColumn("inc_batch_id", lit(epoch))
+        EventStreams.stampEpoch(
+          Similarity.assignCells(emb.where(cond), "vec_id", "embedding", centroids), epoch)
       // r18 optimization: same two fixes as ann_ivf_incremental —
       // checkpoint the replayed batch, repartition ON the cell key before
       // both partitioned appends (guide §6 small-files).

@@ -1371,10 +1371,9 @@ object TextQueries extends Family("pipeline") {
       val newBatch = docs.where(pmod(col("doc_id"), lit(3)) === 0)
       val incPath = s"/tmp/graft_dsir_stream_${math.abs(dir.hashCode)}"
       def inc(epoch: Int): DataFrame =
-        ops.Sampling.importanceModel(
-            corpus.where(pmod(col("doc_id"), lit(2)) === epoch),
-            "text", col("lang") === "en")
-          .withColumn("inc_batch_id", lit(epoch.toLong))
+        EventStreams.stampEpoch(ops.Sampling.importanceModel(
+          corpus.where(pmod(col("doc_id"), lit(2)) === epoch),
+          "text", col("lang") === "en"), epoch)
       // (r18: examined — the replayed epoch-0 branch ends in the model
       // aggregate's exchange, which ReuseExchange dedupes at runtime; a
       // localCheckpoint here measured WORSE — an extra materialization
@@ -1676,12 +1675,12 @@ object TextQueries extends Family("pipeline") {
       val incPath = s"/tmp/graft_gramdf_stream_${math.abs(dir.hashCode)}"
       def inc(epoch: Int): DataFrame = {
         val batch = corpus.where(pmod(col("doc_id"), lit(2)) === epoch)
-        batch.select(explode(graft.expr.TextShingles.shingleHashes(
-            col("text"), 3)).as("gram"))
-          .groupBy("gram").agg(count(lit(1)).as("df"))
-          .unionByName(batch.agg(count(lit(1)).as("df"))
-            .select(lit(null).cast("long").as("gram"), col("df")))
-          .withColumn("inc_batch_id", lit(epoch.toLong))
+        EventStreams.stampEpoch(
+          batch.select(explode(graft.expr.TextShingles.shingleHashes(col("text"), 3)).as("gram"))
+            .groupBy("gram").agg(count(lit(1)).as("df"))
+            .unionByName(batch.agg(count(lit(1)).as("df"))
+              .select(lit(null).cast("long").as("gram"), col("df"))),
+          epoch)
       }
       // (r18: examined — the replayed epoch-0 branch ends in the gram-df
       // aggregate's exchange, which ReuseExchange dedupes at runtime; a

@@ -1,6 +1,10 @@
 package graft.serve
 
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.MissingNode
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.DataFrame
 
 /** A minimal localhost HTTP serving entry — the engine-side analogue of the
@@ -8,16 +12,22 @@ import org.apache.spark.sql.DataFrame
   * `docker-compose.yml`: nginx in front of aws-es-kibana in front of ES).
   * The reference's interaction unit is: browser POSTs widget/visualization
   * state, proxy forwards it as an ES `_search`, buckets come back as JSON.
-  * Here a route maps a request body straight to a DataFrame and streams the
-  * result rows back as a JSON array — the query compile chain behind it
+  * Here a route maps the decoded request body straight to a DataFrame
+  * ([[Routes]]) and the server streams the result rows back as a JSON
+  * array — the query compile chain behind it
   * ([[graft.query.Widgets.fromJson]] → `FilterSpec` → `Aggs`) is exactly
   * the one the oracled queries pin.
   *
   * Serving-tier scope, deliberately: one JVM, the driver's JDK HttpServer
   * (the same seam style `Sources.fetchToRaw`'s spec drives), no TLS/auth —
   * the reference delegates those to nginx, and so does this seam. The
-  * DataFrames a route returns are dashboard-cardinality (bucket lists), so
-  * `collectRowsJson`'s driver collect is bounded by construction.
+  * driver collect is bounded by the routes, not by construction: every
+  * size/k/window parameter goes through [[Requests.page]] (at most
+  * [[Requests.PageBudget]] rows), `/esql` caps at the same budget, and the
+  * other routes return bucket lists or rows bounded by what the request
+  * itself lists (`/termvectors` ids, `/analyze` text) — except
+  * `/percolate`, one row per match of the posted queries, which no page
+  * bounds yet.
   */
 object WidgetServer {
 
@@ -29,9 +39,12 @@ object WidgetServer {
   def collectRowsJson(df: DataFrame): String =
     df.toJSON.collect().mkString("[", ",", "]")
 
-  /** Start a localhost server with `routes` of `path -> (requestBody =>
-    * responseJson)`. `port = 0` binds an ephemeral port (read it back from
-    * `server.getAddress.getPort` — the spec's pattern).
+  /** Start a localhost server with `routes` of `path -> (body => result)`.
+    * Per request the server decodes the body once (an empty body is the
+    * missing node, which each route reads as "no members"), runs the route
+    * and renders its frame once with [[collectRowsJson]]. `port = 0` binds
+    * an ephemeral port (read it back from `server.getAddress.getPort` —
+    * the spec's pattern).
     *
     * Status mapping follows the reference proxy's split between client and
     * server faults (aws-es-kibana forwards ES's own 4xx for malformed query
@@ -43,37 +56,31 @@ object WidgetServer {
     * re-checks both: exact path (404 otherwise) and POST-only (405), as
     * nginx would enforce in front of the reference.
     */
-  def start(port: Int = 0)(routes: (String, String => String)*): HttpServer = {
+  def start(port: Int = 0)(routes: (String, JsonNode => DataFrame)*): HttpServer = {
     val server = HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", port), 0)
+    def error(msg: String): String = "{\"error\":" + graft.Json.quote(msg) + "}"
+    def fault(e: Throwable): String = error(Option(e.getMessage).getOrElse(e.toString))
     routes.foreach { case (path, route) =>
       server.createContext(path, new HttpHandler {
         override def handle(ex: HttpExchange): Unit = {
-          val out =
+          val (code, payload) =
             try {
               if (ex.getRequestURI.getPath != path)
-                Left((404, s"no such route: ${ex.getRequestURI.getPath}"))
+                (404, error(s"no such route: ${ex.getRequestURI.getPath}"))
               else if (ex.getRequestMethod != "POST")
-                Left((405, s"${ex.getRequestMethod} not allowed; POST $path"))
+                (405, error(s"${ex.getRequestMethod} not allowed; POST $path"))
               else {
-                val body = new String(ex.getRequestBody.readAllBytes(),
-                  java.nio.charset.StandardCharsets.UTF_8)
-                Right(route(body))
+                val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+                (200, collectRowsJson(route(
+                  if (body.trim.isEmpty) MissingNode.getInstance else graft.Json.read(body))))
               }
             } catch {
-              case e @ (_: IllegalArgumentException |
-                        _: com.fasterxml.jackson.core.JacksonException) =>
-                Left((400, Option(e.getMessage).getOrElse(e.toString)))
-              case e: Throwable =>
-                Left((500, Option(e.getMessage).getOrElse(e.toString)))
+              case e @ (_: IllegalArgumentException | _: JacksonException) => (400, fault(e))
+              case e: Throwable => (500, fault(e))
             }
           try {
-            val (code, payload) = out match {
-              case Right(json) => (200, json)
-              case Left((c, err)) =>
-                (c, "{\"error\":" + graft.Json.quote(err) + "}")
-            }
-            val bytes = payload.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            val bytes = payload.getBytes(UTF_8)
             ex.getResponseHeaders.add("Content-Type", "application/json")
             ex.sendResponseHeaders(code, bytes.length)
             ex.getResponseBody.write(bytes)

@@ -32,7 +32,7 @@ object SearchIndex {
     */
   def analyzedForm(c: Column,
       analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): Column =
-    concat(lit(" "), analyzer.normalized(c), lit(" "))
+    analyzer.padded(c)
 
   /** Add `<col>_split` analyzed companions for the given string columns
     * (default: all of them) — the "index the dataset" step.

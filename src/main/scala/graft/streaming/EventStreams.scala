@@ -394,10 +394,18 @@ object EventStreams {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val writer = batchFrame(batch).withColumn(EpochCol, lit(batchId)).write.mode("append")
+        val writer = stampEpoch(batchFrame(batch), batchId).write.mode("append")
         (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*)).parquet(path)
       }
       .start()
+
+  /** `increment` stamped with its `epoch` — the on-disk contract of every
+    * increment table, spelled once: [[appendEpochs]] stamps each
+    * micro-batch with it, and batch writers of the same tables call it
+    * directly.
+    */
+  private[graft] def stampEpoch(increment: DataFrame, epoch: Long): DataFrame =
+    increment.withColumn(EpochCol, lit(epoch))
 
   /** Compact an increment table at `path` to `merged`, its served view:
     * every row wears the sentinel epoch and [[swapIn]] swaps it in. Safe at
@@ -422,7 +430,7 @@ object EventStreams {
     * exists to avoid.
     */
   private def compactTo(merged: DataFrame, path: String, partitionBy: String*): Unit = {
-    val stamped = merged.withColumn(EpochCol, lit(CompactedEpoch))
+    val stamped = stampEpoch(merged, CompactedEpoch)
     swapIn(
       if (partitionBy.isEmpty) stamped.coalesce(1)
       else stamped.repartition(partitionBy.map(col): _*),
@@ -775,6 +783,13 @@ object EventStreams {
   def driftHistogramsFromIncrements(spark: SparkSession, incrementPath: String): DataFrame =
     sumMerged(spark, incrementPath, Seq("feature", "bucket"), "n")
 
+  /** Compact a drift-histogram increment table to one row per (feature,
+    * bucket) — bounded by the bucketings' cardinality, however many
+    * batches have run.
+    */
+  def compactDriftHistogramIncrements(spark: SparkSession, incrementPath: String): Unit =
+    compactTo(driftHistogramsFromIncrements(spark, incrementPath), incrementPath)
+
   /** [[graft.ops.Drift.driftReport]] computed from two HISTOGRAM frames
     * (`(feature, bucket, n)`) instead of two corpora — the serve-time
     * form for streamed maintenance: shares derive per feature, the
@@ -938,8 +953,7 @@ object EventStreams {
   def sqBoundsFromIncrements(
       spark: SparkSession,
       boundsPath: String): (Array[Double], Array[Double]) = {
-    val rows = spark.read.parquet(boundsPath)
-      .groupBy("dim").agg(min("mn").as("mn"), max("mx").as("mx"))
+    val rows = sqBoundsMerged(spark, boundsPath)
       .orderBy("dim")
       .select("dim", "mn", "mx")
       .collect()
@@ -953,6 +967,16 @@ object EventStreams {
     }
     (mn, mx)
   }
+
+  private def sqBoundsMerged(spark: SparkSession, boundsPath: String): DataFrame =
+    spark.read.parquet(boundsPath)
+      .groupBy("dim").agg(min("mn").as("mn"), max("mx").as("mx"))
+
+  /** Compact an SQ8 bounds table ([[maintainSqBounds]]) to one row per
+    * dimension.
+    */
+  def compactSqBoundsIncrements(spark: SparkSession, boundsPath: String): Unit =
+    compactTo(sqBoundsMerged(spark, boundsPath), boundsPath)
 
   /** Compact a dictionary increment table ([[maintainDictionary]]): merge
     * the accumulated per-batch rows into ONE increment per column, bounding

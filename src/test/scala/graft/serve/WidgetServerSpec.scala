@@ -314,6 +314,44 @@ class WidgetServerSpec extends SparkSpecBase {
       assert(getResp.statusCode() === 405)
       val (code4, _) = post(s"http://127.0.0.1:$port/queryanything", widgetState)
       assert(code4 === 404)
+      // malformed members the engine would otherwise trip over (a pattern
+      // match on the split cell, a null element of a non-array) are
+      // client faults too
+      val (code5, body5) = post(s"http://127.0.0.1:$port/geotile",
+        """{"z": 6, "cell": "4-4-6"}""")
+      assert(code5 === 400 && body5.contains("z/x/y"), body5)
+      val (code6, body6) = post(s"http://127.0.0.1:$port/search",
+        """{"q": "dup", "after": 7}""")
+      assert(code6 === 400 && body6.contains("[score, id]"), body6)
+      assert(post(s"http://127.0.0.1:$port/search",
+        """{"q": "dup", "after": [1.0]}""")._1 === 400)
+    } finally server.stop(0)
+  }
+
+  test("every size/k/window parameter is held to the 1..1000 page budget") {
+    val server = SparkEntry.serveHttp(spark, sfDir)
+    try {
+      val port = server.getAddress.getPort
+      Seq(
+        "/suggest" -> """{"prefix": "a", "size": 100000}""",
+        "/geotile" -> """{"z": 4, "size": 100000}""",
+        "/significant" -> """{"field": "description", "size": 0}""",
+        "/explain" -> """{"q": "dup", "size": 100000}""",
+        "/knn" -> """{"vec_id": 3, "k": 100000}""",
+        "/knn" -> """{"vec_id": 3, "similarity": 0.2, "size": 100000}""",
+        "/sparse" -> """{"terms": {"vector": 2.0}, "k": 100000}""",
+        "/fuse" -> """{"q": "dup", "vec_id": 0, "k": 100000}""",
+        "/fuse" -> """{"q": "dup", "vec_id": 0, "mmr": {"k": 100000}}""",
+        "/search" -> """{"q": "dup", "rescore": {"q": "vector scan", "window": 100000}}""",
+        "/search" -> """{"q": "dup", "size": 0}""",
+        "/mlt" -> """{"like": "dup dup", "size": 100000}""",
+        "/complete" -> """{"prefix": "sp", "size": 100000}""",
+        "/retriever" -> """{"retriever": {"pinned": {"ids": [1], "rank_window_size": 100000,
+                           |  "retriever": {"standard": {"query": "dup"}}}}}""".stripMargin
+      ).foreach { case (path, body) =>
+        val (code, resp) = post(s"http://127.0.0.1:$port$path", body)
+        assert(code === 400 && resp.contains("1..1000"), s"$path $body -> $code $resp")
+      }
     } finally server.stop(0)
   }
 

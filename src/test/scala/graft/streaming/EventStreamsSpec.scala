@@ -1225,4 +1225,75 @@ class EventStreamsSpec extends SparkSpecBase {
     assert(mn.toSeq === mnS.toSeq && mx.toSeq === mxS.toSeq)
     assert(mn.toSeq === Seq(-1.0, 5.0, -3.0) && mx.toSeq === Seq(10.0, 6.0, 9.0))
   }
+
+  test("SQ8 bounds and drift histograms compact to one row per key and still absorb replays") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_more").toFile
+    dir.deleteOnExit()
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("feature", "bucket").collect().map(_.toSeq).toSeq
+    // run `batches` through a fresh stream (epochs 0, 1, ...)
+    def stream[T: org.apache.spark.sql.Encoder](batches: Seq[Seq[T]])(
+        start: org.apache.spark.sql.DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      val mem = MemoryStream[T]
+      val q = start(mem.toDS().toDF())
+      try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    // an at-least-once retry appends epoch 0 of the latest stream again
+    def replayEpoch0(path: String): Unit =
+      spark.read.parquet(path).where(col("inc_batch_id") === 0L)
+        .write.mode("append").parquet(path)
+
+    // SQ8 bounds: 3 dims x 2 batches at rest, 3 rows after compaction
+    val vecs = Seq(
+      (1L, Seq(0.0, 5.0, 7.0)), (2L, Seq(10.0, 5.0, -3.0)),
+      (3L, Seq(5.0, 5.0, 2.0)), (4L, Seq(-1.0, 6.0, 9.0)))
+    val later = Seq((5L, Seq(-4.0, 5.5, 12.0)))
+    val bounds = dir.getAbsolutePath + "/bounds"
+    def sq8(ckpt: String, batches: Seq[Seq[(Long, Seq[Double])]]): Unit =
+      stream(batches)(df => EventStreams.maintainSqBounds(
+        df.toDF("vec_id", "embedding"), "embedding", dim = 3, bounds, dir.getAbsolutePath + ckpt))
+    sq8("/ckpt_sq", Seq(vecs.take(2), vecs.drop(2)))
+    val before = EventStreams.sqBoundsFromIncrements(spark, bounds)
+    EventStreams.compactSqBoundsIncrements(spark, bounds)
+    assert(spark.read.parquet(bounds).count() === 3)
+    val compacted = EventStreams.sqBoundsFromIncrements(spark, bounds)
+    assert(compacted._1.toSeq === before._1.toSeq && compacted._2.toSeq === before._2.toSeq)
+    sq8("/ckpt_sq2", Seq(later))
+    replayEpoch0(bounds)
+    val (mn, mx) = EventStreams.sqBoundsFromIncrements(spark, bounds)
+    val (mnS, mxS) = graft.ops.Similarity.sqBounds(
+      (vecs ++ later).toDF("vec_id", "embedding"), "embedding", 3)
+    assert(mn.toSeq === mnS.toSeq && mx.toSeq === mxS.toSeq)
+
+    // drift histograms: 2 features x their buckets, one row each after
+    // compaction; a replay after it must not inflate any count
+    val docs = (1L to 30L).map(i => (i, if (i % 3 == 0) "xx" else "en"))
+    val features = Seq[(String, org.apache.spark.sql.Column)](
+      "lang" -> col("lang"), "parity" -> (col("doc_id") % 2))
+    val hist = dir.getAbsolutePath + "/hist"
+    def drift(ckpt: String, batches: Seq[Seq[(Long, String)]]): Unit =
+      stream(batches)(df => EventStreams.maintainDriftHistograms(
+        df.toDF("doc_id", "lang"), features, hist, dir.getAbsolutePath + ckpt))
+    def whole(rows: Seq[(Long, String)]) = {
+      val all = rows.toDF("doc_id", "lang")
+      features.map { case (n, c) =>
+        all.groupBy(c.cast("string").as("bucket"))
+          .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
+          .select(lit(n).as("feature"), col("bucket"), col("n"))
+      }.reduce(_.unionByName(_))
+    }
+    drift("/ckpt_h", Seq(docs.take(20), docs.slice(20, 25)))
+    val served = canon(EventStreams.driftHistogramsFromIncrements(spark, hist))
+    assert(served === canon(whole(docs.take(25))))
+    EventStreams.compactDriftHistogramIncrements(spark, hist)
+    assert(spark.read.parquet(hist).count() === 4)
+    assert(canon(EventStreams.driftHistogramsFromIncrements(spark, hist)) === served)
+    drift("/ckpt_h2", Seq(docs.drop(25)))
+    replayEpoch0(hist)
+    assert(canon(EventStreams.driftHistogramsFromIncrements(spark, hist)) === canon(whole(docs)),
+      "a replay after compaction inflated the histograms")
+  }
 }
