@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (tools/check_oracle.py), and
+  * verify_failures.json, each query that threw mapped to its exception
+  * class and message (`{}` when none did). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -21,23 +23,30 @@ object Verify {
     // SPARK_GRAFT_ONLY=comma,list restricts the dump for local iteration
     // (same contract as Bench); the driver sets nothing and dumps all.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
+    val failed = scala.collection.mutable.ListBuffer.empty[(String, Throwable)]
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        failed += name
+        failed += name -> e
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // A failed query writes no result dir and the oracle compare skips it
-    // silently (a registered query simply loses its correctness row) — make
-    // the hole loud on BOTH streams, not just per-query on stderr.
+    // A failed query writes no result dir, so the compare cannot see it by
+    // its parquet: the failure record names it (tools/check_oracle.py
+    // counts each entry as a failure), and the hole is loud on BOTH
+    // streams, not just per-query on stderr.
+    val record = failed.sortBy(_._1).map { case (name, e) =>
+      s"""${Json.quote(name)}: {"class": ${Json.quote(e.getClass.getName)}, """ +
+        s""""message": ${Json.quote(String.valueOf(e.getMessage))}}"""
+    }
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"),
+      record.mkString("{", ",\n", "}\n"))
     if (failed.nonEmpty) {
       val msg = s"[verify] ${failed.size} queries FAILED (no result dir, no " +
-        s"correctness row): ${failed.sorted.mkString(", ")}"
+        s"correctness row): ${failed.map(_._1).sorted.mkString(", ")}"
       System.err.println(msg)
       println(msg)
     }

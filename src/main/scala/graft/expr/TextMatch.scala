@@ -59,12 +59,24 @@ object TextMatch {
       array_sort(array_distinct(
         filter(split(normalized(c), " "), t => length(t) > 0))), " ")
 
+  /** DuckDB restatement of [[analyze]] over a text column: its token list
+    * (the `[a-z0-9]+` runs of the lowercased text, in order). Every oracle
+    * that tokenizes spells the analyzer through this.
+    */
+  def tokensSql(column: String): String =
+    s"regexp_extract_all(lower($column), '[a-z0-9]+')"
+
   /** DuckDB restatement of [[fingerprint]] — same analysis, same
     * distinct-sort-join pipeline.
     */
   def fingerprintSql(column: String): String =
-    s"array_to_string(list_sort(list_distinct(list_filter(" +
-      s"regexp_split_to_array(lower($column), '[^a-z0-9]+'), t -> len(t) > 0))), ' ')"
+    s"array_to_string(list_sort(list_distinct(${tokensSql(column)})), ' ')"
+
+  /** DuckDB restatement of [[Analyzer.padded]]: the analyzed text with a
+    * space on each side, so a whole-token needle is a plain `position`.
+    */
+  private def paddedSql(column: String): String =
+    s"' ' || regexp_replace(lower($column), '[^a-z0-9]+', ' ', 'g') || ' '"
 
   /** Whole-token match — ES `match` on an analyzed field with a single-term
     * query (the typeahead's filtered suggest path, `views.js:378-412`).
@@ -83,7 +95,7 @@ object TextMatch {
     if (toks.isEmpty) "TRUE"
     else {
       val needle = (" " + toks.mkString(" ")).replace("'", "''")
-      s"position('$needle' in ' ' || regexp_replace(lower($column), '[^a-z0-9]+', ' ', 'g') || ' ') > 0"
+      s"position('$needle' in ${paddedSql(column)}) > 0"
     }
   }
 
@@ -196,7 +208,7 @@ object TextMatch {
     if (toks.isEmpty) "TRUE"
     else {
       val needle = (" " + toks.mkString(" ") + " ").replace("'", "''")
-      s"position('$needle' in ' ' || regexp_replace(lower($column), '[^a-z0-9]+', ' ', 'g') || ' ') > 0"
+      s"position('$needle' in ${paddedSql(column)}) > 0"
     }
   }
 

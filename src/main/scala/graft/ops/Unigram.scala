@@ -266,8 +266,7 @@ object Unigram {
       maxPieceLen: Int = 4,
       minCount: Int = 2,
       maxWordLen: Int = 32): String = {
-    val toks = s"list_filter(str_split_regex(trim(regexp_replace(lower($textExpr), " +
-      s"'[^a-z0-9]+', ' ', 'g')), ' +'), x -> x <> '')"
+    val toks = TextMatch.tokensSql(textExpr)
     // a<i> references a<i-1> twice (directly and through dp<i>), so the
     // accumulators are MATERIALIZED — without it DuckDB inlines the chain
     // into a 2^maxWordLen-way plan explosion.

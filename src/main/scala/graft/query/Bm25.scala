@@ -704,10 +704,8 @@ object Bm25 {
     val terms = queryTerms(query)
     require(terms.nonEmpty, s"crossFields oracle: query '$query' has no analyzable terms")
     val nf = fieldExprBoosts.size
-    def toks(expr: String): String =
-      s"list_filter(str_split_regex(trim(regexp_replace(lower($expr), '[^a-z0-9]+', ' ', 'g')), ' +'), x -> x <> '')"
     val tokCols = fieldExprBoosts.zipWithIndex.map { case ((e, _), fi) =>
-      s"${toks(e)} AS toks$fi"
+      s"${TextMatch.tokensSql(e)} AS toks$fi"
     }.mkString(",\n    ")
     val tfCols = (for { fi <- 0 until nf; (t, ti) <- terms.zipWithIndex } yield
       s"len(list_filter(toks$fi, x -> x = '$t'))::BIGINT AS tf${ti}_$fi"
@@ -793,8 +791,7 @@ object Bm25 {
     }.mkString(",\n    ")
     s"""d AS (
        |  SELECT $idCol,
-       |    list_filter(str_split_regex(trim(regexp_replace(lower($textExpr), '[^a-z0-9]+', ' ', 'g')), ' +'),
-       |      x -> x <> '') AS toks
+       |    ${TextMatch.tokensSql(textExpr)} AS toks
        |  FROM $table
        |), base AS (
        |  SELECT $idCol, len(toks)::BIGINT AS dl,

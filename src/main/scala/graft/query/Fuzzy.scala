@@ -276,8 +276,7 @@ object Fuzzy {
       minCount: Int = 2, editPenaltyBits: Long = 3L): String = {
     val terms = TextMatch.analyze(input)
     require(terms.nonEmpty && terms.size <= 5)
-    val toks = s"list_filter(str_split_regex(trim(regexp_replace(lower($textExpr), " +
-      s"'[^a-z0-9]+', ' ', 'g')), ' +'), x -> x <> '')"
+    val toks = TextMatch.tokensSql(textExpr)
     val candCtes = terms.zipWithIndex.map { case (t, i) =>
       s"""cand$i AS (
          |  SELECT term, dist FROM (

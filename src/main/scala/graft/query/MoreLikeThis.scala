@@ -117,8 +117,7 @@ object MoreLikeThis {
     val idfOf = (df: String) => s"ln(1.0 + (st.n - $df + 0.5) / ($df + 0.5))"
     s"""WITH d AS (
        |  SELECT $idCol,
-       |    list_filter(str_split_regex(trim(regexp_replace(lower($textExpr), '[^a-z0-9]+', ' ', 'g')), ' +'),
-       |      x -> x <> '') AS toks
+       |    ${TextMatch.tokensSql(textExpr)} AS toks
        |  FROM $table
        |), tf AS (
        |  SELECT $idCol, t AS term, count(*)::BIGINT AS tf
@@ -350,9 +349,6 @@ object MoreLikeThis {
 
   private def sqlQuote(s: String): String = s.replace("'", "''")
 
-  private def toksSql(expr: String): String =
-    s"list_filter(str_split_regex(trim(regexp_replace(lower($expr), '[^a-z0-9]+', ' ', 'g')), ' +'), x -> x <> '')"
-
   /** Shared CTE prefix: like-text candidates, corpus tokens, per-candidate
     * DF, and the ranked selection.
     */
@@ -361,14 +357,14 @@ object MoreLikeThis {
       p: MltParams): String = {
     val maxDf = if (p.maxDocFreq == Int.MaxValue) "" else s" AND df <= ${p.maxDocFreq}"
     s"""lk AS (
-       |  SELECT unnest(${toksSql(s"'${sqlQuote(likeText)}'")}) AS term
+       |  SELECT unnest(${TextMatch.tokensSql(s"'${sqlQuote(likeText)}'")}) AS term
        |), cand AS (
        |  SELECT term, count(*)::BIGINT AS tf FROM lk
        |  GROUP BY term
        |  HAVING count(*) >= ${p.minTermFreq}
        |    AND len(term) >= ${p.minWordLength} AND len(term) <= ${p.maxWordLength}
        |), d AS (
-       |  SELECT $idCol, ${toksSql(textExpr)} AS toks FROM $table
+       |  SELECT $idCol, ${TextMatch.tokensSql(textExpr)} AS toks FROM $table
        |), nn AS (
        |  SELECT count(*)::BIGINT AS n, sum(len(toks))::BIGINT AS sumdl FROM d
        |), dt AS (

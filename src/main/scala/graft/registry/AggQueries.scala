@@ -20,49 +20,33 @@ object AggQueries extends Family("serving") {
       |  THEN 1 ELSE 0 END), 0)::BIGINT AS missing_count
       |FROM events""".stripMargin
 
+  /** Named event-count buckets as one relation `(bucket, count)`: per
+    * `(label, predicate)`, the events where the predicate holds.
+    */
+  private def eventBucketsSql(buckets: (String, String)*): String =
+    buckets.map { case (label, pred) =>
+      s"SELECT '$label' AS bucket,\n    sum(CASE WHEN $pred THEN 1 ELSE 0 END)::BIGINT AS count\n  FROM events"
+    }.mkString("SELECT * FROM (\n  ", "\n  UNION ALL ", "\n)")
+
+  private val purchasePred = "event_type IN ('purchase')"
+  private val bigValuePred = "value >= 100.0 AND value <= 10000.0"
+  private val clickPred = "event_type IN ('click')"
+
   /** Named widget-filter buckets — shared by the scan form and the
     * (event_type, value)-rollup serving twin.
     */
   private val filtersAggOracleSql: String =
-    """SELECT * FROM (
-      |  SELECT 'purchases' AS bucket,
-      |    sum(CASE WHEN event_type IN ('purchase') THEN 1 ELSE 0 END)::BIGINT AS count
-      |  FROM events
-      |  UNION ALL SELECT 'big_value',
-      |    sum(CASE WHEN value >= 100.0 AND value <= 10000.0 THEN 1 ELSE 0 END)::BIGINT
-      |  FROM events
-      |  UNION ALL SELECT 'clicks_or_views',
-      |    sum(CASE WHEN event_type IN ('click', 'view') THEN 1 ELSE 0 END)::BIGINT
-      |  FROM events
-      |) ORDER BY bucket""".stripMargin
+    eventBucketsSql("purchases" -> purchasePred, "big_value" -> bigValuePred,
+      "clicks_or_views" -> "event_type IN ('click', 'view')") + " ORDER BY bucket"
 
   /** Adjacency singles + pairwise intersections (zero cells omitted) —
     * shared by the scan form and the rollup serving twin.
     */
   private val adjacencyMatrixOracleSql: String =
-    """SELECT * FROM (
-        |  SELECT 'purchases' AS bucket,
-        |    sum(CASE WHEN event_type IN ('purchase') THEN 1 ELSE 0 END)::BIGINT AS count
-        |  FROM events
-        |  UNION ALL SELECT 'big_value',
-        |    sum(CASE WHEN value >= 100.0 AND value <= 10000.0 THEN 1 ELSE 0 END)::BIGINT
-        |  FROM events
-        |  UNION ALL SELECT 'clicks',
-        |    sum(CASE WHEN event_type IN ('click') THEN 1 ELSE 0 END)::BIGINT
-        |  FROM events
-        |  UNION ALL SELECT 'purchases&big_value',
-        |    sum(CASE WHEN event_type IN ('purchase')
-        |      AND value >= 100.0 AND value <= 10000.0 THEN 1 ELSE 0 END)::BIGINT
-        |  FROM events
-        |  UNION ALL SELECT 'purchases&clicks',
-        |    sum(CASE WHEN event_type IN ('purchase')
-        |      AND event_type IN ('click') THEN 1 ELSE 0 END)::BIGINT
-        |  FROM events
-        |  UNION ALL SELECT 'big_value&clicks',
-        |    sum(CASE WHEN value >= 100.0 AND value <= 10000.0
-        |      AND event_type IN ('click') THEN 1 ELSE 0 END)::BIGINT
-        |  FROM events
-        |) WHERE count > 0 ORDER BY bucket""".stripMargin
+    eventBucketsSql("purchases" -> purchasePred, "big_value" -> bigValuePred, "clicks" -> clickPred,
+      "purchases&big_value" -> s"$purchasePred AND $bigValuePred",
+      "purchases&clicks" -> s"$purchasePred AND $clickPred",
+      "big_value&clicks" -> s"$bigValuePred AND $clickPred") + " WHERE count > 0 ORDER BY bucket"
 
   /** The ES range-agg buckets both the query and its oracle are built
     * from, so bucket keys stay literally shared.
@@ -142,17 +126,7 @@ object AggQueries extends Family("serving") {
 
   /** Micro-degree centroid per segment, shared scan/sum-rollup. */
   private val geoCentroidOracleSql: String =
-    s"""WITH pts AS (
-      |  -- two IEEE pins the micro-degree floor needs that the coarse
-      |  -- geohash oracles never noticed: (a) 0.001 must be DOUBLE (as a
-      |  -- DECIMAL literal the addition stays exact and the floor flips
-      |  -- vs the engine's double add); (b) pmod on DOUBLES is ONE fmod
-      |  -- + conditional add — the ((x%m)+m)%m double-mod form re-rounds
-      |  -- r+m and loses the low bits of small remainders
-      |  SELECT c_mktsegment,
-      |    $customerLatLonSql
-      |  FROM customer
-      |), m AS (
+    s"""WITH ${customerPointsCteSql("c_mktsegment")}, m AS (
       |  SELECT c_mktsegment, count(*)::BIGINT AS count,
       |    sum(floor(lat * 1000000)::BIGINT)::BIGINT AS slat,
       |    sum(floor(lon * 1000000)::BIGINT)::BIGINT AS slon
@@ -329,15 +303,15 @@ object AggQueries extends Family("serving") {
     * scan/rollup-served-series.
     */
   private val changePointOracleSql: String =
-    dailyChangePointCtesSql + """), y AS (
-      |  SELECT strftime(nxt, '%Y-%m-%d') AS change_point,
-      |    abs(s1 * (n - k) - (tot - s1) * k)::DOUBLE /
-      |      (k * (n - k))::DOUBLE AS delta,
-      |    b
-      |  FROM x WHERE k < n
-      |)
-      |SELECT change_point, delta FROM y
-      |ORDER BY delta DESC, b LIMIT 1""".stripMargin
+    s"""WITH $dailyChangePointCtesSql, y AS (
+       |  SELECT strftime(nxt, '%Y-%m-%d') AS change_point,
+       |    abs(s1 * (n - k) - (tot - s1) * k)::DOUBLE /
+       |      (k * (n - k))::DOUBLE AS delta,
+       |    b
+       |  FROM x WHERE k < n
+       |)
+       |SELECT change_point, delta FROM y
+       |ORDER BY delta DESC, b LIMIT 1""".stripMargin
 
   /** One corpus-scan date histogram, shared by the scan form and the
     * hour-grain-rollup serving twin (coarsening commutes with the rollup).
@@ -385,11 +359,7 @@ object AggQueries extends Family("serving") {
       |ORDER BY count DESC, e.event_type LIMIT 10""".stripMargin
 
   private val geoBoundsOracleSql: String =
-    s"""WITH pts AS (
-        |  SELECT c_mktsegment,
-        |    $customerLatLonSql
-        |  FROM customer
-        |)
+    s"""WITH ${customerPointsCteSql("c_mktsegment")}
         |SELECT c_mktsegment, count(*)::BIGINT AS count,
         |  max(lat) AS top, min(lon) AS "left",
         |  min(lat) AS bottom, max(lon) AS "right"
@@ -444,26 +414,29 @@ object AggQueries extends Family("serving") {
         |     / (nb - 1.0)) AS df
         |FROM s""".stripMargin
 
-  /** The zoom-5 geotile grid: the g_geo_centroid pts pins + the
-    * Aggs.geoTileXY Mercator tree restated operator-for-operator
-    * (π/180 as ONE shared double — neither engine's radians(), whose
-    * trees differ).
+  /** Each customer point's web-mercator tile at zoom `z`: the
+    * [[customerPointsCteSql]] pins + the Aggs.geoTileXY Mercator tree
+    * restated operator-for-operator (π/180 as ONE shared double — neither
+    * engine's radians(), whose trees differ), as CTEs `pts` and
+    * `idx(tx, ty)`.
     */
+  private def geoTileIdxCtesSql(z: Int): String = {
+    val n = 1 << z
+    s"""${customerPointsCteSql()}, idx AS (
+       |  SELECT
+       |    least(${n - 1}, greatest(0,
+       |      floor((lon + 180.0) / 360.0 * $n)::BIGINT)) AS tx,
+       |    least(${n - 1}, greatest(0,
+       |      floor((1.0 - ln(tan(lat * (pi() / 180.0))
+       |                      + 1.0 / cos(lat * (pi() / 180.0))) / pi())
+       |            / 2.0 * $n)::BIGINT)) AS ty
+       |  FROM pts WHERE lat IS NOT NULL AND lon IS NOT NULL
+       |)""".stripMargin
+  }
+
+  /** The zoom-5 geotile grid, top 10 tiles by count. */
   private val geoTileGrid5OracleSql: String =
-    s"""WITH pts AS (
-      |  SELECT
-      |    $customerLatLonSql
-      |  FROM customer
-      |), idx AS (
-      |  SELECT
-      |    least(31, greatest(0,
-      |      floor((lon + 180.0) / 360.0 * 32)::BIGINT)) AS tx,
-      |    least(31, greatest(0,
-      |      floor((1.0 - ln(tan(lat * (pi() / 180.0))
-      |                      + 1.0 / cos(lat * (pi() / 180.0))) / pi())
-      |            / 2.0 * 32)::BIGINT)) AS ty
-      |  FROM pts WHERE lat IS NOT NULL AND lon IS NOT NULL
-      |)
+    s"""WITH ${geoTileIdxCtesSql(5)}
       |SELECT '5/' || tx || '/' || ty AS tile, count(*)::BIGINT AS count
       |FROM idx GROUP BY 1 ORDER BY count DESC, tile LIMIT 10""".stripMargin
 
@@ -699,15 +672,15 @@ object AggQueries extends Family("serving") {
       // viewport becomes lat/lon range predicates that push into the scan.
       val pts = customerPoints(dir)
       Aggs.geohashGridDrilldown(pts, "lat", "lon", cell = "9", targetCells = 2000)
-    }, Some(
-      """WITH pts AS (
+    }, Some(geohash3CellsSql(
+      """pts AS (
         |  SELECT ((c_acctbal % 180) + 180) % 180 - 90 + 0.001 AS lat,
         |         ((c_custkey % 360) + 360) % 360 - 180 + 0.001 AS lon
         |  FROM customer
         |), zoomed AS (
         |  SELECT * FROM pts
         |  WHERE lat >= 0 AND lat < 45 AND lon >= -135 AND lon < -90
-        |""".stripMargin + geohash3CellsSql)),
+        |)""".stripMargin))),
 
     // The rollup-served precision-2 grid must equal the corpus scan —
     // same SQL by construction (the serving layer is invisible to results).
@@ -1010,7 +983,8 @@ object AggQueries extends Family("serving") {
       s"""WITH base AS (
          |  SELECT list_distinct($duckToks) AS terms, fg FROM (
          |    SELECT DISTINCT text, (lang = 'zh') AS fg FROM documents)
-         |""".stripMargin + significantCountCtesSql + jlhScoreSql(15))),
+         |), $significantCountCtesSql
+         |${jlhScoreSql(15)}""".stripMargin)),
 
     QueryCase("g_diversified_sampler", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -1330,11 +1304,7 @@ object AggQueries extends Family("serving") {
       Aggs.geoLine(pts, "c_mktsegment", "lat", "lon", "c_custkey",
         tiebreak = col("c_custkey"), size = 20)
     }, Some(
-      s"""WITH pts AS (
-        |  SELECT c_mktsegment, c_custkey,
-        |    $customerLatLonSql
-        |  FROM customer
-        |), r AS (
+      s"""WITH ${customerPointsCteSql("c_mktsegment", "c_custkey")}, r AS (
         |  SELECT c_mktsegment,
         |    floor(lon * 1000000)::BIGINT AS lon6,
         |    floor(lat * 1000000)::BIGINT AS lat6,
@@ -1629,20 +1599,7 @@ object AggQueries extends Family("serving") {
       query.PreAgg.geoTileGridDrilldown(pre, ingestZoom = 8,
         cellZ = 1, cellX = 1, cellY = 0, z = 4)
     }, Some(
-      s"""WITH pts AS (
-        |  SELECT
-        |    $customerLatLonSql
-        |  FROM customer
-        |), idx AS (
-        |  SELECT
-        |    least(15, greatest(0,
-        |      floor((lon + 180.0) / 360.0 * 16)::BIGINT)) AS tx,
-        |    least(15, greatest(0,
-        |      floor((1.0 - ln(tan(lat * (pi() / 180.0))
-        |                      + 1.0 / cos(lat * (pi() / 180.0))) / pi())
-        |            / 2.0 * 16)::BIGINT)) AS ty
-        |  FROM pts WHERE lat IS NOT NULL AND lon IS NOT NULL
-        |)
+      s"""WITH ${geoTileIdxCtesSql(4)}
         |SELECT '4/' || tx || '/' || ty AS tile, count(*)::BIGINT AS count
         |FROM idx WHERE (tx >> 3) = 1 AND (ty >> 3) = 0
         |GROUP BY 1 ORDER BY count DESC, tile LIMIT 10""".stripMargin)),
@@ -1704,11 +1661,7 @@ object AggQueries extends Family("serving") {
         Seq((None, Some(2000.0)), (Some(2000.0), Some(5000.0)),
           (Some(5000.0), Some(10000.0)), (Some(10000.0), None)))
     }, Some(
-      s"""WITH pts AS (
-        |  SELECT
-        |    $customerLatLonSql
-        |  FROM customer
-        |), d AS (
+      s"""WITH ${customerPointsCteSql()}, d AS (
         |  SELECT (2.0 * 6371.0088) * asin(sqrt(
         |    sin(((lat - 0.0) * (pi() / 180.0)) / 2.0)
         |      * sin(((lat - 0.0) * (pi() / 180.0)) / 2.0)

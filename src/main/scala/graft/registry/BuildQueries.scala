@@ -67,8 +67,7 @@ object BuildQueries extends Family("etl") {
       ops.Datasheet.corpusReport(load(dir, "documents"),
         "text", "lang", "source")
     }, Some({
-      val tokCount =
-        s"len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> len(x) > 0))"
+      val tokCount = s"len($duckToks)"
       s"""WITH base AS (
          |  SELECT count(*)::BIGINT AS n, sum($tokCount)::BIGINT AS t
          |  FROM documents

@@ -28,7 +28,7 @@ object DedupQueries extends Family("pipeline") {
     * and the prefix-filtered pair joins must agree with it.
     */
   private def ngramJaccardOracleSql(threshold: String): String =
-    wordBigramSetsCtesSql + s"""), pairs AS (
+    s"""WITH $wordBigramSetsCtesSql, pairs AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        |    len(list_intersect(a.sh, b.sh))::DOUBLE
        |      / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
@@ -57,32 +57,7 @@ object DedupQueries extends Family("pipeline") {
           docs.where(pmod(col("doc_id"), lit(2)) === 1),
           "doc_id", "text", counts, minLen = 8)
         .orderBy("doc_id")
-    }, Some(
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |tok AS (
-         |  SELECT doc_id, i AS tp, toks[i] AS tok
-         |  FROM t, unnest(generate_series(1, len(toks))) u(i)
-         |  WHERE len(toks) > 0 AND (doc_id % 2) = 1
-         |), grams AS (
-         |  SELECT doc_id, i AS pos,
-         |    md5(array_to_string(toks[i : i + 7], ' ')) AS g
-         |  FROM t, unnest(generate_series(1, len(toks) - 7)) u(i)
-         |  WHERE len(toks) >= 8
-         |), dup AS (
-         |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-         |), covered AS (
-         |  SELECT DISTINCT grams.doc_id, pos + j AS tp
-         |  FROM grams JOIN dup USING (g),
-         |    unnest(generate_series(0, 7)) v(j)
-         |  WHERE (grams.doc_id % 2) = 1
-         |)
-         |SELECT tok.doc_id, count(*) AS n_tokens,
-         |  count(covered.tp) AS n_removed,
-         |  coalesce(string_agg(CASE WHEN covered.tp IS NULL THEN tok.tok END,
-         |    ' ' ORDER BY tok.tp), '') AS text
-         |FROM tok LEFT JOIN covered
-         |  ON tok.doc_id = covered.doc_id AND tok.tp = covered.tp
-         |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin)),
+    }, Some(duplicateSpanRemovalSql(minLen = 8, keep = "(doc_id % 2) = 1"))),
 
     // ===== Training-data ops: dedup =====
 
@@ -163,25 +138,9 @@ object DedupQueries extends Family("pipeline") {
         .orderBy("source")
     }, Some(
       s"""WITH ${portableMinhashCtesSql(k = 2, numHashes = 32, r = 2, threshold = 0.4,
-            from = "(SELECT * FROM documents WHERE doc_id < 500)")},
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |), reach AS (
-         |  -- transitive closure (recursive UNION dedupes, so it terminates)
-         |  WITH RECURSIVE r(a, b) AS (
-         |    SELECT a, b FROM edges
-         |    UNION
-         |    SELECT r.a, e.b FROM r JOIN edges e ON r.b = e.a
-         |  ) SELECT * FROM r
-         |), comp AS (
-         |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-         |)
-         |SELECT source, count(*) AS n_kept
-         |FROM (SELECT * FROM documents WHERE doc_id < 500) doc
-         |  LEFT JOIN comp ON doc.doc_id = comp.id
-         |WHERE comp.id IS NULL OR comp.component = doc.doc_id
-         |GROUP BY source ORDER BY source""".stripMargin)),
+            from = "(SELECT * FROM documents WHERE doc_id < 500)")}, $componentsCtesSql
+         |${keepPerComponentSql("(SELECT * FROM documents WHERE doc_id < 500) doc",
+              "doc.doc_id", "source", "n_kept")}""".stripMargin)),
 
     // Charikar votes over portable md5 hashes, sign bits reassembled,
     // pigeonhole chunk join, Hamming verify — every stage rerun in SQL.
@@ -389,28 +348,14 @@ object DedupQueries extends Family("pipeline") {
         .agg(count(lit(1)).as("n_kept"))
         .orderBy("source")
     }, Some(
-      winnowFingerprintCtesSql + s"""), pairs AS (
+      s"""WITH $winnowFingerprintCtesSql, pairs AS (
          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
          |  FROM f a, f b
          |  WHERE a.doc_id < b.doc_id
          |    AND len(list_intersect(a.fp, b.fp))::DOUBLE
          |          / least(len(a.fp), len(b.fp))::DOUBLE >= 0.5
-         |), edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |), reach AS (
-         |  WITH RECURSIVE r(a, b) AS (
-         |    SELECT a, b FROM edges
-         |    UNION
-         |    SELECT r.a, e.b FROM r JOIN edges e ON r.b = e.a
-         |  ) SELECT * FROM r
-         |), comp AS (
-         |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-         |)
-         |SELECT source, count(*) AS n_kept
-         |FROM documents doc LEFT JOIN comp ON doc.doc_id = comp.id
-         |WHERE comp.id IS NULL OR comp.component = doc.doc_id
-         |GROUP BY source ORDER BY source""".stripMargin)),
+         |), $componentsCtesSql
+         |${keepPerComponentSql("documents doc", "doc.doc_id", "source", "n_kept")}""".stripMargin)),
 
     // Winnowing restated: portable md5 gram hashes, window minima compared
     // by VALUE (list_min over each slice — tie-handling moot), sorted
@@ -428,7 +373,7 @@ object DedupQueries extends Family("pipeline") {
           tau = 0.5, shingleK = 3, window = 4)
         .transform(pairSorted)
     }, Some(
-      winnowFingerprintCtesSql + s"""), pairs AS (
+      s"""WITH $winnowFingerprintCtesSql, pairs AS (
          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |    len(list_intersect(a.fp, b.fp))::DOUBLE
          |      / least(len(a.fp), len(b.fp))::DOUBLE AS containment
@@ -530,14 +475,15 @@ object DedupQueries extends Family("pipeline") {
         Similarity.lshBucketSql("v", dim = 64, numPlanes = 4, seed = 42L + t) + s" AS b$t")
       val candPred = tables.map(t =>
         s"bit_count(xor(x.b$t, y.b$t)) <= 1").mkString("(", " OR ", ")")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |b AS (SELECT vec_id, v, ${bucketCols.mkString(", ")} FROM e),
-         |pairs AS (
-         |  SELECT x.vec_id AS id_a, y.vec_id AS id_b
-         |  FROM b x, b y
-         |  WHERE x.vec_id < y.vec_id AND $candPred
-         |    AND list_inner_product(x.v, y.v)
-         |      / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.42
-         |""".stripMargin + keepPerLabelSql
+      keepPerLabelSql(
+        s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+           |b AS (SELECT vec_id, v, ${bucketCols.mkString(", ")} FROM e),
+           |pairs AS (
+           |  SELECT x.vec_id AS id_a, y.vec_id AS id_b
+           |  FROM b x, b y
+           |  WHERE x.vec_id < y.vec_id AND $candPred
+           |    AND list_inner_product(x.v, y.v)
+           |      / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.42
+           |)""".stripMargin)
     })))
 }

@@ -15,14 +15,13 @@ object EsqlQueries extends Family("etl") {
     * `b1`/`b2`, the top-10 English documents by length and by doc_id mod
     * 97. Callers go on with the fusion CTE.
     */
-  private val forkBranchesSql: String =
-    """WITH b1 AS (
+  private val forkBranchesCtesSql: String =
+    """b1 AS (
       |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS s FROM documents
       |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10),
       |b2 AS (
       |  SELECT doc_id, CAST(doc_id % 97 AS DOUBLE) AS s FROM documents
-      |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10),
-      |""".stripMargin
+      |  WHERE lang = 'en' ORDER BY s DESC, doc_id LIMIT 10)""".stripMargin
 
   val cases: Seq[QueryCase] = Seq(
     // ===== ES|QL front-end (query/Esql.scala): the piped query language
@@ -292,7 +291,7 @@ object EsqlQueries extends Family("etl") {
           | KEEP day, type, pvalue""",
         t => if (t == "events") loadEvents(dir) else load(dir, t))
     }, Some(
-      dailyChangePointCtesSql + """), y AS (
+      s"""WITH $dailyChangePointCtesSql, y AS (
         |  SELECT strftime(nxt, '%Y-%m-%d') AS day,
         |    abs(s1 * (n - k) - (tot - s1) * k)::DOUBLE /
         |      (k * (n - k))::DOUBLE AS pvalue,
@@ -317,7 +316,7 @@ object EsqlQueries extends Family("etl") {
           | SORT _score DESC, doc_id | LIMIT 15""",
         t => load(dir, t))
     }, Some(
-      forkBranchesSql + """u AS (
+      s"""WITH $forkBranchesCtesSql, u AS (
         |  SELECT doc_id, 1.0 / (60 + row_number() OVER (ORDER BY s DESC, doc_id)) AS c FROM b1
         |  UNION ALL
         |  SELECT doc_id, 1.0 / (60 + row_number() OVER (ORDER BY s DESC, doc_id)) AS c FROM b2)
@@ -471,7 +470,7 @@ object EsqlQueries extends Family("etl") {
           | SORT _score DESC, doc_id | LIMIT 15""",
         t => load(dir, t))
     }, Some(
-      forkBranchesSql + """u AS (
+      s"""WITH $forkBranchesCtesSql, u AS (
         |  SELECT doc_id,
         |    (CASE WHEN mx = mn THEN 1.0 ELSE (s - mn) / (mx - mn) END) * 0.7 AS c
         |  FROM (SELECT doc_id, s, min(s) OVER () AS mn, max(s) OVER () AS mx FROM b1)
@@ -761,7 +760,7 @@ object EsqlQueries extends Family("etl") {
         |  FROM events GROUP BY 1, 2, 3
         |)
         |SELECT max(mx) AS peak,
-        |  CAST(round(CAST(avg(CAST(mn AS DECIMAL(18,4))) AS DECIMAL(28,8)), 4)
+        |  CAST(round(CAST(avg(CAST(mn AS DECIMAL(38,4))) AS DECIMAL(28,8)), 4)
         |       AS DOUBLE) AS floor_avg,
         |  max(c) AS active, event_type, b
         |FROM i GROUP BY event_type, b ORDER BY event_type, b LIMIT 40""".stripMargin)),

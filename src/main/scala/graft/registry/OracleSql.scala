@@ -4,8 +4,26 @@ package registry
 import graft.etl.CityRecipes
 import SparkEntry._
 
-/** DuckDB SQL fragments shared by the oracles of more than one family. */
+/** DuckDB SQL fragments shared by the oracles of more than one family.
+  *
+  * One convention for every oracle fragment, here and in the families: a
+  * helper named `…Cte(s)`/`…Cte(s)Sql` returns complete, closed
+  * `name AS (...)` items joined by `,` — no `WITH`, no leading `)` or `,`,
+  * nothing left open — and its caller writes `WITH` and joins the items
+  * (its own among them) with `,`. Any other fragment is an expression, a
+  * relation, a final `SELECT` over CTEs its caller declared, or a whole
+  * statement.
+  */
 object OracleSql {
+
+  /** Analyzer tokens of `documents.text` in DuckDB. */
+  private[registry] val duckToks = graft.expr.TextMatch.tokensSql("text")
+
+  /** DuckDB twin of [[graft.ops.TextAnalysis.tokenCount]] over column `c`:
+    * its whitespace-token count, 0 for blank text. Parenthesized.
+    */
+  private[registry] def wsTokenCountSql(c: String = "text"): String =
+    s"(CASE WHEN len(trim($c)) = 0 THEN 0 ELSE len(regexp_split_to_array(trim($c), '\\s+')) END)"
 
   /** SQL CASE mirroring [[graft.etl.Harmonizer.mapValues]]'s `when` chain
     * (unmapped values pass through).
@@ -14,6 +32,27 @@ object OracleSql {
     mapping.map { case (from, to) =>
       s"WHEN '${from.replace("'", "''")}' THEN '${to.replace("'", "''")}'"
     }.mkString(s"CASE $column ", " ", s" ELSE $column END")
+
+  /** The tail every city relation shares: CTE `asm` assembling the
+    * timestamp `dt` from the `y, mo, d, h, mi` strings of `from`, then the
+    * published row — `cols`, the integer date parts, the datetime string,
+    * the day name and the `city` tag. The caller opens the WITH list with
+    * its own CTEs; this adds `asm` and the final `SELECT`.
+    */
+  private def cityPublishedSql(ctes: String, from: String, cols: String, city: String): String =
+    s"""WITH $ctes, asm AS (
+       |  SELECT *, TRY_CAST(concat_ws('-', y, mo, d) ||
+       |    CASE WHEN h <> '' AND mi <> '' THEN ' ' || h || ':' || mi || ':00'
+       |         ELSE '' END AS TIMESTAMP) AS dt
+       |  FROM $from
+       |)
+       |SELECT $cols,
+       |  TRY_CAST(y AS INT) AS year, TRY_CAST(mo AS INT) AS month,
+       |  TRY_CAST(d AS INT) AS day, TRY_CAST(h AS INT) AS hour,
+       |  TRY_CAST(mi AS INT) AS minute,
+       |  strftime(dt, '%Y-%m-%d %H:%M:%S') AS datetime,
+       |  dayname(dt) AS dayofweek, '$city' AS city
+       |FROM asm""".stripMargin
 
   /** DuckDB relation producing one city's harmonized (published) rows —
     * the WITH-chain shared by the `recipe_harmonize_*` oracles and the
@@ -24,153 +63,120 @@ object OracleSql {
   private[registry] def cityHarmonizedRelationSql(city: String): String = city match {
     case "baltimore" =>
       val recode = recodeCase("\"Description\"", CityRecipes.baltimoreDescr)
-      s"""WITH kept AS (
-         |  SELECT *, regexp_replace("Location 1", '[\\(\\)\\s]', '', 'g') AS geolocation
-         |  FROM read_csv('${cityCsv("Baltimore")}', all_varchar=true)
-         |  WHERE length(regexp_replace("Location 1", '[\\(\\)\\s]', '', 'g')) > 0
-         |), parts AS (
-         |  SELECT "CrimeCode" AS crimecode, $recode AS description,
-         |    "Description" AS description_orig, geolocation,
-         |    regexp_extract("CrimeDate", '(\\d+)/(\\d+)/(\\d+)', 1) AS mo,
-         |    regexp_extract("CrimeDate", '(\\d+)/(\\d+)/(\\d+)', 2) AS d,
-         |    regexp_extract("CrimeDate", '(\\d+)/(\\d+)/(\\d+)', 3) AS y,
-         |    regexp_replace(concat(regexp_extract("CrimeTime", '(\\d+):(\\d+):(\\d+)', 1),
-         |      regexp_extract("CrimeTime", '^(\\d\\d)(\\d\\d)$$', 1)), '^24$$', '00') AS h,
-         |    concat(regexp_extract("CrimeTime", '(\\d+):(\\d+):(\\d+)', 2),
-         |      regexp_extract("CrimeTime", '^(\\d\\d)(\\d\\d)$$', 2)) AS mi
-         |  FROM kept
-         |), asm AS (
-         |  SELECT *, TRY_CAST(concat_ws('-', y, mo, d) ||
-         |    CASE WHEN h <> '' AND mi <> '' THEN ' ' || h || ':' || mi || ':00'
-         |         ELSE '' END AS TIMESTAMP) AS dt
-         |  FROM parts
-         |)
-         |SELECT crimecode, description, description_orig, geolocation,
-         |  TRY_CAST(y AS INT) AS year, TRY_CAST(mo AS INT) AS month,
-         |  TRY_CAST(d AS INT) AS day, TRY_CAST(h AS INT) AS hour,
-         |  TRY_CAST(mi AS INT) AS minute,
-         |  strftime(dt, '%Y-%m-%d %H:%M:%S') AS datetime,
-         |  dayname(dt) AS dayofweek, 'Baltimore' AS city
-         |FROM asm""".stripMargin
+      cityPublishedSql(
+        s"""kept AS (
+           |  SELECT *, regexp_replace("Location 1", '[\\(\\)\\s]', '', 'g') AS geolocation
+           |  FROM read_csv('${cityCsv("Baltimore")}', all_varchar=true)
+           |  WHERE length(regexp_replace("Location 1", '[\\(\\)\\s]', '', 'g')) > 0
+           |), parts AS (
+           |  SELECT "CrimeCode" AS crimecode, $recode AS description,
+           |    "Description" AS description_orig, geolocation,
+           |    regexp_extract("CrimeDate", '(\\d+)/(\\d+)/(\\d+)', 1) AS mo,
+           |    regexp_extract("CrimeDate", '(\\d+)/(\\d+)/(\\d+)', 2) AS d,
+           |    regexp_extract("CrimeDate", '(\\d+)/(\\d+)/(\\d+)', 3) AS y,
+           |    regexp_replace(concat(regexp_extract("CrimeTime", '(\\d+):(\\d+):(\\d+)', 1),
+           |      regexp_extract("CrimeTime", '^(\\d\\d)(\\d\\d)$$', 1)), '^24$$', '00') AS h,
+           |    concat(regexp_extract("CrimeTime", '(\\d+):(\\d+):(\\d+)', 2),
+           |      regexp_extract("CrimeTime", '^(\\d\\d)(\\d\\d)$$', 2)) AS mi
+           |  FROM kept
+           |)""".stripMargin,
+        "parts", "crimecode, description, description_orig, geolocation", "Baltimore")
 
     case "detroit" =>
       val recode = recodeCase("\"Offense Category\"", CityRecipes.detroitDescr)
       def dbl(c: String) =
         s"CASE WHEN regexp_matches($c, '^-?\\d+(\\.\\d+)?$$') THEN CAST($c AS DOUBLE) END"
-      s"""WITH kept AS (
-         |  SELECT * FROM read_csv('${cityCsv("Detroit")}', all_varchar=true)
-         |  WHERE length("Latitude") > 0 AND length("Longitude") > 0
-         |    AND ${dbl("\"Latitude\"")} > 0
-         |    AND ${dbl("\"Latitude\"")} < 99999
-         |    AND ${dbl("\"Longitude\"")} < 0
-         |), parts AS (
-         |  SELECT "Crime ID" AS crimeid, $recode AS description,
-         |    "Incident Address" AS location,
-         |    concat("Latitude", ',', "Longitude") AS geolocation,
-         |    regexp_extract("Incident Date & Time", '(\\d+)/(\\d+)/(\\d+)', 1) AS mo,
-         |    regexp_extract("Incident Date & Time", '(\\d+)/(\\d+)/(\\d+)', 2) AS d,
-         |    regexp_extract("Incident Date & Time", '(\\d+)/(\\d+)/(\\d+)', 3) AS y,
-         |    CASE WHEN regexp_matches("Hour of Day", '^-?\\d+$$')
-         |         THEN printf('%02d', CAST("Hour of Day" AS INT)) END AS h,
-         |    '00' AS mi
-         |  FROM kept
-         |), asm AS (
-         |  SELECT *, TRY_CAST(concat_ws('-', y, mo, d) ||
-         |    CASE WHEN h <> '' AND mi <> '' THEN ' ' || h || ':' || mi || ':00'
-         |         ELSE '' END AS TIMESTAMP) AS dt
-         |  FROM parts
-         |)
-         |SELECT crimeid, description, location, geolocation,
-         |  TRY_CAST(y AS INT) AS year, TRY_CAST(mo AS INT) AS month,
-         |  TRY_CAST(d AS INT) AS day, TRY_CAST(h AS INT) AS hour,
-         |  TRY_CAST(mi AS INT) AS minute,
-         |  strftime(dt, '%Y-%m-%d %H:%M:%S') AS datetime,
-         |  dayname(dt) AS dayofweek, 'Detroit' AS city
-         |FROM asm""".stripMargin
+      cityPublishedSql(
+        s"""kept AS (
+           |  SELECT * FROM read_csv('${cityCsv("Detroit")}', all_varchar=true)
+           |  WHERE length("Latitude") > 0 AND length("Longitude") > 0
+           |    AND ${dbl("\"Latitude\"")} > 0
+           |    AND ${dbl("\"Latitude\"")} < 99999
+           |    AND ${dbl("\"Longitude\"")} < 0
+           |), parts AS (
+           |  SELECT "Crime ID" AS crimeid, $recode AS description,
+           |    "Incident Address" AS location,
+           |    concat("Latitude", ',', "Longitude") AS geolocation,
+           |    regexp_extract("Incident Date & Time", '(\\d+)/(\\d+)/(\\d+)', 1) AS mo,
+           |    regexp_extract("Incident Date & Time", '(\\d+)/(\\d+)/(\\d+)', 2) AS d,
+           |    regexp_extract("Incident Date & Time", '(\\d+)/(\\d+)/(\\d+)', 3) AS y,
+           |    CASE WHEN regexp_matches("Hour of Day", '^-?\\d+$$')
+           |         THEN printf('%02d', CAST("Hour of Day" AS INT)) END AS h,
+           |    '00' AS mi
+           |  FROM kept
+           |)""".stripMargin,
+        "parts", "crimeid, description, location, geolocation", "Detroit")
 
     case "losangeles" =>
       val recode = recodeCase("\"CRIME_CATEGORY_DESCRIPTION\"", CityRecipes.losAngelesDescr)
       val rx = "(\\d+)/(\\d+)/(\\d+) (\\d+):(\\d+):(\\d+) (\\w\\w)"
-      s"""WITH kept AS (
-         |  SELECT * FROM read_csv('${cityCsv("LosAngeles")}', all_varchar=true)
-         |  WHERE length("LATITUDE") > 0 AND length("LONGITUDE") > 0
-         |    AND CASE WHEN regexp_matches("LATITUDE", '^-?\\d+(\\.\\d+)?$$')
-         |             THEN CAST("LATITUDE" AS DOUBLE) END > 0
-         |), parts AS (
-         |  SELECT "CRIME_IDENTIFIER" AS crime_identifier, $recode AS description,
-         |    TRY_CAST(CASE WHEN "GANG_RELATED" = 'Y' THEN '1'
-         |                  WHEN "GANG_RELATED" = 'N' THEN '0'
-         |                  ELSE "GANG_RELATED" END AS INT) AS gang_related,
-         |    concat("LATITUDE", ',', "LONGITUDE") AS geolocation,
-         |    regexp_extract("CRIME_DATE", '$rx', 1) AS mo,
-         |    regexp_extract("CRIME_DATE", '$rx', 2) AS d,
-         |    regexp_extract("CRIME_DATE", '$rx', 3) AS y,
-         |    regexp_replace(regexp_extract("CRIME_DATE", '$rx', 4), '^24$$', '00') AS h12,
-         |    regexp_extract("CRIME_DATE", '$rx', 5) AS mi,
-         |    regexp_extract("CRIME_DATE", '$rx', 7) AS ap
-         |  FROM kept
-         |), conv AS (
-         |  SELECT *, regexp_replace(
-         |    CASE WHEN ap = 'PM' AND TRY_CAST(h12 AS INT) <> 12
-         |           THEN (TRY_CAST(h12 AS INT) + 12)::VARCHAR
-         |         WHEN ap = 'AM' AND TRY_CAST(h12 AS INT) = 12 THEN '0'
-         |         ELSE h12 END, '^24$$', '00') AS h
-         |  FROM parts
-         |), asm AS (
-         |  SELECT *, TRY_CAST(concat_ws('-', y, mo, d) ||
-         |    CASE WHEN h <> '' AND mi <> '' THEN ' ' || h || ':' || mi || ':00'
-         |         ELSE '' END AS TIMESTAMP) AS dt
-         |  FROM conv
-         |)
-         |SELECT crime_identifier, description, gang_related, geolocation,
-         |  TRY_CAST(y AS INT) AS year, TRY_CAST(mo AS INT) AS month,
-         |  TRY_CAST(d AS INT) AS day, TRY_CAST(h AS INT) AS hour,
-         |  TRY_CAST(mi AS INT) AS minute,
-         |  strftime(dt, '%Y-%m-%d %H:%M:%S') AS datetime,
-         |  dayname(dt) AS dayofweek, 'LosAngeles' AS city
-         |FROM asm""".stripMargin
+      cityPublishedSql(
+        s"""kept AS (
+           |  SELECT * FROM read_csv('${cityCsv("LosAngeles")}', all_varchar=true)
+           |  WHERE length("LATITUDE") > 0 AND length("LONGITUDE") > 0
+           |    AND CASE WHEN regexp_matches("LATITUDE", '^-?\\d+(\\.\\d+)?$$')
+           |             THEN CAST("LATITUDE" AS DOUBLE) END > 0
+           |), parts AS (
+           |  SELECT "CRIME_IDENTIFIER" AS crime_identifier, $recode AS description,
+           |    TRY_CAST(CASE WHEN "GANG_RELATED" = 'Y' THEN '1'
+           |                  WHEN "GANG_RELATED" = 'N' THEN '0'
+           |                  ELSE "GANG_RELATED" END AS INT) AS gang_related,
+           |    concat("LATITUDE", ',', "LONGITUDE") AS geolocation,
+           |    regexp_extract("CRIME_DATE", '$rx', 1) AS mo,
+           |    regexp_extract("CRIME_DATE", '$rx', 2) AS d,
+           |    regexp_extract("CRIME_DATE", '$rx', 3) AS y,
+           |    regexp_replace(regexp_extract("CRIME_DATE", '$rx', 4), '^24$$', '00') AS h12,
+           |    regexp_extract("CRIME_DATE", '$rx', 5) AS mi,
+           |    regexp_extract("CRIME_DATE", '$rx', 7) AS ap
+           |  FROM kept
+           |), conv AS (
+           |  SELECT *, regexp_replace(
+           |    CASE WHEN ap = 'PM' AND TRY_CAST(h12 AS INT) <> 12
+           |           THEN (TRY_CAST(h12 AS INT) + 12)::VARCHAR
+           |         WHEN ap = 'AM' AND TRY_CAST(h12 AS INT) = 12 THEN '0'
+           |         ELSE h12 END, '^24$$', '00') AS h
+           |  FROM parts
+           |)""".stripMargin,
+        "conv", "crime_identifier, description, gang_related, geolocation", "LosAngeles")
   }
 
   /** The analyzer's token stream of `documents.text` in DuckDB, as CTE
     * `t(doc_id, lang, toks)` (lower-cased `[a-z0-9]+` runs, the engine's
     * ASCII analyzer), then one CTE per `(name, column, predicate)` holding
     * `column`, the 1-based positions of the tokens where `predicate`
-    * holds. The last CTE is left open: callers close it and go on.
+    * holds.
     */
   private[registry] def tokenPositionCtesSql(positions: (String, String, String)*): String =
-    """WITH t AS (
-      |  SELECT doc_id, lang,
-      |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-      |  FROM documents
-      |""".stripMargin + positions.map { case (name, column, predicate) =>
-      s"""), $name AS (
+    (s"""t AS (
+        |  SELECT doc_id, lang, $duckToks AS toks
+        |  FROM documents
+        |)""".stripMargin +: positions.map { case (name, column, predicate) =>
+      s"""$name AS (
          |  SELECT doc_id, u.i AS $column FROM t, unnest(range(1, len(toks)+1)) AS u(i)
          |  WHERE $predicate
-         |""".stripMargin
-    }.mkString
+         |)""".stripMargin
+    }).mkString(", ")
 
   /** The tf postings of `documents.text` in DuckDB: CTE `p(doc_id, term,
     * weight)`, the term frequency as DOUBLE, over the same token stream as
-    * [[tokenPositionCtesSql]]. Left open like it.
+    * [[tokenPositionCtesSql]].
     */
   private[registry] val tfPostingsCtesSql: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-      |  FROM documents
-      |), e AS (
-      |  SELECT doc_id, u.x AS term FROM t, unnest(toks) AS u(x)
-      |), p AS (
-      |  SELECT doc_id, term, count(*)::DOUBLE AS weight
-      |  FROM e GROUP BY doc_id, term
-      |""".stripMargin
+    s"""t AS (
+       |  SELECT doc_id, $duckToks AS toks
+       |  FROM documents
+       |), e AS (
+       |  SELECT doc_id, u.x AS term FROM t, unnest(toks) AS u(x)
+       |), p AS (
+       |  SELECT doc_id, term, count(*)::DOUBLE AS weight
+       |  FROM e GROUP BY doc_id, term
+       |)""".stripMargin
 
-  /** Closes a query-weight CTE `q(term, qw)` after [[tfPostingsCtesSql]]:
-    * the top 15 documents by Σ tf·qw, ties to the smaller doc_id.
+  /** Over [[tfPostingsCtesSql]] and a query-weight CTE `q(term, qw)`: the
+    * top 15 documents by Σ tf·qw, ties to the smaller doc_id.
     */
   private[registry] val sparseTop15Sql: String =
-    """)
-      |SELECT doc_id,
+    """SELECT doc_id,
       |  row_number() OVER (ORDER BY sum(weight * qw) DESC, doc_id ASC) AS rank,
       |  sum(weight * qw) AS score
       |FROM p JOIN q USING (term) GROUP BY doc_id
@@ -203,59 +209,115 @@ object OracleSql {
       |FROM d GROUP BY 1, 2
       |ORDER BY event_type, bucket""".stripMargin
 
-  /** Closes a `zoomed(lat, lon)` CTE with the precision-3 geohash grid
-    * over its points: the 15-bit interleave (lon leads with 8 bits at even
-    * positions, lat 7 at odd), base-32 encoded, by count descending.
+  /** The precision-3 geohash grid over the points of the caller's CTE
+    * `zoomed(lat, lon)` (`ctes`, which declare it): the 15-bit interleave
+    * (lon leads with 8 bits at even positions, lat 7 at odd), base-32
+    * encoded, by count descending.
     */
-  private[registry] val geohash3CellsSql: String =
-    """), idx AS (
-      |  SELECT least(127, greatest(0, floor((lat + 90) / 180 * 128)))::INT AS la,
-      |         least(255, greatest(0, floor((lon + 180) / 360 * 256)))::INT AS lo
-      |  FROM zoomed
-      |), gh AS (
-      |  SELECT ((lo & 128) << 7) | ((lo & 64) << 6) | ((lo & 32) << 5)
-      |       | ((lo & 16) << 4) | ((lo & 8) << 3) | ((lo & 4) << 2)
-      |       | ((lo & 2) << 1) | (lo & 1)
-      |       | ((la & 64) << 7) | ((la & 32) << 6) | ((la & 16) << 5)
-      |       | ((la & 8) << 4) | ((la & 4) << 3) | ((la & 2) << 2)
-      |       | ((la & 1) << 1) AS v
-      |  FROM idx
-      |)
-      |SELECT substr('0123456789bcdefghjkmnpqrstuvwxyz', (v >> 10) + 1, 1) ||
-      |       substr('0123456789bcdefghjkmnpqrstuvwxyz', ((v >> 5) & 31) + 1, 1) ||
-      |       substr('0123456789bcdefghjkmnpqrstuvwxyz', (v & 31) + 1, 1) AS geohash,
-      |       count(*) AS count
-      |FROM gh GROUP BY 1 ORDER BY count DESC, geohash ASC""".stripMargin
+  private[registry] def geohash3CellsSql(ctes: String): String =
+    s"""WITH $ctes, idx AS (
+       |  SELECT least(127, greatest(0, floor((lat + 90) / 180 * 128)))::INT AS la,
+       |         least(255, greatest(0, floor((lon + 180) / 360 * 256)))::INT AS lo
+       |  FROM zoomed
+       |), gh AS (
+       |  SELECT ((lo & 128) << 7) | ((lo & 64) << 6) | ((lo & 32) << 5)
+       |       | ((lo & 16) << 4) | ((lo & 8) << 3) | ((lo & 4) << 2)
+       |       | ((lo & 2) << 1) | (lo & 1)
+       |       | ((la & 64) << 7) | ((la & 32) << 6) | ((la & 16) << 5)
+       |       | ((la & 8) << 4) | ((la & 4) << 3) | ((la & 2) << 2)
+       |       | ((la & 1) << 1) AS v
+       |  FROM idx
+       |)
+       |SELECT substr('0123456789bcdefghjkmnpqrstuvwxyz', (v >> 10) + 1, 1) ||
+       |       substr('0123456789bcdefghjkmnpqrstuvwxyz', ((v >> 5) & 31) + 1, 1) ||
+       |       substr('0123456789bcdefghjkmnpqrstuvwxyz', (v & 31) + 1, 1) AS geohash,
+       |       count(*) AS count
+       |FROM gh GROUP BY 1 ORDER BY count DESC, geohash ASC""".stripMargin
 
-  /** Closes a near-duplicate `pairs(id_a, id_b)` CTE over embeddings:
-    * the pairs' transitive closure into components, the smallest vec_id
-    * kept per component, kept vectors counted per label.
+  /** The connected components of a closed near-duplicate `pairs(id_a,
+    * id_b)` CTE, as CTEs from `edges AS (` on: the symmetric edges, their
+    * transitive closure, and `comp(id, component)` — each paired id with
+    * the smallest id it reaches.
     */
-  private[registry] val keepPerLabelSql: String =
-    """), edges AS (
+  private[registry] val componentsCtesSql: String =
+    """edges AS (
       |  SELECT id_a AS a, id_b AS b FROM pairs
       |  UNION SELECT id_b, id_a FROM pairs
       |), reach AS (
+      |  -- transitive closure (recursive UNION dedupes, so it terminates)
       |  WITH RECURSIVE r(a, b) AS (
       |    SELECT a, b FROM edges
       |    UNION
-      |    SELECT r.a, e2.b FROM r JOIN edges e2 ON r.b = e2.a
+      |    SELECT r.a, e.b FROM r JOIN edges e ON r.b = e.a
       |  ) SELECT * FROM r
       |), comp AS (
       |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-      |)
-      |SELECT label, count(*) AS n_kept
-      |FROM embeddings emb LEFT JOIN comp ON emb.vec_id = comp.id
-      |WHERE comp.id IS NULL OR comp.component = emb.vec_id
-      |GROUP BY label ORDER BY label""".stripMargin
+      |)""".stripMargin
+
+  /** The cluster-keep count over [[componentsCtesSql]]: the rows of `rows`
+    * (a relation with its alias) whose `id` is unpaired or the smallest of
+    * its component, counted as `counted` per `group`.
+    */
+  private[registry] def keepPerComponentSql(
+      rows: String, id: String, group: String, counted: String): String =
+    s"""SELECT $group, count(*) AS $counted
+       |FROM $rows LEFT JOIN comp ON $id = comp.id
+       |WHERE comp.id IS NULL OR comp.component = $id
+       |GROUP BY $group ORDER BY $group""".stripMargin
+
+  /** Over a near-duplicate `pairs(id_a, id_b)` CTE of embeddings: the
+    * smallest vec_id kept per component, kept vectors counted per label.
+    */
+  private[registry] def keepPerLabelSql(pairs: String): String =
+    s"""WITH $pairs, $componentsCtesSql
+       |${keepPerComponentSql("embeddings emb", "emb.vec_id", "label", "n_kept")}""".stripMargin
+
+  /** ExactSubstr coverage over a CTE `t(doc_id, toks)` the caller
+    * declares: `tok(doc_id, tp, tok)` every token position of the
+    * docs where `keep` holds, `grams` the md5 of every `minLen`-token
+    * window, `dup` the windows seen more than once, `covered(doc_id, tp)`
+    * the positions a duplicated window covers in the docs where `keep`
+    * holds.
+    */
+  private[registry] def duplicateSpanCtesSql(minLen: Int, keep: String = "TRUE"): String =
+    s"""tok AS (
+       |  SELECT doc_id, i AS tp, toks[i] AS tok
+       |  FROM t, unnest(generate_series(1, len(toks))) u(i)
+       |  WHERE len(toks) > 0 AND $keep
+       |), grams AS (
+       |  SELECT doc_id, i AS pos,
+       |    md5(array_to_string(toks[i : i + ${minLen - 1}], ' ')) AS g
+       |  FROM t, unnest(generate_series(1, len(toks) - ${minLen - 1})) u(i)
+       |  WHERE len(toks) >= $minLen
+       |), dup AS (
+       |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
+       |), covered AS (
+       |  SELECT DISTINCT grams.doc_id, pos + j AS tp
+       |  FROM grams JOIN dup USING (g), unnest(generate_series(0, ${minLen - 1})) v(j)
+       |  WHERE $keep
+       |)""".stripMargin
+
+  /** The ExactSubstr removal of `dedup_duplicate_spans`: per document of
+    * `keep`, its token count, the tokens a duplicated `minLen`-token span
+    * covers, and the surviving tokens rejoined in order.
+    */
+  private[registry] def duplicateSpanRemovalSql(minLen: Int, keep: String = "TRUE"): String =
+    s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
+       |${duplicateSpanCtesSql(minLen, keep)}
+       |SELECT tok.doc_id, count(*) AS n_tokens,
+       |  count(covered.tp) AS n_removed,
+       |  coalesce(string_agg(CASE WHEN covered.tp IS NULL THEN tok.tok END,
+       |    ' ' ORDER BY tok.tp), '') AS text
+       |FROM tok LEFT JOIN covered
+       |  ON tok.doc_id = covered.doc_id AND tok.tp = covered.tp
+       |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin
 
   /** Winnowing fingerprints of every document in DuckDB: CTE `f(doc_id,
     * fp)`, the sorted distinct minima of each 4-window over the portable
     * md5 hashes of the word 3-grams (the whole hash list when shorter).
-    * Left open: callers close it and go on.
     */
   private[registry] def winnowFingerprintCtesSql: String =
-    s"""WITH t AS (
+    s"""t AS (
        |  SELECT doc_id, $duckToks AS toks FROM documents
        |), g AS (
        |  SELECT doc_id, list_transform(generate_series(1, len(toks) - 2),
@@ -267,15 +329,15 @@ object OracleSql {
        |         ELSE list_transform(generate_series(1, len(hs) - 3),
        |                i -> list_min(hs[i:i+3])) END)) AS fp
        |  FROM g
-       |""".stripMargin
+       |)""".stripMargin
 
   /** The significant-terms counts in DuckDB, after a `base(terms, fg)`
     * CTE of per-document distinct terms and slice membership: totals
     * `tot(bgt, fgt)` and per-term `c(term, bg_count, fg_count)`, exact
-    * integers. Left open: [[jlhScoreSql]] or [[chi2ScoreSql]] closes it.
+    * integers, for [[jlhScoreSql]] or [[chi2ScoreSql]].
     */
   private[registry] val significantCountCtesSql: String =
-    """), tot AS (
+    """tot AS (
       |  SELECT count(*) AS bgt,
       |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fgt FROM base
       |), e AS (SELECT unnest(terms) AS term, fg FROM base),
@@ -283,15 +345,14 @@ object OracleSql {
       |  SELECT term, count(*) AS bg_count,
       |    sum(CASE WHEN fg THEN 1 ELSE 0 END)::BIGINT AS fg_count
       |  FROM e GROUP BY term
-      |""".stripMargin
+      |)""".stripMargin
 
-  /** Closes a significant-terms count CTE `c(term, bg_count, fg_count)`
-    * (with totals `tot(bgt, fgt)`) with the JLH score — the identical
-    * three-op IEEE tree as the engine — and the top `limit` terms.
+  /** Over the significant-terms counts `c(term, bg_count, fg_count)` and
+    * totals `tot(bgt, fgt)`: the JLH score — the identical three-op IEEE
+    * tree as the engine — and the top `limit` terms.
     */
   private[registry] def jlhScoreSql(limit: Int): String =
-    s""")
-       |SELECT term, fg_count, bg_count,
+    s"""SELECT term, fg_count, bg_count,
        |  (fg_count::DOUBLE / fgt - bg_count::DOUBLE / bgt)
        |    * ((fg_count::DOUBLE / fgt) / (bg_count::DOUBLE / bgt)) AS score
        |FROM c, tot WHERE fg_count > 0
@@ -301,7 +362,11 @@ object OracleSql {
     * tree in DOUBLE arithmetic, identical operation order.
     */
   private[registry] def chi2ScoreSql(limit: Int): String =
-    s"""), m AS (
+    s"""SELECT term, fg_count, bg_count,
+       |  CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) = 0.0 THEN 0.0
+       |       ELSE ((a * d - b * c) * (a * d - b * c) * n)
+       |            / ((a + b) * (c + d) * (a + c) * (b + d)) END AS score
+       |FROM (
        |  SELECT term, fg_count, bg_count,
        |    fg_count::DOUBLE AS a,
        |    fgt::DOUBLE - fg_count::DOUBLE AS b,
@@ -309,21 +374,15 @@ object OracleSql {
        |    (bgt::DOUBLE - fgt::DOUBLE) - (bg_count::DOUBLE - fg_count::DOUBLE) AS d,
        |    bgt::DOUBLE AS n
        |  FROM c, tot WHERE fg_count > 0
-       |)
-       |SELECT term, fg_count, bg_count,
-       |  CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) = 0.0 THEN 0.0
-       |       ELSE ((a * d - b * c) * (a * d - b * c) * n)
-       |            / ((a + b) * (c + d) * (a + c) * (b + d)) END AS score
-       |FROM m
+       |) m
        |ORDER BY score DESC, term ASC LIMIT $limit""".stripMargin
 
   /** The daily event-count series in DuckDB with every candidate split's
-    * running sums: `x(b, c, k, s1, n, tot, nxt)` — left open for the
-    * change-point magnitude (shared by g_change_point and its ES|QL
-    * CHANGE_POINT twin).
+    * running sums: `x(b, c, k, s1, n, tot, nxt)`, for the change-point
+    * magnitude (shared by g_change_point and its ES|QL CHANGE_POINT twin).
     */
   private[registry] val dailyChangePointCtesSql: String =
-    """WITH s AS (
+    """s AS (
       |  SELECT date_trunc('day', ts) AS b, count(*)::BIGINT AS c
       |  FROM events GROUP BY 1
       |), x AS (
@@ -334,29 +393,36 @@ object OracleSql {
       |    sum(c) OVER ()::BIGINT AS tot,
       |    lead(b) OVER (ORDER BY b) AS nxt
       |  FROM s
-      |""".stripMargin
+      |)""".stripMargin
 
-  /** The synthetic customer map point's `lat, lon` select items in DuckDB
-    * (the engine's `pmod` restated; 0.001 cast to DOUBLE so the addition
-    * rounds like the engine's).
+  /** The synthetic customer map points in DuckDB: the CTE `pts(cols...,
+    * lat, lon)`. Two IEEE pins the micro-degree floors
+    * need: 0.001 is cast to DOUBLE (as a DECIMAL literal the addition stays
+    * exact and a floor flips against the engine's double add), and the
+    * engine's `pmod` on a DOUBLE is restated as ONE fmod plus a conditional
+    * add (the `((x%m)+m)%m` form re-rounds `r+m` and loses the low bits of
+    * small remainders).
     */
-  private[registry] val customerLatLonSql: String =
-    """(CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
-      |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
-      |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon""".stripMargin
+  private[registry] def customerPointsCteSql(cols: String*): String =
+    s"""pts AS (
+       |  SELECT ${cols.map(_ + ", ").mkString}
+       |    (CASE WHEN (c_acctbal % 180) < 0 THEN (c_acctbal % 180) + 180
+       |          ELSE (c_acctbal % 180) END) - 90 + CAST(0.001 AS DOUBLE) AS lat,
+       |    ((c_custkey % 360) + 360) % 360 - 180 + CAST(0.001 AS DOUBLE) AS lon
+       |  FROM customer
+       |)""".stripMargin
 
   /** Each document's distinct word bigrams in DuckDB: CTE `d(doc_id, sh)`
-    * over documents with at least 2 tokens. Left open: callers close it
-    * and go on.
+    * over documents with at least 2 tokens.
     */
   private[registry] def wordBigramSetsCtesSql: String =
-    s"""WITH d AS (
+    s"""d AS (
        |  SELECT doc_id,
        |    list_distinct(list_transform(generate_series(1, len(toks) - 1),
        |      i -> toks[i] || ' ' || toks[i + 1])) AS sh
        |  FROM (SELECT doc_id, $duckToks AS toks FROM documents)
        |  WHERE len(toks) >= 2
-       |""".stripMargin
+       |)""".stripMargin
 
   /** The sparse_vector retrieval restated for the oracle — shared by the
     * one-shot postings query (`search_sparse_vector`) and its streamed
@@ -365,11 +431,11 @@ object OracleSql {
     * must all be invisible in the ranked page.
     */
   private[registry] val sparseVectorOracleSql: String =
-    tfPostingsCtesSql +
-    """), q AS (
-      |  SELECT * FROM (VALUES ('vector', 2.0), ('dup', 1.5), ('scan', 0.5))
-      |    AS q(term, qw)
-      |""".stripMargin + sparseTop15Sql
+    s"""WITH $tfPostingsCtesSql, q AS (
+       |  SELECT * FROM (VALUES ('vector', 2.0), ('dup', 1.5), ('scan', 0.5))
+       |    AS q(term, qw)
+       |)
+       |$sparseTop15Sql""".stripMargin
 
   /** The three stored alert queries restated clause-for-clause — shared
     * by the one-shot percolation (`q_percolate`) and its streamed
@@ -397,7 +463,7 @@ object OracleSql {
     * md5-unit hash, in [[graft.ops.Sampling.hashUnitSql]] order — exactly
     * [[graft.ops.Similarity.kmeansCentroids]]'s init pick) → `cellranked`
     * (per-row cells by bit-stable cosine) → `assigned` (top-1 cell per
-    * row). Emits CTE bodies only; callers continue the WITH chain.
+    * row).
     */
   private[registry] def ivfAssignCtesSql(nlist: Int, refineIters: Int = 0,
       trainPred: String = "TRUE"): String = {
@@ -589,10 +655,6 @@ object OracleSql {
        |END AS dict_vartype FROM stats)
        |SELECT $selectCols FROM typed ORDER BY dict_field""".stripMargin
   }
-
-  /** Analyzer tokens in DuckDB — must mirror [[TextAnalysis]] exactly. */
-  private[registry] val duckToks =
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)"
 
   /** The portable-MinHash pipeline as DuckDB CTEs ending at
     * `pairs(id_a, id_b, jaccard)` — gram texts, seeded md5 minima,

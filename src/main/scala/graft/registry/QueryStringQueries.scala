@@ -35,6 +35,24 @@ object QueryStringQueries extends Family("serving") {
        |    AND year >= 2015 AND year <= 2017 AND hour >= 0 AND hour <= 18
        |)""".stripMargin
 
+  /** The documents holding a token within `maxEdits` of `term` under the
+    * DuckDB edit distance `distance` — the fuzzy-query oracles.
+    */
+  private def fuzzyDocsSql(distance: String, term: String, maxEdits: Int): String =
+    s"""SELECT doc_id, lang FROM documents
+       |WHERE len(list_filter($duckToks, t -> $distance(t, '$term') <= $maxEdits)) > 0
+       |ORDER BY doc_id""".stripMargin
+
+  /** The typeahead vocabulary in DuckDB: CTE `v(term, freq)`, each
+    * analyzed term with its document frequency.
+    */
+  private val vocabularyCtesSql: String =
+    s"""v AS (
+       |  SELECT t AS term, count(*)::BIGINT AS freq FROM (
+       |    SELECT doc_id, unnest(list_distinct($duckToks)) AS t
+       |    FROM documents) GROUP BY 1
+       |)""".stripMargin
+
   /** UNION ALL of the five saved visualizations' oracle shapes over the
     * filtered federated relation — each leg the already-proven form (terms
     * top-N, nested terms with parent-total ordering, precision-2 geohash
@@ -160,12 +178,12 @@ object QueryStringQueries extends Family("serving") {
        |)""".stripMargin
 
   /** The federated description counts in and out of the Baltimore slice:
-    * `tot(bgt, fgt)` and `c(term, bg_count, fg_count)`, left open for
-    * [[jlhScoreSql]] or [[chi2ScoreSql]]. Null descriptions form no
-    * bucket but count toward the set totals.
+    * `tot(bgt, fgt)` and `c(term, bg_count, fg_count)`, for [[jlhScoreSql]]
+    * or [[chi2ScoreSql]]. Null descriptions form no bucket but count toward
+    * the set totals.
     */
   private def baltimoreCountCtesSql: String =
-    s"""WITH fed AS (
+    s"""fed AS (
        |${federatedCitySql}
        |), tot AS (
        |  SELECT count(*) AS bgt,
@@ -177,7 +195,7 @@ object QueryStringQueries extends Family("serving") {
        |    sum(CASE WHEN dataset = 'baltimore' THEN 1 ELSE 0 END)::BIGINT
        |      AS fg_count
        |  FROM fed WHERE description IS NOT NULL GROUP BY 1
-       |""".stripMargin
+       |)""".stripMargin
 
   val cases: Seq[QueryCase] = Seq(
     // ===== query_string — the Kibana search bar (round-13 fifth batch) =====
@@ -304,11 +322,7 @@ object QueryStringQueries extends Family("serving") {
       val spec = graft.query.QueryString.parse(
         "text:dupe~1", defaultField = "text")
       SearchQueries.matchingDocs(dir, spec)
-    }, Some(
-      """SELECT doc_id, lang FROM documents
-        |WHERE len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-        |      t -> levenshtein(t, 'dupe') <= 1)) > 0
-        |ORDER BY doc_id""".stripMargin)),
+    }, Some(fuzzyDocsSql("levenshtein", "dupe", maxEdits = 1))),
 
     // The SymSpell index path returns provably the same documents — the
     // candidate superset is closed under the deletion lemma and the
@@ -323,11 +337,7 @@ object QueryStringQueries extends Family("serving") {
           load(dir, "documents"), "text", "dupe", maxEdits = 1)
         .select("doc_id", "lang")
         .orderBy("doc_id")
-    }, Some(
-      """SELECT doc_id, lang FROM documents
-        |WHERE len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-        |      t -> levenshtein(t, 'dupe') <= 1)) > 0
-        |ORDER BY doc_id""".stripMargin)),
+    }, Some(fuzzyDocsSql("levenshtein", "dupe", maxEdits = 1))),
 
     // Damerau fuzzy: the same analyzed tokens under the same unrestricted
     // transposition-counting distance.
@@ -343,11 +353,7 @@ object QueryStringQueries extends Family("serving") {
           "text", "tbale", maxEdits = 1, transpositions = true).compile)
         .select("doc_id", "lang")
         .orderBy("doc_id")
-    }, Some(
-      """SELECT doc_id, lang FROM documents
-        |WHERE len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-        |      t -> damerau_levenshtein(t, 'tbale') <= 1)) > 0
-        |ORDER BY doc_id""".stripMargin)),
+    }, Some(fuzzyDocsSql("damerau_levenshtein", "tbale", maxEdits = 1))),
 
     // Sloppy phrase: positions from the identical token stream, the same
     // ordered constraint p2 > p1 AND p2 - p1 - 1 <= slop.
@@ -361,10 +367,9 @@ object QueryStringQueries extends Family("serving") {
         """text:"spark scan"~2""", defaultField = "text")
       SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql(
+      s"""WITH ${tokenPositionCtesSql(
         ("a", "p1", "toks[u.i] = 'spark'"),
-        ("b", "p2", "toks[u.i] = 'scan'")) +
-      """)
+        ("b", "p2", "toks[u.i] = 'scan'"))}
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM a JOIN b USING (doc_id) JOIN t USING (doc_id)
         |WHERE p2 > p1 AND p2 - p1 - 1 <= 2
@@ -386,11 +391,10 @@ object QueryStringQueries extends Family("serving") {
         """text:"spark scan merge"~near4""", defaultField = "text")
       SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql(
+      s"""WITH ${tokenPositionCtesSql(
         ("a", "p1", "toks[u.i] = 'spark'"),
         ("b", "p2", "toks[u.i] = 'scan'"),
-        ("c", "p3", "toks[u.i] = 'merge'")) +
-      """)
+        ("c", "p3", "toks[u.i] = 'merge'"))}
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM a JOIN b USING (doc_id) JOIN c USING (doc_id) JOIN t USING (doc_id)
         |WHERE p1 <> p2 AND p1 <> p3 AND p2 <> p3
@@ -410,10 +414,9 @@ object QueryStringQueries extends Family("serving") {
         """text:"scan spark"~gaps3""", defaultField = "text")
       SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql(
+      s"""WITH ${tokenPositionCtesSql(
         ("a", "p1", "toks[u.i] = 'scan'"),
-        ("b", "p2", "toks[u.i] = 'spark'")) +
-      """)
+        ("b", "p2", "toks[u.i] = 'spark'"))}
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM a JOIN b USING (doc_id) JOIN t USING (doc_id)
         |WHERE p2 > p1 AND p2 - p1 - 1 <= 3
@@ -436,8 +439,7 @@ object QueryStringQueries extends Family("serving") {
         Seq(Seq("spark", "big vector"), Seq("merge join", "scan")), maxGaps = 3)
       SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql() +
-      """), s1 AS (
+      s"""WITH ${tokenPositionCtesSql()}, s1 AS (
         |  SELECT doc_id, u.i AS s, u.i AS e
         |  FROM t, unnest(range(1, len(toks)+1)) AS u(i)
         |  WHERE toks[u.i] = 'spark'
@@ -480,8 +482,7 @@ object QueryStringQueries extends Family("serving") {
         Seq(Seq("spark"), Seq("batch scan")), maxGaps = 2, ordered = false)
       SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql() +
-      """), s1 AS (
+      s"""WITH ${tokenPositionCtesSql()}, s1 AS (
         |  SELECT doc_id, u.i AS s, u.i AS e
         |  FROM t, unnest(range(1, len(toks)+1)) AS u(i)
         |  WHERE toks[u.i] = 'spark'
@@ -522,8 +523,7 @@ object QueryStringQueries extends Family("serving") {
         ordered = false)
       SearchQueries.matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql() +
-      """), s1 AS (
+      s"""WITH ${tokenPositionCtesSql()}, s1 AS (
         |  SELECT doc_id, u.i AS s, u.i AS e
         |  FROM t, unnest(range(1, len(toks)+1)) AS u(i)
         |  WHERE toks[u.i] = 'scan'
@@ -735,12 +735,7 @@ object QueryStringQueries extends Family("serving") {
       graft.query.Fuzzy.suggestTerms(
         load(dir, "documents"), col("text"), "tabel", maxEdits = 2, n = 5)
     }, Some(
-      """WITH v AS (
-        |  SELECT t AS term, count(*)::BIGINT AS freq FROM (
-        |    SELECT doc_id, unnest(list_distinct(
-        |      regexp_extract_all(lower(text), '[a-z0-9]+'))) AS t
-        |    FROM documents) GROUP BY 1
-        |)
+      s"""WITH $vocabularyCtesSql
         |SELECT term, freq, levenshtein(term, 'tabel')::INT AS distance
         |FROM v WHERE levenshtein(term, 'tabel') BETWEEN 1 AND 2
         |ORDER BY distance ASC, freq DESC, term ASC LIMIT 5""".stripMargin)),
@@ -758,12 +753,7 @@ object QueryStringQueries extends Family("serving") {
         graft.query.Fuzzy.vocabularyWithFreq(load(dir, "documents"), col("text")),
         "sp", size = 6, fuzziness = 1, prefixLength = 1)
     }, Some(
-      """WITH v AS (
-        |  SELECT t AS term, count(*)::BIGINT AS freq FROM (
-        |    SELECT doc_id, unnest(list_distinct(
-        |      regexp_extract_all(lower(text), '[a-z0-9]+'))) AS t
-        |    FROM documents) GROUP BY 1
-        |)
+      s"""WITH $vocabularyCtesSql
         |SELECT term, freq, levenshtein(substr(term, 1, 2), 'sp')::BIGINT AS distance
         |FROM v
         |WHERE len(term) >= 2 AND substr(term, 1, 1) = 's'
@@ -971,7 +961,7 @@ object QueryStringQueries extends Family("serving") {
       // the corpus-scan oracle.
       PreAgg.significantTerms(dashboardRollup(s), "description",
         col("dataset") === "baltimore", n = 10)
-    }, Some(baltimoreCountCtesSql + jlhScoreSql(10))),
+    }, Some(s"WITH $baltimoreCountCtesSql\n${jlhScoreSql(10)}")),
 
     // chi_square over the rollup: the same contingency tree over the same
     // federated counts.
@@ -982,7 +972,7 @@ object QueryStringQueries extends Family("serving") {
       // corpus-scan oracle restatement.
       PreAgg.significantTerms(dashboardRollup(s), "description",
         col("dataset") === "baltimore", n = 10, heuristic = "chi_square")
-    }, Some(baltimoreCountCtesSql + chi2ScoreSql(10))),
+    }, Some(s"WITH $baltimoreCountCtesSql\n${chi2ScoreSql(10)}")),
 
     // the pre-agg path must reproduce the FULL-SCAN oracle exactly — that
     // equivalence is the whole claim
@@ -1049,13 +1039,13 @@ object QueryStringQueries extends Family("serving") {
         .withColumn("_lat", parts.getItem(0).cast("double"))
         .withColumn("_lon", parts.getItem(1).cast("double"))
       Aggs.geohashGridDrilldown(pts, "_lat", "_lon", cell = "d")
-    }, Some(
-      s"""WITH ${dashboardFilteredCtesSql}, pts AS (
+    }, Some(geohash3CellsSql(
+      s"""$dashboardFilteredCtesSql, pts AS (
          |  SELECT split_part(geolocation, ',', 1)::DOUBLE AS lat,
          |         split_part(geolocation, ',', 2)::DOUBLE AS lon
          |  FROM f WHERE length(geolocation) > 0
          |), zoomed AS (
          |  SELECT * FROM pts
          |  WHERE lat >= 0 AND lat < 45 AND lon >= -90 AND lon < -45
-         |""".stripMargin + geohash3CellsSql), warm = true))
+         |)""".stripMargin)), warm = true))
 }

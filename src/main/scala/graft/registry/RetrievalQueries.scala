@@ -33,11 +33,11 @@ object RetrievalQueries extends Family("serving") {
 
   /** The retriever tree's knn leaf in DuckDB: `knr(doc_id, rank)`, the
     * top 50 embeddings by exact cosine against the dyadic literal query
-    * vector. Continues an open CTE list and leaves `knr` open.
+    * vector.
     */
   private def knnLeafCtesSql: String = {
     val qLit = s"CAST(${knnQueryVec.mkString("[", ", ", "]")} AS DOUBLE[])"
-    s"""), e AS (
+    s"""e AS (
        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
        |), kn AS (
        |  SELECT vec_id AS doc_id,
@@ -49,8 +49,81 @@ object RetrievalQueries extends Family("serving") {
        |    SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
        |    FROM kn
        |  ) WHERE rank <= 50
-       |""".stripMargin
+       |)""".stripMargin
   }
+
+  /** The BM25 run of `query` over `documents.text` (top `k`) in DuckDB:
+    * CTEs `bm(doc_id, score)` and `bmr(doc_id, rank)`.
+    */
+  private def bm25RunCtesSql(query: String, k: Int): String =
+    s"""bm AS (
+       |${graft.query.Bm25.oracleSql("documents", "doc_id", "text", query, k)}
+       |), bmr AS (
+       |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
+       |  FROM bm
+       |)""".stripMargin
+
+  /** The exact cosine of every other embedding against `vec_id = 0`: CTEs
+    * `e(vec_id, v)`, `q` and `scored(doc_id, cos)`.
+    */
+  private val vecZeroCosineCtesSql: String =
+    """e AS (
+      |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+      |), q AS (
+      |  SELECT * FROM e WHERE vec_id = 0
+      |), scored AS (
+      |  SELECT e.vec_id AS doc_id,
+      |    list_inner_product(e.v, q.v)
+      |      / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
+      |  FROM e, q WHERE e.vec_id <> q.vec_id
+      |)""".stripMargin
+
+  /** Reciprocal-rank fusion's parts (rank constant 60) of two ranked CTEs
+    * `(doc_id, rank)`: CTEs `c0` and `c1`, each doc's `c` = 1 / (60 + rank)
+    * in run `a` and `b`.
+    */
+  private def rrfPartsCtesSql(a: String, b: String): String =
+    s"""c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM $a),
+       |c1 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM $b)""".stripMargin
+
+  /** A run `src(doc_id, score)` min-max normalized over its own window
+    * and scaled by `weight`: CTEs `<name>_st` and `name(doc_id, c)`.
+    */
+  private def minMaxPartCtesSql(name: String, src: String, weight: Double): String =
+    s"""${name}_st AS (SELECT min(score) AS mn, max(score) AS mx FROM $src),
+       |$name AS (
+       |  SELECT doc_id, $weight * CASE WHEN mx = mn THEN 1.0
+       |    ELSE (score - mn) / (mx - mn) END AS c
+       |  FROM $src, ${name}_st
+       |)""".stripMargin
+
+  /** The two part CTEs `a` and `b` (`doc_id, c`) summed per doc (a doc
+    * missing from one part scores 0 there), as `scoreAs`: the top `limit`.
+    */
+  private def fusedSql(a: String, b: String, scoreAs: String, limit: Int): String =
+    s"""SELECT doc_id, coalesce($a.c, 0.0) + coalesce($b.c, 0.0) AS $scoreAs
+       |FROM $a FULL OUTER JOIN $b USING (doc_id)
+       |ORDER BY $scoreAs DESC, doc_id ASC LIMIT $limit""".stripMargin
+
+  /** The multi_match oracles' per-field runs: every document's scored
+    * BM25 of "src1 spark" over `text` as CTE `s0(doc_id, score)` and over
+    * `source` as `s1`.
+    */
+  private val multiMatchRunsCtesSql: String = {
+    def run(field: String) =
+      graft.query.Bm25.oracleSqlScored("documents", "doc_id", field, "src1 spark")
+    s"""s0 AS (
+       |${run("text")}
+       |), s1 AS (
+       |${run("source")}
+       |)""".stripMargin
+  }
+
+  /** A fused CTE `f(doc_id, score)` re-ranked: `doc_id, rank, score`. */
+  private val rankedFusedSql: String =
+    """SELECT doc_id,
+      |  row_number() OVER (ORDER BY score DESC, doc_id ASC)::INT AS rank, score
+      |FROM f ORDER BY rank""".stripMargin
 
   val cases: Seq[QueryCase] = Seq(
     // LTR feature log: Bm25's exact analyzer/TF/IDF/score spellings with
@@ -153,7 +226,8 @@ object RetrievalQueries extends Family("serving") {
       s"""WITH base AS (
          |  SELECT list_distinct($duckToks) AS terms, (lang = 'zh') AS fg
          |  FROM documents
-         |""".stripMargin + significantCountCtesSql + jlhScoreSql(15))),
+         |), $significantCountCtesSql
+         |${jlhScoreSql(15)}""".stripMargin)),
 
     // The chi_square heuristic: the same exact counts, the textbook 2×2
     // contingency tree in DOUBLE arithmetic, identical operation order.
@@ -170,7 +244,8 @@ object RetrievalQueries extends Family("serving") {
       s"""WITH base AS (
          |  SELECT list_distinct($duckToks) AS terms, (lang = 'zh') AS fg
          |  FROM documents
-         |""".stripMargin + significantCountCtesSql + chi2ScoreSql(15))),
+         |), $significantCountCtesSql
+         |${chi2ScoreSql(15)}""".stripMargin)),
 
     // The scale-path hybrid: BM25 run via its oracle builder, vector run
     // via the full oracled IVF-PQ restatement, fused with the same
@@ -195,24 +270,14 @@ object RetrievalQueries extends Family("serving") {
       query.Hybrid.rrf(Seq(bmRun, vecRun), "doc_id", "rank", rrfK = 60, topK = 20)
         .orderBy(desc("rrf_score"), asc("doc_id"))
     }, Some({
-      val bm = graft.query.Bm25.oracleSql(
-        "documents", "doc_id", "text", "spark merge join window", 50)
       val pq = ivfPqSql(nlist = 8, nprobe = 3, m = 8, ksub = 16, dim = 64,
         k = 50, nQueries = 1)
-      s"""WITH bm AS (
-         |$bm
-         |), bmr AS (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-         |  FROM bm
-         |), vr AS (
+      s"""WITH ${bm25RunCtesSql("spark merge join window", 50)}, vr AS (
          |  SELECT neighbor_id AS doc_id, rank FROM (
          |$pq
          |  )
-         |), c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM bmr),
-         |c1 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM vr)
-         |SELECT doc_id, coalesce(c0.c, 0.0) + coalesce(c1.c, 0.0) AS rrf_score
-         |FROM c0 FULL OUTER JOIN c1 USING (doc_id)
-         |ORDER BY rrf_score DESC, doc_id ASC LIMIT 20""".stripMargin
+         |), ${rrfPartsCtesSql("bmr", "vr")}
+         |${fusedSql("c0", "c1", "rrf_score", 20)}""".stripMargin
     })),
 
     // Both retriever runs restate by their own proven oracle constructions
@@ -236,34 +301,14 @@ object RetrievalQueries extends Family("serving") {
         .select(col("neighbor_id").as("doc_id"), col("rank"))
       query.Hybrid.rrf(Seq(bmRun, vecRun), "doc_id", "rank", rrfK = 60, topK = 20)
         .orderBy(desc("rrf_score"), asc("doc_id"))
-    }, Some({
-      val bm = graft.query.Bm25.oracleSql(
-        "documents", "doc_id", "text", "spark merge join window", 50)
-      s"""WITH bm AS (
-         |$bm
-         |), bmr AS (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-         |  FROM bm
-         |), e AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         |), q AS (
-         |  SELECT * FROM e WHERE vec_id = 0
-         |), scored AS (
-         |  SELECT e.vec_id AS doc_id,
-         |    list_inner_product(e.v, q.v)
-         |      / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
-         |  FROM e, q WHERE e.vec_id <> q.vec_id
-         |), vr AS (
+    }, Some(
+      s"""WITH ${bm25RunCtesSql("spark merge join window", 50)}, $vecZeroCosineCtesSql, vr AS (
          |  SELECT doc_id, rank FROM (
          |    SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id ASC) AS rank
          |    FROM scored
          |  ) WHERE rank <= 50
-         |), c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM bmr),
-         |c1 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM vr)
-         |SELECT doc_id, coalesce(c0.c, 0.0) + coalesce(c1.c, 0.0) AS rrf_score
-         |FROM c0 FULL OUTER JOIN c1 USING (doc_id)
-         |ORDER BY rrf_score DESC, doc_id ASC LIMIT 20""".stripMargin
-    })),
+         |), ${rrfPartsCtesSql("bmr", "vr")}
+         |${fusedSql("c0", "c1", "rrf_score", 20)}""".stripMargin)),
 
     // the retriever tree's rrf restated: the standard leaf is the proven
     // BM25 CTE, the knn leaf the op-for-op cosine against the dyadic
@@ -283,26 +328,12 @@ object RetrievalQueries extends Family("serving") {
            |], "rank_constant": 60, "rank_window_size": 20}}}""".stripMargin)
         .select("doc_id", "rank", "score")
         .orderBy("rank")
-    }, Some({
-      val bm = graft.query.Bm25.oracleSql(
-        "documents", "doc_id", "text", "spark merge join window", 50)
-      s"""WITH bm AS (
-         |$bm
-         |), bmr AS (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-         |  FROM bm
-         |""".stripMargin + knnLeafCtesSql +
-      s"""), c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM bmr),
-         |c1 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM knr),
+    }, Some(
+      s"""WITH ${bm25RunCtesSql("spark merge join window", 50)}, $knnLeafCtesSql, ${rrfPartsCtesSql("bmr", "knr")},
          |f AS (
-         |  SELECT doc_id, coalesce(c0.c, 0.0) + coalesce(c1.c, 0.0) AS score
-         |  FROM c0 FULL OUTER JOIN c1 USING (doc_id)
-         |  ORDER BY score DESC, doc_id ASC LIMIT 20
+         |${fusedSql("c0", "c1", "score", 20)}
          |)
-         |SELECT doc_id,
-         |  row_number() OVER (ORDER BY score DESC, doc_id ASC)::INT AS rank, score
-         |FROM f ORDER BY rank""".stripMargin
-    })),
+         |$rankedFusedSql""".stripMargin)),
 
     // the nested tree: linear's min-max windows over (a) the BM25 leaf
     // and (b) the WHOLE rrf subtree above — recursion as CTE composition
@@ -330,42 +361,15 @@ object RetrievalQueries extends Family("serving") {
     }, Some({
       val bm1 = graft.query.Bm25.oracleSql(
         "documents", "doc_id", "text", "dup vector scan", 30)
-      val bm2 = graft.query.Bm25.oracleSql(
-        "documents", "doc_id", "text", "spark merge join window", 50)
       s"""WITH s1 AS (
          |$bm1
-         |), bm2 AS (
-         |$bm2
-         |), bmr AS (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-         |  FROM bm2
-         |""".stripMargin + knnLeafCtesSql +
-      s"""), c0 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM bmr),
-         |c1 AS (SELECT doc_id, 1.0 / (60.0 + rank) AS c FROM knr),
+         |), ${bm25RunCtesSql("spark merge join window", 50)}, $knnLeafCtesSql, ${rrfPartsCtesSql("bmr", "knr")},
          |s2 AS (
-         |  SELECT doc_id, coalesce(c0.c, 0.0) + coalesce(c1.c, 0.0) AS score
-         |  FROM c0 FULL OUTER JOIN c1 USING (doc_id)
-         |  ORDER BY score DESC, doc_id ASC LIMIT 25
-         |), st1 AS (SELECT min(score) AS mn, max(score) AS mx FROM s1),
-         |st2 AS (SELECT min(score) AS mn, max(score) AS mx FROM s2),
-         |n0 AS (
-         |  SELECT doc_id,
-         |    0.7 * CASE WHEN st1.mx = st1.mn THEN 1.0
-         |               ELSE (s1.score - st1.mn) / (st1.mx - st1.mn) END AS c
-         |  FROM s1, st1
-         |), n1 AS (
-         |  SELECT doc_id,
-         |    0.3 * CASE WHEN st2.mx = st2.mn THEN 1.0
-         |               ELSE (s2.score - st2.mn) / (st2.mx - st2.mn) END AS c
-         |  FROM s2, st2
-         |), f AS (
-         |  SELECT doc_id, coalesce(n0.c, 0.0) + coalesce(n1.c, 0.0) AS score
-         |  FROM n0 FULL OUTER JOIN n1 USING (doc_id)
-         |  ORDER BY score DESC, doc_id ASC LIMIT 15
+         |${fusedSql("c0", "c1", "score", 25)}
+         |), ${minMaxPartCtesSql("n0", "s1", 0.7)}, ${minMaxPartCtesSql("n1", "s2", 0.3)}, f AS (
+         |${fusedSql("n0", "n1", "score", 15)}
          |)
-         |SELECT doc_id,
-         |  row_number() OVER (ORDER BY score DESC, doc_id ASC)::INT AS rank, score
-         |FROM f ORDER BY rank""".stripMargin
+         |$rankedFusedSql""".stripMargin
     })),
 
     // N-of-M restated: the same analyzed-containment clauses as integer
@@ -455,13 +459,7 @@ object RetrievalQueries extends Family("serving") {
           Seq("text", "source"), "src1 spark", k = 20, mode = "best_fields")
         .orderBy(desc("score"), asc("doc_id"))
     }, Some({
-      val s0 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "text", "src1 spark")
-      val s1 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "source", "src1 spark")
-      s"""WITH s0 AS (
-         |$s0
-         |), s1 AS (
-         |$s1
-         |)
+      s"""WITH $multiMatchRunsCtesSql
          |SELECT doc_id,
          |  greatest(coalesce(s0.score, 0.0), coalesce(s1.score, 0.0)) AS score
          |FROM s0 FULL OUTER JOIN s1 USING (doc_id)
@@ -477,13 +475,7 @@ object RetrievalQueries extends Family("serving") {
           Seq("text", "source"), "src1 spark", k = 20, mode = "most_fields")
         .orderBy(desc("score"), asc("doc_id"))
     }, Some({
-      val s0 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "text", "src1 spark")
-      val s1 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "source", "src1 spark")
-      s"""WITH s0 AS (
-         |$s0
-         |), s1 AS (
-         |$s1
-         |)
+      s"""WITH $multiMatchRunsCtesSql
          |SELECT doc_id,
          |  coalesce(s0.score, 0.0) + coalesce(s1.score, 0.0) AS score
          |FROM s0 FULL OUTER JOIN s1 USING (doc_id)
@@ -518,13 +510,7 @@ object RetrievalQueries extends Family("serving") {
           tieBreaker = 0.3)
         .orderBy(desc("score"), asc("doc_id"))
     }, Some({
-      val s0 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "text", "src1 spark")
-      val s1 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "source", "src1 spark")
-      s"""WITH s0 AS (
-         |$s0
-         |), s1 AS (
-         |$s1
-         |), j AS (
+      s"""WITH $multiMatchRunsCtesSql, j AS (
          |  SELECT doc_id, coalesce(s0.score, 0.0) AS a, coalesce(s1.score, 0.0) AS b
          |  FROM s0 FULL OUTER JOIN s1 USING (doc_id)
          |)
@@ -746,34 +732,13 @@ object RetrievalQueries extends Family("serving") {
         "documents", "doc_id", "text", "spark merge join window", 50)
       s"""WITH bm AS (
          |$bm
-         |), bstats AS (SELECT min(score) AS mn, max(score) AS mx FROM bm),
-         |bn AS (
-         |  SELECT doc_id, 0.7 * (CASE WHEN mx = mn THEN 1.0
-         |    ELSE (score - mn) / (mx - mn) END) AS c
-         |  FROM bm, bstats
-         |), e AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         |), q AS (
-         |  SELECT * FROM e WHERE vec_id = 0
-         |), scored AS (
-         |  SELECT e.vec_id AS doc_id,
-         |    list_inner_product(e.v, q.v)
-         |      / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
-         |  FROM e, q WHERE e.vec_id <> q.vec_id
-         |), vr AS (
+         |), ${minMaxPartCtesSql("bn", "bm", 0.7)}, $vecZeroCosineCtesSql, vr AS (
          |  SELECT doc_id, cos AS score FROM (
          |    SELECT doc_id, cos, row_number() OVER (ORDER BY cos DESC, doc_id ASC) AS rank
          |    FROM scored
          |  ) WHERE rank <= 50
-         |), vstats AS (SELECT min(score) AS mn, max(score) AS mx FROM vr),
-         |vn AS (
-         |  SELECT doc_id, 0.3 * (CASE WHEN mx = mn THEN 1.0
-         |    ELSE (score - mn) / (mx - mn) END) AS c
-         |  FROM vr, vstats
-         |)
-         |SELECT doc_id, coalesce(bn.c, 0.0) + coalesce(vn.c, 0.0) AS fused_score
-         |FROM bn FULL OUTER JOIN vn USING (doc_id)
-         |ORDER BY fused_score DESC, doc_id ASC LIMIT 20""".stripMargin
+         |), ${minMaxPartCtesSql("vn", "vr", 0.3)}
+         |${fusedSql("bn", "vn", "fused_score", 20)}""".stripMargin
     })),
 
     // Pinned restated: three literal curated rows ranked 1..3, the organic
@@ -1069,8 +1034,7 @@ object RetrievalQueries extends Family("serving") {
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("rank")
     }, Some(
-      tfPostingsCtesSql +
-      """), df AS (
+      s"""WITH $tfPostingsCtesSql, df AS (
         |  SELECT term, count(*)::DOUBLE AS df FROM p GROUP BY term
         |), a AS (
         |  SELECT count(*)::DOUBLE / count(DISTINCT term) AS avg_df FROM p
@@ -1081,7 +1045,8 @@ object RetrievalQueries extends Family("serving") {
         |  SELECT q0.term, q0.qw FROM q0 LEFT JOIN df USING (term), a
         |  WHERE NOT (coalesce(df.df, 0.0) > 1.0 * a.avg_df
         |    AND q0.qw < 0.4 * (SELECT max(qw) FROM q0))
-        |""".stripMargin + sparseTop15Sql)),
+        |)
+        |$sparseTop15Sql""".stripMargin)),
 
     // Quantized learned weights restated: the identical
     // floor(w·256 + 0.5)/256 dyadic snap on the same double literals
@@ -1104,12 +1069,12 @@ object RetrievalQueries extends Family("serving") {
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("rank")
     }, Some(
-      tfPostingsCtesSql +
-      """), q AS (
+      s"""WITH $tfPostingsCtesSql, q AS (
         |  SELECT term, floor(w * 256.0 + 0.5) / 256.0 AS qw
         |  FROM (VALUES ('vector', 1.7), ('dup', 0.9), ('scan', 0.31))
         |    AS q0(term, w)
-        |""".stripMargin + sparseTop15Sql)),
+        |)
+        |$sparseTop15Sql""".stripMargin)),
 
     // The pruning+rescore composition restated: quantized weights, the
     // ES keep rule splitting the query into kept/pruned legs, the cheap
@@ -1152,8 +1117,7 @@ object RetrievalQueries extends Family("serving") {
           windowSize = 10)
         .orderBy("rank").limit(15)
     }, Some(
-      tfPostingsCtesSql +
-      """), df AS (
+      s"""WITH $tfPostingsCtesSql, df AS (
         |  SELECT term, count(*)::DOUBLE AS df FROM p GROUP BY term
         |), a AS (
         |  SELECT count(*)::DOUBLE / count(DISTINCT term) AS avg_df FROM p

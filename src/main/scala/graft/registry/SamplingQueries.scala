@@ -62,18 +62,7 @@ object SamplingQueries extends Family("pipeline") {
     }, Some(
       s"""WITH ${portableMinhashCtesSql(k = 2, numHashes = 32, r = 2, threshold = 0.4,
             from = "(SELECT * FROM documents WHERE doc_id < 500)")},
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |), reach AS (
-         |  WITH RECURSIVE r(a, b) AS (
-         |    SELECT a, b FROM edges
-         |    UNION
-         |    SELECT r.a, e.b FROM r JOIN edges e ON r.b = e.a
-         |  ) SELECT * FROM r
-         |), comp AS (
-         |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-         |)
+         |$componentsCtesSql
          |SELECT CASE
          |    WHEN ${ops.Sampling.hashUnitSql("coalesce(comp.component, doc.doc_id)", 42)} < 0.75 THEN 'train'
          |    WHEN ${ops.Sampling.hashUnitSql("coalesce(comp.component, doc.doc_id)", 42)} < 0.875 THEN 'val'

@@ -37,10 +37,9 @@ object SearchQueries extends Family("serving") {
     */
   private def vectorInSpanOracleSql(containing: Boolean): String = {
     val exists = if (containing) "EXISTS" else "NOT EXISTS"
-    tokenPositionCtesSql(
+    s"""WITH ${tokenPositionCtesSql(
       ("a", "p1", "toks[u.i] = 'spark'"),
-      ("b", "p2", "toks[u.i] = 'scan'")) +
-    s"""), iv AS (
+      ("b", "p2", "toks[u.i] = 'scan'"))}, iv AS (
        |  SELECT a.doc_id, p1, p2 FROM a JOIN b USING (doc_id)
        |  WHERE p2 > p1 AND p2 - p1 - 1 <= 5
        |)
@@ -220,10 +219,7 @@ object SearchQueries extends Family("serving") {
           sum(floor(col("lat") * 1000000).cast("long")).as("slat"))
         .orderBy("c_mktsegment")
     }, Some(
-      s"""WITH pts AS (
-        |  SELECT c_mktsegment,
-        |    $customerLatLonSql
-        |  FROM customer)
+      s"""WITH ${customerPointsCteSql("c_mktsegment")}
         |SELECT c_mktsegment, count(*)::BIGINT AS n,
         |  sum(floor(lat * 1000000)::BIGINT)::BIGINT AS slat
         |FROM pts
@@ -250,11 +246,7 @@ object SearchQueries extends Family("serving") {
           sum(floor(col("lat") * 1000000).cast("long")).as("slat"))
         .orderBy("c_mktsegment")
     }, Some(
-      s"""WITH pts AS (
-        |  SELECT c_mktsegment,
-        |    $customerLatLonSql
-        |  FROM customer
-        |), d AS (
+      s"""WITH ${customerPointsCteSql("c_mktsegment")}, d AS (
         |  SELECT c_mktsegment, lat,
         |    (2.0 * 6371.0088) * asin(sqrt(
         |      sin(((lat - 10.0) * (pi() / 180.0)) / 2.0)
@@ -288,11 +280,7 @@ object SearchQueries extends Family("serving") {
         .select("c_custkey", "c_mktsegment")
         .orderBy("c_custkey")
     }, Some(
-      s"""WITH pts AS (
-        |  SELECT c_custkey, c_mktsegment,
-        |    $customerLatLonSql
-        |  FROM customer
-        |)
+      s"""WITH ${customerPointsCteSql("c_custkey", "c_mktsegment")}
         |SELECT c_custkey, c_mktsegment FROM pts
         |WHERE (
         |    (CASE WHEN ((-60 > lat) <> (60 > lat))
@@ -352,8 +340,7 @@ object SearchQueries extends Family("serving") {
       val spec = graft.query.FilterSpec.SpanFirst("text", "spark", end = 6)
       matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql() +
-      """)
+      s"""WITH ${tokenPositionCtesSql()}
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM t, unnest(range(1, len(toks)+1)) AS u(i)
         |WHERE toks[u.i] = 'spark' AND u.i <= 6
@@ -372,10 +359,9 @@ object SearchQueries extends Family("serving") {
         include = "scan", exclude = "vector scan")
       matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql(
+      s"""WITH ${tokenPositionCtesSql(
         ("i", "s", "toks[u.i] = 'scan'"),
-        ("e", "x", "toks[u.i:u.i+1] = ['vector', 'scan']")) +
-      """)
+        ("e", "x", "toks[u.i:u.i+1] = ['vector', 'scan']"))}
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM i JOIN t USING (doc_id)
         |WHERE NOT EXISTS (SELECT 1 FROM e
@@ -399,11 +385,10 @@ object SearchQueries extends Family("serving") {
         little = "key", big = Seq("scan", "table"), slop = 3)
       matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql(
+      s"""WITH ${tokenPositionCtesSql(
         ("l", "s", "toks[u.i] = 'key'"),
         ("b1", "s", "toks[u.i] = 'scan'"),
-        ("b2", "s", "toks[u.i] = 'table'")) +
-      """)
+        ("b2", "s", "toks[u.i] = 'table'"))}
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM t
         |WHERE EXISTS (SELECT 1 FROM b1, b2, l
@@ -430,10 +415,9 @@ object SearchQueries extends Family("serving") {
         Seq(Prefix("sca"), Fuzzy("tabel", 1)), maxGaps = 3)
       matchingDocs(dir, spec)
     }, Some(
-      tokenPositionCtesSql(
+      s"""WITH ${tokenPositionCtesSql(
         ("a", "s", "starts_with(toks[u.i], 'sca')"),
-        ("b", "s", "len(toks[u.i]) > 0 AND damerau_levenshtein(toks[u.i], 'tabel') <= 1")) +
-      """)
+        ("b", "s", "len(toks[u.i]) > 0 AND damerau_levenshtein(toks[u.i], 'tabel') <= 1"))}
         |SELECT DISTINCT t.doc_id, t.lang
         |FROM t
         |WHERE EXISTS (SELECT 1 FROM a, b
@@ -641,9 +625,8 @@ object SearchQueries extends Family("serving") {
         col("items"),
         minSupport = 0.45, minSetSize = 2, size = 10, maxSetSize = 6)
     }, Some(
-      """WITH tx AS (
-        |  SELECT doc_id, list_distinct(list_filter(
-        |    regexp_extract_all(lower(text), '[a-z0-9]+'),
+      s"""WITH tx AS (
+        |  SELECT doc_id, list_distinct(list_filter($duckToks,
         |    x -> x IN ('scan','join','hash','merge','sort','filter',
         |               'agg','batch','window','index','table','key'))) AS items
         |  FROM documents
@@ -799,9 +782,8 @@ object SearchQueries extends Family("serving") {
           load(dir, "documents").where(col("doc_id") < 12), "doc_id", "text")
         .orderBy("doc_id", "term")
     }, Some(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+      s"""WITH t AS (
+        |  SELECT doc_id, $duckToks AS toks
         |  FROM documents WHERE doc_id < 12
         |), e AS (
         |  SELECT doc_id, u.i - 1 AS pos, toks[u.i] AS term
@@ -918,11 +900,7 @@ object SearchQueries extends Family("serving") {
         .select("c_custkey", "c_mktsegment")
         .orderBy("c_custkey")
     }, Some({
-      s"""WITH pts AS (
-         |  SELECT c_custkey, c_mktsegment,
-         |    $customerLatLonSql
-         |  FROM customer
-         |)
+      s"""WITH ${customerPointsCteSql("c_custkey", "c_mktsegment")}
          |SELECT c_custkey, c_mktsegment FROM pts
          |WHERE ${geoCrossingsSql(geoMultiRings)} % 2 = 1
          |ORDER BY c_custkey""".stripMargin
@@ -939,11 +917,7 @@ object SearchQueries extends Family("serving") {
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
         .orderBy("c_mktsegment")
     }, Some(
-      s"""WITH pts AS (
-        |  SELECT c_mktsegment,
-        |    $customerLatLonSql
-        |  FROM customer
-        |)
+      s"""WITH ${customerPointsCteSql("c_mktsegment")}
         |SELECT c_mktsegment, count(*) AS n FROM pts
         |WHERE NOT (lat >= -30 AND lat <= 30 AND lon >= -60 AND lon <= 60)
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),

@@ -105,12 +105,11 @@ object SimilarityQueries extends Family("pipeline") {
     * descending, ties to the smaller neighbor id.
     */
   private val top5ByCosSql: String =
-    """), ranked AS (
+    """SELECT query_id, rank, neighbor_id, cos FROM (
       |  SELECT *, row_number() OVER (PARTITION BY query_id
       |    ORDER BY cos DESC, neighbor_id ASC) AS rank
       |  FROM scored
-      |)
-      |SELECT query_id, rank, neighbor_id, cos FROM ranked
+      |) ranked
       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   /** Exact top-5 cosine neighbors of vectors 0-4 in DuckDB, where `v` is
@@ -125,7 +124,8 @@ object SimilarityQueries extends Family("pipeline") {
        |    list_inner_product(e.v, q.v)
        |      / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
        |  FROM e, q WHERE e.vec_id <> q.vec_id
-       |""".stripMargin + top5ByCosSql
+       |)
+       |$top5ByCosSql""".stripMargin
 
   /** LSH top-5 in DuckDB: the seeded 6-plane hyperplane buckets inlined,
     * candidates within `maxHamming` sign flips of the query's bucket.
@@ -141,7 +141,8 @@ object SimilarityQueries extends Family("pipeline") {
        |      / (sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
        |  FROM b c, q
        |  WHERE c.vec_id <> q.vec_id AND bit_count(xor(c.bkt, q.bkt)) <= $maxHamming
-       |""".stripMargin + top5ByCosSql
+       |)
+       |$top5ByCosSql""".stripMargin
   }
 
   /** IVF top-5 in DuckDB over `assignCtes` (an [[ivfAssignCtesSql]] list):
@@ -158,7 +159,8 @@ object SimilarityQueries extends Family("pipeline") {
        |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
        |  FROM assigned a JOIN qprobe q ON a.cell = q.cell
        |  WHERE a.vec_id <> q.query_id
-       |""".stripMargin + top5ByCosSql
+       |)
+       |$top5ByCosSql""".stripMargin
 
   /** The maintained IVF index restated from scratch: centroids frozen on
     * the even-id half, assignment and probing over the whole corpus. One
@@ -525,7 +527,7 @@ object SimilarityQueries extends Family("pipeline") {
           queries, "vec_id", "embedding", k = 5)
         .withColumn("rank", col("rank").cast("long"))
     }, Some(
-      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |q AS (SELECT * FROM e WHERE vec_id < 5),
         |c AS (SELECT * FROM e WHERE label % 2 = 0),
         |scored AS (
@@ -533,7 +535,8 @@ object SimilarityQueries extends Family("pipeline") {
         |    list_inner_product(c.v, q.v)
         |      / (sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(q.v, q.v))) AS cos
         |  FROM c, q WHERE c.vec_id <> q.vec_id
-        |""".stripMargin + top5ByCosSql)),
+        |)
+        |$top5ByCosSql""".stripMargin)),
 
     // Pre-filter knn over the SHARED full-corpus IVF index: identical
     // centroid/assignment CTEs, the filter applied to the candidate index
@@ -568,7 +571,8 @@ object SimilarityQueries extends Family("pipeline") {
          |      / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))) AS cos
          |  FROM fidx a JOIN qprobe q ON a.cell = q.cell
          |  WHERE a.vec_id <> q.query_id
-         |""".stripMargin + top5ByCosSql
+         |)
+         |$top5ByCosSql""".stripMargin
     })),
 
     QueryCase("ann_ivf", (s, dir) => {

@@ -238,8 +238,7 @@ object TextQueries extends Family("pipeline") {
     val stoplist = TextAnalysis.englishStopwords.map(w => s"'$w'").mkString("[", ",", "]")
     s"""q_m AS (
        |  SELECT doc_id,
-       |    CASE WHEN len(trim(text)) = 0 THEN 0
-       |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END::BIGINT AS q_tokens,
+       |    ${wsTokenCountSql()}::BIGINT AS q_tokens,
        |    CASE WHEN len(text) = 0 THEN 0.0
        |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / len(text) END AS q_punct,
        |    CASE WHEN len(toks) = 0 THEN 0.0
@@ -310,8 +309,7 @@ object TextQueries extends Family("pipeline") {
        |  ) r JOIN kept k USING (doc_id) WHERE rn = 1
        |), bud AS (
        |  SELECT doc_id, source,
-       |    (CASE WHEN len(trim(text)) = 0 THEN 0
-       |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)::BIGINT
+       |    ${wsTokenCountSql()}::BIGINT
        |      AS n_tok,
        |    ${ops.Sampling.hashUnitSql("doc_id", 42)} AS u
        |  FROM winners
@@ -351,25 +349,25 @@ object TextQueries extends Family("pipeline") {
     scoredH.join(truth, "doc_id")
   }
 
-  /** [[holdoutScored]] in DuckDB, up to the holdout score CTE `s`; each
-    * caller closes the CTE list.
+  /** Each document's term frequencies in relation `from` as CTE
+    * `name(doc_id, t, tf)`; closed.
     */
-  private def holdoutScoreCtes: String =
-    s"""WITH train AS (
-       |  SELECT * FROM documents
-       |  WHERE ${ops.Sampling.hashUnitSql("doc_id", 7)} < 0.6
-       |), holdout AS (
-       |  SELECT * FROM documents
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM train)
-       |), tposting AS (
+  private def postingCteSql(name: String, from: String): String =
+    s"""$name AS (
        |  SELECT doc_id, t, count(*)::BIGINT AS tf
-       |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM train)
+       |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM $from)
        |  GROUP BY 1, 2
-       |), labels AS (
-       |  SELECT doc_id,
-       |    (CASE WHEN len(trim(text)) = 0 THEN 0
-       |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) >= 50 AS pos
-       |  FROM train
+       |)""".stripMargin
+
+  /** [[ops.QualityModel.distill]] in DuckDB over relation `train` with
+    * postings CTE `tposting`: the ≥50-token label, per-term label dfs and
+    * the floor-div log-odds weight `w(t, w)`, then the score of postings
+    * CTE `scored`: `s(doc_id, score)`.
+    */
+  private def lengthLabelScoreCtesSql(train: String, scored: String): String =
+    s"""labels AS (
+       |  SELECT doc_id, ${wsTokenCountSql()} >= 50 AS pos
+       |  FROM $train
        |), dfc AS (
        |  SELECT t,
        |    sum(CASE WHEN l.pos THEN 1 ELSE 0 END)::BIGINT AS pos_df,
@@ -380,21 +378,50 @@ object TextQueries extends Family("pipeline") {
        |    (${ops.QualityModel.Scale} * (pos_df + 1)) // (neg_df + 1)
        |      - (${ops.QualityModel.Scale} * (neg_df + 1)) // (pos_df + 1) AS w
        |  FROM dfc WHERE pos_df + neg_df >= 2
-       |), hposting AS (
-       |  SELECT doc_id, t, count(*)::BIGINT AS tf
-       |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM holdout)
-       |  GROUP BY 1, 2
        |), s AS (
        |  SELECT p.doc_id, sum(p.tf * w.w)::BIGINT AS score
-       |  FROM hposting p JOIN w USING (t) GROUP BY 1
-       |""".stripMargin
+       |  FROM $scored p JOIN w USING (t) GROUP BY 1
+       |)""".stripMargin
+
+  /** [[ops.Packing.packConcatChunk]] (512-token sequences, 4 buckets by
+    * `doc_id % 4`) in DuckDB over relation `from`, as CTEs named with
+    * prefix `p`: `<p>t` (each doc's bucket, token count `tok` and the
+    * `cols` select items), `<p>c` (plus its start offset `strt` in the
+    * bucket's token stream) and `<p>e`, one row per (doc, sequence it
+    * spans).
+    */
+  private def packedSpansCtesSql(from: String, p: String = "", cols: Seq[String] = Nil): String =
+    s"""${p}t AS (
+       |  SELECT ${(Seq("doc_id", "doc_id % 4 AS bucket") ++ cols).mkString(", ")},
+       |    ${wsTokenCountSql()}::BIGINT AS tok
+       |  FROM $from
+       |), ${p}c AS (
+       |  SELECT *,
+       |    (sum(tok) OVER (PARTITION BY bucket ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok)::BIGINT AS strt
+       |  FROM ${p}t WHERE tok > 0
+       |), ${p}e AS (
+       |  SELECT *, unnest(generate_series(strt // 512, (strt + tok - 1) // 512)) AS seq
+       |  FROM ${p}c
+       |)""".stripMargin
+
+  /** [[holdoutScored]] in DuckDB, up to the holdout score CTE `s`. */
+  private def holdoutScoreCtes: String =
+    s"""train AS (
+       |  SELECT * FROM documents
+       |  WHERE ${ops.Sampling.hashUnitSql("doc_id", 7)} < 0.6
+       |), holdout AS (
+       |  SELECT * FROM documents
+       |  WHERE doc_id NOT IN (SELECT doc_id FROM train)
+       |), ${postingCteSql("tposting", "train")}, ${postingCteSql("hposting", "holdout")},
+       |${lengthLabelScoreCtesSql("train", "hposting")}""".stripMargin
 
   /** The boilerplate 3-grams in DuckDB: each document's distinct word
     * 3-grams `g(doc_id, gram)` and `freq(gram)`, those in at least 1 % of
-    * the documents. Left open: callers close `freq` and go on.
+    * the documents.
     */
   private def boilerplateCtesSql: String =
-    s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
+    s"""t AS (SELECT doc_id, $duckToks AS toks FROM documents),
        |g AS (
        |  SELECT doc_id, unnest(list_distinct(list_transform(
        |    generate_series(1, len(toks) - 2),
@@ -403,7 +430,7 @@ object TextQueries extends Family("pipeline") {
        |), freq AS (
        |  SELECT gram FROM g GROUP BY gram
        |  HAVING count(*) >= ceil((SELECT count(*) FROM documents) * 0.01)
-       |""".stripMargin
+       |)""".stripMargin
 
   val cases: Seq[QueryCase] = Seq(
     // ===== Training-data ops: text analysis =====
@@ -429,8 +456,7 @@ object TextQueries extends Family("pipeline") {
          |  SELECT doc_id, text, $duckToks AS toks FROM documents
          |), m AS (
          |  SELECT doc_id,
-         |    CASE WHEN len(trim(text)) = 0 THEN 0
-         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END::BIGINT AS token_count,
+         |    ${wsTokenCountSql()}::BIGINT AS token_count,
          |    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]'))::BIGINT AS bpe_token_estimate,
          |    CASE WHEN len(text) = 0 THEN 0.0
          |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / len(text) END AS punct_ratio,
@@ -488,29 +514,8 @@ object TextQueries extends Family("pipeline") {
           ops.QualityModel.lengthLabel(col("text")), minDf = 2)
         .orderBy("doc_id")
     }, Some(
-      s"""WITH posting AS (
-         |  SELECT doc_id, t, count(*)::BIGINT AS tf
-         |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM documents)
-         |  GROUP BY 1, 2
-         |), labels AS (
-         |  SELECT doc_id,
-         |    (CASE WHEN len(trim(text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) >= 50 AS pos
-         |  FROM documents
-         |), dfc AS (
-         |  SELECT t,
-         |    sum(CASE WHEN l.pos THEN 1 ELSE 0 END)::BIGINT AS pos_df,
-         |    sum(CASE WHEN l.pos THEN 0 ELSE 1 END)::BIGINT AS neg_df
-         |  FROM posting p JOIN labels l USING (doc_id) GROUP BY t
-         |), w AS (
-         |  SELECT t,
-         |    (${ops.QualityModel.Scale} * (pos_df + 1)) // (neg_df + 1)
-         |      - (${ops.QualityModel.Scale} * (neg_df + 1)) // (pos_df + 1) AS w
-         |  FROM dfc WHERE pos_df + neg_df >= 2
-         |), s AS (
-         |  SELECT p.doc_id, sum(p.tf * w.w)::BIGINT AS score
-         |  FROM posting p JOIN w USING (t) GROUP BY 1
-         |)
+      s"""WITH ${postingCteSql("tposting", "documents")},
+         |${lengthLabelScoreCtesSql("documents", "tposting")}
          |SELECT d.doc_id, coalesce(s.score, 0)::BIGINT AS score,
          |  coalesce(s.score, 0) > 0 AS predicted
          |FROM documents d LEFT JOIN s USING (doc_id)
@@ -523,7 +528,7 @@ object TextQueries extends Family("pipeline") {
       implicit val spark: SparkSession = s
       holdoutScored(dir)._2.orderBy("doc_id")
     }, Some(
-      holdoutScoreCtes + s""")
+      s"""WITH $holdoutScoreCtes
          |SELECT h.doc_id, coalesce(s.score, 0)::BIGINT AS score,
          |  coalesce(s.score, 0) > 0 AS predicted
          |FROM holdout h LEFT JOIN s USING (doc_id)
@@ -540,10 +545,9 @@ object TextQueries extends Family("pipeline") {
       // tie handling (every addend a multiple of 0.5, order-free exact).
       ops.QualityModel.auc(holdoutLabeled(dir), "score", "actual")
     }, Some(
-      holdoutScoreCtes + s"""), hl AS (
+      s"""WITH $holdoutScoreCtes, hl AS (
          |  SELECT h.doc_id, coalesce(s.score, 0)::BIGINT AS score,
-         |    (CASE WHEN len(trim(h.text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(h.text), '\\s+')) END) >= 50 AS actual
+         |    ${wsTokenCountSql("h.text")} >= 50 AS actual
          |  FROM holdout h LEFT JOIN s USING (doc_id)
          |), grp AS (
          |  SELECT score, count(*)::BIGINT AS n,
@@ -575,10 +579,9 @@ object TextQueries extends Family("pipeline") {
       // every metric one fixed tree over four integer cells.
       ops.QualityModel.classifierReport(holdoutLabeled(dir), "predicted", "actual")
     }, Some(
-      holdoutScoreCtes + s"""), hl AS (
+      s"""WITH $holdoutScoreCtes, hl AS (
          |  SELECT coalesce(s.score, 0) > 0 AS pred,
-         |    (CASE WHEN len(trim(h.text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(h.text), '\\s+')) END) >= 50 AS actual
+         |    ${wsTokenCountSql("h.text")} >= 50 AS actual
          |  FROM holdout h LEFT JOIN s USING (doc_id)
          |), cells AS (
          |  SELECT
@@ -771,8 +774,7 @@ object TextQueries extends Family("pipeline") {
     }, Some(
       s"""WITH t AS (
          |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks,
-         |    CASE WHEN len(trim(text)) = 0 THEN 0
-         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END::BIGINT AS tok
+         |    ${wsTokenCountSql()}::BIGINT AS tok
          |  FROM documents
          |), n AS (
          |  SELECT doc_id, toks, tok,
@@ -950,9 +952,7 @@ object TextQueries extends Family("pipeline") {
             (floor(ops.TextAnalysis.tokenCount(col("text")) / 10) * 10)))
         .orderBy("feature")
     }, Some({
-      val tokCount =
-        """(CASE WHEN len(trim(text)) = 0 THEN 0
-          |      ELSE len(regexp_split_to_array(trim(text), '\s+')) END)""".stripMargin
+      val tokCount = wsTokenCountSql()
       val feats = Seq(
         "lang" -> "lang",
         "source" -> "source",
@@ -998,8 +998,7 @@ object TextQueries extends Family("pipeline") {
       val u = ops.Sampling.hashUnitSql("doc_id", 42)
       s"""WITH d AS (
          |  SELECT doc_id,
-         |    (CASE WHEN len(trim(text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)::BIGINT
+         |    ${wsTokenCountSql()}::BIGINT
          |      AS n_tok,
          |    $u AS u
          |  FROM documents
@@ -1043,21 +1042,7 @@ object TextQueries extends Family("pipeline") {
          |    FROM documents
          |  ) WHERE rn = 1
          |), t AS (SELECT doc_id, source, $duckToks AS toks FROM surv),
-         |tok AS (
-         |  SELECT doc_id, i AS tp
-         |  FROM t, unnest(generate_series(1, len(toks))) u(i)
-         |  WHERE len(toks) > 0
-         |), grams AS (
-         |  SELECT doc_id, i AS pos,
-         |    md5(array_to_string(toks[i : i + 7], ' ')) AS g
-         |  FROM t, unnest(generate_series(1, len(toks) - 7)) u(i)
-         |  WHERE len(toks) >= 8
-         |), dup AS (
-         |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-         |), covered AS (
-         |  SELECT DISTINCT grams.doc_id, pos + j AS tp
-         |  FROM grams JOIN dup USING (g), unnest(generate_series(0, 7)) v(j)
-         |), per_doc AS (
+         |${duplicateSpanCtesSql(minLen = 8)}, per_doc AS (
          |  SELECT tok.doc_id, count(*) AS n_tokens, count(covered.tp) AS n_removed
          |  FROM tok LEFT JOIN covered
          |    ON tok.doc_id = covered.doc_id AND tok.tp = covered.tp
@@ -1113,9 +1098,7 @@ object TextQueries extends Family("pipeline") {
         .orderBy("lang")
     }, Some({
       val u = ops.Sampling.hashUnitSql("doc_id", 42)
-      val tokCount =
-        """(CASE WHEN len(trim(text)) = 0 THEN 0
-          |      ELSE len(regexp_split_to_array(trim(text), '\s+')) END)""".stripMargin
+      val tokCount = wsTokenCountSql()
       val gatePred = "doc_id IN (SELECT doc_id FROM gated)"
       s"""WITH gated AS (
          |  SELECT doc_id FROM (
@@ -1263,8 +1246,7 @@ object TextQueries extends Family("pipeline") {
     }, Some(
       s"""WITH d AS (
          |  SELECT doc_id, source,
-         |    (CASE WHEN len(trim(text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)::BIGINT
+         |    ${wsTokenCountSql()}::BIGINT
          |      AS n_tok,
          |    ${ops.Sampling.hashUnitSql("doc_id", 42)} AS u
          |  FROM documents
@@ -1412,8 +1394,7 @@ object TextQueries extends Family("pipeline") {
         .mkString(" + ")
       s"""WITH m AS (
          |  SELECT doc_id,
-         |    (CASE WHEN len(trim(text)) = 0 THEN 0
-         |          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)::BIGINT
+         |    ${wsTokenCountSql()}::BIGINT
          |      AS word_count,
          |    len(regexp_extract_all(text, '\\S'))::BIGINT AS nsp,
          |    (len(regexp_extract_all(text, '#'))
@@ -1494,14 +1475,14 @@ object TextQueries extends Family("pipeline") {
         .groupBy("label")
         .agg(count(lit(1)).as("n_kept"))
         .orderBy("label")
-    }, Some(
-      s"""WITH ${ivfAssignCtesSql(nlist = 8)}, pairs AS (
+    }, Some(keepPerLabelSql(
+      s"""${ivfAssignCtesSql(nlist = 8)}, pairs AS (
          |  SELECT x.vec_id AS id_a, y.vec_id AS id_b
          |  FROM assigned x JOIN assigned y
          |    ON x.cell = y.cell AND x.vec_id < y.vec_id
          |  WHERE list_inner_product(x.v, y.v)
          |      / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.42
-         |""".stripMargin + keepPerLabelSql)),
+         |)""".stripMargin))),
 
     // The multi-probe twin: candidates additionally pair each vector's
     // top-2 cells (cellranked r <= 2) against home cells, LEAST/GREATEST-
@@ -1522,8 +1503,8 @@ object TextQueries extends Family("pipeline") {
         .groupBy("label")
         .agg(count(lit(1)).as("n_kept"))
         .orderBy("label")
-    }, Some(
-      s"""WITH ${ivfAssignCtesSql(nlist = 8)}, cand AS (
+    }, Some(keepPerLabelSql(
+      s"""${ivfAssignCtesSql(nlist = 8)}, cand AS (
          |  SELECT DISTINCT least(p.vec_id, b.vec_id) AS id_a,
          |    greatest(p.vec_id, b.vec_id) AS id_b
          |  FROM cellranked p JOIN assigned b
@@ -1536,7 +1517,7 @@ object TextQueries extends Family("pipeline") {
          |  JOIN e y ON y.vec_id = c.id_b
          |  WHERE list_inner_product(x.v, y.v)
          |      / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.42
-         |""".stripMargin + keepPerLabelSql)),
+         |)""".stripMargin))),
 
     // Segment dedup restated verbatim: same analyzer tokens, same 1-based
     // inclusive span slicing (both engines truncate the last span), same
@@ -1583,31 +1564,7 @@ object TextQueries extends Family("pipeline") {
       ops.Dedup.duplicateSpanRemoval(load(dir, "documents"),
           "doc_id", "text", minLen = 8)
         .orderBy("doc_id")
-    }, Some(
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |tok AS (
-         |  SELECT doc_id, i AS tp, toks[i] AS tok
-         |  FROM t, unnest(generate_series(1, len(toks))) u(i)
-         |  WHERE len(toks) > 0
-         |), grams AS (
-         |  SELECT doc_id, i AS pos,
-         |    md5(array_to_string(toks[i : i + 7], ' ')) AS g
-         |  FROM t, unnest(generate_series(1, len(toks) - 7)) u(i)
-         |  WHERE len(toks) >= 8
-         |), dup AS (
-         |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-         |), covered AS (
-         |  SELECT DISTINCT grams.doc_id, pos + j AS tp
-         |  FROM grams JOIN dup USING (g),
-         |    unnest(generate_series(0, 7)) v(j)
-         |)
-         |SELECT tok.doc_id, count(*) AS n_tokens,
-         |  count(covered.tp) AS n_removed,
-         |  coalesce(string_agg(CASE WHEN covered.tp IS NULL THEN tok.tok END,
-         |    ' ' ORDER BY tok.tp), '') AS text
-         |FROM tok LEFT JOIN covered
-         |  ON tok.doc_id = covered.doc_id AND tok.tp = covered.tp
-         |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin)),
+    }, Some(duplicateSpanRemovalSql(minLen = 8))),
 
     // Boilerplate restated on gram STRINGS where the engine counts distinct
     // gram HASHES — identical counts because per-doc grams are distinct by
@@ -1626,7 +1583,7 @@ object TextQueries extends Family("pipeline") {
           "doc_id", "text", n = 3, minDocFrac = 0.01)
         .orderBy("doc_id")
     }, Some(
-      boilerplateCtesSql + s""")
+      s"""WITH $boilerplateCtesSql
          |SELECT g.doc_id, count(*) AS n_grams, count(f.gram) AS n_boilerplate,
          |  count(f.gram)::DOUBLE / count(*) AS boilerplate_ratio
          |FROM g LEFT JOIN freq f ON g.gram = f.gram
@@ -1643,7 +1600,7 @@ object TextQueries extends Family("pipeline") {
         .agg(count(lit(1)).as("n_kept"))
         .orderBy("source")
     }, Some(
-      boilerplateCtesSql + s"""), p AS (
+      s"""WITH $boilerplateCtesSql, p AS (
          |  SELECT g.doc_id, count(f.gram)::DOUBLE / count(*) AS ratio
          |  FROM g LEFT JOIN freq f ON g.gram = f.gram GROUP BY g.doc_id
          |)
@@ -1854,20 +1811,7 @@ object TextQueries extends Family("pipeline") {
           ops.TextAnalysis.tokenCount(col("text")), seqLen = 512, numBuckets = 4)
         .orderBy("bucket", "seq", "doc_id")
     }, Some(
-      s"""WITH t AS (
-         |  SELECT doc_id, doc_id % 4 AS bucket,
-         |    CASE WHEN len(trim(text)) = 0 THEN 0
-         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END::BIGINT AS tok
-         |  FROM documents
-         |), c AS (
-         |  SELECT doc_id, bucket, tok,
-         |    (sum(tok) OVER (PARTITION BY bucket ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok)::BIGINT AS strt
-         |  FROM t WHERE tok > 0
-         |), e AS (
-         |  SELECT *, unnest(generate_series(strt // 512, (strt + tok - 1) // 512)) AS seq
-         |  FROM c
-         |)
+      s"""WITH ${packedSpansCtesSql("documents")}
          |SELECT bucket, seq, doc_id,
          |  greatest(0, seq * 512 - strt)::BIGINT AS slice_begin,
          |  (least(tok, (seq + 1) * 512 - strt) - greatest(0, seq * 512 - strt))::BIGINT AS slice_len
@@ -1887,7 +1831,7 @@ object TextQueries extends Family("pipeline") {
           bench, "doc_id", "text", tau = 0.5, shingleK = 3, window = 4)
         .orderBy("doc_id", "bench_id")
     }, Some(
-      winnowFingerprintCtesSql + s"""), b AS (
+      s"""WITH $winnowFingerprintCtesSql, b AS (
          |  SELECT doc_id AS bench_id, fp FROM f WHERE doc_id % 97 = 0
          |), pairs AS (
          |  SELECT f.doc_id, b.bench_id,
@@ -1909,7 +1853,7 @@ object TextQueries extends Family("pipeline") {
           bench, "doc_id", "text", threshold = 0.35, shingleK = 2)
         .orderBy("doc_id", "bench_id")
     }, Some(
-      wordBigramSetsCtesSql + s"""), b AS (
+      s"""WITH $wordBigramSetsCtesSql, b AS (
          |  SELECT doc_id AS bench_id, sh FROM d WHERE doc_id % 97 = 0
          |), pairs AS (
          |  SELECT d.doc_id, b.bench_id,
@@ -1930,21 +1874,8 @@ object TextQueries extends Family("pipeline") {
           "doc_id", "text", seqLen = 512, numBuckets = 4)
         .orderBy("bucket", "seq")
     }, Some(
-      s"""WITH t AS (
-         |  SELECT doc_id, doc_id % 4 AS bucket,
-         |    regexp_split_to_array(trim(text), '\\s+') AS toks,
-         |    CASE WHEN len(trim(text)) = 0 THEN 0
-         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END::BIGINT AS tok
-         |  FROM documents
-         |), c AS (
-         |  SELECT doc_id, bucket, toks, tok,
-         |    (sum(tok) OVER (PARTITION BY bucket ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok)::BIGINT AS strt
-         |  FROM t WHERE tok > 0
-         |), e AS (
-         |  SELECT *, unnest(generate_series(strt // 512, (strt + tok - 1) // 512)) AS seq
-         |  FROM c
-         |), s AS (
+      s"""WITH ${packedSpansCtesSql("documents",
+                cols = Seq("regexp_split_to_array(trim(text), '\\s+') AS toks"))}, s AS (
          |  SELECT bucket, seq, doc_id, toks,
          |    greatest(0, seq * 512 - strt)::BIGINT AS b,
          |    least(tok, (seq + 1) * 512 - strt)::BIGINT AS e2
@@ -2104,23 +2035,8 @@ object TextQueries extends Family("pipeline") {
          |  WHERE a.doc_id < b.doc_id
          |    AND len(list_intersect(a.sh, b.sh))::DOUBLE
          |          / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.35
-         |), edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs
-         |), reach AS (
-         |  -- transitive closure (recursive UNION dedupes, so it terminates)
-         |  WITH RECURSIVE r(a, b) AS (
-         |    SELECT a, b FROM edges
-         |    UNION
-         |    SELECT r.a, e.b FROM r JOIN edges e ON r.b = e.a
-         |  ) SELECT * FROM r
-         |), comp AS (
-         |  SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a
-         |)
-         |SELECT source, count(*) AS n_kept
-         |FROM documents doc LEFT JOIN comp ON doc.doc_id = comp.id
-         |WHERE comp.id IS NULL OR comp.component = doc.doc_id
-         |GROUP BY source ORDER BY source""".stripMargin)),
+         |), $componentsCtesSql
+         |${keepPerComponentSql("documents doc", "doc.doc_id", "source", "n_kept")}""".stripMargin)),
 
     QueryCase("dedup_cluster_keep_minhash", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -2366,20 +2282,7 @@ object TextQueries extends Family("pipeline") {
          |), cleaned AS (
          |  SELECT doc_id, text FROM winners
          |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-         |), pt AS (
-         |  SELECT doc_id, doc_id % 4 AS bucket,
-         |    CASE WHEN len(trim(text)) = 0 THEN 0
-         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END::BIGINT AS tok
-         |  FROM cleaned
-         |), pc AS (
-         |  SELECT doc_id, bucket, tok,
-         |    (sum(tok) OVER (PARTITION BY bucket ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok)::BIGINT AS strt
-         |  FROM pt WHERE tok > 0
-         |), pe AS (
-         |  SELECT *, unnest(generate_series(strt // 512, (strt + tok - 1) // 512)) AS seq
-         |  FROM pc
-         |)
+         |), ${packedSpansCtesSql("cleaned", p = "p")}
          |SELECT bucket,
          |  sum(CASE WHEN greatest(0, seq * 512 - strt) = 0 THEN 1 ELSE 0 END)::BIGINT AS n_docs,
          |  (max(seq) + 1)::BIGINT AS n_seqs,

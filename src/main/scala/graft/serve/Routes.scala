@@ -252,7 +252,8 @@ object Routes {
                 "doc_id", "score", o.path("collapse").asText(), size)
             else if (o.hasNonNull("after")) {
               val a = o.path("after")
-              require(a.isArray && a.size() == 2,
+              require(a.isArray && a.size() == 2 && a.get(0).isNumber &&
+                  a.get(1).isIntegralNumber,
                 s"search: after must be a [score, id] pair, got $a")
               Paging.searchAfter(scored, "doc_id", "score",
                 a.get(0).asDouble(), a.get(1).asLong(), size)
@@ -460,16 +461,24 @@ object Routes {
       },
       "/percolate" -> { o =>
         // The alerting endpoint: {"queries": {"alert_id": "<query_string
-        // text>", ...}} percolated against the documents corpus — one
-        // (query_id, doc_id) row per match, the Watcher wire shape.
+        // text>", ...}, "size": n?} percolated against the documents
+        // corpus — one (query_id, doc_id) row per match, the Watcher wire
+        // shape, in (query_id, doc_id) order. `size` (default the whole
+        // page budget) bounds the collect; more matches than that is a 400,
+        // never a silently cut alert list.
+        val size = page(o, "size", Requests.PageBudget, "percolate")
         val qs = o.path("queries")
         require(qs.isObject && qs.size() > 0, "percolate: missing queries")
         val stored = Percolator.fromStrings(
           qs.fields().asScala.toSeq.map(e => e.getKey -> e.getValue.asText()), defaultField = "text")
         // sharded form: identical results (parity-spec'd), and a caller
         // POSTing an index-scale query set stays inside codegen budgets
-        Percolator.percolateSharded(load(dir, "documents"), "doc_id", stored)
+        val hits = Percolator.percolateSharded(load(dir, "documents"), "doc_id", stored)
           .orderBy("query_id", "doc_id")
+        val rows = hits.limit(size + 1).collect()
+        require(rows.length <= size,
+          s"percolate: more than $size matches; raise size (1..${Requests.PageBudget}) or narrow the queries")
+        spark.createDataFrame(rows.toSeq.asJava, hits.schema)
       })
   }
 }

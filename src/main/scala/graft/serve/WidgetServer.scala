@@ -23,11 +23,11 @@ import org.apache.spark.sql.DataFrame
   * the reference delegates those to nginx, and so does this seam. The
   * driver collect is bounded by the routes, not by construction: every
   * size/k/window parameter goes through [[Requests.page]] (at most
-  * [[Requests.PageBudget]] rows), `/esql` caps at the same budget, and the
-  * other routes return bucket lists or rows bounded by what the request
-  * itself lists (`/termvectors` ids, `/analyze` text) — except
-  * `/percolate`, one row per match of the posted queries, which no page
-  * bounds yet.
+  * [[Requests.PageBudget]] rows; `/percolate`'s `size` defaults to the
+  * whole budget, and more matches than `size` is a 400, not a cut list),
+  * `/esql` caps at the same budget, and the other routes
+  * return bucket lists or rows bounded by what the request itself lists
+  * (`/termvectors` ids, `/analyze` text).
   */
 object WidgetServer {
 

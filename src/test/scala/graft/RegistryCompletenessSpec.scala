@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
 
 /** Pure logic of the registry-vs-artifact gate, factored out so the spec can
   * exercise BOTH sides of an artifact drop against fixtures (round-13 verdict
@@ -120,6 +121,25 @@ class RegistryCompletenessSpec extends SparkSpecBase {
     assert(phantom.isEmpty, s"oracle SQL for unregistered queries: $phantom")
     assert((registered -- oracled) === rowsOnly,
       "registered queries without oracle SQL must be exactly the documented rows-only set")
+  }
+
+  test("ORACLE_ANSWERS.json answers exactly the oracle key set at every scale factor") {
+    // tools/oracle_answers.py writes the file; an oracle added without its
+    // answers (or answers left behind for a removed oracle) fails here,
+    // without starting a Spark job
+    val answers = new ObjectMapper().readTree(new java.io.File("ORACLE_ANSWERS.json"))
+    assert(answers.fieldNames().asScala.toSet === SparkEntry.oracleSql.keySet)
+    val scaleFactors = Set("sf0.001", "sf0.01", "sf0.1")
+    SparkEntry.oracleSql.keys.toSeq.sorted.foreach { name =>
+      val node = answers.get(name)
+      val sfs = node.fieldNames().asScala.toSet
+      assert(sfs === scaleFactors, s"$name answers ${sfs.toSeq.sorted}")
+      scaleFactors.foreach { sf =>
+        val a = node.get(sf)
+        assert((a.has("rows") && a.has("sha256")) || a.has("over_budget_s") || a.has("error"),
+          s"$name $sf: $a is neither an answer nor an over-budget or error record")
+      }
+    }
   }
 
   private def artifactNames(f: java.io.File): Set[String] = {

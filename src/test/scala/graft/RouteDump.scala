@@ -88,6 +88,7 @@ object RouteDump {
     "/search" -> """{"q": "dup vector scan", "collapse": "lang", "size": 3}""",
     "/search" -> """{"q": "dup vector scan", "size": 2, "after": [1.0, 3]}""",
     "/search" -> """{"q": "dup vector scan", "size": 2, "after": 7}""",
+    "/search" -> """{"q": "dup vector scan", "size": 2, "after": ["x", "y"]}""",
     "/search" -> """{"q": "dup", "size": 2, "highlight": true}""",
     "/search" -> """{"q": "dup vector scan", "filter": "lang:en and n_chars >= 200", "filter_language": "kuery", "size": 5}""",
     "/search" -> """{"q": "dup", "filter": "x", "filter_language": "esql"}""",
@@ -186,6 +187,7 @@ object RouteDump {
     "/geo" -> """{"pin": {"lat": 10.0, "lon": 20.0, "km": 3000.0}}""",
     "/geo" -> """{"pin": {"lat": 0, "lon": 0}}""",
     "/percolate" -> """{"queries": {"a_dup": "text:dup", "a_vs": "text:\"vector scan\""}}""",
+    "/percolate" -> """{"queries": {"a_dup": "text:dup"}, "size": 100000}""",
     "/percolate" -> "{}")
 
   private def post(port: Int, path: String, body: String): (Int, String) = {

@@ -325,6 +325,10 @@ class WidgetServerSpec extends SparkSpecBase {
       assert(code6 === 400 && body6.contains("[score, id]"), body6)
       assert(post(s"http://127.0.0.1:$port/search",
         """{"q": "dup", "after": [1.0]}""")._1 === 400)
+      // a pair of non-numbers must not read as score 0.0 / id 0
+      val (code7, body7) = post(s"http://127.0.0.1:$port/search",
+        """{"q": "dup", "after": ["x", "y"]}""")
+      assert(code7 === 400 && body7.contains("[score, id]"), body7)
     } finally server.stop(0)
   }
 
@@ -346,6 +350,7 @@ class WidgetServerSpec extends SparkSpecBase {
         "/search" -> """{"q": "dup", "size": 0}""",
         "/mlt" -> """{"like": "dup dup", "size": 100000}""",
         "/complete" -> """{"prefix": "sp", "size": 100000}""",
+        "/percolate" -> """{"queries": {"a_dup": "text:dup"}, "size": 100000}""",
         "/retriever" -> """{"retriever": {"pinned": {"ids": [1], "rank_window_size": 100000,
                            |  "retriever": {"standard": {"query": "dup"}}}}}""".stripMargin
       ).foreach { case (path, body) =>
@@ -970,12 +975,23 @@ class WidgetServerSpec extends SparkSpecBase {
       assert(code === 200)
       val stored = graft.query.Percolator.fromStrings(
         Seq("a_dup" -> "text:dup", "a_vs" -> """text:"vector scan""""), "text")
-      val direct = WidgetServer.collectRowsJson(
-        graft.query.Percolator.percolateLong(
-          spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", stored)
-          .orderBy("query_id", "doc_id"))
+      val hits = graft.query.Percolator.percolateLong(
+        spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", stored)
+        .orderBy("query_id", "doc_id")
+      val direct = WidgetServer.collectRowsJson(hits)
       assert(body === direct)
       assert(post(s"http://127.0.0.1:$port/percolate", """{}""")._1 === 400)
+
+      // a size that holds every match serves them all; a size the first
+      // query alone fills is a 400, not a page with the later query's
+      // alerts silently cut
+      val n = hits.count()
+      val nDup = hits.where("query_id = 'a_dup'").count()
+      assert(nDup > 0 && nDup < n)
+      val both = """"queries": {"a_dup": "text:dup", "a_vs": "text:\"vector scan\""}"""
+      assert(post(s"http://127.0.0.1:$port/percolate", s"""{$both, "size": $n}""") === ((200, direct)))
+      val (code2, body2) = post(s"http://127.0.0.1:$port/percolate", s"""{$both, "size": $nDup}""")
+      assert(code2 === 400 && body2.contains(s"more than $nDup matches"), body2)
     } finally server.stop(0)
   }
 }

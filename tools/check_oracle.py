@@ -5,7 +5,9 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
 For each query result parquet written by graft.Verify, runs the matching
 oracle SQL from oracle_sql.json in DuckDB (tables = <sfDir>/<name>.parquet),
-sorts columns by name and rows by value, and compares cell-by-cell.
+sorts columns by name and rows by value, and compares cell-by-cell. Each
+query in the failure record Verify writes beside it (verify_failures.json)
+counts as FAIL(engine): it threw, so it has no parquet to compare.
 """
 import json
 import math
@@ -44,9 +46,17 @@ def main():
         oracles = json.load(f)
     import glob
     import os
+    failures = {}
+    if os.path.exists(f"{out_dir}/verify_failures.json"):
+        with open(f"{out_dir}/verify_failures.json") as f:
+            failures = json.load(f)
     names = sorted(
-        os.path.basename(d) for d in glob.glob(f"{out_dir}/*") if os.path.isdir(d))
+        os.path.basename(d) for d in glob.glob(f"{out_dir}/*")
+        if os.path.isdir(d) and os.path.basename(d) not in failures)
     n_pass = n_fail = n_rowsonly = 0
+    for name, err in sorted(failures.items()):
+        n_fail += 1
+        print(f"{'FAIL(engine)':18} {name:28} {err['class']}: {err['message']}")
     for name in names:
         got = con.execute(
             f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
