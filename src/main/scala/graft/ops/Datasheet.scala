@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   *  - `top_lang_share` — concentration of the largest language slice
   *
   * Scale shape: one metrics scan (map-side-combined sums), one
-  * DIVERSITY scan via the skinny `(kind, value)` unpivot the dictionary
-  * profiler established (three distinct-count families in one exploded
-  * aggregation — never an `Expand` over multiple COUNT DISTINCTs), and
+  * DIVERSITY scan via a skinny `(kind, value)` unpivot (three
+  * distinct-count families in one exploded aggregation — never an
+  * `Expand` over multiple COUNT DISTINCTs; the dictionary profiler still
+  * unions one branch per column, see ROADMAP direction 2), and
   * one lang-counts aggregation for the concentration row. Three scans
   * for a release-time report; nothing wider than the value keys.
   */

@@ -1886,6 +1886,30 @@ object Aggs {
       .withColumn("rate", col("increase").cast("double") / lit(secs))
   }
 
+  /** Bound on the items (Σ basket sizes) the local-mining branch of
+    * [[frequentItemSets]] collects: with the basket-count bound it keeps
+    * the driver-side copy small however wide each basket is.
+    */
+  private[query] val LocalMiningMaxItems: Long = 1L << 20
+
+  /** Whether [[frequentItemSets]] mines a compressed `(_items, _freq)`
+    * basket table on the driver: only when the table has at most
+    * `maxBaskets` rows AND at most [[LocalMiningMaxItems]] items in all.
+    * One aggregate over a limit+1 probe decides BEFORE anything is
+    * collected, so an over-bound table never reaches the driver.
+    */
+  private[query] def minesLocally(baskets: DataFrame, maxBaskets: Int): Boolean =
+    maxBaskets > 0 && {
+      // probe = bound + 1, saturated (Int.MaxValue would overflow to a
+      // negative limit and throw at analysis)
+      val probe = math.min(maxBaskets.toLong + 1L, Int.MaxValue.toLong).toInt
+      val r = baskets.limit(probe)
+        .agg(count(lit(1)),
+          coalesce(sum(when(col("_items").isNotNull, size(col("_items")).cast("long"))), lit(0L)))
+        .head()
+      r.getLong(0) <= maxBaskets && r.getLong(1) <= LocalMiningMaxItems
+    }
+
   /** ES `frequent_item_sets` agg (x-pack, 8.4+): market-basket mining —
     * the CLOSED itemsets of support ≥ `minSupport` over per-document item
     * sets, top `size` by doc count. ES runs ECLAT per shard; this is the
@@ -1903,8 +1927,9 @@ object Aggs {
     *    candidate table is SUPPORT-BOUNDED, the vocabulary-sized
     *    iteration budget of the BPE/unigram ops);
     *  - **counting**: when the compressed basket table is provably
-    *    driver-bounded (a limit+1 probe decides BEFORE collecting,
-    *    `localMiningMaxBaskets`, default 65536 ≈ ≤ tens of MB), the whole
+    *    driver-bounded (a limit+1 probe decides BEFORE collecting:
+    *    at most `localMiningMaxBaskets` rows, default 65536, and at most
+    *    [[LocalMiningMaxItems]] items in all — [[minesLocally]]), the whole
     *    level loop mines locally over int-projected sorted baskets —
     *    ZERO Spark jobs per level (the r18 verdict measured the
     *    distributed loop's per-level stages ANTI-scaling at 32 local
@@ -1912,7 +1937,7 @@ object Aggs {
     *    Otherwise each level runs ONE broadcast hash equi-join of the
     *    weighted basket pairs against the exploded candidates, then a
     *    two-phase count — `(cand, basket)` hit counts (map-side complete:
-    *    the keys extend the frame's `_items` hash partitioning), hits =
+    *    the keys extend the frame's basket-id hash partitioning), hits =
     *    set size ⇒ containment, then the weighted per-candidate total.
     *    No nested-loop join, no per-candidate subset scan over raw tx.
     *
@@ -1934,12 +1959,13 @@ object Aggs {
     * 100 TB notes: the basket aggregate is one corpus-wide exchange whose
     * map-side partial collapses duplicate baskets before any bytes move;
     * past it everything is sized by |distinct baskets|. The local-mining
-    * branch only fires when that table is PROVABLY under the bound (the
-    * probe collects at most bound+1 rows), so an adversarial
-    * high-cardinality vocabulary falls back to the distributed loop, whose
-    * width derives from the data (≈500k tx/partition, capped 4096), not
-    * the core count. The driver only ever holds support-bounded frequent
-    * sets plus (in the local branch) the bounded basket table. minSupport
+    * branch only fires when that table is PROVABLY under both bounds (the
+    * probe aggregates at most bound+1 rows), so an adversarial
+    * high-cardinality vocabulary, or a few very wide baskets, fall back to
+    * the distributed loop, whose width derives from the data (≈500k
+    * tx/partition, capped 4096), not the core count. The driver only ever
+    * holds support-bounded frequent sets plus (in the local branch) the
+    * bounded basket table. minSupport
     * low enough to admit a combinatorial lattice raises at `maxSetSize`
     * rather than running away.
     *
@@ -1995,15 +2021,9 @@ object Aggs {
       // ECLAT over exactly this kind of compacted transaction set. Above
       // the bound, the level-wise distributed loop below counts over the
       // weighted baskets instead.
-      // probe = bound + 1, saturated (Int.MaxValue would overflow to a
-      // negative limit and throw at analysis)
-      val probe = math.min(localMiningMaxBaskets.toLong + 1L, Int.MaxValue.toLong).toInt
-      val head =
-        if (localMiningMaxBaskets > 0) baskets.limit(probe).collect()
-        else Array.empty[org.apache.spark.sql.Row]
       val (n, finalLevel): (Long, Seq[Vector[String]]) =
-        if (localMiningMaxBaskets > 0 && head.length <= localMiningMaxBaskets) {
-          val bs = head.map(r =>
+        if (minesLocally(baskets, localMiningMaxBaskets)) {
+          val bs = baskets.collect().map(r =>
             (Option(r.getSeq[String](0)).getOrElse(Seq.empty).toArray, r.getLong(1)))
           // N = Σ basket multiplicities: every tx row lands in exactly one
           // normalized basket (empty and null included), so the former
@@ -2073,9 +2093,13 @@ object Aggs {
           // small inputs collapse to one partition instead of fragmenting
           // every level into shuffle.partitions-wide sub-ms tasks.
           val parts = math.max(1, math.min(4096, math.ceil(n / 500000.0).toInt))
+          // each exploded item carries its basket's id, not the basket
+          // itself: a pair row stays fixed-width however wide the basket
+          // (carrying `_items` made the frame Σ|basket|² in size)
           val pairs = baskets
-            .repartition(parts, col("_items"))
-            .select(col("_items"), col("_freq"), explode(col("_items")).as("item"))
+            .select(monotonically_increasing_id().as("_bid"), col("_items"), col("_freq"))
+            .repartition(parts, col("_bid"))
+            .select(col("_bid"), col("_freq"), explode(col("_items")).as("item"))
             .persist()
           try {
             var level: Seq[Vector[String]] =
@@ -2094,11 +2118,11 @@ object Aggs {
                     .flatMap { case (c, i) => c.map(it => (i, it)) }
                     .toDF("_cid", "item")
                   // first groupBy keys are a superset of the pairs frame's
-                  // (_items) hash partitioning — partial counts complete
+                  // (_bid) hash partitioning — partial counts complete
                   // map-side with NO exchange; only the per-candidate
                   // weighted totals (candidate-bounded rows) shuffle
                   val counts = pairs.join(broadcast(candPairs), "item")
-                    .groupBy("_cid", "_items", "_freq")
+                    .groupBy("_cid", "_bid", "_freq")
                     .agg(count(lit(1)).as("_hit"))
                     .where(col("_hit") === (k + 1))
                     .groupBy("_cid").agg(sum(col("_freq")).as("n"))

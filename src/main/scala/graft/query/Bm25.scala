@@ -97,141 +97,170 @@ object Bm25 {
     parts.reduce(_.unionByName(_)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The BM25 score column over a row frame carrying `_dl`, `_tf<i>` and the
-    * broadcast stats columns (`_n`, `_sumdl`, `_df<i>`). Fixed left-fold
-    * over terms in order — the association the SQL oracle restates.
+  /** Lucene's non-negative idf over an integer doc count `n` and document
+    * frequency `df`: `ln(1 + (N − df + 0.5) / (df + 0.5))`.
     */
-  private[query] def scoreColumn(nTerms: Int, k1: Double, b: Double): Column =
-    scoreColumnWeighted(Seq.fill(nTerms)(1.0), k1, b)
+  private[query] def idf(n: Column, df: Column): Column =
+    log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
 
-  /** [[scoreColumn]] with a per-term boost multiplying each term's BM25
-    * contribution — the Lucene `term^boost` scoring semantics. Weight 1.0
-    * emits the UNWEIGHTED term tree (no `1.0 *` node), so unboosted
-    * queries keep the exact IEEE tree every existing oracle pins.
+  /** One term's BM25 contribution, `idf · tf·(k1+1) / (tf + k1·(1 − b +
+    * b·dl/avgdl))` with `avgdl = sumdl / n`. This operator tree, with
+    * [[idf]], is THE score: every scorer folds it, and [[contributionSql]]
+    * restates it operator for operator — the lockstep the hash-exact
+    * DuckDB cross-check rests on. Change one, change both.
     */
-  private[query] def scoreColumnWeighted(
-      weights: Seq[Double], k1: Double, b: Double): Column = {
-    val avgdl = col("_sumdl").cast("double") / col("_n").cast("double")
-    val dlNorm = lit(1.0) - lit(b) + lit(b) * (col("_dl").cast("double") / avgdl)
-    weights.zipWithIndex.map { case (w, i) =>
-      val tf = col(s"_tf$i").cast("double")
-      val df = col(s"_df$i")
-      val idf = log(lit(1.0) + (col("_n") - df + lit(0.5)) / (df + lit(0.5)))
-      val term = idf * ((tf * (lit(k1) + lit(1.0))) / (tf + lit(k1) * dlNorm))
-      if (w == 1.0) term else lit(w) * term
-    }.reduce(_ + _)
+  private[query] def contribution(idf: Column, tf: Column, dl: Column, sumdl: Column,
+      n: Column, k1: Double, b: Double): Column = {
+    val tfd = tf.cast("double")
+    val avgdl = sumdl.cast("double") / n.cast("double")
+    val dlNorm = lit(1.0) - lit(b) + lit(b) * (dl.cast("double") / avgdl)
+    idf * ((tfd * (lit(k1) + lit(1.0))) / (tfd + lit(k1) * dlNorm))
   }
 
-  /** Top-`k` documents by BM25 score for `query`, over a PRE-ANALYZED
-    * (padded) text column — the indexed path. Returns `(idCol, score)`
-    * ordered by score descending, id ascending on ties; documents matching
-    * no query term are excluded (they score 0 — retrieval, not annotation).
-    *
-    * @param stats precomputed [[corpusStats]] for `queryTerms(query)`; when
-    *              absent they are computed here (one extra corpus pass —
-    *              fine for ad-hoc use, persist them for serving)
+  /** [[idf]] in DuckDB SQL over the given column references. */
+  private[query] def idfSql(n: String, df: String): String =
+    s"ln(1.0 + ($n - $df + 0.5) / ($df + 0.5))"
+
+  /** [[contribution]] in DuckDB SQL over the given column references
+    * (`b.tf0`, `dls.dl`, `st.n`, …): the same operators and association,
+    * and the literal text of `k1`/`b`, so both engines parse identical
+    * doubles and run identical IEEE ops.
     */
+  private[query] def contributionSql(idf: String, tf: String, dl: String, sumdl: String,
+      n: String, k1: Double, b: Double): String = {
+    val dlNorm = s"(1.0 - $b + $b * ($dl::DOUBLE / ($sumdl::DOUBLE / $n::DOUBLE)))"
+    s"($idf * (($tf::DOUBLE * ($k1 + 1.0)) / ($tf::DOUBLE + $k1 * $dlNorm)))"
+  }
+
+  /** The terms a query scores, in score-fold order, each with its boost.
+    * A boost multiplies its term's contribution (Lucene `term^boost`); a
+    * unit boost emits the UNWEIGHTED term tree (no `1.0 *` node), so a
+    * boost-free query keeps the exact IEEE tree every oracle pins.
+    */
+  final case class Terms(weighted: Seq[(String, Double)]) {
+    def terms: Seq[String] = weighted.map(_._1)
+    def weights: Seq[Double] = weighted.map(_._2)
+  }
+
+  object Terms {
+
+    /** ES `match`: the distinct analyzed words of `query` ([[queryTerms]]). */
+    def words(query: String,
+        analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): Terms = {
+      val terms = queryTerms(query, analyzer)
+      require(terms.nonEmpty, s"bm25: query '$query' has no analyzable terms")
+      Terms(terms.map(_ -> 1.0))
+    }
+
+    /** ES `match_phrase` in query context: the whole analyzed phrase is ONE
+      * pseudo-term, with TF = count of token positions where the full
+      * sequence occurs ([[TokenOccurrences]]'s phrase form — self-overlapping
+      * occurrences all count, the semantics the oracle restates as
+      * `toks[i:i+p-1] = [...]`) and DF/IDF of the phrase itself.
+      */
+    def phrase(phrase: String,
+        analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): Terms = {
+      val toks = analyzer.analyze(phrase)
+      require(toks.nonEmpty, s"bm25 phrase: '$phrase' has no analyzable tokens")
+      Terms(Seq(toks.mkString(" ") -> 1.0))
+    }
+
+    /** Pre-analyzed, distinct terms with per-term boosts — the
+      * `query_string` `term^2` scoring compilation
+      * ([[graft.query.QueryString.boostedTerms]] produces exactly that).
+      */
+    def boosted(termBoosts: Seq[(String, Double)]): Terms = {
+      require(termBoosts.nonEmpty, "bm25: empty boosted term set")
+      require(termBoosts.map(_._1).distinct.size == termBoosts.size,
+        "bm25: duplicate terms in boosted term set")
+      Terms(termBoosts)
+    }
+  }
+
+  /** The working columns of a scoring frame over `nTerms` terms. */
+  private[query] def workingColumns(nTerms: Int): Seq[String] =
+    "_dl" +: "_n" +: "_sumdl" +: (0 until nTerms).flatMap(i => Seq(s"_tf$i", s"_df$i"))
+
+  /** The one scoring frame: `rows` projected to its `keep` columns plus the
+    * document length `_dl` and one `_tf<i>` TF kernel per term, with the
+    * 1-row `stats` ([[corpusStats]] for the same terms: `_n`, `_sumdl`,
+    * `_df<i>`) attached by `crossJoin(broadcast(...))` — the row shape
+    * [[contribution]] reads. Rows are preserved (no match filter); a kept
+    * column that collides with a working column is refused.
+    */
+  private[query] def scoringFrame(rows: DataFrame, keep: Seq[String], analyzed: Column,
+      terms: Seq[String], stats: DataFrame): DataFrame = {
+    val clash = keep.toSet.intersect(workingColumns(terms.size).toSet)
+    require(clash.isEmpty,
+      s"bm25: scoring needs working columns ${clash.toSeq.sorted.mkString(", ")} — rename them first")
+    rows.select(keep.map(c => col(s"`$c`")) ++
+        (docLength(analyzed).as("_dl") +:
+          terms.zipWithIndex.map { case (t, i) => TokenOccurrences(analyzed, t).as(s"_tf$i") }): _*)
+      .crossJoin(broadcast(stats))
+  }
+
+  /** Term `i`'s [[contribution]] over a [[scoringFrame]]. */
+  private[query] def termContribution(i: Int, k1: Double, b: Double): Column =
+    contribution(idf(col("_n"), col(s"_df$i")), col(s"_tf$i"), col("_dl"), col("_sumdl"),
+      col("_n"), k1, b)
+
+  /** The BM25 score over a [[scoringFrame]]: the boosted contributions
+    * left-folded over terms in order — the association the SQL oracle
+    * restates.
+    */
+  private[query] def scoreColumn(weights: Seq[Double], k1: Double, b: Double): Column =
+    weights.zipWithIndex.map { case (w, i) =>
+      val c = termContribution(i, k1, b)
+      if (w == 1.0) c else lit(w) * c
+    }.reduce(_ + _)
+
+  /** The [[scoringFrame]] of `docs` (keeping `idCol`) cut to the rows that
+    * hold at least one term, with their BM25 score in `scoreCol`. The
+    * working columns stay, for callers that explain or log them.
+    */
+  private[query] def matchedFrame(docs: DataFrame, idCol: String, analyzed: Column,
+      terms: Terms, stats: Option[DataFrame], k1: Double, b: Double,
+      scoreCol: String = "score"): DataFrame = {
+    val ts = terms.terms
+    scoringFrame(docs, Seq(idCol), analyzed, ts, stats.getOrElse(corpusStats(docs, analyzed, ts)))
+      .where(ts.indices.map(i => col(s"_tf$i") > 0).reduce(_ || _))
+      .withColumn(scoreCol, scoreColumn(terms.weights, k1, b))
+  }
+
+  /** Every document matching `terms` with its BM25 score, UNORDERED and
+    * unlimited, as `(idCol, score)` over a PRE-ANALYZED (padded) text
+    * column — the indexed path. Documents matching no term are excluded
+    * (they score 0 — retrieval, not annotation). Serving features that
+    * need the full match set before their own bound read it directly:
+    * field collapse ([[Paging.collapseTopHits]]) and keyset pagination
+    * ([[Paging.searchAfter]]); [[topK]] ranks it.
+    *
+    * @param stats precomputed [[corpusStats]] for the terms; when absent
+    *              they are computed here (one extra corpus pass — fine for
+    *              ad-hoc use, persist them for serving)
+    */
+  def scored(
+      docs: DataFrame,
+      idCol: String,
+      analyzed: Column,
+      terms: Terms,
+      k1: Double = DefaultK1,
+      b: Double = DefaultB,
+      stats: Option[DataFrame] = None): DataFrame =
+    matchedFrame(docs, idCol, analyzed, terms, stats, k1, b)
+      .select(col(s"`$idCol`"), col("score"))
+
+  /** Top-`k` documents of [[scored]] in hit order ([[Hits.top]]). */
   def topK(
       docs: DataFrame,
       idCol: String,
       analyzed: Column,
-      query: String,
+      terms: Terms,
       k: Int,
       k1: Double = DefaultK1,
       b: Double = DefaultB,
-      stats: Option[DataFrame] = None,
-      analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame = {
-    val terms = queryTerms(query, analyzer)
-    require(terms.nonEmpty, s"bm25: query '$query' has no analyzable terms")
-    topKTerms(docs, idCol, analyzed, terms, k, k1, b, stats)
-  }
-
-  /** Scored PHRASE retrieval — the ES `match_phrase` in query context: the
-    * whole analyzed query scores as one unit, with TF = count of token
-    * positions where the full sequence occurs ([[TokenOccurrences]]'s
-    * phrase form — self-overlapping occurrences all count, the semantics
-    * the oracle restates as `toks[i:i+p-1] = [...]`) and DF/IDF of the
-    * phrase itself. Same BM25 formula, same corpus-stats contract.
-    */
-  def topKPhrase(
-      docs: DataFrame,
-      idCol: String,
-      analyzed: Column,
-      phrase: String,
-      k: Int,
-      k1: Double = DefaultK1,
-      b: Double = DefaultB,
-      stats: Option[DataFrame] = None,
-      analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame = {
-    val toks = analyzer.analyze(phrase)
-    require(toks.nonEmpty, s"bm25 phrase: '$phrase' has no analyzable tokens")
-    topKTerms(docs, idCol, analyzed, Seq(toks.mkString(" ")), k, k1, b, stats)
-  }
-
-  /** Every matching document with its BM25 score, UNORDERED and
-    * unlimited — the frame [[topK]] ranks, exposed for serving features
-    * that need the full match set before their own bound: field collapse
-    * ([[Paging.collapseTopHits]]) and keyset pagination
-    * ([[Paging.searchAfter]]). Same contract as [[topK]] otherwise.
-    */
-  def scoredAll(
-      docs: DataFrame,
-      idCol: String,
-      analyzed: Column,
-      query: String,
-      k1: Double = DefaultK1,
-      b: Double = DefaultB,
-      stats: Option[DataFrame] = None,
-      analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame = {
-    val terms = queryTerms(query, analyzer)
-    require(terms.nonEmpty, s"bm25: query '$query' has no analyzable terms")
-    scoredTerms(docs, idCol, analyzed, terms, k1, b, stats)
-  }
-
-  private[query] def scoredTerms(
-      docs: DataFrame,
-      idCol: String,
-      analyzed: Column,
-      terms: Seq[String],
-      k1: Double,
-      b: Double,
-      stats: Option[DataFrame],
-      weights: Option[Seq[Double]] = None): DataFrame = {
-    val st = stats.getOrElse(corpusStats(docs, analyzed, terms))
-    val ws = weights.getOrElse(Seq.fill(terms.size)(1.0))
-    require(ws.size == terms.size, "bm25: weights/terms length mismatch")
-    val base = docs.select(
-      col(s"`$idCol`") +:
-        docLength(analyzed).as("_dl") +:
-        terms.zipWithIndex.map { case (t, i) => TokenOccurrences(analyzed, t).as(s"_tf$i") }: _*)
-    base.crossJoin(broadcast(st))
-      .where(terms.indices.map(i => col(s"_tf$i") > 0).reduce(_ || _))
-      .withColumn("score", scoreColumnWeighted(ws, k1, b))
-      .select(col(s"`$idCol`"), col("score"))
-  }
-
-  /** Scored retrieval with PER-TERM BOOSTS — the `query_string`
-    * `term^2` scoring compilation (Lucene: a boost multiplies its term
-    * query's score contribution inside the sum). Boost 1.0 terms score
-    * with the exact unweighted tree, so a boost-free term list is
-    * bit-identical to [[scoredAll]]. Terms must be pre-analyzed and
-    * distinct ([[graft.query.QueryString.boostedTerms]] produces exactly
-    * that).
-    */
-  def scoredAllBoosted(
-      docs: DataFrame,
-      idCol: String,
-      analyzed: Column,
-      termBoosts: Seq[(String, Double)],
-      k1: Double = DefaultK1,
-      b: Double = DefaultB,
-      stats: Option[DataFrame] = None): DataFrame = {
-    require(termBoosts.nonEmpty, "bm25: empty boosted term set")
-    require(termBoosts.map(_._1).distinct.size == termBoosts.size,
-      "bm25: duplicate terms in boosted term set")
-    scoredTerms(docs, idCol, analyzed, termBoosts.map(_._1), k1, b, stats,
-      weights = Some(termBoosts.map(_._2)))
-  }
+      stats: Option[DataFrame] = None): DataFrame =
+    Hits.top(scored(docs, idCol, analyzed, terms, k1, b, stats), idCol, k)
 
   /** ES `_explain` for BM25 retrieval — the relevance-debugging surface:
     * the top-`k` documents EXPLODED into one row per (document, query
@@ -254,33 +283,13 @@ object Bm25 {
       b: Double = DefaultB,
       stats: Option[DataFrame] = None,
       analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame = {
-    val terms = queryTerms(query, analyzer)
-    require(terms.nonEmpty, s"bm25 explain: query '$query' has no analyzable terms")
-    val st = stats.getOrElse(corpusStats(docs, analyzed, terms))
-    val base = docs.select(
-      col(s"`$idCol`") +:
-        docLength(analyzed).as("_dl") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          TokenOccurrences(analyzed, t).as(s"_tf$i")
-        }: _*)
-    val avgdl = col("_sumdl").cast("double") / col("_n").cast("double")
-    val dlNorm = lit(1.0) - lit(b) + lit(b) * (col("_dl").cast("double") / avgdl)
-    def idfOf(i: Int): Column =
-      log(lit(1.0) + (col("_n") - col(s"_df$i") + lit(0.5)) / (col(s"_df$i") + lit(0.5)))
-    def contribOf(i: Int): Column = {
-      val tf = col(s"_tf$i").cast("double")
-      idfOf(i) * ((tf * (lit(k1) + lit(1.0))) / (tf + lit(k1) * dlNorm))
-    }
-    val details = array(terms.zipWithIndex.map { case (t, i) =>
+    val terms = Terms.words(query, analyzer)
+    val details = array(terms.terms.zipWithIndex.map { case (t, i) =>
       struct(lit(t).as("term"), col(s"_tf$i").cast("long").as("tf"),
-        col(s"_df$i").cast("long").as("df"), idfOf(i).as("idf"),
-        contribOf(i).as("contribution"))
+        col(s"_df$i").cast("long").as("df"), idf(col("_n"), col(s"_df$i")).as("idf"),
+        termContribution(i, k1, b).as("contribution"))
     }: _*)
-    base.crossJoin(broadcast(st))
-      .where(terms.indices.map(i => col(s"_tf$i") > 0).reduce(_ || _))
-      .withColumn("score", scoreColumn(terms.size, k1, b))
-      .orderBy(desc("score"), asc(s"`$idCol`"))
-      .limit(k)
+    Hits.top(matchedFrame(docs, idCol, analyzed, terms, stats, k1, b), idCol, k)
       .select(col(s"`$idCol`"), col("_dl").cast("int").as("dl"),
         col("score"), explode(details).as("_d"))
       .select(col(s"`$idCol`"), col("_d.term").as("term"),
@@ -302,19 +311,10 @@ object Bm25 {
       k: Int,
       k1: Double = DefaultK1,
       b: Double = DefaultB): String = {
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, s"bm25 explain oracle: '$query' has no analyzable terms")
-    val dlNormB = s"(1.0 - $b + $b * (b.dl::DOUBLE / (st.sumdl::DOUBLE / st.n::DOUBLE)))"
-    val score = terms.indices.map { i =>
-      s"(ln(1.0 + (st.n - st.df$i + 0.5) / (st.df$i + 0.5)) * " +
-        s"((b.tf$i::DOUBLE * ($k1 + 1.0)) / (b.tf$i::DOUBLE + $k1 * $dlNormB)))"
-    }.mkString("(", "\n    + ", ")")
-    val anyMatch = terms.indices.map(i => s"b.tf$i > 0").mkString(" OR ")
-    val dlNormT = s"(1.0 - $b + $b * (t.dl::DOUBLE / (t.sumdl::DOUBLE / t.n::DOUBLE)))"
+    val terms = Terms.words(query).terms
     val branches = terms.zipWithIndex.map { case (t, i) =>
-      val idf = s"ln(1.0 + (t.n - t.df$i + 0.5) / (t.df$i + 0.5))"
-      val contrib = s"($idf * ((t.tf$i::DOUBLE * ($k1 + 1.0)) / " +
-        s"(t.tf$i::DOUBLE + $k1 * $dlNormT)))"
+      val idf = idfSql("t.n", s"t.df$i")
+      val contrib = contributionSql(idf, s"t.tf$i", "t.dl", "t.sumdl", "t.n", k1, b)
       s"""SELECT $idCol, '$t' AS term, tf$i::BIGINT AS tf, df$i::BIGINT AS df,
          |  $idf AS idf, dl::INT AS dl, $contrib AS contribution, score
          |FROM topk t""".stripMargin
@@ -322,45 +322,14 @@ object Bm25 {
     s"""WITH ${oracleBaseCtes(table, idCol, textExpr, terms)},
        |topk AS (
        |  SELECT b.*, st.*,
-       |    $score AS score
+       |    ${scoreSql(terms.map(_ => 1.0), k1, b)} AS score
        |  FROM base b, st
-       |  WHERE $anyMatch
+       |  WHERE ${anyTermMatchesSql(terms.size)}
        |  ORDER BY score DESC, b.$idCol ASC LIMIT $k
        |)
        |$branches
        |ORDER BY score DESC, $idCol ASC, term ASC""".stripMargin
   }
-
-  /** [[scoredAllBoosted]] ranked and limited — the boosted [[topK]]. */
-  def topKBoosted(
-      docs: DataFrame,
-      idCol: String,
-      analyzed: Column,
-      termBoosts: Seq[(String, Double)],
-      k: Int,
-      k1: Double = DefaultK1,
-      b: Double = DefaultB,
-      stats: Option[DataFrame] = None): DataFrame =
-    scoredAllBoosted(docs, idCol, analyzed, termBoosts, k1, b, stats)
-      .orderBy(desc("score"), asc(s"`$idCol`"))
-      .limit(k)
-
-  private def topKTerms(
-      docs: DataFrame,
-      idCol: String,
-      analyzed: Column,
-      terms: Seq[String],
-      k: Int,
-      k1: Double,
-      b: Double,
-      stats: Option[DataFrame]): DataFrame =
-    scoredTerms(docs, idCol, analyzed, terms, k1, b, stats)
-      // Project BEFORE sort+limit: Limit(Sort(Project)) is the shape the
-      // planner turns into TakeOrderedAndProject (per-partition partial
-      // top-k, k-row final merge); Project(Limit(Sort)) is a full global
-      // sort with a range exchange.
-      .orderBy(desc("score"), asc(s"`$idCol`"))
-      .limit(k)
 
   /** [[topK]] over a RAW text column: analyzes per row first (the unindexed
     * path — prefer a stored `_split` companion at scale).
@@ -374,74 +343,31 @@ object Bm25 {
       k1: Double = DefaultK1,
       b: Double = DefaultB,
       analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame =
-    topK(docs, idCol,
-      analyzer.padded(col(s"`$textCol`")),
-      query, k, k1, b, stats = None, analyzer = analyzer)
+    topK(docs, idCol, analyzer.padded(col(s"`$textCol`")),
+      Terms.words(query, analyzer), k, k1, b)
 
   /** ES `multi_match` over several raw text columns, each scored by its
     * OWN BM25 statistics (the ES contract — per-field IDF and avgdl, so a
     * term rare in `title` but common in `body` weighs differently per
-    * field): `best_fields` takes the max of the per-field scores (ES's
-    * `dis_max` with `tie_breaker` 0 — the default mode, right when the
-    * query should match ONE field well), `most_fields` their sum (right
-    * when fields are analyzed views of the same text). Docs matching in
-    * no field don't appear. Per-field scoring keeps [[scoredAll]]'s scale
-    * shape (one scan per field, broadcast stats); the combining join is
-    * over match-bounded frames.
-    */
-  def multiMatchTopK(
-      docs: DataFrame,
-      idCol: String,
-      textCols: Seq[String],
-      query: String,
-      k: Int,
-      mode: String = "best_fields",
-      k1: Double = DefaultK1,
-      b: Double = DefaultB,
-      tieBreaker: Double = 0.0,
-      analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame = {
-    require(textCols.nonEmpty, "multiMatch: no fields")
-    require(mode == "best_fields" || mode == "most_fields",
-      s"multiMatch: unsupported mode <$mode> (best_fields|most_fields)")
-    require(tieBreaker >= 0 && tieBreaker <= 1,
-      s"multiMatch: tie_breaker must be in [0,1], got $tieBreaker")
-    require(tieBreaker == 0.0 || mode == "best_fields",
-      "multiMatch: tie_breaker applies to best_fields (dis_max) only")
-    val perField = textCols.zipWithIndex.map { case (f, i) =>
-      scoredAll(docs, idCol,
-          analyzer.padded(col(s"`$f`")),
-          query, k1, b, stats = None, analyzer = analyzer)
-        .select(col(s"`$idCol`"), col("score").as(s"_s$i"))
-    }
-    val joined = perField.reduce((a, c) => a.join(c, Seq(idCol), "full_outer"))
-    val per = textCols.indices.map(i => coalesce(col(s"_s$i"), lit(0.0)))
-    val combined =
-      if (per.size == 1) per.head
-      else if (mode == "best_fields" && tieBreaker == 0.0) greatest(per: _*)
-      else if (mode == "best_fields")
-        // ES dis_max with tie_breaker: best + tb·(sum of the others) —
-        // matching in several fields now counts, weighted below the best.
-        greatest(per: _*) +
-          lit(tieBreaker) * (per.reduce(_ + _) - greatest(per: _*))
-      else per.reduce(_ + _)
-    joined
-      .withColumn("score", combined)
-      .select(col(s"`$idCol`"), col("score"))
-      .orderBy(desc("score"), asc(s"`$idCol`"))
-      .limit(k)
-  }
-
-  /** [[multiMatchTopK]] with PER-FIELD BOOSTS — ES's `fields:
-    * ["title^3", "body"]` on `multi_match`, `query_string`, and
-    * `simple_query_string`: each field's BM25 score (its OWN statistics,
-    * the ES contract) multiplies its boost BEFORE combining.
-    * `most_fields` sums the boosted scores — exactly Lucene
-    * SimpleQueryParser's `newDefaultQuery` (a SHOULD clause per field
-    * wrapped in a BoostQuery; BooleanQuery sums matching SHOULDs), so it
-    * is THE scoring twin of [[SimpleQueryString.parseFields]];
-    * `best_fields` takes their max (the dis_max ES builds for
-    * query_string's bare clauses). Same scale shape as the unweighted
-    * form: one scan per field, broadcast stats, match-bounded joins.
+    * field), with PER-FIELD BOOSTS (ES's `fields: ["title^3", "body"]` on
+    * `multi_match`, `query_string` and `simple_query_string`): each
+    * field's score multiplies its boost BEFORE combining, and a unit boost
+    * keeps the unweighted tree ([[Terms]]' rule).
+    *
+    *  - `most_fields` (the default) sums the boosted scores — exactly
+    *    Lucene SimpleQueryParser's `newDefaultQuery` (a SHOULD clause per
+    *    field wrapped in a BoostQuery; BooleanQuery sums matching
+    *    SHOULDs), so it is THE scoring twin of
+    *    [[SimpleQueryString.parseFields]]; right when fields are analyzed
+    *    views of the same text;
+    *  - `best_fields` takes their max (ES's `dis_max`, right when the
+    *    query should match ONE field well); a `tieBreaker` in (0, 1] adds
+    *    tb·(sum of the others) — matching in several fields then counts,
+    *    weighted below the best.
+    *
+    * Docs matching in no field don't appear. Per-field scoring keeps
+    * [[scored]]'s scale shape (one scan per field, broadcast stats); the
+    * combining join is over match-bounded frames.
     */
   def multiMatchWeightedTopK(
       docs: DataFrame,
@@ -452,31 +378,35 @@ object Bm25 {
       mode: String = "most_fields",
       k1: Double = DefaultK1,
       b: Double = DefaultB,
+      tieBreaker: Double = 0.0,
       analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame = {
     require(fieldBoosts.nonEmpty, "multiMatchWeighted: no fields")
     require(fieldBoosts.forall(_._2 > 0),
       s"multiMatchWeighted: boosts must be positive, got ${fieldBoosts.map(_._2).mkString(",")}")
     require(mode == "best_fields" || mode == "most_fields",
       s"multiMatchWeighted: unsupported mode <$mode> (best_fields|most_fields)")
+    require(tieBreaker >= 0 && tieBreaker <= 1,
+      s"multiMatchWeighted: tie_breaker must be in [0,1], got $tieBreaker")
+    require(tieBreaker == 0.0 || mode == "best_fields",
+      "multiMatchWeighted: tie_breaker applies to best_fields (dis_max) only")
+    val terms = Terms.words(query, analyzer)
     val perField = fieldBoosts.zipWithIndex.map { case ((f, _), i) =>
-      scoredAll(docs, idCol,
-          analyzer.padded(col(s"`$f`")),
-          query, k1, b, stats = None, analyzer = analyzer)
+      scored(docs, idCol, analyzer.padded(col(s"`$f`")), terms, k1, b)
         .select(col(s"`$idCol`"), col("score").as(s"_s$i"))
     }
     val joined = perField.reduce((a, c) => a.join(c, Seq(idCol), "full_outer"))
     val per = fieldBoosts.zipWithIndex.map { case ((_, boost), i) =>
-      lit(boost) * coalesce(col(s"_s$i"), lit(0.0))
+      val s = coalesce(col(s"_s$i"), lit(0.0))
+      if (boost == 1.0) s else lit(boost) * s
     }
     val combined =
       if (per.size == 1) per.head
-      else if (mode == "best_fields") greatest(per: _*)
+      else if (mode == "best_fields" && tieBreaker == 0.0) greatest(per: _*)
+      else if (mode == "best_fields")
+        greatest(per: _*) + lit(tieBreaker) * (per.reduce(_ + _) - greatest(per: _*))
       else per.reduce(_ + _)
-    joined
-      .withColumn("score", combined)
-      .select(col(s"`$idCol`"), col("score"))
-      .orderBy(desc("score"), asc(s"`$idCol`"))
-      .limit(k)
+    Hits.top(joined.withColumn("score", combined).select(col(s"`$idCol`"), col("score")),
+      idCol, k)
   }
 
   /** ES `combined_fields` — the term-centric cousin of `multi_match`: the
@@ -501,9 +431,7 @@ object Bm25 {
     require(textCols.nonEmpty, "combinedFields: no fields")
     val combined = concat_ws(" ",
       textCols.map(f => coalesce(col(s"`$f`"), lit(""))): _*)
-    topK(docs, idCol,
-      analyzer.padded(combined),
-      query, k, k1, b, stats = None, analyzer = analyzer)
+    topK(docs, idCol, analyzer.padded(combined), Terms.words(query, analyzer), k, k1, b)
   }
 
   /** ES `multi_match` type `cross_fields` — the TERM-centric mode: each
@@ -577,13 +505,10 @@ object Bm25 {
     val perTerm: Seq[Column] = terms.indices.map { ti =>
       val dfCols = (0 until nf).map(fi => col(s"_df${ti}_$fi"))
       val dfBlended = if (nf == 1) dfCols.head else greatest(dfCols: _*)
-      val idf = log(lit(1.0) +
-        (col("_n") - dfBlended + lit(0.5)) / (dfBlended + lit(0.5)))
+      val termIdf = idf(col("_n"), dfBlended)
       val perField: Seq[Column] = fieldBoosts.zipWithIndex.map { case ((_, w), fi) =>
-        val tf = col(s"_tf${ti}_$fi").cast("double")
-        val avgdl = col(s"_sumdl$fi").cast("double") / col("_n").cast("double")
-        val dlNorm = lit(1.0) - lit(b) + lit(b) * (col(s"_dl$fi").cast("double") / avgdl)
-        val sc = idf * ((tf * (lit(k1) + lit(1.0))) / (tf + lit(k1) * dlNorm))
+        val sc = contribution(termIdf, col(s"_tf${ti}_$fi"), col(s"_dl$fi"),
+          col(s"_sumdl$fi"), col("_n"), k1, b)
         if (w == 1.0) sc else lit(w) * sc
       }
       if (perField.size == 1) perField.head
@@ -593,96 +518,60 @@ object Bm25 {
     }
     val anyMatch = (for { ti <- terms.indices; fi <- 0 until nf }
       yield col(s"_tf${ti}_$fi") > 0).reduce(_ || _)
-    frame
+    Hits.top(frame
       .where(anyMatch)
       .withColumn("score", perTerm.reduce(_ + _))
-      .select(col(s"`$idCol`"), col("score"))
-      .orderBy(desc("score"), asc(s"`$idCol`"))
-      .limit(k)
+      .select(col(s"`$idCol`"), col("score")), idCol, k)
   }
 
-  /** DuckDB restatement of the whole retrieval for oracle SQL: same analyzer
-    * (`regexp_replace` lowercase normalization), TF as token-equality counts
-    * (provably equal to the kernel's boundary-sharing substring count), and
-    * the score rendered with the engine's exact operator association and
-    * literal text for `k1`/`b` — both engines then parse identical doubles
-    * and execute identical IEEE ops (the lone `ln` agrees well past the
-    * harness's 9-decimal rounding).
-    */
-  def oracleSql(
-      table: String,
-      idCol: String,
-      textExpr: String,
-      query: String,
-      k: Int,
-      k1: Double = DefaultK1,
-      b: Double = DefaultB): String = {
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, s"bm25 oracle: query '$query' has no analyzable terms")
-    oracleSqlForTerms(table, idCol, textExpr, terms, k, k1, b)
-  }
-
-  /** [[oracleSql]] for the PHRASE form: one pseudo-term whose TF is the
-    * token-sequence occurrence count.
-    */
-  def oracleSqlPhrase(
-      table: String,
-      idCol: String,
-      textExpr: String,
-      phrase: String,
-      k: Int,
-      k1: Double = DefaultK1,
-      b: Double = DefaultB): String = {
-    val toks = TextMatch.analyze(phrase)
-    require(toks.nonEmpty, s"bm25 phrase oracle: '$phrase' has no analyzable tokens")
-    oracleSqlForTerms(table, idCol, textExpr, Seq(toks.mkString(" ")), k, k1, b)
-  }
-
-  /** The scored match set as a self-contained SQL subquery — the
-    * [[scoredAll]] twin, for oracles that rank/filter it further
-    * (collapse, search_after). Columns: `(idCol, score)`.
+  /** DuckDB restatement of [[scored]] as a self-contained SQL query — for
+    * oracles that rank or filter it further (collapse, search_after).
+    * Columns: `(idCol, score)`. Same analyzer (`regexp_replace` lowercase
+    * normalization), TF as token-equality counts (provably equal to the
+    * kernel's boundary-sharing substring count), and the score rendered
+    * with the engine's exact operator association and literal text for
+    * `k1`/`b` ([[contributionSql]]) — both engines then parse identical
+    * doubles and execute identical IEEE ops (the lone `ln` agrees well
+    * past the harness's 9-decimal rounding).
     */
   def oracleSqlScored(
       table: String,
       idCol: String,
       textExpr: String,
-      query: String,
+      terms: Terms,
       k1: Double = DefaultK1,
-      b: Double = DefaultB): String = {
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, s"bm25 oracle: query '$query' has no analyzable terms")
-    oracleScoredForTerms(table, idCol, textExpr, terms, k1, b)
-  }
+      b: Double = DefaultB): String =
+    s"""WITH ${oracleBaseCtes(table, idCol, textExpr, terms.terms)}
+       |SELECT b.$idCol,
+       |  ${scoreSql(terms.weights, k1, b)} AS score
+       |FROM base b, st
+       |WHERE ${anyTermMatchesSql(terms.terms.size)}""".stripMargin
 
-  /** [[oracleSqlScored]] for the PHRASE form — one pseudo-term whose TF
-    * is the token-sequence occurrence count and DF the phrase's document
-    * frequency (the [[topKPhrase]] scoring restated unbounded, for
-    * oracles that rank/filter it further).
-    */
-  def oracleSqlScoredPhrase(
+  /** [[oracleSqlScored]] in hit order, limited — the [[topK]] twin. */
+  def oracleSql(
       table: String,
       idCol: String,
       textExpr: String,
-      phrase: String,
-      k1: Double = DefaultK1,
-      b: Double = DefaultB): String = {
-    val toks = TextMatch.analyze(phrase)
-    require(toks.nonEmpty, s"bm25 phrase oracle: '$phrase' has no analyzable tokens")
-    oracleScoredForTerms(table, idCol, textExpr, Seq(toks.mkString(" ")), k1, b)
-  }
-
-  /** [[oracleSql]] with per-term boosts — the [[topKBoosted]] twin. */
-  def oracleSqlBoosted(
-      table: String,
-      idCol: String,
-      textExpr: String,
-      termBoosts: Seq[(String, Double)],
+      terms: Terms,
       k: Int,
       k1: Double = DefaultK1,
       b: Double = DefaultB): String =
-    oracleScoredForTerms(table, idCol, textExpr, termBoosts.map(_._1), k1, b,
-      weights = Some(termBoosts.map(_._2))) +
+    oracleSqlScored(table, idCol, textExpr, terms, k1, b) +
       s"\nORDER BY score DESC, $idCol ASC LIMIT $k"
+
+  /** [[scoreColumn]] in SQL over the `base b, st` scope of
+    * [[oracleBaseCtes]].
+    */
+  private[query] def scoreSql(weights: Seq[Double], k1: Double, b: Double): String =
+    weights.zipWithIndex.map { case (w, i) =>
+      val c = contributionSql(idfSql("st.n", s"st.df$i"), s"b.tf$i", "b.dl", "st.sumdl",
+        "st.n", k1, b)
+      if (w == 1.0) c else s"($w * $c)"
+    }.mkString("(", "\n    + ", ")")
+
+  /** [[matchedFrame]]'s match filter in SQL over the `base b` scope. */
+  private[query] def anyTermMatchesSql(nTerms: Int): String =
+    (0 until nTerms).map(i => s"b.tf$i > 0").mkString(" OR ")
 
   /** [[crossFieldsTopK]]'s DuckDB restatement — per-field tokenization,
     * blended (greatest) DF per term, per-field TF-normalization with the
@@ -719,11 +608,9 @@ object Bm25 {
       val dfB =
         if (nf == 1) s"st.df${ti}_0"
         else s"greatest(${(0 until nf).map(fi => s"st.df${ti}_$fi").mkString(", ")})"
-      val idf = s"ln(1.0 + (st.n - $dfB + 0.5) / ($dfB + 0.5))"
+      val idf = idfSql("st.n", dfB)
       val perField = fieldExprBoosts.zipWithIndex.map { case ((_, w), fi) =>
-        val dlNorm = s"(1.0 - $b + $b * (b.dl$fi::DOUBLE / (st.sumdl$fi::DOUBLE / st.n::DOUBLE)))"
-        val sc = s"($idf * ((b.tf${ti}_$fi::DOUBLE * ($k1 + 1.0)) / " +
-          s"(b.tf${ti}_$fi::DOUBLE + $k1 * $dlNorm)))"
+        val sc = contributionSql(idf, s"b.tf${ti}_$fi", s"b.dl$fi", s"st.sumdl$fi", "st.n", k1, b)
         if (w == 1.0) sc else s"($w * $sc)"
       }
       if (perField.size == 1) perField.head
@@ -754,17 +641,6 @@ object Bm25 {
        |WHERE $anyMatch
        |ORDER BY score DESC, b.$idCol ASC LIMIT $k""".stripMargin
   }
-
-  private def oracleSqlForTerms(
-      table: String,
-      idCol: String,
-      textExpr: String,
-      terms: Seq[String],
-      k: Int,
-      k1: Double,
-      b: Double): String =
-    oracleScoredForTerms(table, idCol, textExpr, terms, k1, b) +
-      s"\nORDER BY score DESC, $idCol ASC LIMIT $k"
 
   /** The shared `d`/`base`/`st` CTE bodies (no `WITH` keyword) — the
     * tokenized corpus, per-doc tf/dl, and the 1-row statistics — so
@@ -802,32 +678,5 @@ object Bm25 {
        |    $dfCols
        |  FROM base
        |)""".stripMargin
-  }
-
-  private def oracleScoredForTerms(
-      table: String,
-      idCol: String,
-      textExpr: String,
-      terms: Seq[String],
-      k1: Double,
-      b: Double,
-      weights: Option[Seq[Double]] = None): String = {
-    val ws = weights.getOrElse(Seq.fill(terms.size)(1.0))
-    require(ws.size == terms.size, "bm25 oracle: weights/terms length mismatch")
-    val dlNorm = s"(1.0 - $b + $b * (b.dl::DOUBLE / (st.sumdl::DOUBLE / st.n::DOUBLE)))"
-    val score = terms.indices.map { i =>
-      val term =
-        s"(ln(1.0 + (st.n - st.df$i + 0.5) / (st.df$i + 0.5)) * " +
-          s"((b.tf$i::DOUBLE * ($k1 + 1.0)) / (b.tf$i::DOUBLE + $k1 * $dlNorm)))"
-      // boost 1.0 keeps the exact unweighted tree (the engine's own
-      // short-circuit) so boost-free oracles stay bit-identical
-      if (ws(i) == 1.0) term else s"(${ws(i)} * $term)"
-    }.mkString("(", "\n    + ", ")")
-    val anyMatch = terms.indices.map(i => s"b.tf$i > 0").mkString(" OR ")
-    s"""WITH ${oracleBaseCtes(table, idCol, textExpr, terms)}
-       |SELECT b.$idCol,
-       |  $score AS score
-       |FROM base b, st
-       |WHERE $anyMatch""".stripMargin
   }
 }

@@ -1657,7 +1657,7 @@ object Esql {
       //     per-term field-disjunctions. `and` → every term appears in at
       //     least one field (not necessarily the same one) — exactly the
       //     split-name case the mode exists for.
-      // Scoring rides the Bm25 tier ([[Bm25.multiMatchTopK]] /
+      // Scoring rides the Bm25 tier ([[Bm25.multiMatchWeightedTopK]] /
       // [[Bm25.crossFieldsTopK]]); under METADATA _score this function
       // rejects via the scored-WHERE gate naming that seam.
       val (mapOpts, rest) = args.lastOption match {
@@ -2511,7 +2511,7 @@ object Esql {
     *    SHOULD-sum and MATCH_PHRASE as ONE pseudo-term whose TF is the
     *    phrase-occurrence count and whose DF is the phrase's own document
     *    frequency (Lucene PhraseQuery's scoring shape, the
-    *    [[Bm25.topKPhrase]] contract); QSTR/KQL stay filter-only (their
+    *    [[Bm25.Terms.phrase]] contract); QSTR/KQL stay filter-only (their
     *    grammars mix clause types whose per-clause scoring is the Bm25
     *    tier's job — loud seam naming it);
     *  - corpus statistics (DF, avgdl) are computed over the frame
@@ -2524,7 +2524,7 @@ object Esql {
     *    operation-for-operation.
     *
     * Scale shape: ONE aggregate per MATCH conjunct for the 1-row corpus
-    * stats, broadcast-crossJoined back (the [[Bm25.scoredAll]] shape) —
+    * stats, broadcast-crossJoined back ([[Bm25.scoringFrame]]) —
     * rows preserved, no window, no per-row subquery.
     */
   private def compileScoredWhere(df: DataFrame, e: Expr): DataFrame = {
@@ -2540,17 +2540,6 @@ object Esql {
           "under OR/NOT and QSTR/KQL scoring are not wired; drop METADATA " +
           "_score to use them as filters")
     }
-    // working-column clash check sized to the ACTUAL term counts of the
-    // scoring conjuncts (a phrase is one pseudo-term)
-    val maxTerms = fts.map {
-      case Fn("MATCH", Seq(_, StrLit(q))) => Bm25.queryTerms(q).size
-      case _ => 1
-    }.foldLeft(1)(math.max)
-    val reserved = Seq("_dl", "_n", "_sumdl") ++
-      (0 until maxTerms).flatMap(i => Seq(s"_tf$i", s"_df$i"))
-    val clash = df.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"esql: scoring needs working columns ${clash.mkString(", ")} — rename them first")
     // filter first (every scored row matches its MATCH conjuncts), then
     // fold each MATCH's BM25 contribution into _score
     val filtered = df.where(compileExpr(e))
@@ -2567,16 +2556,11 @@ object Esql {
           }
           require(terms.exists(_.nonEmpty),
             s"esql: '${q}' has no analyzable terms")
-          val stats = Bm25.corpusStats(df, analyzed, terms)
-          val withRow = terms.zipWithIndex.foldLeft(
-            acc.crossJoin(broadcast(stats)).withColumn("_dl", Bm25.docLength(analyzed))) {
-            case (d, (t, i)) => d.withColumn(s"_tf$i", graft.expr.TokenOccurrences(analyzed, t))
-          }
-          val tmp = "_dl" +: "_n" +: "_sumdl" +:
-            terms.indices.flatMap(i => Seq(s"_tf$i", s"_df$i"))
-          withRow
-            .withColumn("_score", col("_score") + Bm25.scoreColumn(terms.size, Bm25.DefaultK1, Bm25.DefaultB))
-            .drop(tmp: _*)
+          Bm25.scoringFrame(acc, acc.columns.toSeq, analyzed, terms,
+              Bm25.corpusStats(df, analyzed, terms))
+            .withColumn("_score", col("_score") +
+              Bm25.scoreColumn(terms.map(_ => 1.0), Bm25.DefaultK1, Bm25.DefaultB))
+            .drop(Bm25.workingColumns(terms.size): _*)
         case Seq(ColRef(_), StrLit(_), MapLit(_)) => throw new IllegalArgumentException(
           "esql: analyzer-optioned MATCH does not score — the BM25 statistics " +
             "and TF kernels run the standard analyzer; drop METADATA _score or " +
@@ -2692,19 +2676,11 @@ object Esql {
           val analyzed = analyzer.padded(col(field))
           val terms = Bm25.queryTerms(queryText, analyzer)
           require(terms.nonEmpty, s"esql: RERANK query '$queryText' has no analyzable terms")
-          val reserved = ("_dl" +: "_n" +: "_sumdl" +:
-            terms.indices.flatMap(i => Seq(s"_tf$i", s"_df$i"))).toSet
-          val clash = df.columns.toSet.intersect(reserved)
-          require(clash.isEmpty,
-            s"esql: RERANK needs working columns ${clash.mkString(", ")} — rename them first")
-          val stats = Bm25.corpusStats(df, analyzed, terms)
-          val withCols = terms.zipWithIndex.foldLeft(
-            df.crossJoin(broadcast(stats)).withColumn("_dl", Bm25.docLength(analyzed))) {
-            case (d, (t, i)) => d.withColumn(s"_tf$i", graft.expr.TokenOccurrences(analyzed, t))
-          }
-          withCols
-            .withColumn(targetCol, Bm25.scoreColumn(terms.size, Bm25.DefaultK1, Bm25.DefaultB))
-            .drop(reserved.toSeq: _*)
+          Bm25.scoringFrame(df, df.columns.toSeq, analyzed, terms,
+              Bm25.corpusStats(df, analyzed, terms))
+            .withColumn(targetCol,
+              Bm25.scoreColumn(terms.map(_ => 1.0), Bm25.DefaultK1, Bm25.DefaultB))
+            .drop(Bm25.workingColumns(terms.size): _*)
         case "ngram-jaccard" =>
           val qToks = analyzer.analyze(queryText)
           require(qToks.size >= 2,

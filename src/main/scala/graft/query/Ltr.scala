@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.expr.{TextMatch, TokenOccurrences}
+import graft.expr.TextMatch
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -31,35 +31,21 @@ object Ltr {
       k: Int,
       k1: Double = Bm25.DefaultK1,
       b: Double = Bm25.DefaultB): DataFrame = {
-    val terms = Bm25.queryTerms(query)
-    require(terms.nonEmpty, s"ltr: query '$query' has no analyzable terms")
-    val analyzed = TextMatch.AsciiAnalyzer.padded(col(s"`$textCol`"))
-    val st = Bm25.corpusStats(docs, analyzed, terms)
-    val base = docs.select(
-      col(s"`$idCol`") +:
-        Bm25.docLength(analyzed).as("_dl") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          TokenOccurrences(analyzed, t).as(s"_tf$i")
-        }: _*)
-    val idfs = terms.indices.map { i =>
-      log(lit(1.0) + (col("_n") - col(s"_df$i") + lit(0.5)) / (col(s"_df$i") + lit(0.5)))
-        .as(s"f_idf$i")
-    }
+    val terms = Bm25.Terms.words(query)
+    val n = terms.terms.size
     val rel = judged.select(col(s"`$idCol`")).distinct().withColumn("_rel", lit(true))
     val outCols: Seq[Column] =
       Seq(col(s"`$idCol`"),
         coalesce(col("_rel"), lit(false)).cast("int").as("label"),
         col("_dl").cast("long").as("f_dl")) ++
-        terms.indices.map(i => col(s"_tf$i").cast("long").as(s"f_tf$i")) ++
-        idfs ++
+        (0 until n).map(i => col(s"_tf$i").cast("long").as(s"f_tf$i")) ++
+        (0 until n).map(i => Bm25.idf(col("_n"), col(s"_df$i")).as(s"f_idf$i")) ++
         Seq(col("f_bm25"))
-    base.crossJoin(broadcast(st))
-      .where(terms.indices.map(i => col(s"_tf$i") > 0).reduce(_ || _))
-      .withColumn("f_bm25", Bm25.scoreColumn(terms.size, k1, b))
+    val logged = Bm25.matchedFrame(docs, idCol, TextMatch.AsciiAnalyzer.padded(col(s"`$textCol`")),
+        terms, None, k1, b, scoreCol = "f_bm25")
       .join(rel, Seq(idCol), "left")
       .select(outCols: _*)
-      .orderBy(desc("f_bm25"), asc(s"`$idCol`"))
-      .limit(k)
+    Hits.top(logged, idCol, k, scoreCol = "f_bm25")
   }
 
   /** Close the loop: ridge-regression weights over a logged feature
@@ -126,8 +112,7 @@ object Ltr {
     val score = featureCols.zipWithIndex
       .map { case (c, i) => col(s"`$c`").cast("double") * lit(weights(i + 1)) }
       .foldLeft(lit(weights(0)))(_ + _)
-    features.withColumn("ltr_score", score)
-      .orderBy(desc("ltr_score"), asc(s"`$idCol`"))
+    Hits.ordered(features.withColumn("ltr_score", score), idCol, scoreCol = "ltr_score")
   }
 
   /** DuckDB restatement of [[logFeatures]] — [[Bm25.oracleSql]]'s exact
@@ -147,14 +132,8 @@ object Ltr {
     val terms = Bm25.queryTerms(query)
     require(terms.nonEmpty && terms.forall(!_.contains(' ')))
     val idfCols = terms.indices.map { i =>
-      s"ln(1.0 + (st.n - st.df$i + 0.5) / (st.df$i + 0.5)) AS f_idf$i"
+      s"${Bm25.idfSql("st.n", s"st.df$i")} AS f_idf$i"
     }.mkString(",\n  ")
-    val dlNorm = s"(1.0 - $b + $b * (b.dl::DOUBLE / (st.sumdl::DOUBLE / st.n::DOUBLE)))"
-    val score = terms.indices.map { i =>
-      s"(ln(1.0 + (st.n - st.df$i + 0.5) / (st.df$i + 0.5)) * " +
-        s"((b.tf$i::DOUBLE * ($k1 + 1.0)) / (b.tf$i::DOUBLE + $k1 * $dlNorm)))"
-    }.mkString("(", "\n    + ", ")")
-    val anyMatch = terms.indices.map(i => s"b.tf$i > 0").mkString(" OR ")
     val tfOut = terms.indices.map(i => s"b.tf$i AS f_tf$i").mkString(", ")
     s"""WITH ${Bm25.oracleBaseCtes(table, idCol, textExpr, terms)}, rel AS (
        |  SELECT $idCol FROM $table WHERE $relPredSql
@@ -163,9 +142,9 @@ object Ltr {
        |  CASE WHEN b.$idCol IN (SELECT $idCol FROM rel) THEN 1 ELSE 0 END AS label,
        |  b.dl AS f_dl, $tfOut,
        |  $idfCols,
-       |  $score AS f_bm25
+       |  ${Bm25.scoreSql(terms.map(_ => 1.0), k1, b)} AS f_bm25
        |FROM base b, st
-       |WHERE $anyMatch
+       |WHERE ${Bm25.anyTermMatchesSql(terms.size)}
        |ORDER BY f_bm25 DESC, b.$idCol ASC LIMIT $k""".stripMargin
   }
 }

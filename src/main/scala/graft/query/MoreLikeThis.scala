@@ -63,21 +63,15 @@ object MoreLikeThis {
       .crossJoin(dl.agg(sum(col("_dl")).as("_sumdl")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("_df"))
 
-    def idf(dfCol: Column): Column =
-      log(lit(1.0) + (col("_n") - dfCol + lit(0.5)) / (dfCol + lit(0.5)))
-
+    val idf = Bm25.idf(col("_n"), col("_df"))
     val sel = tf.where(col("_id") === seedId && col("_tf") >= minTermFreq)
       .join(df, "term").where(col("_df") >= minDocFreq)
       .crossJoin(broadcast(st))
-      .orderBy((col("_tf").cast("double") * idf(col("_df"))).desc, col("term").asc)
+      .orderBy((col("_tf").cast("double") * idf).desc, col("term").asc)
       .limit(maxQueryTerms)
       .select("term", "_df")
 
-    val avgdl = col("_sumdl").cast("double") / col("_n").cast("double")
-    val dlNorm = lit(1.0) - lit(b) + lit(b) * (col("_dl").cast("double") / avgdl)
-    val addend = idf(col("_df")) *
-      ((col("_tf").cast("double") * (lit(k1) + lit(1.0))) /
-        (col("_tf").cast("double") + lit(k1) * dlNorm))
+    val addend = Bm25.contribution(idf, col("_tf"), col("_dl"), col("_sumdl"), col("_n"), k1, b)
 
     val adds = tf.where(col("_id") =!= seedId)
       .join(broadcast(sel), "term")
@@ -89,13 +83,11 @@ object MoreLikeThis {
     val run = Window.partitionBy(col("_id")).orderBy(col("term"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val last = Window.partitionBy(col("_id")).orderBy(col("term").desc)
-    adds
+    Hits.top(adds
       .withColumn("_s", sum(col("_a")).over(run))
       .withColumn("_rn", row_number().over(last))
       .where(col("_rn") === 1)
-      .select(col("_id").as(idCol), round(col("_s"), 6).as("score"))
-      .orderBy(desc("score"), asc(s"`$idCol`"))
-      .limit(k)
+      .select(col("_id").as(idCol), round(col("_s"), 6).as("score")), idCol, k)
   }
 
   /** DuckDB restatement of the full retrieval: identical analyzer,
@@ -103,18 +95,9 @@ object MoreLikeThis {
     * scoring trees, the identical term-ordered running-sum fold and
     * `round(·, 6)` — see class doc.
     */
-  def oracleSql(
-      table: String,
-      idCol: String,
-      textExpr: String,
-      seedId: Long,
-      maxQueryTerms: Int = 10,
-      k: Int = 15,
-      minTermFreq: Int = 2,
-      minDocFreq: Int = 5,
-      k1: Double = Bm25.DefaultK1,
-      b: Double = Bm25.DefaultB): String = {
-    val idfOf = (df: String) => s"ln(1.0 + (st.n - $df + 0.5) / ($df + 0.5))"
+  def oracleSql(table: String, idCol: String, textExpr: String, seedId: Long,
+      maxQueryTerms: Int = 10, k: Int = 15, minTermFreq: Int = 2, minDocFreq: Int = 5,
+      k1: Double = Bm25.DefaultK1, b: Double = Bm25.DefaultB): String = {
     s"""WITH d AS (
        |  SELECT $idCol,
        |    ${TextMatch.tokensSql(textExpr)} AS toks
@@ -132,13 +115,11 @@ object MoreLikeThis {
        |), sel AS (
        |  SELECT t.term, f.df FROM tf t JOIN dfx f USING (term), st
        |  WHERE t.$idCol = $seedId AND t.tf >= $minTermFreq AND f.df >= $minDocFreq
-       |  ORDER BY t.tf::DOUBLE * ${idfOf("f.df")} DESC, t.term ASC
+       |  ORDER BY t.tf::DOUBLE * ${Bm25.idfSql("st.n", "f.df")} DESC, t.term ASC
        |  LIMIT $maxQueryTerms
        |), adds AS (
        |  SELECT t.$idCol, t.term,
-       |    ${idfOf("s.df")} *
-       |      ((t.tf::DOUBLE * ($k1 + 1.0)) /
-       |       (t.tf::DOUBLE + $k1 * (1.0 - $b + $b * (dl.dl::DOUBLE / (st.sumdl::DOUBLE / st.n::DOUBLE))))) AS a
+       |    ${Bm25.contributionSql(Bm25.idfSql("st.n", "s.df"), "t.tf", "dl.dl", "st.sumdl", "st.n", k1, b)} AS a
        |  FROM tf t JOIN sel s USING (term) JOIN dl USING ($idCol), st
        |  WHERE t.$idCol <> $seedId
        |), folded AS (
@@ -333,11 +314,9 @@ object MoreLikeThis {
     // score the SELECTED terms directly — re-analyzing a joined string
     // could drop a term under a stemming/stopword analyzer (a stem that
     // equals a stopword) and silently misalign the _df columns
-    Bm25.scoredTerms(docs, idCol, analyzed, sel.map(_.term),
+    Hits.top(Bm25.scored(docs, idCol, analyzed, Bm25.Terms(sel.map(_.term -> 1.0)),
         k1, b, stats = Some(stats))
-      .withColumn("score", round(col("score"), 6))
-      .orderBy(desc("score"), asc(s"`$idCol`"))
-      .limit(k)
+      .withColumn("score", round(col("score"), 6)), idCol, k)
   }
 
   // ===================================================================
@@ -434,9 +413,7 @@ object MoreLikeThis {
        |  SELECT $idCol, len(toks)::BIGINT AS dl FROM d
        |), contrib AS (
        |  SELECT t.$idCol,
-       |    ln(1.0 + (nn.n - s.df + 0.5) / (s.df + 0.5)) *
-       |      ((t.tf::DOUBLE * ($k1 + 1.0)) / (t.tf::DOUBLE + $k1 *
-       |        (1.0 - $b + $b * (dls.dl::DOUBLE / (nn.sumdl::DOUBLE / nn.n::DOUBLE))))) AS c
+       |    ${Bm25.contributionSql(Bm25.idfSql("nn.n", "s.df"), "t.tf", "dls.dl", "nn.sumdl", "nn.n", k1, b)} AS c
        |  FROM tfs t
        |  JOIN sel s USING (term)
        |  JOIN dls USING ($idCol), nn

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Serving-tier result shaping over a scored match set — ES's
   * `search_after` keyset pagination and `collapse` field collapsing.
-  * Both operate on the `(id, score)` frame [[Bm25.scoredAll]] produces
+  * Both operate on the `(id, score)` frame [[Bm25.scored]] produces
   * (or any scored frame with the same two-key ordering contract:
   * score descending, id ascending on ties — ES's `_score` sort with the
   * tiebreaker field every pagination guide tells you to add).

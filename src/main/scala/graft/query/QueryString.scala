@@ -65,7 +65,7 @@ package graft.query
   * change nothing while LOOKING honored. The SCORING compile
   * ([[boostedTerms]], the `/search` route's `q`) honors them with their
   * real Lucene meaning: per-term BM25 weight multipliers
-  * ([[Bm25.scoredAllBoosted]]). Escape reserved characters to query them
+  * ([[Bm25.Terms.boosted]]). Escape reserved characters to query them
   * literally on either path.
   */
 object QueryString {
@@ -107,7 +107,7 @@ object QueryString {
   }
 
   /** The SCORING-path boost compile — `term^2` as per-term BM25 weights
-    * for the `/search` route ([[Bm25.scoredAllBoosted]]). The filter path
+    * for the `/search` route ([[Bm25.Terms.boosted]]). The filter path
     * ([[parse]]) keeps its loud boost rejection: a boost honored in a
     * FILTER compilation is a silent no-op that looks honored, but on the
     * scoring path a boost has its real Lucene meaning — it multiplies the

@@ -66,20 +66,14 @@ object Retriever {
   /** The single-field lexical leaf — the `standard` node and the `/search`
     * route: BM25 over `docs`' padded analyzed `text`, per-term weights when
     * `q` carries `term^2` carets, the tolerant bag of words otherwise.
-    * Unordered and unlimited, like [[Bm25.scoredAll]]; [[ranked]] cuts
+    * Unordered and unlimited, like [[Bm25.scored]]; [[Hits.top]] cuts
     * the page.
     */
   private[graft] def lexical(
-      docs: DataFrame, q: String, an: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame = {
-    val analyzed = an.padded(col("text"))
-    if (QueryString.hasBoost(q))
-      Bm25.scoredAllBoosted(docs, "doc_id", analyzed, QueryString.boostedTerms(q))
-    else Bm25.scoredAll(docs, "doc_id", analyzed, q, analyzer = an)
-  }
-
-  /** The top `n` of a scored frame: score descending, ties by doc_id. */
-  private[graft] def ranked(scored: DataFrame, n: Int): DataFrame =
-    scored.orderBy(desc("score"), asc("doc_id")).limit(n)
+      docs: DataFrame, q: String, an: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): DataFrame =
+    Bm25.scored(docs, "doc_id", an.padded(col("text")),
+      if (QueryString.hasBoost(q)) Bm25.Terms.boosted(QueryString.boostedTerms(q))
+      else Bm25.Terms.words(q, an))
 
   /** The rescore leaf — `/search`'s `rescore` member and the `rescorer`
     * node: `{"rescore": {"q": "<phrase>", "window": N?, "weight": w?}}`
@@ -124,7 +118,7 @@ object Retriever {
         val q = text(o, "query", "retriever.standard")
         val window = page(o, "rank_window_size", 10, "retriever.standard")
         val base = filtered(docs, o, "retriever.standard", "text")
-        Compiled(Hybrid.withRank(ranked(lexical(base, q), window), "score", "doc_id"),
+        Compiled(Hybrid.withRank(Hits.top(lexical(base, q), "doc_id", window), "score", "doc_id"),
           scored = true)
 
       case "knn" =>
@@ -144,7 +138,7 @@ object Retriever {
         // contract), query_string over the vector corpus's metadata
         val run = filtered(emb, o, "retriever.knn", "label")
           .select(col("vec_id").as("doc_id"), graft.expr.VectorMath.cosine(v, qv).as("score"))
-        Compiled(Hybrid.withRank(ranked(run, k), "score", "doc_id"), scored = true)
+        Compiled(Hybrid.withRank(Hits.top(run, "doc_id", k), "score", "doc_id"), scored = true)
 
       case "rrf" =>
         val runs = children(o, "retriever.rrf").map(compileNode(docs, emb, _).run)
@@ -195,10 +189,8 @@ object Retriever {
         }
         val joined = contribs.reduce((a, b) => a.join(b, Seq("doc_id"), "full_outer"))
         val score = contribs.indices.map(i => coalesce(col(s"_c$i"), lit(0.0))).reduce(_ + _)
-        val fused = joined.withColumn("score", score)
-          .select(col("doc_id"), col("score"))
-          .orderBy(desc("score"), asc("doc_id"))
-          .limit(page(o, "rank_window_size", 10, "retriever.linear"))
+        val fused = Hits.top(joined.withColumn("score", score).select(col("doc_id"), col("score")),
+          "doc_id", page(o, "rank_window_size", 10, "retriever.linear"))
         Compiled(Hybrid.withRank(fused, "score", "doc_id"), scored = true)
 
       case "pinned" =>

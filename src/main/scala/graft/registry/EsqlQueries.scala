@@ -1024,7 +1024,7 @@ object EsqlQueries extends Family("etl") {
         t => load(dir, t))
     }, Some({
       val scored = graft.query.Bm25.oracleSqlScored(
-        "documents", "doc_id", "text", "dup vector scan")
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("dup vector scan"))
       s"""WITH s AS (
          |$scored
          |)
@@ -1050,8 +1050,8 @@ object EsqlQueries extends Family("etl") {
           | LIMIT 15""",
         t => load(dir, t))
     }, Some({
-      val scored = graft.query.Bm25.oracleSqlScoredPhrase(
-        "documents", "doc_id", "text", "vector scan")
+      val scored = graft.query.Bm25.oracleSqlScored(
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.phrase("vector scan"))
       s"""WITH s AS (
          |$scored
          |)

@@ -631,14 +631,14 @@ object QueryStringQueries extends Family("serving") {
       // trip), collapsed list ranked by surviving scores.
       val docs = load(dir, "documents")
       val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
-      val scored = graft.query.Bm25.scoredAll(docs, "doc_id", analyzed,
-        "dup vector scan")
+      val scored = graft.query.Bm25.scored(docs, "doc_id", analyzed,
+        graft.query.Bm25.Terms.words("dup vector scan"))
       val withLang = scored.join(docs.select("doc_id", "lang"), "doc_id")
       graft.query.Paging.collapseTopHits(withLang, "doc_id", "score", "lang", k = 3)
         .select("doc_id", "lang", "score")
     }, Some({
       val scored = graft.query.Bm25.oracleSqlScored(
-        "documents", "doc_id", "text", "dup vector scan")
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("dup vector scan"))
       s"""WITH s AS (
          |$scored
          |)
@@ -658,14 +658,14 @@ object QueryStringQueries extends Family("serving") {
       // — the "best page per site, with runners-up" serving shape.
       val docs = load(dir, "documents")
       val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
-      val scored = graft.query.Bm25.scoredAll(docs, "doc_id", analyzed,
-        "dup vector scan")
+      val scored = graft.query.Bm25.scored(docs, "doc_id", analyzed,
+        graft.query.Bm25.Terms.words("dup vector scan"))
       val withLang = scored.join(docs.select("doc_id", "lang"), "doc_id")
       graft.query.Paging.collapseInnerHits(withLang, "doc_id", "score",
         "lang", k = 3, innerK = 2)
     }, Some({
       val scored = graft.query.Bm25.oracleSqlScored(
-        "documents", "doc_id", "text", "dup vector scan")
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("dup vector scan"))
       s"""WITH s AS (
          |$scored
          |), ranked AS (
@@ -694,13 +694,13 @@ object QueryStringQueries extends Family("serving") {
       // at sf0.01, passed back as literals the way a client would.
       val docs = load(dir, "documents")
       val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
-      val scored = graft.query.Bm25.scoredAll(docs, "doc_id", analyzed,
-        "dup vector scan")
+      val scored = graft.query.Bm25.scored(docs, "doc_id", analyzed,
+        graft.query.Bm25.Terms.words("dup vector scan"))
       graft.query.Paging.searchAfter(scored, "doc_id", "score",
         afterScore = 4.268536153941243, afterId = 45L, k = 5)
     }, Some({
       val scored = graft.query.Bm25.oracleSqlScored(
-        "documents", "doc_id", "text", "dup vector scan")
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("dup vector scan"))
       s"""WITH s AS (
          |$scored
          |)

@@ -57,7 +57,8 @@ object RetrievalQueries extends Family("serving") {
     */
   private def bm25RunCtesSql(query: String, k: Int): String =
     s"""bm AS (
-       |${graft.query.Bm25.oracleSql("documents", "doc_id", "text", query, k)}
+       |${graft.query.Bm25.oracleSql("documents", "doc_id", "text",
+         graft.query.Bm25.Terms.words(query), k)}
        |), bmr AS (
        |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
        |  FROM bm
@@ -111,7 +112,8 @@ object RetrievalQueries extends Family("serving") {
     */
   private val multiMatchRunsCtesSql: String = {
     def run(field: String) =
-      graft.query.Bm25.oracleSqlScored("documents", "doc_id", field, "src1 spark")
+      graft.query.Bm25.oracleSqlScored("documents", "doc_id", field,
+        graft.query.Bm25.Terms.words("src1 spark"))
     s"""s0 AS (
        |${run("text")}
        |), s1 AS (
@@ -168,7 +170,7 @@ object RetrievalQueries extends Family("serving") {
       graft.query.RankEval.evaluate(run, "doc_id", "score", relevant, k = 15)
     }, Some({
       val scored = graft.query.Bm25.oracleSqlScored(
-        "documents", "doc_id", "text", "dup vector scan")
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("dup vector scan"))
       val relPred = graft.expr.TextMatch.containsTokenSql("text", "dup")
       s"""WITH s AS (
          |$scored
@@ -360,7 +362,7 @@ object RetrievalQueries extends Family("serving") {
         .orderBy("rank")
     }, Some({
       val bm1 = graft.query.Bm25.oracleSql(
-        "documents", "doc_id", "text", "dup vector scan", 30)
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("dup vector scan"), 30)
       s"""WITH s1 AS (
          |$bm1
          |), ${bm25RunCtesSql("spark merge join window", 50)}, $knnLeafCtesSql, ${rrfPartsCtesSql("bmr", "knr")},
@@ -455,9 +457,9 @@ object RetrievalQueries extends Family("serving") {
       // scored by its OWN BM25 statistics, a doc takes its best field's
       // score — 'src1' only matches in `source`, 'spark' only in `text`,
       // so the two fields genuinely compete.
-      query.Bm25.multiMatchTopK(load(dir, "documents"), "doc_id",
-          Seq("text", "source"), "src1 spark", k = 20, mode = "best_fields")
-        .orderBy(desc("score"), asc("doc_id"))
+      query.Hits.ordered(query.Bm25.multiMatchWeightedTopK(load(dir, "documents"), "doc_id",
+          Seq("text" -> 1.0, "source" -> 1.0), "src1 spark", k = 20, mode = "best_fields"),
+        "doc_id")
     }, Some({
       s"""WITH $multiMatchRunsCtesSql
          |SELECT doc_id,
@@ -471,9 +473,9 @@ object RetrievalQueries extends Family("serving") {
       implicit val spark: SparkSession = s
       // most_fields: the same per-field runs SUMMED — docs matching in
       // both fields outrank single-field matches.
-      query.Bm25.multiMatchTopK(load(dir, "documents"), "doc_id",
-          Seq("text", "source"), "src1 spark", k = 20, mode = "most_fields")
-        .orderBy(desc("score"), asc("doc_id"))
+      query.Hits.ordered(query.Bm25.multiMatchWeightedTopK(load(dir, "documents"), "doc_id",
+          Seq("text" -> 1.0, "source" -> 1.0), "src1 spark", k = 20, mode = "most_fields"),
+        "doc_id")
     }, Some({
       s"""WITH $multiMatchRunsCtesSql
          |SELECT doc_id,
@@ -490,13 +492,12 @@ object RetrievalQueries extends Family("serving") {
       // fields POOL into one (tf, dl, and IDF over the union — BM25F at
       // unit weights), the right mode for title+body-style parts of the
       // same text. One scan over the analyzed concatenation.
-      query.Bm25.combinedFieldsTopK(load(dir, "documents"), "doc_id",
-          Seq("text", "source"), "src1 spark", k = 20)
-        .orderBy(desc("score"), asc("doc_id"))
+      query.Hits.ordered(query.Bm25.combinedFieldsTopK(load(dir, "documents"), "doc_id",
+          Seq("text", "source"), "src1 spark", k = 20), "doc_id")
     }, Some(graft.query.Bm25.oracleSql(
       "documents", "doc_id",
       "concat_ws(' ', coalesce(text, ''), coalesce(source, ''))",
-      "src1 spark", 20))),
+      graft.query.Bm25.Terms.words("src1 spark"), 20))),
 
     // dis_max restated: greatest + tb*(sum - greatest) over the same
     // per-field scored runs.
@@ -505,10 +506,9 @@ object RetrievalQueries extends Family("serving") {
       // dis_max with tie_breaker 0.3 (the ES knob between best_fields and
       // most_fields): best + 0.3*(sum of the other fields) - matching in
       // several fields counts, weighted below the best.
-      query.Bm25.multiMatchTopK(load(dir, "documents"), "doc_id",
-          Seq("text", "source"), "src1 spark", k = 20, mode = "best_fields",
-          tieBreaker = 0.3)
-        .orderBy(desc("score"), asc("doc_id"))
+      query.Hits.ordered(query.Bm25.multiMatchWeightedTopK(load(dir, "documents"), "doc_id",
+          Seq("text" -> 1.0, "source" -> 1.0), "src1 spark", k = 20, mode = "best_fields",
+          tieBreaker = 0.3), "doc_id")
     }, Some({
       s"""WITH $multiMatchRunsCtesSql, j AS (
          |  SELECT doc_id, coalesce(s0.score, 0.0) AS a, coalesce(s1.score, 0.0) AS b
@@ -633,10 +633,8 @@ object RetrievalQueries extends Family("serving") {
           col("n_chars").cast("double"), origin = 400, scale = 200) *
         query.Scoring.fieldValueFactor(col("n_chars"), factor = 0.1,
           modifier = "log1p")
-      docs.select(col("doc_id"), score.as("score"))
-        .where(col("score") > 0)
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(30)
+      query.Hits.top(docs.select(col("doc_id"), score.as("score"))
+        .where(col("score") > 0), "doc_id", 30)
     }, Some(
       s"""SELECT doc_id, score FROM (
          |  SELECT doc_id,
@@ -729,7 +727,7 @@ object RetrievalQueries extends Family("serving") {
         .orderBy(desc("fused_score"), asc("doc_id"))
     }, Some({
       val bm = graft.query.Bm25.oracleSql(
-        "documents", "doc_id", "text", "spark merge join window", 50)
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("spark merge join window"), 50)
       s"""WITH bm AS (
          |$bm
          |), ${minMaxPartCtesSql("bn", "bm", 0.7)}, $vecZeroCosineCtesSql, vr AS (
@@ -764,7 +762,7 @@ object RetrievalQueries extends Family("serving") {
         .orderBy("rank")
     }, Some({
       val bm = graft.query.Bm25.oracleSql(
-        "documents", "doc_id", "text", "spark merge join window", 20)
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("spark merge join window"), 20)
       s"""WITH bm AS (
          |$bm
          |), pins AS (
@@ -807,7 +805,7 @@ object RetrievalQueries extends Family("serving") {
     }, Some({
       import graft.expr.TextMatch.containsTokenSql
       val bm = graft.query.Bm25.oracleSql(
-        "documents", "doc_id", "text", "spark merge join window", 30)
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("spark merge join window"), 30)
       s"""WITH bm AS (
          |$bm
          |), pr AS (
@@ -933,18 +931,17 @@ object RetrievalQueries extends Family("serving") {
       // oracle replays the scored set and the same CASE.
       val docs = load(dir, "documents")
       val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
-      val scored = query.Bm25.scoredAll(docs, "doc_id", analyzed, "dup vector")
+      val scored = query.Bm25.scored(docs, "doc_id", analyzed,
+        query.Bm25.Terms.words("dup vector"))
       val neg = docs.select(col("doc_id"),
         graft.expr.TextMatch.containsToken(col("text"), "merge").as("_neg"))
-      scored.join(neg, "doc_id")
+      query.Hits.top(scored.join(neg, "doc_id")
         .withColumn("score",
           query.Scoring.boosting(col("score"), col("_neg"), negativeBoost = 0.25))
-        .select("doc_id", "score")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(15)
+        .select("doc_id", "score"), "doc_id", 15)
     }, Some({
       val scored = graft.query.Bm25.oracleSqlScored(
-        "documents", "doc_id", "text", "dup vector")
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("dup vector"))
       val neg = graft.expr.TextMatch.containsTokenSql("d2.text", "merge")
       s"""WITH s AS (
          |$scored

@@ -179,7 +179,8 @@ object SearchQueries extends Family("serving") {
       graft.query.Bm25.topKRaw(load(dir, "documents"), "doc_id", "text",
         "dup vector scan", k = 15)
     }, Some(
-      graft.query.Bm25.oracleSql("documents", "doc_id", "text", "dup vector scan", 15))),
+      graft.query.Bm25.oracleSql("documents", "doc_id", "text",
+        graft.query.Bm25.Terms.words("dup vector scan"), 15))),
 
     // bool_prefix restated: whole-token containment for the complete
     // terms, the shared prefix predicate for the trailing fragment.
@@ -523,14 +524,12 @@ object SearchQueries extends Family("serving") {
       // and the oracle bit-matches without rounding). Same exchange
       // profile as the count-bounded has_child: one partial+final agg
       // on the parent key + one join.
-      graft.query.JoinField.hasChildScored(
+      graft.query.Hits.top(graft.query.JoinField.hasChildScored(
           load(dir, "orders"), load(dir, "lineitem"),
           "o_orderkey", "l_orderkey",
           col("l_quantity") >= 40, floor(col("l_extendedprice")),
           scoreMode = "sum")
-        .select(col("o_orderkey"), col("_score").cast("long").as("score"))
-        .orderBy(desc("score"), asc("o_orderkey"))
-        .limit(20)
+        .select(col("o_orderkey"), col("_score").cast("long").as("score")), "o_orderkey", 20)
     }, Some(
       """SELECT o_orderkey,
         |  (SELECT sum(floor(l_extendedprice))::BIGINT FROM lineitem l
@@ -682,9 +681,8 @@ object SearchQueries extends Family("serving") {
         query.Scoring.rankFeatureSaturation(col("n_chars"), pivot = 250.0,
           boost = 2.0) +
         query.Scoring.rankFeatureLog(col("n_chars"), scalingFactor = 0.1)
-      load(dir, "documents").select(col("doc_id"), score.as("score"))
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(30)
+      graft.query.Hits.top(load(dir, "documents").select(col("doc_id"), score.as("score")),
+        "doc_id", 30)
     }, Some(
       """SELECT doc_id,
         |  2.0 * n_chars::DOUBLE / (n_chars::DOUBLE + 250.0)
@@ -705,9 +703,8 @@ object SearchQueries extends Family("serving") {
       val score = query.Scoring.distanceFeature(
         unix_micros(col("ts")).cast("double"),
         origin = 1705276800000000.0, pivot = 259200000000.0, boost = 2.0)
-      loadEvents(dir).select(col("event_id"), score.as("score"))
-        .orderBy(desc("score"), asc("event_id"))
-        .limit(25)
+      graft.query.Hits.top(loadEvents(dir).select(col("event_id"), score.as("score")),
+        "event_id", 25)
     }, Some(
       """SELECT event_id,
         |  2.0 * 259200000000.0 / (259200000000.0
@@ -802,18 +799,18 @@ object SearchQueries extends Family("serving") {
       // query_string boosts on the SCORING path: `vector^2 dup scan^0.5`
       // compiles to per-term BM25 weight multipliers (the real Lucene
       // boost meaning) through the same QueryString.boostedTerms →
-      // Bm25.scoredAllBoosted chain the /search route serves — the
+      // Bm25.Terms.boosted chain the /search route serves — the
       // common term 'vector' doubled outweighs the rare 'dup''s idf
       // advantage for multi-occurrence docs, 'scan' half-weighted. The
       // filter path keeps its loud boost rejection.
       val docs = load(dir, "documents")
       val termBoosts = graft.query.QueryString.boostedTerms("vector^2 dup scan^0.5")
-      graft.query.Bm25.topKBoosted(docs, "doc_id",
+      graft.query.Bm25.topK(docs, "doc_id",
         graft.expr.TextMatch.AsciiAnalyzer.padded(col("text")),
-        termBoosts, k = 15)
+        graft.query.Bm25.Terms.boosted(termBoosts), k = 15)
     }, Some(
-      graft.query.Bm25.oracleSqlBoosted("documents", "doc_id", "text",
-        graft.query.QueryString.boostedTerms("vector^2 dup scan^0.5"), 15))),
+      graft.query.Bm25.oracleSql("documents", "doc_id", "text", graft.query.Bm25.Terms.boosted(
+        graft.query.QueryString.boostedTerms("vector^2 dup scan^0.5")), 15))),
 
     QueryCase("search_bm25_indexed", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -826,9 +823,10 @@ object SearchQueries extends Family("serving") {
       val terms = graft.query.Bm25.queryTerms("dup vector scan")
       val stats = graft.query.Bm25.corpusStats(indexed, col("text_split"), terms)
       graft.query.Bm25.topK(indexed, "doc_id", col("text_split"),
-        "dup vector scan", k = 15, stats = Some(stats))
+        graft.query.Bm25.Terms.words("dup vector scan"), k = 15, stats = Some(stats))
     }, Some(
-      graft.query.Bm25.oracleSql("documents", "doc_id", "text", "dup vector scan", 15))),
+      graft.query.Bm25.oracleSql("documents", "doc_id", "text",
+        graft.query.Bm25.Terms.words("dup vector scan"), 15))),
 
     // Incrementally-merged stats are exact integer sums — scores must equal
     // the whole-corpus computation bit for bit, so the oracle is the same.
@@ -849,9 +847,10 @@ object SearchQueries extends Family("serving") {
       val stats = Bm25.mergeStats(
         halves.map(h => Bm25.corpusStats(h, col("text_split"), terms)))
       Bm25.topK(indexed, "doc_id", col("text_split"),
-        "dup vector scan", k = 15, stats = Some(stats))
+        Bm25.Terms.words("dup vector scan"), k = 15, stats = Some(stats))
     }, Some(
-      graft.query.Bm25.oracleSql("documents", "doc_id", "text", "dup vector scan", 15))),
+      graft.query.Bm25.oracleSql("documents", "doc_id", "text",
+        graft.query.Bm25.Terms.words("dup vector scan"), 15))),
 
     QueryCase("search_bm25_phrase", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -861,10 +860,11 @@ object SearchQueries extends Family("serving") {
       // must match exactly. Indexed path over the stored analyzed column.
       val indexed = graft.store.SearchIndex.withAnalyzedColumns(
         load(dir, "documents"), Seq("text"))
-      graft.query.Bm25.topKPhrase(indexed, "doc_id", col("text_split"),
-        "batch batch", k = 15)
+      graft.query.Bm25.topK(indexed, "doc_id", col("text_split"),
+        graft.query.Bm25.Terms.phrase("batch batch"), k = 15)
     }, Some(
-      graft.query.Bm25.oracleSqlPhrase("documents", "doc_id", "text", "batch batch", 15))),
+      graft.query.Bm25.oracleSql("documents", "doc_id", "text",
+        graft.query.Bm25.Terms.phrase("batch batch"), 15))),
 
     QueryCase("q7_conjunction", (s, dir) => {
       implicit val spark: SparkSession = s
@@ -961,8 +961,10 @@ object SearchQueries extends Family("serving") {
       query.Bm25.multiMatchWeightedTopK(load(dir, "documents"), "doc_id",
         Seq("text" -> 5.0, "source" -> 1.0), "src1 merge", 20)
     }, Some({
-      val s0 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "text", "src1 merge")
-      val s1 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "source", "src1 merge")
+      val s0 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "text",
+        graft.query.Bm25.Terms.words("src1 merge"))
+      val s1 = graft.query.Bm25.oracleSqlScored("documents", "doc_id", "source",
+        graft.query.Bm25.Terms.words("src1 merge"))
       s"""WITH s0 AS (
          |$s0
          |), s1 AS (
@@ -1004,15 +1006,14 @@ object SearchQueries extends Family("serving") {
       // one fixed division both engines restate.
       val docs = load(dir, "documents")
       val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
-      val scored = query.Bm25.scoredAll(docs, "doc_id", analyzed, "dup vector")
-      scored.join(docs.select("doc_id", "n_chars"), "doc_id")
+      val scored = query.Bm25.scored(docs, "doc_id", analyzed,
+        query.Bm25.Terms.words("dup vector"))
+      graft.query.Hits.top(scored.join(docs.select("doc_id", "n_chars"), "doc_id")
         .withColumn("score", query.Esql.column("score * 0.5 + n_chars / 1000.0"))
-        .select("doc_id", "score")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(20)
+        .select("doc_id", "score"), "doc_id", 20)
     }, Some({
       val scored = graft.query.Bm25.oracleSqlScored(
-        "documents", "doc_id", "text", "dup vector")
+        "documents", "doc_id", "text", graft.query.Bm25.Terms.words("dup vector"))
       s"""WITH s AS (
          |$scored
          |)

@@ -262,11 +262,10 @@ object Routes {
               // 1000) ranks — ranks beyond it truncate BY DESIGN (the
               // distributed top-k page budget; rescore's scaladoc).
               Retriever.rescored(scored, docs0, o, "search").orderBy("rank").limit(size)
-            else Retriever.ranked(scored, size)
+            else Hits.top(scored, "doc_id", size)
           if (o.path("highlight").asBoolean(false))
-            hits.join(docs0.select(col("doc_id"),
-                TextMatch.highlight(col("text"), qText).as("highlighted")), "doc_id")
-              .orderBy(desc("score"), asc("doc_id"))
+            Hits.ordered(hits.join(docs0.select(col("doc_id"),
+              TextMatch.highlight(col("text"), qText).as("highlighted")), "doc_id"), "doc_id")
           else hits
         }
       },
@@ -347,8 +346,8 @@ object Routes {
             if (o.hasNonNull("nprobe")) ivf((index, cents, np) =>
               Similarity.ivfRadius(index, cents, probe, "vec_id", "embedding", t, nprobe = np))
             else Similarity.bruteForceRadius(emb, "vec_id", "embedding", probe, "vec_id", "embedding", t)
-          radius.orderBy(desc("cos"), asc("neighbor_id"))
-            .limit(page(o, "size", Requests.PageBudget, "knn"))
+          Hits.top(radius, "neighbor_id", page(o, "size", Requests.PageBudget, "knn"),
+            scoreCol = "cos")
         } else {
           val k = page(o, "k", 5, "knn")
           val ranked =
@@ -449,7 +448,7 @@ object Routes {
             k = page(o, "mmr.k", 5, "fuse"), lambda = o.path("mmr").path("lambda").asDouble(0.7))
             .orderBy("pick")
             .select("pick", "cand_id", "rel", "mmr")
-        else fused.orderBy(desc("fused_score"), asc("doc_id"))
+        else Hits.ordered(fused, "doc_id", scoreCol = "fused_score")
       },
       "/retriever" -> { o =>
         // The ES 9.x search API's `retriever` tree — the recursive

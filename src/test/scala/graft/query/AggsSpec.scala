@@ -1014,6 +1014,22 @@ class AggsSpec extends SparkSpecBase {
     assert(boundary === local && fallback === local)
   }
 
+  test("frequentItemSets: a few very wide baskets take the distributed backend, same answer") {
+    // 3 baskets of 350k distinct items each: far under the 65536-basket
+    // row bound, yet 1.05M items in all — over LocalMiningMaxItems, so the
+    // decision must not collect them. 5 narrow baskets carry the answer.
+    val wide = spark.range(3).select(concat(array(lit("common")),
+      transform(sequence(lit(0), lit(349999)),
+        i => concat(lit("w"), col("id").cast("string"), lit("_"), i.cast("string")))).as("items"))
+    val tx = wide.unionByName(Seq.fill(5)(Seq("common", "b")).toDF("items"))
+    assert(!Aggs.minesLocally(tx.select(col("items").as("_items")), 65536))
+    assert(Aggs.minesLocally(Seq.fill(5)(Seq("common", "b")).toDF("_items"), 65536))
+    val got = Aggs.frequentItemSets(tx, col("items"), minSupport = 0.5, size = 20)
+      .as[(String, Long, Double)].collect().toSeq
+    // N = 8: 'common' in all 8, {b, common} in 5; {b} is not closed
+    assert(got === Seq(("common", 8L, 1.0), ("b,common", 5L, 5.0 / 8)))
+  }
+
   test("percentilesBucket: R-7 interpolation over the sibling buckets, one row per percent") {
     import spark.implicits._
     // 5 buckets with metric 10,20,30,40,50: p50 = 30 exactly; p25 lands

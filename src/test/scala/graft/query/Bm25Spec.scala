@@ -55,8 +55,8 @@ class Bm25Spec extends graft.SparkSpecBase {
     val indexed = SearchIndex.withAnalyzedColumns(docs, Seq("text"))
     val terms = Bm25.queryTerms("spark table")
     val stats = Bm25.corpusStats(indexed, col("text_split"), terms)
-    val viaIndex = Bm25.topK(indexed, "doc_id", col("text_split"), "spark table",
-        k = 10, stats = Some(stats))
+    val viaIndex = Bm25.topK(indexed, "doc_id", col("text_split"),
+        Bm25.Terms.words("spark table"), k = 10, stats = Some(stats))
       .as[(Long, Double)].collect().toSeq
     val viaRaw = Bm25.topKRaw(docs, "doc_id", "text", "spark table", k = 10)
       .as[(Long, Double)].collect().toSeq
@@ -76,7 +76,7 @@ class Bm25Spec extends graft.SparkSpecBase {
       .as[(Long, Double)].collect().toSeq
     val viaStats = Bm25.topK(docs, "doc_id",
         concat(lit(" "), graft.expr.TextMatch.normalized(col("text")), lit(" ")),
-        "spark table", k = 10, stats = Some(merged))
+        Bm25.Terms.words("spark table"), k = 10, stats = Some(merged))
       .as[(Long, Double)].collect().toSeq
     assert(viaStats === viaMerged)
   }
@@ -121,8 +121,8 @@ class Bm25Spec extends graft.SparkSpecBase {
     assert(hits === Set(1L, 2L))
     // BM25 over the same index: both CJK docs score, doc 2 has no extra
     // rare terms — ranking is deterministic and CJK-aware
-    val ranked = Bm25.topK(indexed, "doc_id", col("text_split"), "引擎", k = 5,
-        analyzer = TextMatch.UnicodeAnalyzer)
+    val ranked = Bm25.topK(indexed, "doc_id", col("text_split"),
+        Bm25.Terms.words("引擎", TextMatch.UnicodeAnalyzer), k = 5)
       .select("doc_id").as[Long].collect().toSet
     assert(ranked === Set(1L, 2L))
     // the ASCII analyzer on the same corpus finds NOTHING (CJK chars are
@@ -158,16 +158,16 @@ class Bm25Spec extends graft.SparkSpecBase {
     // retrieval: "merge" recalls every inflection — the analyzer's point;
     // the ASCII analyzer finds only the exact form
     val indexed = SearchIndex.withAnalyzedColumns(corpus, Seq("text"), an)
-    val hits = Bm25.topK(indexed, "doc_id", col("text_split"), "merge", k = 10,
-        analyzer = an)
+    val hits = Bm25.topK(indexed, "doc_id", col("text_split"),
+        Bm25.Terms.words("merge", an), k = 10)
       .select("doc_id").as[Long].collect().toSet
     assert(hits === Set(1L, 2L, 3L))
     val asciiHits = Bm25.topKRaw(corpus, "doc_id", "text", "merge", k = 10)
       .select("doc_id").as[Long].collect().toSet
     assert(asciiHits === Set(3L))
     // doc 2 ranks first: tf(merg) = 2
-    val ranked = Bm25.topK(indexed, "doc_id", col("text_split"), "merge", k = 1,
-      analyzer = an).select("doc_id").as[Long].collect()
+    val ranked = Bm25.topK(indexed, "doc_id", col("text_split"),
+      Bm25.Terms.words("merge", an), k = 1).select("doc_id").as[Long].collect()
     assert(ranked.head === 2L)
   }
 
@@ -178,9 +178,9 @@ class Bm25Spec extends graft.SparkSpecBase {
       (3L, "the batch job and another batch"),  // non-adjacent: tf 0
       (4L, "no match here at all")
     ).toDF("doc_id", "text")
-    val got = Bm25.topKPhrase(corpus, "doc_id",
+    val got = Bm25.topK(corpus, "doc_id",
         concat(lit(" "), graft.expr.TextMatch.normalized(col("text")), lit(" ")),
-        "batch batch", k = 10)
+        Bm25.Terms.phrase("batch batch"), k = 10)
       .select("doc_id").as[Long].collect().toSeq
     assert(got == Seq(1L, 2L)) // docs 3 and 4 excluded: no phrase occurrence
   }
@@ -226,16 +226,16 @@ class Bm25Spec extends graft.SparkSpecBase {
       (4L, "window", "beta"),       // matches neither
     ).toDF("doc_id", "text", "title")
     def scores(mode: String): Map[Long, Double] =
-      Bm25.multiMatchTopK(two, "doc_id", Seq("text", "title"), "spark",
+      Bm25.multiMatchWeightedTopK(two, "doc_id", Seq("text" -> 1.0, "title" -> 1.0), "spark",
           k = 10, mode = mode)
         .as[(Long, Double)].collect().toMap
     val best = scores("best_fields")
     val most = scores("most_fields")
     // per-field reference scores from each field's OWN statistics
     def one(field: String, id: Long): Double =
-      Bm25.scoredAll(two, "doc_id",
+      Bm25.scored(two, "doc_id",
           concat(lit(" "), graft.expr.TextMatch.normalized(col(field)), lit(" ")),
-          "spark")
+          Bm25.Terms.words("spark"))
         .as[(Long, Double)].collect().toMap.getOrElse(id, 0.0)
     for (id <- Seq(1L, 2L, 3L)) {
       assert(best(id) === math.max(one("text", id), one("title", id)), s"best $id")
@@ -246,7 +246,8 @@ class Bm25Spec extends graft.SparkSpecBase {
     // no-match docs never appear
     assert(!best.contains(4L) && !most.contains(4L))
     intercept[IllegalArgumentException](
-      Bm25.multiMatchTopK(two, "doc_id", Seq("text"), "spark", 5, mode = "cross_fields"))
+      Bm25.multiMatchWeightedTopK(two, "doc_id", Seq("text" -> 1.0), "spark", 5,
+        mode = "cross_fields"))
   }
 
   test("multiMatchWeighted: boosts multiply per-field scores and provably reorder") {
@@ -257,9 +258,9 @@ class Bm25Spec extends graft.SparkSpecBase {
       (4L, "window", "beta"),       // matches neither
     ).toDF("doc_id", "text", "title")
     def one(field: String, id: Long): Double =
-      Bm25.scoredAll(two, "doc_id",
+      Bm25.scored(two, "doc_id",
           concat(lit(" "), graft.expr.TextMatch.normalized(col(field)), lit(" ")),
-          "spark")
+          Bm25.Terms.words("spark"))
         .as[(Long, Double)].collect().toMap.getOrElse(id, 0.0)
     val w = Bm25.multiMatchWeightedTopK(two, "doc_id",
         Seq("text" -> 5.0, "title" -> 1.0), "spark", k = 10)
@@ -270,7 +271,7 @@ class Bm25Spec extends graft.SparkSpecBase {
     assert(!wm.contains(4L))
     // the REORDER pin: unweighted most_fields ranks the both-fields doc 3
     // first; 5× on text puts the text-heavy doc 1 on top
-    val unw = Bm25.multiMatchTopK(two, "doc_id", Seq("text", "title"),
+    val unw = Bm25.multiMatchWeightedTopK(two, "doc_id", Seq("text" -> 1.0, "title" -> 1.0),
       "spark", k = 10, mode = "most_fields").as[(Long, Double)].collect()
     assert(unw.head._1 == 3L && w.head._1 == 1L)
     // best_fields takes the max of BOOSTED scores
@@ -310,7 +311,7 @@ class Bm25Spec extends graft.SparkSpecBase {
     assert(got(1L) > got(2L))
     // and combined_fields DIFFERS from multi_match most_fields (separate
     // stats): the two modes are genuinely different scorers
-    val most = Bm25.multiMatchTopK(two, "doc_id", Seq("text", "title"),
+    val most = Bm25.multiMatchWeightedTopK(two, "doc_id", Seq("text" -> 1.0, "title" -> 1.0),
         "spark", k = 10, mode = "most_fields")
       .as[(Long, Double)].collect().toMap
     assert(most(1L) !== got(1L))
@@ -323,7 +324,7 @@ class Bm25Spec extends graft.SparkSpecBase {
       (3L, "spark misc", "spark"),
     ).toDF("doc_id", "text", "title")
     def run(mode: String, tb: Double = 0.0): Map[Long, Double] =
-      Bm25.multiMatchTopK(two, "doc_id", Seq("text", "title"), "spark",
+      Bm25.multiMatchWeightedTopK(two, "doc_id", Seq("text" -> 1.0, "title" -> 1.0), "spark",
           k = 10, mode = mode, tieBreaker = tb)
         .as[(Long, Double)].collect().toMap
     val best = run("best_fields")
@@ -402,6 +403,49 @@ class Bm25Spec extends graft.SparkSpecBase {
       val refold = rs.sortBy(_._2).map(_._7) // term order spark < table = query order
       assert(refold.sum === rs.head._8)
     }
+  }
+
+  test("every BM25 entry point serves bit-identical (doc_id, score) rows") {
+    // One corpus and query through each public path that scores it. The
+    // serving route and its engine-direct twin must agree to the ulp, and
+    // so must every other entry that restates the same score tree.
+    val corpus = Seq(
+      (1L, "Spark joins the table; spark again"),
+      (2L, "table scan over a wide table"),
+      (3L, "join join join"),
+      (4L, "spark"),
+      (5L, "nothing to see here"),
+      (6L, "the table and the spark and the join"),
+      (7L, "spark table join spark table join"),
+      (8L, "scan spark"),
+    ).toDF("doc_id", "text")
+    val q = "spark table join"
+    val k = 5
+    val analyzed = graft.expr.TextMatch.AsciiAnalyzer.padded(col("text"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.select(col("doc_id").cast("long"), col(df.columns(1)).cast("double"))
+        .as[(Long, Double)].collect().toSeq
+    val raw = rows(Bm25.topKRaw(corpus, "doc_id", "text", q, k))
+    assert(raw.size === k)
+    val served = rows(Hits.top(Retriever.lexical(corpus, q), "doc_id", k))
+    val boosted = rows(Bm25.topK(corpus, "doc_id", analyzed,
+      Bm25.Terms.boosted(Bm25.queryTerms(q).map(_ -> 1.0)), k))
+    val oneFieldMost = rows(Bm25.multiMatchWeightedTopK(corpus, "doc_id",
+      Seq("text" -> 1.0), q, k, mode = "most_fields"))
+    val oneFieldBest = rows(Bm25.multiMatchWeightedTopK(corpus, "doc_id",
+      Seq("text" -> 1.0), q, k, mode = "best_fields"))
+    val explained = Bm25.explainTopK(corpus, "doc_id", analyzed, q, k)
+      .select("doc_id", "score").as[(Long, Double)].collect().toSeq.distinct
+    val judged = corpus.where(col("doc_id") <= 3L).select("doc_id")
+    val logged = rows(Ltr.logFeatures(corpus, "doc_id", "text", q, judged, k)
+      .select("doc_id", "f_bm25"))
+    val esql = rows(Esql.run(
+      s"""FROM t METADATA _score | WHERE MATCH(text, "$q") | KEEP doc_id, _score
+         | SORT _score DESC, doc_id | LIMIT $k""", Map("t" -> corpus)))
+    for ((name, got) <- Seq("served" -> served, "boosted" -> boosted,
+        "multi_match most_fields" -> oneFieldMost, "multi_match best_fields" -> oneFieldBest,
+        "explain" -> explained, "ltr f_bm25" -> logged, "esql _score" -> esql))
+      assert(got === raw, s"$name drifted from topKRaw")
   }
 
   test("termVectors: freq and sorted positions per (doc, term)") {

@@ -1104,13 +1104,13 @@ class EsqlSpec extends SparkSpecBase {
     assert(out(1) == ((2L, 0.2)))
     assert(out.map(_._1).drop(2).toSet == Set(3L, 4L))
     assert(out.filter(r => r._1 == 3L || r._1 == 4L).forall(_._2 == 0.0))
-    // bm25 scorer ≡ scoredAll over the same frame (frame-local statistics)
+    // bm25 scorer ≡ scored over the same frame (frame-local statistics)
     val bm = Esql.run(
       """FROM t | RERANK s = "vector scan" ON text WITH {"inference_id": "bm25"}
         | KEEP doc_id, s | SORT doc_id""",
       resolve(Map("t" -> docs))).as[(Long, Double)].collect().toMap
     val analyzed = concat(lit(" "), graft.expr.TextMatch.normalized(col("text")), lit(" "))
-    val direct = Bm25.scoredAll(docs, "doc_id", analyzed, "vector scan")
+    val direct = Bm25.scored(docs, "doc_id", analyzed, Bm25.Terms.words("vector scan"))
       .as[(Long, Double)].collect().toMap
     direct.foreach { case (id, s) => assert(math.abs(bm(id) - s) < 1e-12, s"doc $id") }
     assert(bm(4L) == 0.0, "non-matching rows keep score 0 — rows preserved")

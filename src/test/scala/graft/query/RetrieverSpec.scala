@@ -25,7 +25,7 @@ class RetrieverSpec extends SparkSpecBase {
     // engine-direct composition of the same tiers
     val analyzed = concat(lit(" "), graft.expr.TextMatch.normalized(col("text")), lit(" "))
     val bm = Hybrid.withRank(
-      Bm25.scoredAll(docs, "doc_id", analyzed, "dup vector")
+      Bm25.scored(docs, "doc_id", analyzed, Bm25.Terms.words("dup vector"))
         .orderBy(desc("score"), asc("doc_id")).limit(20), "score", "doc_id")
     val qv = array(vec.map(lit): _*).cast("array<double>")
     val kn = Hybrid.withRank(

@@ -107,8 +107,8 @@ class SearchExtrasSpec extends SparkSpecBase {
     val mlt = MoreLikeThis.likeTextTopK(docs, "doc_id", analyzed, like,
       k = 10, p).as[(Long, Double)].collect().toSeq
     val stats = Bm25.corpusStats(docs, analyzed, sel.map(_.term))
-    val bm = Bm25.topK(docs, "doc_id", analyzed, sel.map(_.term).mkString(" "),
-        k = 10, stats = Some(stats))
+    val bm = Bm25.topK(docs, "doc_id", analyzed,
+        Bm25.Terms.words(sel.map(_.term).mkString(" ")), k = 10, stats = Some(stats))
       .select(col("doc_id"), round(col("score"), 6).as("score"))
       .orderBy(desc("score"), asc("doc_id"))
       .as[(Long, Double)].collect().toSeq
@@ -137,7 +137,7 @@ class SearchExtrasSpec extends SparkSpecBase {
     val analyzed = concat(lit(" "), TextMatch.normalized(col("text")), lit(" "))
     val stats = Bm25.corpusStats(docs, analyzed, sel)
     val bm = Bm25.topK(docs.where(col("doc_id") =!= 42L), "doc_id", analyzed,
-      sel.mkString(" "), k = 8, stats = Some(stats)).as[(Long, Double)].collect().toMap
+      Bm25.Terms.words(sel.mkString(" ")), k = 8, stats = Some(stats)).as[(Long, Double)].collect().toMap
     assert(mlt.keySet === bm.keySet)
     for ((id, s) <- mlt)
       assert(math.abs(s - bm(id)) < 1e-6, s"doc $id: mlt=$s bm25=${bm(id)}")

@@ -403,7 +403,8 @@ class WidgetServerSpec extends SparkSpecBase {
       val (c3, b3) = post(s"http://127.0.0.1:$port/search",
         """{"q": "dup vector scan", "collapse": "lang", "size": 3}""")
       assert(c3 === 200)
-      val scored = graft.query.Bm25.scoredAll(docs, "doc_id", analyzed, "dup vector scan")
+      val scored = graft.query.Bm25.scored(docs, "doc_id", analyzed,
+        graft.query.Bm25.Terms.words("dup vector scan"))
       assert(b3 === WidgetServer.collectRowsJson(
         graft.query.Paging.collapseTopHits(
           scored.join(docs.select("doc_id", "lang"), "doc_id"),
@@ -478,8 +479,8 @@ class WidgetServerSpec extends SparkSpecBase {
         """{"q": "vector^2 dup scan^0.5", "size": 5}""")
       assert(c7 === 200)
       assert(b7 === WidgetServer.collectRowsJson(
-        graft.query.Bm25.topKBoosted(docs, "doc_id", analyzed,
-          Seq("vector" -> 2.0, "dup" -> 1.0, "scan" -> 0.5), 5)))
+        graft.query.Bm25.topK(docs, "doc_id", analyzed, graft.query.Bm25.Terms.boosted(
+          Seq("vector" -> 2.0, "dup" -> 1.0, "scan" -> 0.5)), 5)))
       assert(b7 !== b1)
       // a boost in the FILTER stays a client fault
       assert(post(s"http://127.0.0.1:$port/search",
@@ -613,9 +614,9 @@ class WidgetServerSpec extends SparkSpecBase {
         """{"q": "batches", "analyzer": "english", "size": 5}""")
       assert(c3 === 200)
       assert(b3 === WidgetServer.collectRowsJson(
-        graft.query.Bm25.scoredAll(docs, "doc_id",
+        graft.query.Bm25.scored(docs, "doc_id",
             concat(lit(" "), an.normalized(col("text")), lit(" ")),
-            "batches", analyzer = an)
+            graft.query.Bm25.Terms.words("batches", an))
           .orderBy(desc("score"), asc("doc_id")).limit(5)))
       assert(b3.contains("doc_id"), "english analyzer finds the inflection")
       val (c4, b4) = post(s"http://127.0.0.1:$port/search",
