@@ -109,25 +109,6 @@ object SparkEntry {
     df.select(cols: _*)
   }
 
-  /** The reference's actual unit of interactive work (SURVEY §3.2/§3.3 +
-    * `services/webapp/src/views.js:103-115`): every widget change re-issues
-    * ALL five saved visualizations under the new filter state against the
-    * `*harmonized*` federated view. This builds that one interaction:
-    *
-    *   1. fetch the (warm) federated dictionary and type the widgets from it;
-    *   2. compile the user's selections to one conjunction (Q7);
-    *   3. apply the dashboard's global time filter (G8) — in published
-    *      string space, where lexicographic order IS chronological order;
-    *   4. run the five saved viz — description pie (G2), city pie (G3),
-    *      day/hour nested terms (G4), per-dataset table (G5), geohash map
-    *      grid (G6) (`kibana-content/kibana-exported-visualizations.json:2-7`)
-    *      — and union their bucket rows.
-    *
-    * `warm = true` serves from the pinned federated cache ([[Federation
-    * .materialize]]) — the steady-state latency of one dashboard
-    * interaction; `false` re-scans the sources each time (the backfill /
-    * first-load cost). Identical results, one oracle.
-    */
   /** Dictionary-typed widget fields, fetched once per session — the webapp
     * fetches the dictionary at page LOAD (`collections.js:66-81`) and every
     * later widget change reuses the typed field collection client-side; a
@@ -207,9 +188,8 @@ object SparkEntry {
   /** [[dashboardFiltered]] under an already-decoded widget state. */
   private def scanFiltered(
       s: SparkSession, warm: Boolean, fc: graft.query.FieldCollection): DataFrame =
-    federatedHarmonized(s, warm)
-      .where(col("datetime").isNotNull && col("datetime") >= "2010-01-01 00:00:00")
-      .where(fc.compile)
+    graft.expr.Param.filter(federatedHarmonized(s, warm)
+      .where(col("datetime").isNotNull && col("datetime") >= "2010-01-01 00:00:00"), fc.compile)
 
   /** The lineitem widget fields, typed from the warm approx-distinct
     * dictionary (one per corpus dir, materialized once per session).
@@ -255,93 +235,70 @@ object SparkEntry {
   private lazy val dashboardVizes: Seq[graft.query.VisState.Viz] =
     graft.query.VisState.bundledDashboard()
 
-  /** The dashboard's bucket aggregations over one backend: what differs
-    * between rendering a panel from the corpus scan ([[Aggs]]) and from the
-    * at-rest rollup ([[PreAgg]]). `carries` says whether a frame can serve
-    * a bucket; the other three compute the bucket's `count` frame.
+  /** The saved panels over `frame`, all from ONE aggregate
+    * ([[Aggs.panelBuckets]]), onto the `(viz, key, subkey, count)` bucket
+    * schema. `measure` is the one thing the scan fallback (`count(lit(1))`
+    * over the filtered federation) and the rollup path (`sum(cnt)`) do
+    * differently; a frame carrying the map's `geolocation` gets the cube's
+    * `geohash` here, so both cut map cells alike. A bucket field the frame
+    * does not carry drops out (the export's `notebookhtml` — Kibana buckets
+    * a missing field into nothing, and DatasetTable degrades to per-city
+    * counts); a panel with no field left renders as nothing.
     */
-  private final case class VizBackend(
-      carries: (DataFrame, graft.query.VisState.BucketAgg) => Boolean,
-      geohashGrid: (DataFrame, graft.query.VisState.BucketAgg) => DataFrame,
-      terms: (DataFrame, graft.query.VisState.BucketAgg) => DataFrame,
-      nestedTerms: (DataFrame, graft.query.VisState.BucketAgg,
-        graft.query.VisState.BucketAgg) => DataFrame)
-
-  /** Bucket fields resolve against the filtered federated frame; a field
-    * the engine's published projection does not carry is dropped (the
-    * export's `notebookhtml` descriptor link — Kibana buckets a missing
-    * field into nothing, and the DatasetTable panel degrades to its first
-    * level, per-city counts).
-    */
-  private val scanBackend = VizBackend(
-    (f, b) => f.columns.contains(b.field),
-    (f, b) => Aggs.geohashGridFromGeoloc(f, b.field, b.precision),
-    (f, b) => Aggs.termsTopN(f, b.field, b.size),
-    (f, p, c) => Aggs.nestedTermsBuckets(f, p.field, c.field,
-      parentSize = p.size, childSize = c.size))
-
-  /** Render one saved visualization onto the dashboard's
-    * `(viz, key, subkey, count)` bucket schema, aggregating through
-    * `backend`. A bucket field the frame does not carry drops out; a
-    * panel whose every bucket field is absent renders as nothing.
-    */
-  private def renderPanel(
-      f: DataFrame,
-      v: graft.query.VisState.Viz,
-      backend: VizBackend): DataFrame = {
+  private def renderDashboard(
+      frame: DataFrame, measure: Column, vizes: Seq[graft.query.VisState.Viz]): DataFrame = {
     import graft.query.VisState.BucketAgg
-    val label = vizLabels.getOrElse(v.id, v.id)
-    def flat(df: DataFrame, key: String) =
-      df.select(lit(label).as("viz"), col(key).cast("string").as("key"),
-        lit("").as("subkey"), col("count"))
-    val buckets = v.buckets.filter(backend.carries(f, _))
-    buckets match {
-      case Seq() if v.buckets.nonEmpty =>
-        // every bucket field is absent from the serving frame: the panel
-        // renders as nothing, not as an error (matches the terms degrade)
-        f.sparkSession.emptyDataFrame
-          .select(lit(label).as("viz"), lit("").as("key"),
-            lit("").as("subkey"), lit(0L).as("count"))
-      case Seq(b @ BucketAgg("geohash_grid", _, _, _, _)) =>
-        flat(backend.geohashGrid(f, b), "geohash")
-      case Seq(b @ BucketAgg("terms", _, _, _, _)) =>
-        flat(backend.terms(f, b), b.field)
-      case Seq(p @ BucketAgg("terms", _, _, _, _), c @ BucketAgg("terms", _, _, _, _)) =>
-        backend.nestedTerms(f, p, c)
-          .select(lit(label).as("viz"), col(p.field).cast("string").as("key"),
-            col(c.field).cast("string").as("subkey"), col("count"))
-      case other =>
-        throw new IllegalArgumentException(
+    val keyed = vizes.flatMap(_.buckets).filter(_.aggType == "geohash_grid").map(_.field)
+      .find(g => frame.columns.contains(g) && !frame.columns.contains("geohash"))
+      .fold(frame)(g => frame.withColumn("geohash", cubeGeohash(col(g))))
+    val panels = vizes.flatMap { v =>
+      val label = vizLabels.getOrElse(v.id, v.id)
+      v.buckets.filter(b => keyed.columns.contains(if (b.aggType == "geohash_grid") "geohash" else b.field)) match {
+        case Seq() if v.buckets.nonEmpty => None
+        case Seq(b @ BucketAgg("geohash_grid", _, _, _, _)) =>
+          require(b.precision == dashboardCubePrecision, s"saved map precision ${b.precision} is not " +
+            s"the cube's $dashboardCubePrecision — rebuild the rollup at the map's precision")
+          Some(label -> Aggs.Panel(Seq("geohash"), 0))
+        case Seq(b @ BucketAgg("terms", _, _, _, _)) => Some(label -> Aggs.Panel(Seq(b.field), b.size))
+        case Seq(p @ BucketAgg("terms", _, _, _, _), c @ BucketAgg("terms", _, _, _, _)) =>
+          Some(label -> Aggs.Panel(Seq(p.field, c.field), p.size, c.size))
+        case other => throw new IllegalArgumentException(
           s"unsupported panel shape for '${v.id}': ${other.mkString(", ")}")
+      }
     }
+    def byPanel(c: (String, Aggs.Panel) => Column) = panels.indices.foldLeft(lit(null)) {
+      case (w, j) => when(col("_panel") === j, c.tupled(panels(j))).otherwise(w)
+    }
+    if (panels.isEmpty)
+      frame.sparkSession.emptyDataFrame.select(lit("").as("viz"), lit("").as("key"),
+        lit("").as("subkey"), lit(0L).as("count"))
+    else Aggs.panelBuckets(keyed, measure, panels.map(_._2))
+      .select(byPanel((label, _) => lit(label)).as("viz"),
+        byPanel((_, p) => col(p.keys.head).cast("string")).as("key"),
+        byPanel((_, p) => p.keys.lift(1).fold(lit(""))(col(_).cast("string"))).as("subkey"),
+        col("count"))
+      // panelBuckets' rows are one partition: a local sort is the total order
+      .sortWithinPartitions("viz", "key", "subkey")
   }
 
   /** Render one saved visualization over the filtered federated frame. */
   private[graft] def renderViz(f: DataFrame, v: graft.query.VisState.Viz): DataFrame =
-    renderPanel(f, v, scanBackend)
+    renderDashboard(f, count(lit(1)), Seq(v))
 
-  /** Every panel of `vizes` through `backend`, as one sorted frame. */
-  private def renderDashboard(
-      f: DataFrame,
-      vizes: Seq[graft.query.VisState.Viz],
-      backend: VizBackend): DataFrame =
-    vizes
-      .map(renderPanel(f, _, backend))
-      .reduce(_.unionByName(_))
-      // Total order without a range-partitioning exchange: a global sort
-      // would sample the (tiny) result in an extra job per interaction;
-      // one partition + a local sort is the same order at dashboard-result
-      // cardinality.
-      .coalesce(1)
-      .sortWithinPartitions("viz", "key", "subkey")
-
+  /** The reference's unit of interactive work (SURVEY §3.2/§3.3,
+    * `views.js:103-115`): a widget change re-issues all five saved
+    * visualizations (`kibana-exported-visualizations.json:2-7`) under the
+    * decoded widget state and the global time filter, rendered from one
+    * aggregate. `warm = true` scans the pinned federated cache, `false`
+    * re-reads the sources (the first-load cost); one oracle pins both.
+    */
   private[graft] def dashboardRefresh(
       s: SparkSession,
       warm: Boolean,
       stateJson: String = dashboardStateJson,
       vizes: Seq[graft.query.VisState.Viz] = null): DataFrame =
-    renderDashboard(dashboardFiltered(s, warm, stateJson),
-      Option(vizes).getOrElse(dashboardVizes), scanBackend)
+    renderDashboard(dashboardFiltered(s, warm, stateJson), count(lit(1)),
+      Option(vizes).getOrElse(dashboardVizes))
 
   /** The saved map panel's precision — baked into the rollup's geohash
     * dimension at build time (ES likewise indexes the geohash_grid's
@@ -355,8 +312,7 @@ object SparkEntry {
     * constrain. Geohash is DERIVED here, at ingest, at the saved map's
     * precision — serving never parses a geolocation string again.
     */
-  private[graft] def dashboardCubeDims: Seq[(String, Column)] = {
-    val parts = split(col("geolocation"), ",")
+  private[graft] def dashboardCubeDims: Seq[(String, Column)] =
     Seq(
       "dataset" -> col("dataset"),
       "description" -> col("description"),
@@ -364,34 +320,16 @@ object SparkEntry {
       "dayofweek" -> col("dayofweek"),
       "hour" -> col("hour"),
       "year" -> col("year"),
-      "geohash" -> when(length(col("geolocation")) > 0,
-        graft.expr.Geohash.geohash(
-          parts.getItem(0).cast("double"), parts.getItem(1).cast("double"),
-          dashboardCubePrecision)))
-  }
+      "geohash" -> cubeGeohash(col("geolocation")))
 
-  /** [[scanBackend]]'s twin over the at-rest rollup: identical buckets
-    * (the weighted ops in [[PreAgg]] restate each aggregation's ordering
-    * contract over `sum(cnt)`), same degrade rules — a bucket field the
-    * rollup does not carry drops out, a fully-missing panel renders as
-    * nothing.
+  /** A `"lat,lon"` geolocation's cell at the cube precision; null where it
+    * is empty or does not parse.
     */
-  private val rollupBackend = VizBackend(
-    (pre, b) =>
-      if (b.aggType == "geohash_grid") pre.columns.contains("geohash")
-      else pre.columns.contains(b.field),
-    (pre, b) => {
-      // any precision at or below the ingest precision truncates from
-      // the rollup (geohash prefixes ARE the coarser cells); only a
-      // FINER saved map forces a rebuild or the corpus scan
-      require(PreAgg.coversGeohash(dashboardCubePrecision, b.precision),
-        s"saved map precision ${b.precision} > rollup ingest precision " +
-          s"$dashboardCubePrecision — rebuild the rollup or fall back to the scan")
-      PreAgg.geohashGridAt(pre, dashboardCubePrecision, b.precision)
-    },
-    (pre, b) => PreAgg.termsTopN(pre, b.field, b.size),
-    (pre, p, c) => PreAgg.nestedTerms(pre, p.field, c.field,
-      parentSize = p.size, childSize = c.size))
+  private def cubeGeohash(geoloc: Column): Column = {
+    val parts = split(geoloc, ",")
+    when(length(geoloc) > 0, graft.expr.Geohash.geohash(
+      parts.getItem(0).cast("double"), parts.getItem(1).cast("double"), dashboardCubePrecision))
+  }
 
   /** The dashboard rollup, built once per session (the at-rest table a
     * 100 TB deployment maintains at ingest).
@@ -421,17 +359,13 @@ object SparkEntry {
   }
 
   /** The dashboard served ENTIRELY from the pre-aggregated rollup — the
-    * 100 TB serving path. Identical results to [[dashboardRefresh]] (one
-    * oracle pins both), but the serving plan reads only the rollup: the
-    * corpus is scanned exactly once, at rollup build, and a widget change
+    * 100 TB serving path, pinned by [[dashboardRefresh]]'s oracle: the
+    * corpus is scanned once, at rollup build, and a widget change
     * re-aggregates |distinct dim combos| rows. The global time filter
-    * (`datetime >= 2010-01-01T00:00`, a year-boundary instant in the
-    * published string encoding) is applied as `year >= 2010` — `year` and
-    * `datetime` are harmonized from the same source parts, so the
-    * predicates select identical rows (the shared oracle certifies it).
-    * A state filtering any field outside the rollup's dimensions fails
-    * loudly ([[PreAgg.covers]]): fall back to [[dashboardRefresh]], never
-    * serve silently-wrong buckets.
+    * (`datetime >= 2010-01-01T00:00`) is applied as `year >= 2010`: `year`
+    * and `datetime` are harmonized from the same source parts. A state
+    * filtering any field outside the rollup's dimensions fails loudly
+    * ([[PreAgg.covers]]): fall back to the scan, never serve wrong buckets.
     */
   private[graft] def dashboardRefreshPreagg(
       s: SparkSession,
@@ -450,8 +384,8 @@ object SparkEntry {
     */
   private def rollupDashboard(pre: DataFrame, fc: graft.query.FieldCollection): DataFrame =
     renderDashboard(
-      pre.where(col("year").isNotNull && col("year") >= 2010).where(fc.compile),
-      dashboardVizes, rollupBackend)
+      graft.expr.Param.filter(pre.where(col("year").isNotNull && col("year") >= 2010), fc.compile),
+      sum(col(PreAgg.CntCol)), dashboardVizes)
 
   /** The saved dashboard under a decoded widget state, as the route
     * serves it: from the at-rest rollup whenever it covers the state, else
@@ -459,7 +393,7 @@ object SparkEntry {
     */
   private[graft] def dashboardServed(s: SparkSession, fc: graft.query.FieldCollection): DataFrame =
     if (rollupCovers(fc)) rollupDashboard(dashboardRollup(s), fc)
-    else renderDashboard(scanFiltered(s, warm = true, fc), dashboardVizes, scanBackend)
+    else renderDashboard(scanFiltered(s, warm = true, fc), count(lit(1)), dashboardVizes)
 
   // ---------------------------------------------------------------------
   // The query registry, derived once from the family files in

@@ -68,14 +68,14 @@ case class BigramJaccardExpr(child: Expression, queryShingles: Seq[String])
   }
   private val qSize = queryShingles.distinct.size
 
-  override protected def nullSafeEval(s: Any): Any =
-    JaccardAlgo.bigramJaccard(s.asInstanceOf[UTF8String], qSet, qSize)
+  def score(s: UTF8String): Double = JaccardAlgo.bigramJaccard(s, qSet, qSize)
 
+  override protected def nullSafeEval(s: Any): Any = score(s.asInstanceOf[UTF8String])
+
+  // the expression itself is the reference: no field reaches the Java source
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // raw type: janino's generics support is partial, and the call
-    // compiles against the erased signature anyway
-    val ref = ctx.addReferenceObj("qSet", qSet, "java.util.HashSet")
-    defineCodeGen(ctx, ev, v => s"graft.expr.JaccardAlgo.bigramJaccard($v, $ref, $qSize)")
+    val ref = ctx.addReferenceObj("jaccardExpr", this, classOf[BigramJaccardExpr].getName)
+    defineCodeGen(ctx, ev, v => s"$ref.score($v)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BigramJaccardExpr =

@@ -132,15 +132,16 @@ case class NearestCellsExpr(child: Expression, centroids: CentroidSet, n: Int,
   override def prettyName: String = if (l2) "ivf_cells_l2" else "ivf_cells"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  private def algo = if (l2) "nearestCellsL2" else "nearestCells"
+  def cells(vec: ArrayData): ArrayData =
+    if (l2) CellAlgo.nearestCellsL2(vec, centroids, n)
+    else CellAlgo.nearestCells(vec, centroids, n)
 
-  override protected def nullSafeEval(vec: Any): Any =
-    if (l2) CellAlgo.nearestCellsL2(vec.asInstanceOf[ArrayData], centroids, n)
-    else CellAlgo.nearestCells(vec.asInstanceOf[ArrayData], centroids, n)
+  override protected def nullSafeEval(vec: Any): Any = cells(vec.asInstanceOf[ArrayData])
 
+  // the expression itself is the reference: no field reaches the Java source
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, classOf[CentroidSet].getName)
-    defineCodeGen(ctx, ev, v => s"graft.expr.CellAlgo.$algo($v, $ref, $n)")
+    val ref = ctx.addReferenceObj("cellsExpr", this, classOf[NearestCellsExpr].getName)
+    defineCodeGen(ctx, ev, v => s"$ref.cells($v)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCellsExpr =

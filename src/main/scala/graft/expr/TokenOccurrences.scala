@@ -22,10 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * counts every starting position, exactly the token-sequence semantics
   * the SQL oracle restates (`toks[i:i+p-1] = [...]` over all `i`); for a
   * single term this is the same shared-boundary stepping as before.
+  * The step is read off `pattern` itself (the byte offset of its second
+  * space), so no per-term number reaches the generated Java source: every
+  * term of every query shares one compiled class.
   * Zero-copy over UTF8String bytes.
   */
 object TokenAlgo {
-  def countToken(padded: UTF8String, pattern: UTF8String, step: Int): Int = {
+  def countToken(padded: UTF8String, pattern: UTF8String): Int = {
+    var step = 1
+    while (pattern.getByte(step) != ' ') step += 1
     var n = 0
     var from = 0
     var pos = padded.indexOf(pattern, from)
@@ -44,18 +49,15 @@ case class TokenOccurrencesExpr(child: Expression, token: String)
   override def prettyName: String = "token_occurrences"
   override def dataType: DataType = IntegerType
 
-  // " token " with the trailing space reusable as the next leading space;
-  // advance past the first token only so self-overlapping phrases count
-  // every token-sequence position.
+  // " token " with the trailing space reusable as the next leading space
   private val pattern = UTF8String.fromString(" " + token + " ")
-  private val step = UTF8String.fromString(token.takeWhile(_ != ' ')).numBytes + 1
 
   override protected def nullSafeEval(s: Any): Any =
-    TokenAlgo.countToken(s.asInstanceOf[UTF8String], pattern, step)
+    TokenAlgo.countToken(s.asInstanceOf[UTF8String], pattern)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("pattern", pattern, classOf[UTF8String].getName)
-    defineCodeGen(ctx, ev, v => s"graft.expr.TokenAlgo.countToken($v, $ref, $step)")
+    defineCodeGen(ctx, ev, v => s"graft.expr.TokenAlgo.countToken($v, $ref)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): TokenOccurrencesExpr =

@@ -124,11 +124,15 @@ case class GramHashesExpr(child: Expression, k: Int) extends UnaryExpression {
   override def prettyName: String = "graft_gram_hashes"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override protected def nullSafeEval(text: Any): Any =
-    WinnowAlgo.gramHashes(text.asInstanceOf[UTF8String], k)
+  def hashes(text: UTF8String): ArrayData = WinnowAlgo.gramHashes(text, k)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.expr.WinnowAlgo.gramHashes($t, $k)")
+  override protected def nullSafeEval(text: Any): Any = hashes(text.asInstanceOf[UTF8String])
+
+  // the expression itself is the reference: no field reaches the Java source
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("gramsExpr", this, classOf[GramHashesExpr].getName)
+    defineCodeGen(ctx, ev, t => s"$ref.hashes($t)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): GramHashesExpr =
     copy(child = newChild)
@@ -139,11 +143,15 @@ case class WinnowExpr(child: Expression, k: Int, w: Int) extends UnaryExpression
   override def prettyName: String = "graft_winnow"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override protected def nullSafeEval(text: Any): Any =
-    WinnowAlgo.fingerprints(text.asInstanceOf[UTF8String], k, w)
+  def fingerprints(text: UTF8String): ArrayData = WinnowAlgo.fingerprints(text, k, w)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.expr.WinnowAlgo.fingerprints($t, $k, $w)")
+  override protected def nullSafeEval(text: Any): Any = fingerprints(text.asInstanceOf[UTF8String])
+
+  // the expression itself is the reference: no field reaches the Java source
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("winnowExpr", this, classOf[WinnowExpr].getName)
+    defineCodeGen(ctx, ev, t => s"$ref.fingerprints($t)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): WinnowExpr =
     copy(child = newChild)

@@ -1,9 +1,10 @@
 package graft.query
 
-import graft.expr.{Geohash, GeohashAlgo, TextMatch}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.expr.{Geohash, GeohashAlgo, Param, TextMatch}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** The aggregation surface of the serving half — restating the reference's
   * Kibana visualizations and typeahead (SURVEY.md §2.5, G1-G8) as DataFrame
@@ -63,24 +64,11 @@ object Aggs {
       .orderBy(desc("parent_count"), asc(parent), desc("count"), asc(child))
   }
 
-  /** [[nestedTermsTopK]]'s serving twin: identical buckets (same counts,
-    * same parent/child ranking and tiebreaks), restructured for interactive
-    * latency. The agg+broadcast-join shape above is the right plan when the
-    * (parent, child) bucket table might be large; on a dashboard the bucket
-    * table is UI-bounded (parents × children ≤ a few thousand — it is the
-    * thing being rendered), and the broadcast materialization plus
-    * TakeOrdered are two extra sequential stage waves per interaction. Here
-    * both per-parent measures ride ONE exchange (two windows over the same
-    * partitioning reuse it) and the parent top-N is a row_number over the
-    * aggregated buckets — cardinality |buckets|, not |rows| — so a refresh
-    * is aggregate → window → window, nothing else.
-    *
-    * SERVING-ONLY CONTRACT: the parent-rank window is unpartitioned, so
-    * every aggregated bucket flows through one task — bounded and cheap
-    * when (parent, child) is a widget pair a UI renders, the same
-    * unbounded hot-spot as any global window when it isn't (parent =
-    * url_host over a crawl, say). For unbounded-cardinality pairs use
-    * [[nestedTermsTopK]], whose parent cut is a bounded broadcast.
+  /** [[nestedTermsTopK]]'s serving twin, one [[panelBuckets]] panel: the
+    * same buckets without the broadcast join's two extra stage waves.
+    * SERVING-ONLY CONTRACT: for a widget pair a UI renders, refused past
+    * `maxBuckets` (parent = url_host over a crawl, say); use
+    * [[nestedTermsTopK]] for unbounded-cardinality pairs.
     */
   def nestedTermsBuckets(
       df: DataFrame,
@@ -89,55 +77,75 @@ object Aggs {
       parentSize: Int = 10,
       childSize: Int = 24,
       maxBuckets: Int = 100000): DataFrame =
-    nestedBucketsFromPairs(
-      df.groupBy(col(parent), col(child)).agg(count(lit(1)).as("count")),
-      parent, child, parentSize, childSize, maxBuckets)
-
-  /** The bucket-ranking half of [[nestedTermsBuckets]], shared with the
-    * pre-aggregated serving path ([[PreAgg.nestedTerms]]): `pairCounts` is
-    * any `(parent, child, count)` frame — a fresh aggregation of the corpus
-    * or a weighted re-aggregation of an at-rest rollup — and the ranking,
-    * tiebreaks, and the self-enforced bucket bound are identical either way.
-    */
-  private[query] def nestedBucketsFromPairs(
-      pairCounts: DataFrame,
-      parent: String,
-      child: String,
-      parentSize: Int,
-      childSize: Int,
-      maxBuckets: Int): DataFrame = {
-    val perParent = Window.partitionBy(col(parent))
-    // dense_rank over (parent_count DESC, parent ASC) assigns every row its
-    // PARENT's position in that total order — parents are distinct, so the
-    // tiebreak makes ranks unique per parent and `<= parentSize` is exactly
-    // the top-N the agg+join form takes.
-    val ordered = Window.orderBy(desc("parent_count"), asc(parent))
-    val parentRank = dense_rank().over(ordered)
-    // The serving-only contract, SELF-ENFORCED in-plan: a full-frame count
-    // over the same single-task window (no extra exchange, no pre-flight
-    // job) refuses loudly when the aggregated bucket table exceeds
-    // `maxBuckets` — the signature that (parent, child) is not a UI widget
-    // pair and the caller wanted [[nestedTermsTopK]]. Referenced from the
-    // WHERE so column pruning cannot drop the guard.
-    val totalBuckets = count(lit(1)).over(
-      ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    val guard = when(totalBuckets > maxBuckets,
-      raise_error(concat(
-        lit(s"nestedTermsBuckets('$parent', '$child'): "),
-        totalBuckets.cast("string"),
-        lit(s" aggregated buckets exceed maxBuckets=$maxBuckets — this " +
-          "serving shape windows all buckets through one task; use " +
-          "nestedTermsTopK (the scale-safe twin) for unbounded pairs")))
-      .cast("boolean")).otherwise(lit(true))
-    pairCounts
-      .withColumn("parent_count", sum(col("count")).over(perParent))
-      .withColumn("child_rank",
-        row_number().over(perParent.orderBy(desc("count"), asc(child))))
-      .withColumn("parent_rank", parentRank)
-      .withColumn("_bound_ok", guard)
-      .where(col("parent_rank") <= parentSize && col("child_rank") <= childSize &&
-        col("_bound_ok"))
+    panelBuckets(df, count(lit(1)), Seq(Panel(Seq(parent, child), parentSize, childSize)), maxBuckets)
       .select(col(parent), col(child), col("count"), col("parent_count"))
+
+  /** One saved panel's bucket shape: one key, whose top `size` buckets it
+    * keeps (`size = 0`: a grid, every bucket with a non-null key), or a
+    * parent and a child key: the top `size` parents by their total, and
+    * the top `childSize` children within each.
+    */
+  final case class Panel(keys: Seq[String], size: Int, childSize: Int = 0)
+
+  /** Every panel's buckets from ONE aggregate of `df`: grouping sets over
+    * the panels' keys (plus each two-key panel's parent alone: the parent
+    * totals), each bucket counted by `measure` — `count(lit(1))` over rows,
+    * `sum(cnt)` over a rollup. Buckets rank by count descending, key
+    * ascending; a parent by its total over its children. The ranking is a
+    * local sort over a stated bound: the buckets go to one task, sorted by
+    * key set, count and key, and one pass reads each rank off its position
+    * — cheap because a panel's buckets are what a UI renders; a key set of
+    * more than `maxBuckets` buckets is refused instead of ranked.
+    *
+    * Rows, in one partition: `_panel` (index into `panels`; panels over one
+    * key set each get their own copy of its buckets), every key column
+    * (null outside the row's set), `count`, and `parent_count`.
+    */
+  def panelBuckets(
+      df: DataFrame, measure: Column, panels: Seq[Panel], maxBuckets: Int = 100000): DataFrame = {
+    val sets = (panels.map(_.keys) ++ panels.filter(_.keys.size == 2).map(_.keys.take(1))).distinct
+    val keys = sets.flatten.distinct
+    // grouping_id sets a key's bit (first key highest) when the set leaves
+    // it out, so a parent's own set sorts before its pairs under desc(_gid)
+    def gidOf(set: Seq[String]) = keys.foldLeft(0L)((g, k) => 2 * g + (if (set.contains(k)) 0 else 1))
+    val gids = panels.map(pn => gidOf(pn.keys))
+    val single = sets.filter(_.size == 1).map(s => gidOf(s) -> keys.indexOf(s.head)).toMap
+    val pairs = sets.filter(_.size == 2).map(s => gidOf(s) -> (keys.indexOf(s.head), gidOf(s.take(1)))).toMap
+    // `count` is never null: a rollup's `sum(cnt)` rows then have a scan's
+    // `count(1)` schema, and both rank in one compiled class
+    val agg = df.groupingSets(sets.map(_.map(col)), keys.map(col): _*)
+      .agg(coalesce(measure, lit(0L)).as("count"), grouping_id().as("_gid"))
+    val n = keys.size
+    val countField = agg.schema.fields(n)
+    val out = StructType(StructField("_panel", IntegerType, nullable = false) +:
+      agg.schema.fields.take(n) :+ countField :+ StructField("parent_count", countField.dataType))
+    val refusal = s"panelBuckets(${sets.map(_.mkString("(", ", ", ")")).mkString(", ")}): the " +
+      s"aggregated buckets of one key set exceed maxBuckets=$maxBuckets — this serving shape " +
+      "ranks all buckets in one task; use nestedTermsTopK (the scale-safe twin) for unbounded pairs"
+    inOrder(agg, desc("_gid") +: desc("count") +: keys.map(asc): _*).mapPartitions { rows =>
+      val parents = scala.collection.mutable.Map.empty[(Long, Any), (Int, Any)]
+      val children = scala.collection.mutable.Map.empty[(Long, Any), Int]
+      var (gid, rank) = (Long.MinValue, 0)
+      rows.flatMap { r =>
+        val g = r.getLong(n + 1)
+        rank = if (g == gid) rank + 1 else 1
+        gid = g
+        if (rank > maxBuckets) throw new IllegalArgumentException(refusal)
+        single.get(g).foreach(k => parents((g, r.get(k))) = (rank, r.get(n)))
+        // a pair's parent (rank, total), and the pair's rank within its parent
+        val parent = pairs.get(g).map { case (p, parentGid) =>
+          children((g, r.get(p))) = children.getOrElse((g, r.get(p)), 0) + 1
+          (parents((parentGid, r.get(p))), children((g, r.get(p))))
+        }
+        panels.indices.filter(gids(_) == g).flatMap { j =>
+          val keep = parent.fold(
+            if (panels(j).size == 0) !r.isNullAt(single(g)) else rank <= panels(j).size) {
+            case ((parentRank, _), childRank) => parentRank <= panels(j).size && childRank <= panels(j).childSize
+          }
+          if (keep) Some(Row.fromSeq((j +: (0 to n).map(r.get)) :+ parent.map(_._1._2).orNull)) else None
+        }
+      }
+    }(Encoders.row(out))
   }
 
   /** G6 — geohash grid: count per geohash cell at the given precision
@@ -217,12 +225,17 @@ object Aggs {
     * optionally restricted to rows whose value phrase-prefix-matches the
     * typed prefix (`views.js:378-412`).
     */
-  def typeahead(df: DataFrame, field: String, typed: String, size: Int = 10): DataFrame = {
+  def typeahead(df: DataFrame, field: String, typed: String, size: Int = 10): DataFrame =
+    typeaheadOf(df, count(lit(1)), field, typed, size)
+
+  /** [[typeahead]] counting with `measure` (`sum(cnt)` over a rollup). */
+  private[query] def typeaheadOf(
+      df: DataFrame, measure: Column, field: String, typed: String, size: Int): DataFrame = {
     val base =
       if (TextMatch.analyze(typed).isEmpty) df
       else df.where(TextMatch.phrasePrefix(col(field), typed))
     base.groupBy(col(field))
-      .agg(count(lit(1)).as("count"))
+      .agg(measure.as("count"))
       .orderBy(desc("count"), asc(field))
       .limit(size)
       .select(col(field))
@@ -330,13 +343,26 @@ object Aggs {
     * client-side). One exchange on the bucket key, bucket count bounded
     * by value-range/interval.
     */
-  def numericHistogram(df: DataFrame, field: String, interval: Double): DataFrame = {
+  def numericHistogram(df: DataFrame, field: String, interval: Double): DataFrame =
+    histogramOf(df, count(lit(1)), field, interval)
+
+  /** [[numericHistogram]] counting with `measure` (`sum(cnt)` over a
+    * rollup); the interval is a [[Param]], so every interval shares a plan.
+    */
+  private[query] def histogramOf(df: DataFrame, measure: Column, field: String, interval: Double): DataFrame = {
     require(interval > 0, s"histogram interval must be positive, got $interval")
-    df.where(col(field).isNotNull)
-      .groupBy((floor(col(field) / interval) * interval).as("bucket"))
-      .agg(count(lit(1)).as("count"))
-      .orderBy(asc("bucket"))
+    val width = Param(interval)
+    inOrder(df.where(col(field).isNotNull)
+      .groupBy((floor(col(field) / width) * width).as("bucket"))
+      .agg(measure.as("count")), asc("bucket"))
   }
+
+  /** `df` in `order`, as one partition: a total order without the range
+    * exchange a global sort plans (and its sampling job), for results a UI
+    * renders — bucket lists, panels, dictionaries.
+    */
+  def inOrder(df: DataFrame, order: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(order: _*)
 
   /** ES `variable_width_histogram`, made deterministic: buckets form
     * wherever the ORDERED distinct values leave a gap wider than
@@ -353,7 +379,7 @@ object Aggs {
     * Scale shape: one map-side-combined exchange builds the distinct
     * cents-value table; the gap scan is a window over THAT table (value-
     * domain-bounded, corpus-size-free), self-guarded by `maxDistinct`
-    * exactly like [[nestedBucketsFromPairs]] — a column whose distinct
+    * exactly like [[panelBuckets]] — a column whose distinct
     * cents outgrow one task's frame wants a coarser quantization, not a
     * silent spill cliff. The value table is a count rollup, so the
     * at-rest serve ([[PreAgg.variableWidthHistogram]]) re-runs the
@@ -376,7 +402,7 @@ object Aggs {
     * its predecessor exceeds `gapCents`; per cluster the count-weighted
     * centroid `(Σ v·cnt / Σ cnt) / 100` is one exact-LONG fold and one
     * division. The single-task window is self-guarded in-plan (see
-    * [[nestedBucketsFromPairs]] — referenced from the WHERE so pruning
+    * [[panelBuckets]] — referenced from the WHERE so pruning
     * cannot drop it).
     */
   private[query] def variableWidthFromValueTable(
@@ -1722,7 +1748,7 @@ object Aggs {
     * by POSITION (ES zips its indicator array with the response buckets the
     * same way): full-outer on the rank so a length mismatch surfaces as an
     * in-plan `raise_error` (referenced from the WHERE, the
-    * [[nestedBucketsFromPairs]] guard idiom) instead of silent truncation.
+    * [[panelBuckets]] guard idiom) instead of silent truncation.
     * Series-bounded: the join is |buckets| × |curve| positions, never corpus.
     */
   private def zipWithCurve(

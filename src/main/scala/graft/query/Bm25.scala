@@ -64,13 +64,15 @@ object Bm25 {
   /** One-pass corpus statistics for a term set, as a 1-row frame:
     * `_n` (doc count), `_sumdl` (total token count), `_df0.._dfT` (per-term
     * document frequencies, aligned with `terms`). All integers — exact under
-    * any aggregation order, so downstream float math is deterministic.
+    * any aggregation order, so downstream float math is deterministic. The
+    * one writer of these statistics: scoring and more_like_this's term
+    * selection both read them here. An empty term set gives `_n` and
+    * `_sumdl` alone (every scoring entry point refuses one before this).
     *
     * At rest these are per-index constants: persist the 1-row frame next to
     * the index and [[topK]] becomes a single corpus scan.
     */
   def corpusStats(docs: DataFrame, analyzed: Column, terms: Seq[String]): DataFrame = {
-    require(terms.nonEmpty, "bm25: empty term set")
     val aggs =
       sum(docLength(analyzed).cast("long")).as("_sumdl") +:
         terms.zipWithIndex.map { case (t, i) =>

@@ -217,11 +217,7 @@ object MoreLikeThis {
       p: MltParams = MltParams(),
       analyzer: TextMatch.Analyzer = TextMatch.AsciiAnalyzer): (Seq[SelectedTerm], Long, Long) = {
     val cand = candidates(likeText, p, analyzer)
-    val aggs = sum(Bm25.docLength(analyzed).cast("long")).as("_sumdl") +:
-      cand.zipWithIndex.map { case ((t, _), i) =>
-        sum(when(TokenOccurrences(analyzed, t) > 0, 1L).otherwise(0L)).as(s"_df$i")
-      }
-    val row = docs.agg(count(lit(1)).as("_n"), aggs: _*).head()
+    val row = Bm25.corpusStats(docs, analyzed, cand.map(_._1)).head()
     val n = row.getLong(0)
     require(n > 0, "more_like_this: the corpus is empty — nothing to select against")
     val sumdl = row.getLong(1)

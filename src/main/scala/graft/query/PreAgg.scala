@@ -111,8 +111,8 @@ object PreAgg {
       .orderBy(desc("count"), asc(field))
       .limit(n)
 
-  /** G4/G5 from the rollup — the pair counts re-aggregate the rollup, the
-    * ranking half is literally [[Aggs.nestedTermsBuckets]]'s own.
+  /** G4/G5 from the rollup — [[Aggs.nestedTermsBuckets]]'s own panel
+    * kernel, counting `sum(cnt)` over rollup rows.
     */
   def nestedTerms(
       pre: DataFrame,
@@ -121,9 +121,9 @@ object PreAgg {
       parentSize: Int = 10,
       childSize: Int = 24,
       maxBuckets: Int = 100000): DataFrame =
-    Aggs.nestedBucketsFromPairs(
-      pre.groupBy(col(parent), col(child)).agg(sum(col(CntCol)).as("count")),
-      parent, child, parentSize, childSize, maxBuckets)
+    Aggs.panelBuckets(pre, sum(col(CntCol)),
+      Seq(Aggs.Panel(Seq(parent, child), parentSize, childSize)), maxBuckets)
+      .select(col(parent), col(child), col("count"), col("parent_count"))
 
   /** G7 from the rollup — the typeahead as a weighted terms aggregation:
     * the phrase-prefix match is a property of the VALUE, so it filters
@@ -132,16 +132,8 @@ object PreAgg {
     * this is ES's suggest-from-index behavior: completions come from the
     * at-rest term dictionary, never from documents.
     */
-  def typeahead(pre: DataFrame, field: String, typed: String, size: Int = 10): DataFrame = {
-    val base =
-      if (graft.expr.TextMatch.analyze(typed).isEmpty) pre
-      else pre.where(graft.expr.TextMatch.phrasePrefix(col(field), typed))
-    base.groupBy(col(field))
-      .agg(sum(col(CntCol)).as("count"))
-      .orderBy(desc("count"), asc(field))
-      .limit(size)
-      .select(col(field))
-  }
+  def typeahead(pre: DataFrame, field: String, typed: String, size: Int = 10): DataFrame =
+    Aggs.typeaheadOf(pre, sum(col(CntCol)), field, typed, size)
 
   /** [[Aggs.significantTerms]] from the rollup, for a scalar widget field
     * (where document frequency IS the row count): foreground is a predicate
@@ -446,11 +438,7 @@ object PreAgg {
     require(pre.columns.contains(metric),
       s"histogram metric '$metric' is not a rollup dimension " +
         s"(${pre.columns.mkString(", ")}) — serve it from the corpus scan")
-    require(interval > 0, s"histogram interval must be positive, got $interval")
-    pre.where(col(metric).isNotNull)
-      .groupBy((floor(col(metric) / interval) * interval).as("bucket"))
-      .agg(sum(col(CntCol)).as("count"))
-      .orderBy(asc("bucket"))
+    Aggs.histogramOf(pre, sum(col(CntCol)), metric, interval)
   }
 
   /** ES `composite` pagination from the rollup — the full-bucket export
@@ -842,14 +830,14 @@ object PreAgg {
     require(coversGeoTile(ingestZoom, z),
       s"zoom $z is not servable from an ingest-zoom-$ingestZoom rollup — " +
         "serve this zoom from the corpus scan")
-    val shift = ingestZoom - z
-    pre.where(col("tx").isNotNull && col("ty").isNotNull)
-      .groupBy(shiftright(col("tx"), shift).as("tx"),
-        shiftright(col("ty"), shift).as("ty"))
-      .agg(sum(col(CntCol)).as("count"))
-      .select(concat_ws("/", lit(z), col("tx"), col("ty")).as("tile"), col("count"))
-      .orderBy(desc("count"), asc("tile"))
-      .limit(n)
+    // the tile key is a bijection of the shifted (tx, ty): the grid is one
+    // top-n panel over it, and every zoom shares one plan
+    val shift = graft.expr.Param(ingestZoom - z)
+    val tiles = pre.where(col("tx").isNotNull && col("ty").isNotNull)
+      .select(concat_ws("/", lit(z), call_function("shiftright", col("tx"), shift),
+        call_function("shiftright", col("ty"), shift)).as("tile"), col(CntCol))
+    Aggs.panelBuckets(tiles, sum(col(CntCol)), Seq(Aggs.Panel(Seq("tile"), n)))
+      .select(col("tile"), col("count"))
   }
 
   /** Geotile drill-down served from the rollup: the clicked zoom-`cellZ`

@@ -876,7 +876,7 @@ object QueryStringQueries extends Family("serving") {
         .where(col("dict_field").isNotNull)
         .select("dict_field", "dict_vargroup", "dict_vartype", "dict_vardescr",
           "dict_min", "dict_max", "dict_countdistinct", "dict_uifilter")
-        .orderBy("dict_field")
+        .transform(Aggs.inOrder(_, col("dict_field")))
         .limit(1000)
     }, Some(dictOracle(
       "dict_field, 'dataset' AS dict_vargroup, dict_vartype, " +

@@ -77,10 +77,9 @@ object Routes {
         val interval = o.path("interval").asDouble(1.0)
         val fc = dashboardState(s, postedState(o))
         if (rollupCovers(fc, field))
-          PreAgg.numericHistogram(dashboardRollup(s).where(fc.compile), field, interval)
-        else
-          Aggs.numericHistogram(
-            federatedHarmonized(s, warm = true).where(fc.compile), field, interval)
+          PreAgg.numericHistogram(graft.expr.Param.filter(dashboardRollup(s), fc.compile), field, interval)
+        else Aggs.numericHistogram(
+          graft.expr.Param.filter(federatedHarmonized(s, warm = true), fc.compile), field, interval)
       },
       "/geotile" -> { o =>
         // Kibana-map tiles over the harmonized federation: {"z": 4} for

@@ -6,6 +6,7 @@ import com.fasterxml.jackson.databind.node.MissingNode
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** A minimal localhost HTTP serving entry — the engine-side analogue of the
   * reference's webapp/proxy tier (`services/webapp/src/index.js`,
@@ -33,11 +34,13 @@ object WidgetServer {
 
   /** Render a (bucket-cardinality) result frame as a JSON array of row
     * objects — the shape Kibana's bucket lists travel in. Spark's own
-    * row-to-JSON writer does the escaping/typing; the collect is the
+    * row-to-JSON writer does the escaping/typing, as a projection fused
+    * into the frame's last stage (`toJSON` adds an object round trip with
+    * stages and generated classes of its own); the collect is the
     * serving tier's, bounded by the route's own top-N/bucket limits.
     */
   def collectRowsJson(df: DataFrame): String =
-    df.toJSON.collect().mkString("[", ",", "]")
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).mkString("[", ",", "]")
 
   /** Start a localhost server with `routes` of `path -> (body => result)`.
     * Per request the server decodes the body once (an empty body is the

@@ -11,12 +11,32 @@ counts as FAIL(engine): it threw, so it has no parquet to compare.
 """
 import json
 import math
+import os
 import sys
+import tempfile
 
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# Every connection is bounded: unbounded, an all-pairs oracle at sf0.1 grows
+# to ~12 GB resident and, beside a Spark JVM, gets the process killed. Past
+# the limit DuckDB spills to SPILL_DIR.
+MEMORY_LIMIT = "6GB"
+THREADS = min(4, os.cpu_count() or 1)
+SPILL_DIR = os.path.join(tempfile.gettempdir(), "graft_oracle_spill")
+
+
+def connect(sf_dir):
+    """A bounded DuckDB connection with a view per base table of `sf_dir`."""
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
+    con.execute(f"SET threads = {THREADS}")
+    con.execute(f"SET temp_directory = '{SPILL_DIR}'")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def canon(rows, cols):
@@ -38,14 +58,10 @@ def canon(rows, cols):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = connect(sf_dir)
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
     import glob
-    import os
     failures = {}
     if os.path.exists(f"{out_dir}/verify_failures.json"):
         with open(f"{out_dir}/verify_failures.json") as f:

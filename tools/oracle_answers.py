@@ -10,9 +10,10 @@ check_oracle.py reads. Every oracle runs against each scale factor in turn.
 
 Each answer is the row count and the sha256 of the canonical result: the
 sorted column names and sorted rows of check_oracle.py's `canon`, as JSON.
-An oracle that runs longer than BUDGET_S seconds is interrupted and recorded
-as over budget; one that raises is recorded with its error. No oracle is
-dropped. ORACLE_ANSWERS.json, at the repository root, maps query -> scale
+Each connection runs under check_oracle.py's memory and thread bounds. An
+oracle that runs longer than BUDGET_S seconds, or needs more memory than the
+bound, is stopped and recorded as over budget; one that raises anything else
+is recorded with its error. No oracle is dropped. ORACLE_ANSWERS.json, at the repository root, maps query -> scale
 factor -> answer.
 
 Without --check the file is written afresh from this run. With --check
@@ -32,7 +33,7 @@ import time
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from check_oracle import TABLES, canon  # noqa: E402
+from check_oracle import canon, connect  # noqa: E402
 
 BUDGET_S = 120
 SCALE_FACTORS = ["sf0.001", "sf0.01", "sf0.1"]
@@ -47,7 +48,9 @@ def answer(con, sql):
     try:
         cur = con.execute(sql)
         rows, cols = cur.fetchall(), [d[0] for d in cur.description]
-    except duckdb.InterruptException:
+    except (duckdb.InterruptException, duckdb.OutOfMemoryException):
+        # no answer within the budget: BUDGET_S seconds under the
+        # connection's memory limit
         return {"over_budget_s": BUDGET_S}
     except duckdb.Error as e:
         return {"error": f"{type(e).__name__}: {str(e).splitlines()[0]}"}
@@ -59,9 +62,7 @@ def answer(con, sql):
 
 
 def run_sf(oracles, sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = connect(sf_dir)
     out = {}
     start = time.time()
     for name in sorted(oracles):
